@@ -51,7 +51,8 @@ object BenchExtra {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val repeats = sys.env.getOrElse("SPARK_GRAFT_REPEATS", "3").toInt
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")

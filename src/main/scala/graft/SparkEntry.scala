@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.functions.GeomFunctions._
+import graft.operators.Spread
 import graft.sources.{Synth, DocsTable}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + BASELINE.json.
@@ -17,37 +18,6 @@ object SparkEntry {
 
   private def li(s: SparkSession, dir: String) = s.read.parquet(s"$dir/lineitem.parquet")
   private def docsT(s: SparkSession, dir: String) = s.read.parquet(s"$dir/documents.parquet")
-
-  /** Kernel-heavy map stages after a cheap scan: when the scan yields fewer
-    * splits than cores (the local test files are single-row-group parquet,
-    * so the scan can never split and per-row kernels run on ONE task),
-    * redistribute once before the kernels. On a real cluster the scan
-    * carries ≫ cores splits and this is a no-op — the condition, not the
-    * repartition, is what survives the 100× scale-up.
-    */
-  private def spread(df: DataFrame): DataFrame = {
-    val cores = df.sparkSession.sparkContext.defaultParallelism
-    // metadata-only split estimate: `df.rdd.getNumPartitions` (round 1)
-    // forced a second physical planning + RDD build of the frame just to
-    // read a number (round-2 review). The scan's split count is bounded
-    // below by max(#files, totalBytes / maxPartitionBytes), both available
-    // from the cached file index / optimizer stats without planning.
-    val nFiles = df.inputFiles.length
-    if (nFiles == 0) {
-      // Non-file-backed frame: optimizer leaf stats default to huge
-      // sizeInBytes (defaultSizeInBytes), which would estimate >= cores
-      // splits and silently skip the spread — the opposite of the intent.
-      // The RDD partition count is the truth here; the extra planning pass
-      // only happens on this (rare, small, in-memory) shape.
-      val parts = df.rdd.getNumPartitions
-      if (parts < cores) df.repartition(cores) else df
-    } else {
-      val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-      val maxPart = df.sparkSession.sessionState.conf.filesMaxPartitionBytes
-      val estSplits = math.max(nFiles.toLong, (bytes / maxPart).toLong)
-      if (estSplits < cores) df.repartition(cores) else df
-    }
-  }
 
   /** round(c, d) with the driver oracle's (DuckDB) double-round zero
     * semantics: a result that rounds to zero keeps the SIGN of the input
@@ -103,7 +73,7 @@ object SparkEntry {
     // exchange down to the SCAN: makevalid ran on all 600k pre-dedup rows
     // at scan parallelism (3 tasks), 3.7 s -> 45 s. Dedup-after-build is
     // load-bearing: the aggregate output column is a pushdown barrier.
-    val base = spread(Synth.points(s, dir).select(col("pid")))
+    val base = Spread.forKernels(Synth.points(s, dir).select(col("pid")))
       .withColumn("z9", lit(9))
       .withColumn("tx", col("pid") * 7 % 512)
       .withColumn("ty", col("pid") % 312 + 100)
@@ -192,7 +162,7 @@ object SparkEntry {
     }),
 
     "q07_perp_distance" -> ((s, dir) => {
-      spread(Synth.points(s, dir)).select(col("pid"),
+      Spread.forKernels(Synth.points(s, dir)).select(col("pid"),
         st_perpendicular_distance(col("lon"), col("lat"), col("lon2"), col("lat2"),
           col("lon2"), col("lat")).as("d"))
     }),
@@ -206,7 +176,7 @@ object SparkEntry {
     }),
 
     "q09_simplify" -> ((s, dir) => {
-      spread(Synth.points(s, dir))
+      Spread.forKernels(Synth.points(s, dir))
         .withColumn("ls", st_geomfromwkt(concat(
           lit("LINESTRING ("),
           col("lon").cast("string"), lit(" "), col("lat").cast("string"), lit(","),
@@ -223,7 +193,7 @@ object SparkEntry {
     }),
 
     "q11_wkt_roundtrip" -> ((s, dir) => {
-      spread(Synth.points(s, dir))
+      Spread.forKernels(Synth.points(s, dir))
         .withColumn("g", st_geomfromwkt(st_aswkt(st_point(col("lon"), col("lat")))))
         .select(col("pid"), st_x(col("g")).as("x"), st_y(col("g")).as("y"))
     }),
@@ -234,7 +204,7 @@ object SparkEntry {
       val pts = Synth.points(s, dir).select(col("pid"), col("lon"), col("lat"))
       val qs = pts.filter(col("pid") % 2999 === 0)
         .select(col("pid").as("qid"), col("lon").as("qlon"), col("lat").as("qlat"))
-      graft.operators.Knn.knnJoinAuto(qs, pts, k = 3)
+      graft.operators.Knn.knnJoin(qs, pts, k = 3)
     }),
 
     // ---- geometry accessors over built polygons ----
@@ -301,7 +271,7 @@ object SparkEntry {
       val qs = pts
         .filter(col("lon") >= -30 && col("lon") <= 30 && col("lat") >= 0 && col("lat") <= 40)
         .select(col("pid").as("qid"), col("lon").as("qlon"), col("lat").as("qlat"))
-      graft.operators.Knn.knnJoinAuto(qs, pts, k = 3)
+      graft.operators.Knn.knnJoin(qs, pts, k = 3)
     }),
 
     "q22_tiler_assign" -> ((s, dir) => {
@@ -379,7 +349,7 @@ object SparkEntry {
     }),
 
     "q31_geojson_roundtrip" -> ((s, dir) => {
-      spread(Synth.points(s, dir))
+      Spread.forKernels(Synth.points(s, dir))
         .withColumn("g", st_geomfromgeojson(st_asgeojson(st_point(col("lon"), col("lat")))))
         .select(col("pid"), st_x(col("g")).as("x"), st_y(col("g")).as("y"))
     }),
@@ -422,7 +392,7 @@ object SparkEntry {
       // endpoints; midpoint dedupe joins the halves. tol = 0.5.
       def c(x: org.apache.spark.sql.Column, y: org.apache.spark.sql.Column) =
         concat(x.cast("string"), lit(" "), y.cast("string"))
-      val p = spread(Synth.points(s, dir))
+      val p = Spread.forKernels(Synth.points(s, dir))
         .withColumn("y1v", col("lat") + (col("pid") % 3).cast("double") * 0.3)
         .withColumn("y3v", col("lat") + (col("pid") % 5).cast("double") * 0.2)
         .withColumn("ls", st_geomfromwkt(concat(lit("LINESTRING ("),
@@ -451,7 +421,7 @@ object SparkEntry {
         lit(","), c(p2._1, p2._2), lit(","), c(p0._1, p0._2), lit("))"))
       val cw = concat(lit("POLYGON (("), c(p0._1, p0._2), lit(","), c(p2._1, p2._2),
         lit(","), c(p1._1, p1._2), lit(","), c(p0._1, p0._2), lit("))"))
-      spread(Synth.points(s, dir))
+      Spread.forKernels(Synth.points(s, dir))
         .withColumn("g", st_rectify_polygon(st_geomfromwkt(
           when(col("pid") % 2 === 0, ccw).otherwise(cw))))
         .select(col("pid"), st_num_points(col("g")).as("npts"),
@@ -472,7 +442,7 @@ object SparkEntry {
         c(col("lon") - 1, col("lat") + 0.5), lit(","),
         c(col("lon") + 1, col("lat") + 1), lit(","),
         c(col("lon") + 3, col("lat") + 1.5), lit(")"))
-      spread(Synth.points(s, dir))
+      Spread.forKernels(Synth.points(s, dir))
         .withColumn("g", st_clip(st_geomfromwkt(ls),
           col("lon"), col("lat"), col("lon") + 2, col("lat") + 2))
         .select(col("pid"), st_geomtype(col("g")).as("gtype"),
@@ -663,7 +633,7 @@ object SparkEntry {
       // Coordinates quantized to quarters (exact dyadic) so Java and
       // DuckDB double formatting agree character-for-character.
       import s.implicits._
-      spread(Synth.points(s, dir))
+      Spread.forKernels(Synth.points(s, dir))
         .select(col("pid"),
           (floor(col("lon") * 4) / 4.0).as("x"),
           (floor(col("lat") * 4) / 4.0).as("y"))
@@ -929,7 +899,7 @@ object SparkEntry {
       // 3857 over both recursion branches (LINESTRING / MULTILINESTRING),
       // vertex order preserved by the coordinate dump; the mm grid
       // absorbs cross-libm tan/log ULPs (q32 pattern)
-      val base = spread(Synth.points(s, dir))
+      val base = Spread.forKernels(Synth.points(s, dir))
       def pt(x: org.apache.spark.sql.Column, y: org.apache.spark.sql.Column) =
         concat(x.cast("string"), lit(" "), y.cast("string"))
       val mx = (col("lon") + col("lon2")) / 2

@@ -16,7 +16,7 @@ object ListenerDrain {
 }
 
 /** Serializable Hadoop-configuration carrier for the distributed footer
-  * count (Footers.scala): tasks need the session's Hadoop conf (FS
+  * count (PlanStats.exact): tasks need the session's Hadoop conf (FS
   * credentials, endpoints) but `Configuration` is not serializable and
   * Spark's own wrapper `org.apache.spark.util.SerializableConfiguration`
   * is `private[spark]` — hence this shim.

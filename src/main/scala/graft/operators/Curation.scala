@@ -78,9 +78,9 @@ object Curation {
     * determinism).
     *
     * N (the corpus document count) comes from parquet footer metadata
-    * when the input is a bare parquet scan ([[graft.sources.Footers]]) —
-    * exact, driver-side, zero Spark jobs; other sources pay one count()
-    * job. N feeds the score, so an estimate would change results.
+    * when the input is a bare parquet scan
+    * ([[graft.sources.PlanStats.exact]]) — exact, driver-side, zero Spark
+    * jobs; other sources pay one count() job. N feeds the score, so an estimate would change results.
     *
     * Shuffle shape at corpus scale — ONE raw-text scan, three exchanges,
     * no join: (1) groupBy(doc, word) with map-side combine — the only
@@ -95,7 +95,7 @@ object Curation {
     */
   def tfidfTopTerms(docs: DataFrame, idCol: String, textCol: String,
                     k: Int): DataFrame = {
-    val nDocs = graft.sources.Footers.exactRowCount(docs).getOrElse(docs.count())
+    val nDocs = graft.sources.PlanStats.exact(docs).map(_.rows).getOrElse(docs.count())
     // tokenize + explode at kernel parallelism, not scan-split count
     // (no-op when the scan already has >= cores splits)
     val words = Spread.forKernels(docs).select(col(idCol).as("doc"),

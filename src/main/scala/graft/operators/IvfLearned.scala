@@ -19,9 +19,10 @@ import org.apache.spark.sql.expressions.Window
   *    same algorithm as unrolled SQL CTEs.
   *  - BOUNDED DRIVER WORK: the fit collects only the hash-ordered sample
   *    (≤ max(1024, 8·k) rows — the same bounded-driver-sample pattern as
-  *    Knn.zoomForPlan's footer cap); k-means runs on the driver over that
-  *    sample. Fit scans the corpus twice (count + sample top-k), a
-  *    one-time model-build cost amortized over every query.
+  *    PlanStats.estimatedRows' footer-sample cap); k-means runs on the
+  *    driver over that sample. Fit scans the corpus at most twice (count
+  *    unless footers give it + sample top-k), a one-time model-build cost
+  *    amortized over every query.
   *  - SCALE SHAPE: corpus assignment is one map-side projection (a single
   *    array<array<double>> literal of centroids broadcast inside the
   *    expression — no join, no shuffle); the query probes its top-nProbe
@@ -81,7 +82,7 @@ object IvfLearned {
     // N decides kC = ⌈√N⌉ and the sample cap; parquet footer metadata
     // gives it exactly with zero Spark jobs (count() only off-parquet) —
     // the fit now scans the corpus ONCE (the sample top-k), not twice
-    val n = graft.sources.Footers.exactRowCount(corpus).getOrElse(corpus.count())
+    val n = graft.sources.PlanStats.exact(corpus).map(_.rows).getOrElse(corpus.count())
     val kC = nCentroidsFor(n, maxCentroids)
     val sCap = sampleCapFor(n, kC)
     val sampRows: Array[(Long, Array[Double])] = corpus
@@ -149,7 +150,7 @@ object IvfLearned {
                      maxCentroids: Int = 1024): IvfModel = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val n = graft.sources.Footers.exactRowCount(corpus).getOrElse(corpus.count())
+    val n = graft.sources.PlanStats.exact(corpus).map(_.rows).getOrElse(corpus.count())
     val kC = nCentroidsFor(n, maxCentroids)
     val sCap = sampleCapFor(n, kC)
     // distributed top-sCap by the hash order (TakeOrdered — no full sort);

@@ -50,55 +50,11 @@ object Knn {
     math.max(3, math.min(12, z))
   }
 
-  /** Metadata-only row estimate — no Spark job, no scan (the old
-    * `pts.count()` plan-build pass cost an extra job serialized on the
-    * driver before the query started). For parquet-backed frames the TRUE
-    * row count comes from the file footers (driver-side, ~KB per file);
-    * other sources fall back to the optimizer's size-in-bytes estimate.
-    *
-    * MEASURED LESSON (round 2): the sizeInBytes fallback under-estimated
-    * the ×8 replica 5-20× (compressed parquet vs in-memory row width),
-    * picking z=7 instead of z=9 — 16× more candidates per cell and a ~5×
-    * q21 wall-time regression. Footer counts are exact, so the chosen z
-    * matches the count()-based round-1 plan at zero scan cost.
+  /** grid zoom from PlanStats' metadata-only row estimate — no Spark job,
+    * no scan, so building the plan never waits on a count.
     */
-  /** Max parquet footers opened serially on the driver. Beyond the cap a
-    * deterministic stride-sample of footers is read and extrapolated by
-    * file count (round-2 review: at 100 TB ≈ 10⁵-10⁶ files the unbounded
-    * loop is minutes of driver time before the job starts; the zoom only
-    * needs the row count to within a factor of ~2, so a 64-footer sample
-    * is far more precision than required).
-    */
-  private val MaxFooterSamples = 64
-
-  def zoomForPlan(points: DataFrame): Int = {
-    val files = points.inputFiles.filter(_.endsWith(".parquet"))
-    val rows: Long =
-      if (files.nonEmpty) {
-        val conf = points.sparkSession.sessionState.newHadoopConf()
-        val sampled =
-          if (files.length <= MaxFooterSamples) files
-          else {
-            val stride = files.length.toDouble / MaxFooterSamples
-            Array.tabulate(MaxFooterSamples)(i => files((i * stride).toInt))
-          }
-        val sampleRows = sampled.map { f =>
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromPath(new org.apache.hadoop.fs.Path(f), conf)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try r.getRecordCount finally r.close()
-        }.sum
-        if (sampled.length == files.length) sampleRows
-        else math.round(sampleRows.toDouble / sampled.length * files.length)
-      } else {
-        val stats = points.queryExecution.optimizedPlan.stats
-        stats.rowCount.map(_.toLong).getOrElse {
-          val rowBytes = math.max(8, points.schema.map(_.dataType.defaultSize).sum)
-          (stats.sizeInBytes / rowBytes).toLong
-        }
-      }
-    zoomFor(math.max(1L, rows))
-  }
+  def zoomForPlan(points: DataFrame): Int =
+    zoomFor(graft.sources.PlanStats.estimatedRows(points))
 
   /** Multi-level kNN: run the 3×3-block grid join at `z`, then retry the
     * (few) uncertified queries at z−2 (16× larger cells, 4× the margin) —
@@ -118,8 +74,13 @@ object Knn {
     * in the answer). At 100 TB each fallback level forwards only
     * O(|uncertified queries|) worth of rows past the semi-join into the
     * candidate join (the scan itself is map-only, never shuffled).
+    *
+    * queries(qid, qlon, qlat) × points(pid, lon, lat) → (qid, nid, dist2, rk).
+    * `z < 0` (default) derives the zoom from the points' plan statistics
+    * ([[zoomForPlan]]), the spatial joins' convention.
     */
-  def knnJoinExpanding(queries: DataFrame, points: DataFrame, k: Int, z: Int): DataFrame = {
+  def knnJoin(queries: DataFrame, points: DataFrame, k: Int, z: Int = -1): DataFrame = {
+    if (z < 0) return knnJoin(queries, points, k, zoomForPlan(points))
     val (lvl1, rest1) = knnLevel(queries, points, k, z)
     if (z - 2 >= 2) {
       val (lvl2, rest2) = knnLevel(rest1, prunePointsToQueryCells(points, rest1, z - 2),
@@ -409,18 +370,18 @@ object Knn {
   def knnJoinAdaptive(queries: DataFrame, points: DataFrame, k: Int, z: Int,
                       denseFactor: Int = 64): DataFrame = {
     val (dense, maxCnt) = denseCellsOf(points, z, denseFactor.toLong * 15L, MaxDenseCells)
-    if (dense.isEmpty) return knnJoinExpanding(queries, points, k, z)
+    if (dense.isEmpty) return knnJoin(queries, points, k, z)
     val zDeep = deepZoomFor(z, maxCnt)
     if (zDeep <= z) {
       // base zoom already at (or beyond) the packed-key clamp: a "deeper"
       // level would be the SAME or a coarser grid — deepening would
       // pessimize, not help, so take the plain exact path
-      return knnJoinExpanding(queries, points, k, z)
+      return knnJoin(queries, points, k, z)
     }
     if (dense.length > MaxDenseCells) {
       // everything is dense: z itself was wrong for this corpus — deepen
       // globally instead of building an unbounded cell set
-      return knnJoinExpanding(queries, points, k, zDeep)
+      return knnJoin(queries, points, k, zDeep)
     }
     // a query is dense-adjacent when ANY of its 3×3 cells at z is dense —
     // exactly the cells its candidate join would enumerate
@@ -435,16 +396,7 @@ object Knn {
       knnLevel(qDense, prunePointsToQueryCells(points, qDense, zDeep),
         k, zDeep, spreadPoints = false)
     deepExact
-      .unionByName(knnJoinExpanding(deepRest.drop("bound_d2"), points, k, z))
-      .unionByName(knnJoinExpanding(qSparse, points, k, z))
+      .unionByName(knnJoin(deepRest.drop("bound_d2"), points, k, z))
+      .unionByName(knnJoin(qSparse, points, k, z))
   }
-
-  /** queries(qid, lon, lat) × points(pid, lon, lat) → (qid, nid, dist2, rk). */
-  def knnJoin(queries: DataFrame, points: DataFrame, k: Int, z: Int): DataFrame =
-    knnJoinExpanding(queries, points, k, z)
-
-  /** as `knnJoin` but the grid zoom is derived from plan statistics
-    * (metadata-only — no extra scan). */
-  def knnJoinAuto(queries: DataFrame, points: DataFrame, k: Int): DataFrame =
-    knnJoinExpanding(queries, points, k, zoomForPlan(points))
 }

@@ -39,29 +39,29 @@ object SpatialJoin {
     */
   val DefaultCoverCap = 64
 
-  /** Row bound under which a join side takes the BROADCAST plan (round-6
+  /** Bounds under which a join side takes the BROADCAST plan (round-6
     * verdict #4: reclaim the bounded-cover plans' constant cost when
     * footer stats prove a side small). Decided from parquet FOOTER
-    * metadata only — no Spark job, no scan: a side qualifies when it is a
-    * (projection of a) bare parquet scan of few files whose exact footer
-    * row count is under the limit; anything unprovable (filtered frames,
-    * many files) takes the shuffle plan. Conf-tunable for deployments
-    * whose executors can hold bigger builds; 65536 rows × ≤64 cover cells
-    * × ~48 B ≈ 200 MB worst-case broadcast, well under the 8 GB cap.
+    * metadata only ([[graft.sources.PlanStats.exact]]) — no Spark job, no
+    * scan: a side qualifies when it is a (projection of a) bare parquet
+    * scan of few files whose exact footer row count is under
+    * `BroadcastRowLimit` AND whose uncompressed footer bytes, replicated to
+    * at most `DefaultCoverCap` cover cells plus the geometry lookup, fit
+    * the same worst-case broadcast budget: 65536 rows × ≤64 cover cells ×
+    * ~48 B ≈ 200 MB, well under the 8 GB cap. The byte bound catches few
+    * rows with wide payloads, which the row bound alone lets through.
+    * Anything unprovable (filtered frames, many files) takes the shuffle
+    * plan.
     */
-  val DefaultBroadcastRowLimit = 65536L
+  val BroadcastRowLimit = 65536L
+  private val BroadcastByteBudget = BroadcastRowLimit * DefaultCoverCap * 48L
   private val MaxBroadcastFiles = 64
 
-  private def broadcastRowLimit(df: DataFrame): Long =
-    df.sparkSession.conf
-      .get("spark.graft.spatialjoin.broadcastRows", DefaultBroadcastRowLimit.toString).toLong
-
-  /** true iff footer metadata PROVES `df` has ≤ `limit` rows. */
-  private def provablySmall(df: DataFrame, limit: Long): Boolean = {
-    val files = df.inputFiles
-    files.nonEmpty && files.length <= MaxBroadcastFiles &&
-      graft.sources.Footers.exactRowCount(df).exists(_ <= limit)
-  }
+  /** true iff footer metadata PROVES `df` small enough to broadcast. */
+  private[graft] def provablySmall(df: DataFrame): Boolean =
+    df.inputFiles.length <= MaxBroadcastFiles &&
+      graft.sources.PlanStats.exact(df).exists(f => f.rows <= BroadcastRowLimit &&
+        f.bytes <= BroadcastByteBudget / (DefaultCoverCap + 1))
 
   /** distinct adaptive cover zooms present in `df` — a bbox-columns-only
     * aggregate (column-pruned scan, map-side combine), collected at
@@ -94,8 +94,8 @@ object SpatialJoin {
     * so a (point, polygon) pair can meet in at most one cell and the
     * join-back multiplies by exactly one geometry row.
     *
-    * `z < 0` (default) derives the max zoom from the points' parquet
-    * footers via `Knn.zoomForPlan` (~15 points/cell target).
+    * `z < 0` (default) derives the max zoom from the points' plan
+    * statistics via `Knn.zoomForPlan` (~15 points/cell target).
     */
   def pipJoin(points: DataFrame, lonCol: String, latCol: String,
               polys: DataFrame, idCol: String, polyCol: String,
@@ -116,7 +116,7 @@ object SpatialJoin {
       .withColumn("__cell", explode(st_tiles_for_bounds(
         col(minxCol), col(minyCol), col(maxxCol), col(maxyCol), zoomCol)))
 
-    if (provablySmall(polys, broadcastRowLimit(polys))) {
+    if (provablySmall(polys)) {
       // BROADCAST fast path (round-6 verdict #4): when footer stats bound
       // the polygon side small, broadcast the bounded cover index and the
       // geometry lookup — the points side is NEVER exchanged and there are
@@ -244,10 +244,10 @@ object SpatialJoin {
     * a cheap predicate. ONE shuffle, no distinct exchange, no unbounded
     * replication.
     *
-    * `z < 0` (default) derives the max zoom from both sides' parquet
-    * footers (the finer of the two density zooms — the per-row cap
-    * coarsens large boxes back out). Output: a's columns then b's columns
-    * (names must not collide).
+    * `z < 0` (default) derives the max zoom from both sides' plan
+    * statistics via `Knn.zoomForPlan` (the finer of the two density
+    * zooms — the per-row cap coarsens large boxes back out). Output: a's
+    * columns then b's columns (names must not collide).
     */
   def extentJoin(a: DataFrame, aMinx: String, aMiny: String, aMaxx: String, aMaxy: String,
                  b: DataFrame, bMinx: String, bMiny: String, bMaxx: String, bMaxy: String,
@@ -270,9 +270,8 @@ object SpatialJoin {
       least(col("__za"), col("__zb")))
     val outCols = (a.columns.map(col) ++ b.columns.map(col)).toIndexedSeq
 
-    val limit = broadcastRowLimit(a)
-    val smallA = provablySmall(a, limit)
-    val smallB = !smallA && provablySmall(b, limit)
+    val smallA = provablySmall(a)
+    val smallB = !smallA && provablySmall(b)
     if (smallA || smallB) {
       // BROADCAST fast path (round-6 verdict #4): one side's footer stats
       // bound it small — broadcast that side and drop BOTH plan-build

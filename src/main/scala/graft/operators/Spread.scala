@@ -12,37 +12,25 @@ import org.apache.spark.sql.DataFrame
   * scan carries ≫ cores splits and the CONDITION (not the repartition)
   * is what survives the 100× scale-up — the exchange never fires there.
   *
-  * This is the operator-level twin of SparkEntry.spread (the gate-level
-  * helper): same estimate, same condition, shared by Knn / SpatialJoin /
-  * Curation kernels.
+  * The one spread decision: the SparkEntry gates, Knn, SpatialJoin,
+  * Curation, Dedup and DocsTable all call it.
   */
 object Spread {
 
   def forKernels(df: DataFrame): DataFrame = {
     if (df.isStreaming) return df // micro-batch sizing is the stream's job
     val cores = df.sparkSession.sparkContext.defaultParallelism
-    // metadata-only split estimate (no planning pass, NO JOB — df.rdd is
-    // off-limits here: under AQE, building the RDD materializes every
-    // query stage in the subtree, i.e. runs Spark jobs at plan-build
-    // time, which is exactly the barrier class this round removed): the
-    // scan's split count is bounded below by max(#files, bytes/maxPart).
-    // Non-file frames fall back to optimizer stats: LocalRelations carry
-    // their true size (→ spread fires for the small in-memory frames the
-    // specs use); sources with the huge defaultSizeInBytes conservatively
-    // skip the spread rather than pay a plan-time job to find out.
     // a frame that already carries an explicit repartition (its own
     // spread, or a caller's keyed redistribution) is already at kernel
     // width — re-spreading would pay a SECOND exchange of the (possibly
     // much wider) generated columns for nothing
-    val plan = df.queryExecution.optimizedPlan
-    val alreadyRepartitioned = plan.collectFirst {
+    val alreadyRepartitioned = df.queryExecution.optimizedPlan.collectFirst {
       case r: org.apache.spark.sql.catalyst.plans.logical.RepartitionOperation => r
     }.isDefined
     if (alreadyRepartitioned) return df
-    val nFiles = df.inputFiles.length
-    val bytes = plan.stats.sizeInBytes
-    val maxPart = df.sparkSession.sessionState.conf.filesMaxPartitionBytes
-    val estSplits = math.max(nFiles.toLong, (bytes / maxPart).toLong)
-    if (estSplits < cores) df.repartition(cores) else df
+    // metadata-only split estimate (NO JOB — the frame's RDD is off-limits
+    // here: under AQE, building it materializes every query stage in the
+    // subtree, i.e. runs Spark jobs at plan-build time)
+    if (graft.sources.PlanStats.scanSplits(df) < cores) df.repartition(cores) else df
   }
 }

@@ -181,18 +181,18 @@ class OperatorsSpec extends AnyFunSuite {
     val regions = graft.sources.Synth.regions(spark, dir)
       .withColumn("poly", st_box_polygon(col("minx"), col("miny"), col("maxx"), col("maxy")))
     // emulate the target regime — a polygon side too large to broadcast —
-    // by disabling the broadcast thresholds (at test scale Catalyst would
-    // otherwise rightly broadcast the tiny regions table) AND the round-7
-    // footer-stats fast path (which would correctly pick the broadcast
-    // plan for the 25-row parquet-backed regions table)
+    // with a polygon frame the footers cannot prove small (under a filter
+    // the footer row count is no proof) and Catalyst's broadcast
+    // thresholds disabled (at test scale it would otherwise rightly
+    // broadcast the tiny regions table)
+    val bigPolys = regions.filter(col("region_id") >= 0)
+    assert(!SpatialJoin.provablySmall(bigPolys))
     val conf = spark.conf
     val saved = Seq("spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold",
-      "spark.graft.spatialjoin.broadcastRows").map(k => k -> conf.getOption(k))
-    saved.foreach { case (k, _) =>
-      conf.set(k, if (k.endsWith("broadcastRows")) "0" else "-1") }
+      "spark.sql.adaptive.autoBroadcastJoinThreshold").map(k => k -> conf.getOption(k))
+    saved.foreach { case (k, _) => conf.set(k, "-1") }
     try {
-      val got = SpatialJoin.pipJoin(pts, "lon", "lat", regions, "region_id", "poly", z = 5)
+      val got = SpatialJoin.pipJoin(pts, "lon", "lat", bigPolys, "region_id", "poly", z = 5)
         .select(col("pid"), col("region_id"))
       // the broadcast form (q03's plan) is the correctness reference
       val regB = regions.withColumn("cell5", explode(
@@ -997,15 +997,16 @@ class OperatorsSpec extends AnyFunSuite {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     // exact vs count(), including under a projection with expressions
-    assert(graft.sources.Footers.exactRowCount(docs).contains(docs.count()))
+    def exactRows(df: DataFrame) = graft.sources.PlanStats.exact(df).map(_.rows)
+    assert(exactRows(docs).contains(docs.count()))
     val proj = docs.select(col("doc_id").as("vid"), (col("n_chars") * 2).as("x"))
-    assert(graft.sources.Footers.exactRowCount(proj).contains(docs.count()))
+    assert(exactRows(proj).contains(docs.count()))
     // count-changing plans must refuse (a filter makes footer counts wrong)
-    assert(graft.sources.Footers.exactRowCount(docs.filter(col("doc_id") % 2 === 0)).isEmpty)
-    assert(graft.sources.Footers.exactRowCount(docs.limit(3)).isEmpty)
+    assert(exactRows(docs.filter(col("doc_id") % 2 === 0)).isEmpty)
+    assert(exactRows(docs.limit(3)).isEmpty)
     // non-file sources refuse
     import spark.implicits._
-    assert(graft.sources.Footers.exactRowCount(Seq((1L, "x")).toDF("a", "b")).isEmpty)
+    assert(exactRows(Seq((1L, "x")).toDF("a", "b")).isEmpty)
     // tf-idf plan CONSTRUCTION launches zero Spark jobs on parquet input
     // (round-5 verdict #2: N used to cost a count() job before the query)
     val jobs = new java.util.concurrent.atomic.AtomicInteger
@@ -1025,13 +1026,10 @@ class OperatorsSpec extends AnyFunSuite {
     val tmp = java.nio.file.Files.createTempDirectory("footers").toString
     docs.limit(10).repartition(3).write.mode("overwrite").parquet(s"$tmp/many")
     val many = spark.read.parquet(s"$tmp/many")
-    val poolCount = graft.sources.Footers.exactRowCount(many)
-    spark.conf.set("spark.graft.footers.distributedThreshold", "1")
-    try {
-      val distCount = graft.sources.Footers.exactRowCount(many)
-      assert(distCount == poolCount && distCount.contains(many.count()),
-        s"distributed footer count diverged: $distCount vs $poolCount")
-    } finally spark.conf.unset("spark.graft.footers.distributedThreshold")
+    val poolCount = graft.sources.PlanStats.exact(many)
+    val distCount = graft.sources.PlanStats.exact(many, distributedThreshold = 1)
+    assert(distCount == poolCount && distCount.map(_.rows).contains(many.count()),
+      s"distributed footer count diverged: $distCount vs $poolCount")
   }
 
   test("spatial joins on seeded random data incl. polar clamp and antimeridian") {

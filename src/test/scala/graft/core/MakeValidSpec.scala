@@ -37,12 +37,13 @@ class MakeValidSpec extends AnyFunSuite {
   test("makevalid golden: four-column-invalid")(check("four-column-invalid"))
 
   test("makevalid golden: issue#70 regression (area parity)") {
-    // Three diagonals differ from the golden. Forensics (see Issue70Debug,
-    // which diffs edge sets and evaluates the swap predicates on each
-    // differing quad): on all three quads OUR diagonal satisfies the
-    // reference's own in-circle test and the GOLDEN's diagonal violates it
-    // by margins of 20–100 units — ~5000× the tolerance (≈0.017 absolute at
-    // web-mercator magnitude). So the golden is not locally Delaunay there:
+    // Three diagonals differ from the golden. Forensics (diffing the edge
+    // sets and evaluating the swap predicates on each differing quad;
+    // STATUS.md, known divergences): on all three quads OUR diagonal
+    // satisfies the reference's own in-circle test and the GOLDEN's
+    // diagonal violates it by margins of 20–100 units — ~5000× the
+    // tolerance (≈0.017 absolute at web-mercator magnitude). So the
+    // golden is not locally Delaunay there:
     // it preserves diagonals whose swap the reference's InsertSite vetoed
     // (subdivision.go RETRY guard / suspect-scan order) during ITS insertion
     // history and never revisited. Every predicate and topo op in our port
