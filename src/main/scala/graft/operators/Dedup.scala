@@ -22,8 +22,8 @@ object Dedup {
     * subplan into both consumers (no exchange reuse across aliased
     * sides — verified on the executed plans), so without this the
     * signature/shingle/bucket kernels and the raw-text scan run TWICE
-    * per operator — the dominant cost at corpus scale. Same policy as
-    * Knn.materialize: MEMORY_AND_DISK (explicit spill, no recompute).
+    * per operator — the dominant cost at corpus scale. MEMORY_AND_DISK:
+    * an explicit spill policy, no recompute.
     * Every persist is registered with [[CacheBin]]; the CALLER releases
     * the blocks with `CacheBin.drain()` after its consuming action
     * (round-5 advice: MEMORY_AND_DISK blocks are not LRU-evicted and

@@ -1,48 +1,47 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.functions.GeomFunctions._
 
 /** Cell-pruned k-nearest-neighbor join (reference kd-tree kNN semantics,
-  * planar/index/kdtree + SURVEY.md §2.13, re-expressed as a distributed
-  * two-phase plan):
+  * planar/index/kdtree + SURVEY.md §2.13, re-expressed as one compact
+  * plan with no persisted frames):
   *
-  *  phase 1 — queries are replicated to their 3×3 cell neighborhood at
-  *    zoom `z` (cheap: queries ≪ points), points keep their single cell;
-  *    an equi-join on cell + a rank/kth-dist/count WINDOW sharing one
-  *    qid partitioning yields the per-query k nearest candidates.
-  *  phase 2 — a query is CERTIFIED exact when its kth candidate distance
-  *    is ≤ its distance to the 3×3 block boundary (no point outside the
-  *    block can be closer); the rare uncertified queries (sparse regions)
-  *    fall back to a broadcast brute-force pass.
+  *  1. ONE GRID LEVEL at zoom `z`: each query is replicated to its 3×3
+  *     cell block, points keep their single cell, and an equi-join on the
+  *     cell key yields the candidates. One sentinel row per query (`nid`
+  *     null, `dist2` +∞) joins them before a single qid window, so every
+  *     query leaves that window with its ≤ k nearest candidates and its
+  *     kth candidate distance² `kth_dist2` (+∞ when it has fewer than k).
+  *     A query is CERTIFIED exact when `kth_dist2` ≤ its squared distance
+  *     to the block boundary: no point outside the block can be closer.
+  *  2. THE FALLBACK IS CHOSEN UP FRONT per uncertified query from its own
+  *     bound: the true k nearest neighbours all lie in the disc of radius
+  *     √`kth_dist2`. When that disc fits inside the query's 3×3 block at
+  *     z−2 (same margin rule), the query pairs with the points of those
+  *     cells; every other one pairs with every point. One broadcast hash
+  *     join serves both routes ([[fallbackPairs]]); pairs beyond the disc
+  *     are dropped and one window ranks the rest.
+  *  3. The result is certified ∪ fallback — exactly the true kNN
+  *     (Euclidean in lon/lat degree space, planar.PointDistance2; ties on
+  *     dist2 ordered by nid).
   *
-  * The result is exactly the true kNN (Euclidean in lon/lat degree space,
-  * matching planar.PointDistance2), while the heavy path stays a single
-  * shuffle on the cell key. The BOUNDED ranked frame (≤ k rows per query)
-  * is persisted MEMORY_AND_DISK for its multiple consumers — see
-  * `materialize` for the measured reasoning; the unbounded candidate set
-  * is never materialized. A bounded TypedImperativeAggregate top-k was
-  * tried instead of the window (round 2) and MEASURED 10-30× slower with
-  * 3× worse scaling — see the note inside `knnLevel`.
-  * At 10^12 points the phase-1 join shuffles points once by cell; AQE
-  * handles hot-cell skew.
+  * There is no anti-join, no groupBy and no persist: the level's subtree
+  * appears once per consumer and its exchanges are reused, so the whole
+  * operator is one job DAG. An empty fallback collapses at run time under
+  * AQE; with AQE off it costs one map-only scan of the points.
   */
 object Knn {
 
   /** pick a grid zoom targeting ≤ ~15 points per cell: deep enough that
     * the candidate join stays small, shallow enough that the 3×3 block
-    * margin certifies nearly every query.
-    *
-    * ROUND 7: the level is now the CEILING of log4(n/15), not the floor.
-    * The floor landed 15-60 points/cell (the ×10 tier drew z=9 → 23/cell
-    * → ~48M candidate pairs for 235k queries, a 5.6 GB window-sort spill
-    * and 571 CPU-seconds in the rank stage); the ceiling lands 3.75-15
-    * per cell — a 3×3 block still holds 34-135 points, far above k, so
-    * certification is unaffected while the candidate volume (and the
-    * partial-top-k sort) shrinks up to 4×. Exactness never depends on z.
+    * margin certifies nearly every query. The CEILING of log4(n/15) lands
+    * 3.75-15 points per cell (the floor landed 15-60 and measured a 5.6 GB
+    * window-sort spill at the ×10 tier); a 3×3 block still holds 34-135
+    * points, far above k. Exactness never depends on z.
     */
   def zoomFor(nPoints: Long): Int = {
     val cellsWanted = math.max(1.0, nPoints / 15.0)
@@ -56,281 +55,145 @@ object Knn {
   def zoomForPlan(points: DataFrame): Int =
     zoomFor(graft.sources.PlanStats.estimatedRows(points))
 
-  /** Multi-level kNN: run the 3×3-block grid join at `z`, then retry the
-    * (few) uncertified queries at z−2 (16× larger cells, 4× the margin) —
-    * the "secondary ring expansion" of SURVEY §2.13 — before the final
-    * brute-force pass. Each level's certified results are exact; the
-    * remainder set shrinks geometrically.
-    *
-    * FALLBACK SCANS ARE PRUNED (round-4 verdict #1 — the last full-corpus
-    * rescan): the level-2 retry only ever matches points inside the
-    * uncertified queries' 3×3 cells at z−2 (≤ 9·|rest| cells, bounded by
-    * QUERIES, not points), so the points feed through a broadcast
-    * semi-join on that cell set (plan-side, no driver barrier — round-6
-    * verdict #3); the brute remainder is bounded by
-    * each query's kth-candidate distance from the failed certification
-    * (the kd-tree iterator's best-first rule applied to the scan:
-    * nearest_neighbor_iterator.go:98-189 — never examine what cannot be
-    * in the answer). At 100 TB each fallback level forwards only
-    * O(|uncertified queries|) worth of rows past the semi-join into the
-    * candidate join (the scan itself is map-only, never shuffled).
-    *
-    * queries(qid, qlon, qlat) × points(pid, lon, lat) → (qid, nid, dist2, rk).
+  private val dist2 = (col("qlon") - col("lon")) * (col("qlon") - col("lon")) +
+    (col("qlat") - col("lat")) * (col("qlat") - col("lat"))
+
+  private val byDist = Window.partitionBy(col("qid")).orderBy(col("dist2").asc, col("nid").asc)
+
+  private def cellKey(z: Int, tx: Column, ty: Column): Column = shiftleft(tx, z).bitwiseOR(ty)
+
+  /** packed cell key (tx << z) | ty of (lon, lat) at zoom z */
+  private def cellOf(z: Int, lon: Column, lat: Column): Column =
+    cellKey(z, st_lon2tile(lon, lit(z)), st_lat2tile(lat, lit(z)))
+
+  /** packed keys of the in-range cells of the 3×3 block around (lon, lat)
+    * at zoom z; boundary blocks keep their clamped side.
+    */
+  private def block(z: Int, lon: Column, lat: Column): Column = {
+    val (tx, ty) = (st_lon2tile(lon, lit(z)), st_lat2tile(lat, lit(z)))
+    val maxT = (1L << z) - 1
+    val keys = for (dx <- -1 to 1; dy <- -1 to 1) yield {
+      val (x, y) = (tx + dx, ty + dy)
+      when(x >= 0 && x <= maxT && y >= 0 && y <= maxT, cellKey(z, x, y))
+    }
+    filter(array(keys: _*), _.isNotNull)
+  }
+
+  /** squared distance from (qlon, qlat) to the boundary of its 3×3 block
+    * at zoom z. A side on the grid edge is open (points past it clamp
+    * into the edge cells), so it never limits the margin. Capped below
+    * +∞, so a query with fewer than k candidates never passes.
+    */
+  private def margin2(z: Int): Column = {
+    val qtx = st_lon2tile(col("qlon"), lit(z))
+    val qty = st_lat2tile(col("qlat"), lit(z))
+    val maxT = (1L << z) - 1
+    val open = lit(Double.MaxValue)
+    val m = least(
+      when(qtx === 0, open).otherwise(col("qlon") - st_tile2lon(lit(z), qtx - 1)),
+      when(qtx === maxT, open).otherwise(st_tile2lon(lit(z), qtx + 2) - col("qlon")),
+      when(qty === 0, open).otherwise(st_tile2lat(lit(z), qty - 1) - col("qlat")),
+      when(qty === maxT, open).otherwise(col("qlat") - st_tile2lat(lit(z), qty + 2)))
+    least(m * m, open)
+  }
+
+  /** queries(qid, qlon, qlat) × points(pid, lon, lat) → (qid, nid, dist2, rk).
     * `z < 0` (default) derives the zoom from the points' plan statistics
-    * ([[zoomForPlan]]), the spatial joins' convention.
+    * ([[zoomForPlan]]), the spatial joins' convention. Duplicate query
+    * rows count as they do in the brute-force join: each one pairs with
+    * every point.
     */
   def knnJoin(queries: DataFrame, points: DataFrame, k: Int, z: Int = -1): DataFrame = {
     if (z < 0) return knnJoin(queries, points, k, zoomForPlan(points))
-    val (lvl1, rest1) = knnLevel(queries, points, k, z)
-    if (z - 2 >= 2) {
-      val (lvl2, rest2) = knnLevel(rest1, prunePointsToQueryCells(points, rest1, z - 2),
-        k, z - 2, spreadPoints = false)
-      lvl1.unionByName(lvl2).unionByName(bruteForce(rest2, points, k))
-    } else {
-      lvl1.unionByName(bruteForce(rest1, points, k))
-    }
+    // the candidate probe is the hot stage: the conditional spread keeps
+    // it off SCAN parallelism (measured 12.9 s of serial CPU on q21 at
+    // sf0.1 from one file)
+    gridKnn(queries, Spread.forKernels(points), points, k, z)
   }
 
-  /** Restrict `points` to the rows the z-level candidate join can match:
-    * the 3×3 neighborhood cells of `queries` at zoom `z`. EXACTNESS-
-    * NEUTRAL by construction — knnLevel joins on exactly these cells, so
-    * rows outside them never reach the output; this just keeps them out
-    * of the join.
-    *
-    * ROUND 7 (round-6 verdict #3): the cell set is now a BROADCAST
-    * SEMI-JOIN inside the plan instead of a driver-collected IN-set +
-    * literal lon/lat range. The old collect() was a job BARRIER — it
-    * eagerly ran the whole previous level's chain and serialized one
-    * full Spark job (driver round-trip included) before the main query
-    * started; the builder's Amdahl fit put those barriers at 65% of the
-    * ×48-tier 32-core wall (S ≈ 20 s fixed). As a plan-side semi-join the
-    * level chain executes as ONE job. The trade: the literal range
-    * predicates no longer reach parquet row-group stats, so the fallback
-    * level re-SCANS the corpus (map-side, no shuffle — the semi-join
-    * still drops non-candidate rows before the expensive candidate join).
-    * The broadcast build is bounded by 9·|uncertified queries| packed
-    * longs — the same "queries are the small side" contract the
-    * broadcast brute-force pass already relies on.
+  /** the grid level at z over `levelPoints`, which must hold every point
+    * of the queries' 3×3 blocks at z, then the fallback over `points`.
     */
-  private[graft] def prunePointsToQueryCells(points: DataFrame, queries: DataFrame,
-                                                 z: Int): DataFrame = {
-    val maxT = (1L << z) - 1
-    val cells = queries.select(
-        st_lon2tile(col("qlon"), lit(z)).as("qtx"),
-        st_lat2tile(col("qlat"), lit(z)).as("qty"))
-      .select(explode(array((-1 to 1).flatMap(dx => (-1 to 1).map(dy =>
-        struct((col("qtx") + dx).as("tx"), (col("qty") + dy).as("ty")))): _*)).as("nb"))
-      .select(col("nb.tx").as("tx"), col("nb.ty").as("ty"))
-      .filter(col("tx") >= 0 && col("tx") <= maxT && col("ty") >= 0 && col("ty") <= maxT)
-      // no distinct(): a LEFT SEMI probe is insensitive to duplicate build
-      // keys, and dropping the aggregate keeps the build side map-only
-      // (zero Exchange anywhere in the prune)
-      .select(shiftleft(col("tx"), z).bitwiseOR(col("ty")).as("__qcell"))
-    points.join(broadcast(cells),
-      shiftleft(st_lon2tile(col("lon"), lit(z)), z)
-        .bitwiseOR(st_lat2tile(col("lat"), lit(z))) === col("__qcell"),
-      "left_semi")
-  }
-
-  /** Spill-safe materialization for the bounded per-level frames. The
-    * ranked frame holds AT MOST k rows per query (post row_number filter),
-    * i.e. O(k·|queries|) — independent of the points cardinality — so
-    * persisting it is safe at any scale, and MEMORY_AND_DISK gives it an
-    * explicit spill policy (round 1 used a bare cache() = MEMORY_ONLY
-    * deserialized, which the round-1 review rightly flagged as a policy-
-    * free pin). Without ANY materialization the level chain
-    * (level1 → uncertified → level2 → uncertified → brute) recomputes the
-    * expensive candidate join once per downstream consumer — measured 5×
-    * on the headline kNN (384 s vs 74 s, local[32], 4.8M points).
-    */
-  private def materialize(df: DataFrame): DataFrame =
-    // registered with CacheBin: the CALLER drains after its action —
-    // MEMORY_AND_DISK blocks are not LRU-evicted and would otherwise
-    // accumulate across a long-lived session (round-5 advice)
-    CacheBin.track(df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-
-  /** exact brute force for a (small, broadcast) query set. Queries may
-    * carry `bound_d2`: an upper bound on the true kth-neighbor distance²
-    * (the kth CANDIDATE distance² from the failed certification — the
-    * true kth distance can only be ≤ it). For bounded queries the points
-    * scan is clipped to the union of the per-query search discs' bounding
-    * boxes (range predicates parquet row-group stats prune) and each pair
-    * is filtered to dist2 ≤ bound_d2 — EXACT: the k candidates that
-    * produced the bound all pass the filter, and any point beyond it
-    * loses to all k of them. Unbounded queries (< k candidates even at
-    * the coarsest level — a near-empty corpus region) keep the full scan.
-    * All branches are plan-side (no driver actions); empty branches
-    * collapse at runtime via AQE empty-relation propagation.
-    */
-  private def bruteForce(queries: DataFrame, points: DataFrame, k: Int): DataFrame = {
-    if (!queries.columns.contains("bound_d2"))
-      return bruteFull(queries, points, k)
-    // `queries` (the uncertified remainder) arrives PERSISTED from
-    // knnLevel — its several plan-side consumers below read the cache
-    // instead of re-deriving the level chain.
-    val bounded = queries.filter(col("bound_d2").isNotNull)
-    val unbounded = queries.filter(col("bound_d2").isNull).drop("bound_d2")
-    // ROUND 7 (round-6 verdict #3): the disc-box union used to be a
-    // driver-side .head() and the empty-remainder check a driver-side
-    // .isEmpty() — two more serialized job barriers before the main job.
-    // Both are now IN the plan:
-    //   - the box is a grouped aggregate (groupBy(lit) ⇒ ZERO rows when
-    //     `bounded` is empty, one row otherwise) broadcast into a
-    //     nested-loop range filter over the points — when no bounded
-    //     query exists, AQE's empty-relation propagation collapses the
-    //     branch and the points scan for it never runs;
-    //   - the unbounded full-corpus brute branch is always planned, and
-    //     the same AQE rule collapses it when the broadcast query side
-    //     turns out empty (the common case).
-    // The trade (as in prunePointsToQueryCells): the box literals no
-    // longer reach parquet row-group stats when the branch IS taken.
-    val r = sqrt(col("bound_d2"))
-    val box = bounded.groupBy(lit(1).as("__one")).agg(
-      min(col("qlon") - r).as("__bxmin"), max(col("qlon") + r).as("__bxmax"),
-      min(col("qlat") - r).as("__bymin"), max(col("qlat") + r).as("__bymax"))
-    val prunedPts = points.join(broadcast(box),
-        col("lon") >= col("__bxmin") && col("lon") <= col("__bxmax") &&
-        col("lat") >= col("__bymin") && col("lat") <= col("__bymax"), "inner")
-      .drop("__one", "__bxmin", "__bxmax", "__bymin", "__bymax")
-    val d2 = (col("qlon") - col("lon")) * (col("qlon") - col("lon")) +
-      (col("qlat") - col("lat")) * (col("qlat") - col("lat"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("dist2").asc, col("nid").asc)
-    val boundedTop = prunedPts.join(broadcast(bounded), col("qid") =!= col("pid"))
-      .select(col("qid"), col("pid").as("nid"), d2.as("dist2"), col("bound_d2"))
-      .filter(col("dist2") <= col("bound_d2"))
-      .select(col("qid"), col("nid"), col("dist2"))
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= k)
-    boundedTop.unionByName(bruteFull(unbounded, points, k))
-  }
-
-  private def bruteFull(queries: DataFrame, points: DataFrame, k: Int): DataFrame = {
-    val d2 = (col("qlon") - col("lon")) * (col("qlon") - col("lon")) +
-      (col("qlat") - col("lat")) * (col("qlat") - col("lat"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("dist2").asc, col("nid").asc)
-    // NO spread here: a repartition below this join would become an
-    // eagerly-materialized AQE shuffle stage, defeating the empty-build
-    // collapse that skips this (usually empty) fallback's corpus scan
-    points.join(broadcast(queries), col("qid") =!= col("pid"))
-      .select(col("qid"), col("pid").as("nid"), d2.as("dist2"))
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= k)
-  }
-
-  /** one grid level: returns (certified exact results, uncertified queries). */
-  private def knnLevel(queries: DataFrame, points: DataFrame, k: Int,
-                       z: Int, spreadPoints: Boolean = true): (DataFrame, DataFrame) = {
-    val d2 = (col("qlon") - col("lon")) * (col("qlon") - col("lon")) +
-      (col("qlat") - col("lat")) * (col("qlat") - col("lat"))
-    val q = queries.select(col("qid"), col("qlon"), col("qlat"),
-      st_lon2tile(col("qlon"), lit(z)).as("qtx"),
-      st_lat2tile(col("qlat"), lit(z)).as("qty"))
-    val maxT = (1L << z) - 1
-    val qCells = q.select(col("qid"), col("qlon"), col("qlat"), col("qtx"), col("qty"),
-        explode(array((-1 to 1).flatMap(dx => (-1 to 1).map(dy =>
-          struct((col("qtx") + dx).as("tx"), (col("qty") + dy).as("ty")))): _*)).as("nb"))
-      .filter(col("nb.tx") >= 0 && col("nb.tx") <= maxT &&
-              col("nb.ty") >= 0 && col("nb.ty") <= maxT)
-      .select(col("qid"), col("qlon"), col("qlat"), col("qtx"), col("qty"),
-        col("nb.tx").as("tx"), col("nb.ty").as("ty"))
-    // the candidate probe + partial top-k is the operator's hot stage;
-    // without the conditional spread it runs at SCAN parallelism (3 tasks
-    // for the single-file local corpus — measured 12.9 s serial CPU on
-    // q21 at sf0.1, the whole query wall). No-op when splits >= cores.
-    // FALLBACK levels skip it (spreadPoints=false): their candidate work
-    // is bounded by the (small) uncertified remainder, so the exchange +
-    // two AQE stages cost more than the narrow probe they would widen.
-    val p = (if (spreadPoints) Spread.forKernels(points) else points)
-      .select(col("pid"), col("lon"), col("lat"),
-      st_lon2tile(col("lon"), lit(z)).as("tx"),
-      st_lat2tile(col("lat"), lit(z)).as("ty"))
-    // One shuffle on (tx,ty) for the candidate join, then ONE window
-    // partitioning on qid shared by rank / kth-distance / count.
-    // MEASURED LESSON (round 2): a TypedImperativeAggregate top-k
-    // (`topk_neighbors`) here forces ObjectHashAggregate, which degrades
-    // to sort-based aggregation with per-row buffer (de)serialization at
-    // this group cardinality — 10-30× slower than the window at 4.8M
-    // candidates (132-409 s vs 12.6 s at local[32]) and it destroys
-    // scaling (0.31 vs 0.93 efficiency). The window sort shares its
-    // exchange with the anti-join consumer via ReuseExchange, so dropping
-    // the round-1 `.cache()` costs only a sort replay, not a re-shuffle.
-    val w = Window.partitionBy(col("qid")).orderBy(col("dist2").asc, col("nid").asc)
-    val wq = Window.partitionBy(col("qid"))
-    val blockMinX = st_tile2lon(lit(z), col("qtx") - 1)
-    val blockMaxX = st_tile2lon(lit(z), col("qtx") + 2)
-    val blockMaxY = st_tile2lat(lit(z), col("qty") - 1)
-    val blockMinY = st_tile2lat(lit(z), col("qty") + 2)
-    val inf = lit(Double.MaxValue)
-    val margin = least(
-      when(col("qtx") === 0, inf).otherwise(col("qlon") - blockMinX),
-      when(col("qtx") === maxT, inf).otherwise(blockMaxX - col("qlon")),
-      when(col("qty") === 0, inf).otherwise(blockMaxY - col("qlat")),
-      when(col("qty") === maxT, inf).otherwise(col("qlat") - blockMinY))
-    // MAP-SIDE PARTIAL TOP-K is already in the executed plan: because the
-    // rank is a row_number window immediately filtered by rk <= k,
-    // Catalyst's InferWindowGroupLimit compiles it to
-    // WindowGroupLimitExec(Partial) BELOW the qid exchange (each map
-    // partition locally sorts and keeps <= k rows per qid) + Final above —
-    // the exchange already carries O(k · |queries| · partitions), never
-    // every (query, candidate) pair. A hand-rolled sortWithinPartitions +
-    // first-k-per-qid mapPartitions pass was built and measured in round
-    // 4: shuffle bytes/records IDENTICAL to this plan (graft.ShuffleProbe,
-    // 1,733,548 B / 100,797 records both ways at sf0.1) and ~12% slower
-    // at local[32] (the duplicated sort + a codegen break) — the
-    // declarative window + filter form IS the optimized form. This is the
-    // shuffle-volume analogue of the reference kd-tree iterator's
-    // best-first rule (kdtree/nearest_neighbor_iterator.go:98-189: never
-    // carry what cannot be in the answer).
-    // ROUND 7, measured and REVERTED: broadcasting the replicated-queries
-    // side removed both cell-key exchanges, but it also re-partitioned the
-    // candidate stream by the POINTS' arbitrary layout — each query's
-    // candidates then scatter across every partition, the partial
-    // WindowGroupLimit below prunes almost nothing, and the qid exchange
-    // carried the FULL candidate volume (×10 tier: 17.2M rows, 7.6 GB
-    // spill, 28 s GC vs the cell-shuffled plan's ~10 s wall; at sf0.1 the
-    // hint was a wash). The cell-key shuffle is load-bearing: it
-    // CONCENTRATES each query's 3×3-block candidates so the map-side
-    // partial top-k actually caps the window exchange at O(k·|queries|).
-    val ranked = materialize(qCells.join(p, Seq("tx", "ty"))
+  private def gridKnn(queries: DataFrame, levelPoints: DataFrame, points: DataFrame,
+                      k: Int, z: Int): DataFrame = {
+    // a null qid pairs with nothing (brute force's qid <> pid is null).
+    // Filtering it here also keeps the fallback's join from pushing an
+    // inferred `qid IS NOT NULL` into only one copy of the level below,
+    // which would stop the two copies sharing their exchanges.
+    val q = queries.select(col("qid"), col("qlon"), col("qlat")).filter(col("qid").isNotNull)
+    val qCells = q.select(col("qid"), col("qlon"), col("qlat"),
+      explode(block(z, col("qlon"), col("qlat"))).as("cell"))
+    val p = levelPoints.select(col("pid"), col("lon"), col("lat"),
+      cellOf(z, col("lon"), col("lat")).as("cell"))
+    // The cell-key shuffle CONCENTRATES each query's block candidates, so
+    // the map-side partial top-k below (WindowGroupLimit, from row_number
+    // + rk <= k) caps the qid exchange at k rows per query and partition.
+    // Broadcasting the query side scatters them (×10 tier: 7.6 GB spill);
+    // a top-k aggregate instead of the window measured 10-30× slower.
+    val candidates = qCells.join(p, "cell")
       .filter(col("qid") =!= col("pid"))
-      .select(col("qid"), col("qlon"), col("qlat"), col("qtx"), col("qty"),
-        col("pid").as("nid"), d2.as("dist2"))
-      .withColumn("rk", row_number().over(w))
+      .select(col("qid"), col("qlon"), col("qlat"), col("pid").as("nid"), dist2.as("dist2"))
+    val sentinel = q.select(col("qid"), col("qlon"), col("qlat"),
+      lit(null).cast("long").as("nid"), lit(Double.PositiveInfinity).as("dist2"))
+    val ranked = candidates.unionByName(sentinel)
+      .withColumn("rk", row_number().over(byDist))
       .filter(col("rk") <= k)
-      .withColumn("kth_dist2", max(col("dist2")).over(wq))
-      .withColumn("n_cand", count(lit(1)).over(wq))
-      .withColumn("certified", col("n_cand") === k && col("kth_dist2") <= margin * margin))
-    val exactPart = ranked.filter(col("certified"))
+      .withColumn("kth_dist2", max(col("dist2")).over(Window.partitionBy(col("qid"))))
+      .withColumn("certified", col("kth_dist2") <= margin2(z))
+    val certified = ranked.filter(col("certified"))
       .select(col("qid"), col("nid"), col("dist2"), col("rk").cast("long").as("rk"))
-    // per-query kth-candidate bound for the downstream brute pass: the
-    // window already hash-partitioned `ranked` by qid, so this groupBy
-    // reuses that partitioning (no extra exchange)
-    val bounds = ranked.filter(col("n_cand") === k)
-      .groupBy(col("qid")).agg(max(col("kth_dist2")).as("bound_d2"))
-    // the remainder is PERSISTED: it is bounded by |queries| and has ≥ 3
-    // consumers (cell-prune collect, next-level join, brute probes +
-    // broadcast) — unpersisted, each one re-runs the queries-side scan
-    val uncertified = materialize(queries
-      .select(col("qid"), col("qlon"), col("qlat"))
-      .join(ranked.filter(col("certified")).select("qid").distinct(), Seq("qid"), "left_anti")
-      .join(bounds, Seq("qid"), "left"))
-    (exactPart, uncertified)
+    // every row of each uncertified query (a duplicated query row pairs
+    // twice, as in brute force), with the qid's kth candidate distance²
+    val bounds = ranked.filter(!col("certified") && col("rk") === 1)
+      .select(col("qid"), col("kth_dist2").as("bound_d2"))
+    val open = q.join(broadcast(bounds), "qid")
+    val nearest = fallbackPairs(open, points, z - 2)
+      .filter(col("qid") =!= col("pid"))
+      .select(col("qid"), col("pid").as("nid"), dist2.as("dist2"), col("bound_d2"))
+      .filter(col("dist2") <= col("bound_d2"))
+      .withColumn("rk", row_number().over(byDist).cast("long"))
+      .filter(col("rk") <= k)
+      .drop("bound_d2")
+    certified.unionByName(nearest)
   }
 
-  // ---- dense-cell sub-index (round-4 verdict #5; kdtree.go:22-77) ----
+  /** The fallback's pairs, before any distance filter, for the uncertified
+    * queries `open(qid, qlon, qlat, bound_d2)`; `bound_d2` bounds each
+    * query's true kth distance², so its k nearest neighbours lie in the
+    * disc of that radius. The route is chosen per query up front:
+    *  - the disc fits inside its 3×3 block at zoom z (z ≥ 2): the query
+    *    keys its 9 cells and pairs with the points of those cells;
+    *  - otherwise it keys the brute key −1, which every point carries.
+    * One BROADCAST hash join serves both routes, so the points stream
+    * through map-only and are never shuffled. The build holds at most 9
+    * rows per uncertified query, bounded by the query side, which every
+    * kNN call treats as the small one.
+    */
+  private[graft] def fallbackPairs(open: DataFrame, points: DataFrame, z: Int): DataFrame = {
+    val brute = array(lit(-1L))
+    val (queryKeys, pointKeys) =
+      if (z < 2) (brute, brute)
+      else (when(col("bound_d2") <= margin2(z), block(z, col("qlon"), col("qlat"))).otherwise(brute),
+        array(cellOf(z, col("lon"), col("lat")), lit(-1L)))
+    val keyed = open.select(col("qid"), col("qlon"), col("qlat"), col("bound_d2"),
+      explode(queryKeys).as("key"))
+    points.select(col("pid"), col("lon"), col("lat"), explode(pointKeys).as("key"))
+      .join(broadcast(keyed), "key")
+      .select(col("qid"), col("qlon"), col("qlat"), col("bound_d2"),
+        col("pid"), col("lon"), col("lat"))
+  }
+
+  // ---- dense-cell sub-index (kdtree.go:22-77) ----
   //
   // A cell with 100× the target density makes the candidate join's work
   // quadratic within that cell: every query replicated to its 3×3 block
-  // pairs with every point in the hot cell (AQE splits the TASKS, but
-  // the total pair enumeration stands). The reference escapes this by
+  // pairs with every point in the hot cell. The reference escapes this by
   // kd-tree descent — the tree is simply DEEPER where the data is dense.
   // The distributed analogue is adaptive grid deepening: detect cells
   // whose population exceeds `denseFactor`× the ~15-pt target with one
   // map-side-combined count-by-cell, then serve queries near those cells
-  // from a PRE-LEVEL at a deeper zoom chosen to restore ~15 pts/cell
-  // (cell area shrinks 4× per zoom step). Certified deep results are
-  // exact as always; the (small) remainder re-enters the standard
-  // expanding chain. Queries nowhere near a dense cell pay nothing new.
+  // at a deeper zoom chosen to restore ~15 pts/cell (cell area shrinks 4×
+  // per zoom step). Queries nowhere near a dense cell pay nothing new.
 
   /** dense cells at zoom z: packed (tx<<z)|ty keys of cells holding more
     * than `threshold` points, capped (the everything-dense regime is
@@ -338,9 +201,7 @@ object Knn {
     */
   private[graft] def denseCellsOf(points: DataFrame, z: Int, threshold: Long,
                                   cap: Int): (Array[Long], Long) = {
-    val cellCol = shiftleft(st_lon2tile(col("lon"), lit(z)), z)
-      .bitwiseOR(st_lat2tile(col("lat"), lit(z)))
-    val rows = points.select(cellCol.as("cell"))
+    val rows = points.select(cellOf(z, col("lon"), col("lat")).as("cell"))
       .groupBy("cell").agg(count(lit(1)).as("cnt"))
       .filter(col("cnt") > threshold)
       .orderBy(col("cnt").desc, col("cell").asc)
@@ -359,44 +220,32 @@ object Knn {
 
   private val MaxDenseCells = 4096
 
-  /** `knnJoin` with the dense-cell sub-index. Costs one extra count-by-
-    * cell pass over the points (map-side combined — the shuffle carries
-    * one row per OCCUPIED CELL, not per point); use it when density skew
-    * is expected. Exact for the same reason the level chain is exact:
-    * every certified result is certified, every remainder reaches an
-    * exact path, and the dense/sparse query split is a partition of the
-    * query set.
+  /** `knnJoin` with the dense-cell sub-index: a router. Queries next to a
+    * dense cell run at the deep zoom, the rest at `z`. Costs one extra
+    * count-by-cell pass over the points (map-side combined — the shuffle
+    * carries one row per OCCUPIED CELL). Exact: the split partitions the
+    * query set, and each part is an exact grid level plus fallback.
     */
   def knnJoinAdaptive(queries: DataFrame, points: DataFrame, k: Int, z: Int,
                       denseFactor: Int = 64): DataFrame = {
     val (dense, maxCnt) = denseCellsOf(points, z, denseFactor.toLong * 15L, MaxDenseCells)
-    if (dense.isEmpty) return knnJoin(queries, points, k, z)
     val zDeep = deepZoomFor(z, maxCnt)
-    if (zDeep <= z) {
-      // base zoom already at (or beyond) the packed-key clamp: a "deeper"
-      // level would be the SAME or a coarser grid — deepening would
-      // pessimize, not help, so take the plain exact path
-      return knnJoin(queries, points, k, z)
-    }
-    if (dense.length > MaxDenseCells) {
-      // everything is dense: z itself was wrong for this corpus — deepen
-      // globally instead of building an unbounded cell set
-      return knnJoin(queries, points, k, zDeep)
-    }
+    // at the packed-key clamp a "deeper" grid is the same grid: plain path
+    if (dense.isEmpty || zDeep <= z) return knnJoin(queries, points, k, z)
+    // everything is dense: z itself was wrong for this corpus
+    if (dense.length > MaxDenseCells) return knnJoin(queries, points, k, zDeep)
     // a query is dense-adjacent when ANY of its 3×3 cells at z is dense —
     // exactly the cells its candidate join would enumerate
-    val denseSet = dense.toSet
-    val qCellAny = (-1 to 1).flatMap(dx => (-1 to 1).map(dy =>
-      shiftleft(st_lon2tile(col("qlon"), lit(z)) + dx, z)
-        .bitwiseOR(st_lat2tile(col("qlat"), lit(z)) + dy)
-        .isin(denseSet.toSeq: _*))).reduce(_ || _)
-    val qDense = materialize(queries.filter(qCellAny))
-    val qSparse = queries.filter(!qCellAny)
-    val (deepExact, deepRest) =
-      knnLevel(qDense, prunePointsToQueryCells(points, qDense, zDeep),
-        k, zDeep, spreadPoints = false)
-    deepExact
-      .unionByName(knnJoin(deepRest.drop("bound_d2"), points, k, z))
-      .unionByName(knnJoin(qSparse, points, k, z))
+    val nearDense = arrays_overlap(block(z, col("qlon"), col("qlat")), typedLit(dense.toSeq))
+    val qDense = queries.filter(nearDense)
+    // the deep level only matches points in the dense queries' 3×3 blocks
+    // at zDeep: a broadcast semi-join on those cells (≤ 9 keys per dense
+    // query, map-only) keeps every other point out of its cell shuffle,
+    // and the few it keeps need no spread. The fallback reads all points.
+    val deepCells = qDense.select(explode(block(zDeep, col("qlon"), col("qlat"))).as("cell"))
+    val deepPoints = points.join(broadcast(deepCells),
+      cellOf(zDeep, col("lon"), col("lat")) === col("cell"), "left_semi")
+    gridKnn(qDense, deepPoints, points, k, zDeep)
+      .unionByName(knnJoin(queries.filter(!nearDense), points, k, z))
   }
 }

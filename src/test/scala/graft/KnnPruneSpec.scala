@@ -1,22 +1,21 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.Slippy
-import graft.operators.Knn
+import graft.operators.{CacheBin, Knn}
 
-/** Fallback-scan pruning (round-4 verdict #1): the level-2 retry and the
-  * brute remainder must never rescan the full points corpus — the level-2
-  * scan is clipped to the uncertified queries' candidate cells (pushed
-  * range predicates + exact cell IN-set) and the brute scan to the union
-  * of the per-query kth-candidate search discs. Exactness is gated against
+/** The kNN fallback must never pay for the full points corpus beyond one
+  * map-only scan: an uncertified query whose bound disc fits its 3×3
+  * block at z−2 joins only the points of those cells (a broadcast cell
+  * join, the points never shuffled), and the rest pair with every point
+  * in the same join, bounded by the same disc. Exactness is gated against
   * unconditional brute force on inputs CRAFTED to drive every fallback
   * path (sparse cells at a deep z, boundary-clamped latitudes).
   */
-class KnnPruneSpec extends AnyFunSuite {
+class KnnPruneSpec extends AnyFunSuite with KnnFixtures {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -24,37 +23,19 @@ class KnnPruneSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  private def bruteKnn(qs: DataFrame, pts: DataFrame, k: Int): DataFrame = {
-    val d2 = (col("qlon") - col("lon")) * (col("qlon") - col("lon")) +
-      (col("qlat") - col("lat")) * (col("qlat") - col("lat"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("dist2").asc, col("nid").asc)
-    pts.join(broadcast(qs), col("qid") =!= col("pid"))
-      .select(col("qid"), col("pid").as("nid"), d2.as("dist2"))
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= k)
-  }
+  private def sparsePts = toPoints(sparseRows)
 
-  /** sparse deterministic scatter: ~1 point per deep-z cell, so the 3×3
-    * margin certification FAILS for most queries and the level chain runs
-    * all the way to the bounded brute pass. Plus boundary-clamped rows
-    * (|lat| > 85.05 lives in tile row 0/maxT).
-    */
-  private def sparsePts = {
-    import spark.implicits._
-    val scatter = (0L until 120L).map { i =>
-      (i, (i * 0.618033988749895 % 1.0) * 340.0 - 170.0,
-          (i * 0.414213562373095 % 1.0) * 160.0 - 80.0)
-    }
-    val polar = Seq((200L, 12.0, 89.0), (201L, 12.4, 88.5), (202L, -9.0, -89.2),
-                    (203L, -9.3, -88.8), (204L, 179.9, 1.0), (205L, -179.8, 1.2))
-    (scatter ++ polar).toDF("pid", "lon", "lat")
+  /** uncertified queries as the fallback receives them */
+  private def open(rows: (Long, Double, Double, Double)*) = {
+    val s = spark
+    import s.implicits._
+    rows.toDF("qid", "qlon", "qlat", "bound_d2")
   }
 
   test("fallback chain stays exact on sparse + boundary-clamped inputs") {
     val pts = sparsePts
-    val qs = pts.filter(col("pid") % 3 === 0)
-      .select(col("pid").as("qid"), col("lon").as("qlon"), col("lat").as("qlat"))
-    // deep z => ~every query uncertified at level 1 AND level 2
+    val qs = queriesOf(pts, 3)
+    // deep z => ~every query uncertified at the grid level
     val got = Knn.knnJoin(qs, pts, k = 3, z = 10)
     val want = bruteKnn(qs, pts, 3)
     assert(got.count() == want.count())
@@ -62,94 +43,80 @@ class KnnPruneSpec extends AnyFunSuite {
       "pruned fallback diverges from brute force")
   }
 
+  // the level-2 scan is the disc route of the fallback join: a query whose
+  // bound disc fits its 3×3 block at z−2 pairs only with the points of
+  // those cells, read map-only from the parquet source. The name predates
+  // the disc join; the pruning is by cell key in a broadcast join, and no
+  // range predicate reaches the parquet reader
   test("level-2 scan prunes to the query cells and pushes range filters to parquet") {
     val tmp = java.nio.file.Files.createTempDirectory("knnprune").toString
     sparsePts.write.mode("overwrite").parquet(s"$tmp/pts.parquet")
     val pts = spark.read.parquet(s"$tmp/pts.parquet")
-    import spark.implicits._
-    val qs = Seq((1L, 10.0, 20.0), (2L, -60.0, -30.0))
-      .toDF("qid", "qlon", "qlat")
-    val z = 8
-    val pruned = Knn.prunePointsToQueryCells(pts, qs, z)
-    // row-level evidence: the pruned scan returns exactly the points whose
-    // cell is in the queries' 3×3 neighborhoods — computed independently
-    val cellSet = (for {
-      (qlon, qlat) <- Seq((10.0, 20.0), (-60.0, -30.0))
-      dx <- -1 to 1; dy <- -1 to 1
-      tx = Slippy.lon2Num(z, qlon) + dx
-      ty = Slippy.lat2Num(z, qlat) + dy
-      if tx >= 0 && tx < (1 << z) && ty >= 0 && ty < (1 << z)
-    } yield (tx.toLong, ty.toLong)).toSet
-    val expected = sparsePts.collect().filter { r =>
-      cellSet.contains((Slippy.lon2Num(z, r.getDouble(1)).toLong,
-                        Slippy.lat2Num(z, r.getDouble(2)).toLong))
-    }.map(_.getLong(0)).toSet
-    val gotIds = pruned.select("pid").collect().map(_.getLong(0)).toSet
-    assert(gotIds == expected, s"pruned cell membership wrong: $gotIds vs $expected")
-    assert(gotIds.size < sparsePts.count(), "pruning did not reduce the scan")
-    // plan-level evidence (round 7): the prune is a BROADCAST semi-join
-    // inside the plan — no driver collect barrier, and the points side
-    // carries no Exchange (the semi-join must not shuffle the corpus)
-    // (string match: the executedPlan root is AdaptiveSparkPlanExec, whose
-    // TreeNode.collect does not descend into the wrapped plan)
-    val plan = pruned.queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftSemi"),
-      s"expected a broadcast left-semi prune join:\n$plan")
+    val z = 4
+    // two discs that fit (radius 0.1 degree) and one unbounded query (fewer
+    // than k candidates), which must take the brute route instead
+    val qs = open((1L, 10.0, 20.0, 0.01), (2L, -60.0, -30.0, 0.01),
+      (3L, 100.0, 10.0, Double.PositiveInfinity))
+    val pairs = Knn.fallbackPairs(qs, pts, z)
+    // row-level evidence: exactly the points whose cell is in each fitting
+    // query's 3×3 neighborhood — computed independently
+    def cellMembers(qlon: Double, qlat: Double) = {
+      val (qtx, qty) = (Slippy.lon2Num(z, qlon), Slippy.lat2Num(z, qlat))
+      sparseRows.filter { case (_, lon, lat) =>
+        math.abs(Slippy.lon2Num(z, lon) - qtx) <= 1 && math.abs(Slippy.lat2Num(z, lat) - qty) <= 1
+      }.map(_._1).toSet
+    }
+    val got = pairs.select("qid", "pid").collect()
+      .groupBy(_.getLong(0)).view.mapValues(_.map(_.getLong(1)).toSet).toMap
+    for ((qid, qlon, qlat) <- Seq((1L, 10.0, 20.0), (2L, -60.0, -30.0))) {
+      val want = cellMembers(qlon, qlat)
+      assert(want.nonEmpty && want.size < sparseRows.size, s"vacuous premise for query $qid")
+      assert(got.getOrElse(qid, Set.empty) == want, s"query $qid: disc-join cell membership wrong")
+    }
+    assert(got(3L) == sparseRows.map(_._1).toSet, "the unbounded query must pair with every point")
+    // plan-level evidence: the query side is broadcast and the points side
+    // carries no Exchange (string match: the executedPlan root is
+    // AdaptiveSparkPlanExec, whose TreeNode.collect does not descend)
+    val plan = pairs.queryExecution.executedPlan.toString
+    assert(plan.contains("BroadcastHashJoin"), s"expected a broadcast cell join:\n$plan")
     assert(!plan.contains("Exchange hashpartitioning"),
-      s"the semi-join prune must not shuffle the points:\n$plan")
+      s"the disc join must not shuffle the points:\n$plan")
   }
 
   test("prune plan construction launches no Spark jobs (collect barrier gone)") {
     val pts = sparsePts
     import spark.implicits._
     val qs = Seq((1L, 10.0, 20.0), (2L, -60.0, -30.0)).toDF("qid", "qlon", "qlat")
-    val jobs = new java.util.concurrent.atomic.AtomicLong
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      // building the FULL expanding chain (levels + brute fallback) must be
-      // lazy: the old IN-set collect / disc-box head() / isEmpty() barriers
-      // each ran a serialized job here, before any action
-      val df = Knn.knnJoin(qs, pts, k = 3, z = 10)
-      org.apache.spark.graftshim.ListenerDrain.waitUntilEmpty(spark.sparkContext)
-      assert(jobs.get() == 0,
-        s"plan construction ran ${jobs.get()} Spark job(s) — a collect barrier is back")
-      // and the plan still computes the exact result once acted on
-      val want = bruteKnn(qs, pts, 3)
-      assert(df.exceptAll(want).count() == 0 && want.exceptAll(df).count() == 0)
-    } finally {
-      spark.sparkContext.removeSparkListener(l)
-      graft.operators.CacheBin.drain()
-    }
+    CacheBin.drain()
+    // building the whole operator (grid level + disc + brute fallback)
+    // must be lazy and persist nothing
+    val (df, jobs) = jobsDuring(Knn.knnJoin(qs, pts, k = 3, z = 10))
+    assert(jobs == 0, s"plan construction ran $jobs Spark job(s) — a collect barrier is back")
+    assert(CacheBin.pending == 0, "kNN registered a persisted frame")
+    // and the plan still computes the exact result once acted on
+    val want = bruteKnn(qs, pts, 3)
+    assert(df.exceptAll(want).count() == 0 && want.exceptAll(df).count() == 0)
   }
 
   test("boundary cells leave their range side OPEN (clamped coords survive)") {
     val pts = sparsePts
-    // query next to the north-clamp row: its 3×3 set includes ty=0, so no
-    // upper-lat range bound may be applied — pid 200 (lat 89) must survive
-    import spark.implicits._
-    val qs = Seq((1L, 12.1, 84.9)).toDF("qid", "qlon", "qlat")
+    // query next to the north-clamp row: its 3×3 set includes ty=0, so
+    // pid 200 (lat 89, clamped into row 0) must reach the disc join
     val z = 6
     val ty = Slippy.lat2Num(z, 84.9)
     assume(ty <= 1, s"test premise: query near row 0, got ty=$ty")
-    val pruned = Knn.prunePointsToQueryCells(pts, qs, z)
-    val ids = pruned.select("pid").collect().map(_.getLong(0)).toSet
-    assert(ids.contains(200L), s"clamped-lat point range-filtered away: $ids")
+    val ids = Knn.fallbackPairs(open((1L, 12.1, 84.9, 0.01)), pts, z)
+      .select("pid").collect().map(_.getLong(0)).toSet
+    assert(ids.size < sparseRows.size, "premise: the query must take the disc route")
+    assert(ids.contains(200L), s"clamped-lat point lost by the disc join: $ids")
   }
 
   test("empty uncertified set collapses the fallback scan to nothing") {
-    val pts = sparsePts
-    import spark.implicits._
-    val qs = spark.emptyDataset[(Long, Double, Double)]
-      .toDF("qid", "qlon", "qlat")
-    val pruned = Knn.prunePointsToQueryCells(pts, qs, 8)
-    assert(pruned.count() == 0)
+    val joined = Knn.fallbackPairs(open(), sparsePts, 8)
+    assert(joined.count() == 0)
     // statically empty: no file scan survives optimization
-    val optimized = pruned.queryExecution.optimizedPlan.toString
+    val optimized = joined.queryExecution.optimizedPlan.toString
     assert(optimized.contains("LocalRelation") || optimized.contains("Empty"),
-      s"empty prune should fold to an empty relation:\n$optimized")
+      s"empty disc join should fold to an empty relation:\n$optimized")
   }
 }

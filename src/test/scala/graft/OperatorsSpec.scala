@@ -2,13 +2,12 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators._
 import graft.streaming.Sessionize
 
-class OperatorsSpec extends AnyFunSuite {
+class OperatorsSpec extends AnyFunSuite with KnnFixtures {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -18,16 +17,6 @@ class OperatorsSpec extends AnyFunSuite {
     .getOrCreate()
 
   private val dir = "/root/testdata/sf0.001"
-
-  private def bruteKnn(qs: DataFrame, pts: DataFrame, k: Int): DataFrame = {
-    val d2 = (col("qlon") - col("lon")) * (col("qlon") - col("lon")) +
-      (col("qlat") - col("lat")) * (col("qlat") - col("lat"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("dist2").asc, col("nid").asc)
-    pts.join(broadcast(qs), col("qid") =!= col("pid"))
-      .select(col("qid"), col("pid").as("nid"), d2.as("dist2"))
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= k)
-  }
 
   test("cell-pruned kNN is exactly brute-force kNN (certification + fallback)") {
     val pts = graft.sources.Synth.points(spark, dir).select(col("pid"), col("lon"), col("lat"))
@@ -75,8 +64,6 @@ class OperatorsSpec extends AnyFunSuite {
     }
     spark.sparkContext.addSparkListener(listener)
     spark.sparkContext.setJobGroup("knn-skew-probe", "kNN skew probe")
-    // group wraps the CALL too: the operator runs bounded plan-build jobs
-    // (fallback-scan pruning) that belong to the measured work
     val got = Knn.knnJoin(qs, pts, k = 3, z = 8)
     got.count() // the measured action: only in-group stages feed `durations`
     spark.sparkContext.clearJobGroup()
@@ -139,6 +126,15 @@ class OperatorsSpec extends AnyFunSuite {
     assert(got.count() == want.count())
     assert(got.exceptAll(want).count() == 0 && want.exceptAll(got).count() == 0,
       "adaptive kNN diverges from brute force")
+    // the points reach the deep level's cell shuffle through a broadcast
+    // semi-join on the dense queries' 3×3 cells at the deep zoom (one per
+    // copy of the level, all identical)
+    val semi = PlanNodes.collect(got.queryExecution.executedPlan) {
+      case j: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+          if j.joinType == org.apache.spark.sql.catalyst.plans.LeftSemi => j.canonicalized
+    }
+    assert(semi.nonEmpty && semi.distinct.size == 1,
+      s"expected the deep level's broadcast semi-join, found ${semi.distinct.size} distinct")
     org.apache.spark.graftshim.ListenerDrain.waitUntilEmpty(spark.sparkContext)
     spark.sparkContext.removeSparkListener(listener)
     val ds = durations.synchronized(durations.toVector).sorted
