@@ -161,7 +161,7 @@ object Scaling {
     // superlinear (measured q21 "efficiency" 1.76 at 4→16). 64 partitions
     // keep every level's partitions spill-free and identical on both sides,
     // so the ratio measures parallelism, nothing else.
-    val builder1 = SparkSession.builder()
+    val common = SparkSession.builder()
       .appName(s"graft-scaling-$cpus")
       // default 64: spill-free and identical on both sides at the ×8-×48
       // tiers (see the comment below). Bigger tiers must SCALE partitions
@@ -175,14 +175,6 @@ object Scaling {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
-    // loopback-shuffle experiment knob: on one host, compressing shuffle
-    // blocks only burns CPU (no real network) — lets the q21 cluster pair
-    // isolate codec cost from the cross-JVM fetch path
-    val builder0 =
-      if (sys.env.get("GRAFT_SHUFFLE_COMPRESS").contains("off"))
-        builder1.config("spark.shuffle.compress", "false")
-          .config("spark.shuffle.spill.compress", "false")
-      else builder1
     val builder =
       if (clusterMode) {
         val execCores = 4
@@ -197,41 +189,16 @@ object Scaling {
           "java.base/java.util.concurrent.atomic",
           "java.base/sun.nio.ch", "java.base/sun.nio.cs",
           "java.base/sun.security.action", "java.base/sun.util.calendar")
-          .map(p => s"--add-opens=$p=ALL-UNNAMED").mkString(" ") +
-          // Executor GC is selectable: ParallelGC measured +28% on the
-          // 1-executor side of the q33 pair (the kernel-bound regime; the
-          // 4-executor side is scan/overhead-bound and didn't move, so
-          // the RATIO drops while absolute throughput rises). Default
-          // stays G1 for comparability across recorded rounds; set
-          // GRAFT_EXEC_GC=parallel for the deployment-tuned absolute
-          // numbers (spark.executor.extraJavaOptions on a real cluster).
-          (if (sys.env.get("GRAFT_EXEC_GC").contains("parallel"))
-             " -XX:+UseParallelGC" else "")
-        builder0
+          .map(p => s"--add-opens=$p=ALL-UNNAMED").mkString(" ")
+        common
           .master(s"local-cluster[$nExec,$execCores,7168]")
           .config("spark.jars", jar.getAbsolutePath)
           .config("spark.executor.memory", "6g")
           .config("spark.executor.extraJavaOptions", addOpens)
-      } else builder0.master(s"local[$cpus]")
+      } else common.master(s"local[$cpus]")
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
-  }
-
-  def runAt(cpus: Int): Map[String, Double] = {
-    val spark = buildSession(cpus)
-    val qs = SparkEntry.queries ++ localQueries
-    val names = activePlan.map(_._1).toSet
-    Bench.run(spark, "/root/testdata/sf0.001",
-      qs.view.filterKeys(names.contains).toMap) // warm-up
-    val out = activePlan.map { case (name, factor) =>
-      val t = Bench.run(spark, dirFor(factor), Map(name -> qs(name)))
-      name -> t(name)
-    }.toMap
-    spark.stop()
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    out
   }
 
   /** optional comma-separated query filter (experiments): SPARK_GRAFT_SCALE_ONLY */

@@ -2,8 +2,8 @@ package org.apache.spark.graftshim
 
 import org.apache.spark.SparkContext
 
-/** Deterministic listener drain for metric probes (ShuffleProbe, the
-  * OperatorsSpec skew probe): `SparkContext.listenerBus` is
+/** Deterministic listener drain for metric probes (BenchExtra, the
+  * benchmark harness, the specs' job counters): `SparkContext.listenerBus` is
   * `private[spark]`, so this one-line accessor lives in an
   * org.apache.spark subpackage. `LiveListenerBus.waitUntilEmpty` itself
   * is public API — this replaces the racy Thread.sleep drain the round-4

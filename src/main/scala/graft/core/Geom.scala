@@ -41,9 +41,6 @@ object Geom {
       val dx = x2 - x1; val dy = y2 - y1
       dx * dx + dy * dy
     }
-
-    def isVertical: Boolean = x1 == x2
-    def isHorizontal: Boolean = y1 == y2
   }
 
   object Seg {
@@ -103,10 +100,6 @@ object Geom {
       scala.collection.immutable.ArraySeq.unsafeWrapArray(arr)
     }
 
-  /** reference line_string.go:24-30 — exact first==last closed test. */
-  def isRing(pts: IndexedSeq[Pt]): Boolean =
-    pts.length >= 4 && pts.head._1 == pts.last._1 && pts.head._2 == pts.last._2
-
   /** reference utils.go:6-110 ApplyToPoints — map a coordinate transform
     * over every point of a geometry (the reprojection hook). Structure is
     * preserved; the Go version's error plumbing is unneeded (f is total).
@@ -150,7 +143,6 @@ object Geom {
     def containsPoint(px: Double, py: Double): Boolean =
       minx <= px && px <= maxx && miny <= py && py <= maxy
     def containsPoint(p: Pt): Boolean = containsPoint(p._1, p._2)
-    def containsSeg(s: Seg): Boolean = containsPoint(s.x1, s.y1) && containsPoint(s.x2, s.y2)
     def contains(o: Extent): Boolean =
       minx <= o.minx && maxx >= o.maxx && miny <= o.miny && maxy >= o.maxy
 
@@ -168,11 +160,6 @@ object Geom {
     }
 
     def expandBy(s: Double): Extent = Extent(minx - s, miny - s, maxx + s, maxy + s)
-    def scaleBy(s: Double): Extent = {
-      val xs = Array(minx * s, maxx * s).sorted
-      val ys = Array(miny * s, maxy * s).sorted
-      Extent(xs(0), ys(0), xs(1), ys(1))
-    }
 
     def add(o: Extent): Extent =
       Extent(math.min(minx, o.minx), math.min(miny, o.miny),

@@ -290,14 +290,6 @@ object MakeValid {
     }
   }
 
-  /** reference triangulate.go:15-52 InsideTrianglesForSegments. */
-  def insideTriangles(segs: IndexedSeq[Seg], hm: PolygonHitmap): IndexedSeq[(Pt, Pt, Pt)] =
-    delaunayTriangles(segs).filter { t =>
-      // triangleCenter computed scalar (same ops, no tuple)
-      hm.labelInsideXY((t._1._1 + t._2._1 + t._3._1) / 3,
-        (t._1._2 + t._2._2 + t._3._2) / 3)
-    }
-
   /** reference makevalid.go:167-235 — full repair of a multipolygon.
     * Returns None when nothing remains inside the clipbox.
     */

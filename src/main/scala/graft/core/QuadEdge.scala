@@ -129,13 +129,6 @@ object QuadEdge {
     */
   def resetPool(): Unit = pool.get().reset()
 
-  /** This thread's pool generation — bumped by each resetPool(). A
-    * Subdivision records it at build time and refuses reads after the pool
-    * it lives in has been recycled (the documented-but-previously-
-    * unenforced resetPool contract).
-    */
-  def poolGeneration: Long = pool.get().gen
-
   /** The building thread's pool as an opaque handle + its generation —
     * lets a Subdivision detect recycling from ANY reading thread (the
     * edges live in the BUILDER's pool, so the builder thread's reset

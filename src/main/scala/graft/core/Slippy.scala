@@ -27,7 +27,6 @@ object Slippy {
   val Lon4326Max = 180.0
   val FloatVariance = 0.000001
   val MaxZoom = 22
-  val MvtTileDim = 4096.0
 
   @inline def n(z: Int): Double = math.pow(2, z) // Zoom.N = Exp2(z)
 
@@ -142,13 +141,6 @@ object Slippy {
     val lon2 = x2deg(z, x + 1); val lat2 = y2deg(z, y + 1)
     Extent(math.min(lon1, lon2), math.min(lat1, lat2),
            math.max(lon1, lon2), math.max(lat1, lat2))
-  }
-
-  /** reference tile.go:147-163 PixelRatioForZoom (4326 grid). */
-  def pixelRatioForZoom(zoom0: Int, tileDim: Long = MvtTileDim.toLong): Double = {
-    val zoom = if (zoom0 > MaxZoom) MaxZoom else zoom0
-    val ext = tileExtent4326(zoom, 0, 0)
-    ext.xSpan / tileDim.toDouble
   }
 
   // ---- EPSG:3857 (spherical web-mercator) grid ----
@@ -292,24 +284,5 @@ object Slippy {
       i += 1
     }
     b.result()
-  }
-
-  /** reference tile_grid.go:60-95 NewTileMinMaxer — smallest tile whose
-    * extent contains the given extent, walking z = 22 → 0 via FamilyAt.
-    */
-  def tileMinMaxer(ext: Extent): Option[Long] = {
-    val minCell = cellAt(MaxZoom, ext.minx, ext.miny)
-    var z = MaxZoom
-    while (z >= 0) {
-      val fam = familyAt(minCell, z)
-      val it = fam.iterator
-      while (it.hasNext) {
-        val c = it.next()
-        val te = tileExtent4326(unpackZ(c), unpackX(c).toInt, unpackY(c).toInt)
-        if (te.containsPoint(ext.maxx, ext.maxy)) return Some(c)
-      }
-      z -= 1
-    }
-    None
   }
 }

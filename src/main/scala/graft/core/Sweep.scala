@@ -90,23 +90,6 @@ object Sweep {
     override def initialValue(): SweepScratch = new SweepScratch
   }
 
-  private val packScratch = new ThreadLocal[Scratch.SegBuf] {
-    override def initialValue(): Scratch.SegBuf = new Scratch.SegBuf
-  }
-
-  def findIntersects(segments: scala.collection.IndexedSeq[Seg], connected: Boolean)
-                    (fn: (Int, Int, Pt) => Boolean): Unit = {
-    val buf = packScratch.get()
-    buf.clear()
-    var i = 0
-    while (i < segments.length) {
-      val sg = segments(i)
-      buf.add(sg.x1, sg.y1, sg.x2, sg.y2)
-      i += 1
-    }
-    findIntersectsBuf(buf, connected)(fn)
-  }
-
   /** core sweep over a packed segment buffer. */
   def findIntersectsBuf(segs: Scratch.SegBuf, connected: Boolean)
                        (fn: (Int, Int, Pt) => Boolean): Unit = {

@@ -57,12 +57,6 @@ object WkbKernels {
     try Wkb.encode(Wkt.decode(text.toString))
     catch { case _: Exception => null }
 
-  /** st_aswkt: WKB → WKT text; null on decode failure. */
-  def asWkt(geo: Array[Byte]): UTF8String = {
-    val g = geomOrNull(geo)
-    if (g == null) null else UTF8String.fromString(Wkt.encode(g))
-  }
-
   /** st_prepare_tile: PrepareGeo into the packed cell's 4326 extent. */
   def prepareTile(geo: Array[Byte], cell: Long): Array[Byte] = {
     val g = geomOrNull(geo)

@@ -112,11 +112,6 @@ object GeomFunctions {
     col(StTransform(ex(geo), fromSrid, toSrid))
 
   // text analysis
-  /** bounded top-k aggregate: k smallest (dist2, nid), ascending. */
-  def topk_neighbors(dist2: Column, nid: Column, k: Int): Column =
-    col(TopKNeighbors(ex(dist2.cast("double")), ex(nid.cast("long")), k)
-      .toAggregateExpression())
-
   def doc_fingerprint(text: Column): Column = col(StFingerprint(ex(text)))
   def minhash(text: Column, numPerms: Column): Column = col(StMinHash(ex(text), ex(numPerms)))
   def simhash(text: Column): Column = col(StSimHash(ex(text)))

@@ -11,6 +11,8 @@ import org.apache.spark.sql.expressions.Window
   * Scale path: LSH with deterministic pseudo-random hyperplanes — corpus
   * hashed once into 2^bits buckets, queries probe their own bucket (plus
   * optional multi-probe neighbors); recall traded for a bucket-local scan.
+  * The inverted-file path with centroids learned from the corpus lives in
+  * `IvfLearned`.
   *
   * Dot products run through `zip_with` + `aggregate` (codegen'd higher-
   * order functions, left-fold order — reproducible bit-for-bit).
@@ -96,67 +98,6 @@ object Ann {
       .filter(col("rk") <= k)
   }
 
-  // ---- IVF (inverted-file) ANN — the classic coarse-quantizer scale path ----
-
-  /** deterministic unit-norm centroid `c` over `dim` dims, drawn from the
-    * same splitmix stream as the LSH planes (seed-offset so the two families
-    * never correlate). Normalized in double precision; the exact components
-    * are re-emitted as exact-decimal literals for the oracle.
-    */
-  def ivfCentroid(c: Int, dim: Int): Array[Double] = {
-    val raw = Array.tabulate(dim)(i => planeComponent(c + 1000, i))
-    var s = 0.0
-    var i = 0
-    while (i < dim) { s += raw(i) * raw(i); i += 1 }
-    val n = math.sqrt(s)
-    raw.map(_ / n)
-  }
-
-  /** dot(vec, centroid c) — centroids are unit-norm so this orders like
-    * cosine across centroids.
-    */
-  def centroidScore(vec: Column, c: Int, dim: Int): Column =
-    dot(vec, array(ivfCentroid(c, dim).map(lit(_)).toIndexedSeq: _*))
-
-  /** map-side coarse assignment: the FIRST centroid index attaining the
-    * maximum score (no shuffle, no UDF). The scores are materialized ONCE
-    * as an array column and the argmax derived from it — the round-2
-    * greatest + first-match when-chain referenced every 64-element dot
-    * product twice in the plan, doubling map-side cost wherever Catalyst
-    * subexpression elimination didn't fire (interpreted paths). This form
-    * mirrors the DuckDB oracle's list_position argmax exactly.
-    */
-  def ivfAssign(vec: Column, dim: Int, nCentroids: Int): Column = {
-    val scores = array((0 until nCentroids).map(c => centroidScore(vec, c, dim)): _*)
-    (array_position(scores, array_max(scores)) - 1).cast("int")
-  }
-
-  /** IVF top-k: corpus assigned to its nearest coarse centroid in a single
-    * map-side projection (the inverted lists); each query ranks the
-    * centroids and probes the top `nProbe` lists. One corpus shuffle on the
-    * list id; scanned work per query is nProbe/nCentroids of the corpus —
-    * the 100 TB shape (the brute path scans all of it). Approximate:
-    * recall < 1 when a true neighbor lives in an unprobed list.
-    */
-  def ivfTopK(queries: DataFrame, corpus: DataFrame, k: Int, dim: Int,
-              nCentroids: Int = 16, nProbe: Int = 3): DataFrame = {
-    val cb = corpus.withColumn("cid", ivfAssign(col("vec"), dim, nCentroids))
-    val wq = Window.partitionBy(col("qid")).orderBy(col("score").desc, col("cid").asc)
-    val qprobe = queries
-      .select(col("qid"), col("qvec"),
-        posexplode(array((0 until nCentroids).map(c => centroidScore(col("qvec"), c, dim)): _*))
-          .as(Seq("cid", "score")))
-      .withColumn("crk", row_number().over(wq))
-      .filter(col("crk") <= nProbe)
-      .select(col("qid"), col("qvec"), col("cid"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("vid").asc)
-    cb.join(qprobe, Seq("cid"))
-      .filter(col("qid") =!= col("vid"))
-      .select(col("qid"), col("vid"), cosine(col("qvec"), col("vec")).as("cos"))
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= k)
-  }
-
   // ---- DuckDB oracle SQL generators (mirror the expressions above) ----
 
   /** exact-decimal literal list for plane `p` over `dim` dims — every
@@ -177,23 +118,6 @@ object Ann {
     "CAST(" + (0 until bits).map(p =>
       s"(CASE WHEN ${planeDotSql(v, p, dim)} >= 0 THEN ${1L << p} ELSE 0 END)")
       .mkString(" + ") + " AS BIGINT)"
-
-  /** exact-decimal literal list for centroid `c` (mirrors `ivfCentroid`). */
-  def centroidSqlLiteral(c: Int, dim: Int): String =
-    "[" + ivfCentroid(c, dim).map(x =>
-      new java.math.BigDecimal(x).toPlainString).mkString(", ") + "]"
-
-  /** left-fold dot of list expr `v` with centroid `c` (mirrors
-    * `centroidScore`).
-    */
-  def centroidScoreSql(v: String, c: Int, dim: Int): String =
-    s"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(range(1, ${dim + 1}), " +
-      s"i -> ($v)[CAST(i AS INTEGER)] * (${centroidSqlLiteral(c, dim)})[CAST(i AS INTEGER)])), " +
-      "(acc, x) -> acc + x)"
-
-  /** all-centroid score list (for list_position argmax / probe unnest). */
-  def centroidScoresSql(v: String, dim: Int, nCentroids: Int): String =
-    "[" + (0 until nCentroids).map(c => centroidScoreSql(v, c, dim)).mkString(", ") + "]"
 
   /** Symmetric per-vector int8 quantization — 4× smaller embedding
     * storage for the 100 TB corpus (the ANN candidate set dequantizes to

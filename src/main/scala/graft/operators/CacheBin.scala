@@ -2,11 +2,11 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 
-/** Lifecycle registry for operator-persisted frames: Dedup's
-  * `materialize` and IvfLearned's fitting sample. Their persists are
-  * MEMORY_AND_DISK, so NOT evicted by block-manager LRU once spilled;
-  * unreleased, they accumulate for the life of the SparkContext in a
-  * long-lived session running many operators.
+/** Lifecycle registry for operator-persisted frames (today Dedup's
+  * `materialize`). Those persists are MEMORY_AND_DISK, so NOT evicted by
+  * block-manager LRU once spilled; unreleased, they accumulate for the
+  * life of the SparkContext in a long-lived session running many
+  * operators.
   *
   * Operators register every persist here at plan-BUILD time; the frame
   * must stay cached until the caller's consuming ACTION finishes (the

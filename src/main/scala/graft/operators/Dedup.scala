@@ -248,21 +248,6 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
   }
 
-  /** SimHash near-dup pairs: hamming distance ≤ maxDist inside identical
-    * high-bit prefixes (cheap blocking for the common near-identical case).
-    */
-  def simhashPairs(docs: DataFrame, idCol: String, textCol: String,
-                   prefixBits: Int = 16, maxDist: Int = 3): DataFrame = {
-    val hashed = materialize( // self-joined: both sides read the cache
-      docs.select(col(idCol).as("doc"), simhash(col(textCol)).as("sh"))
-        .withColumn("block", shiftright(col("sh"), 31 - prefixBits)))
-    hashed.as("a").join(hashed.as("b"),
-        col("a.block") === col("b.block") && col("a.doc") < col("b.doc"))
-      .select(col("a.doc").as("doc_a"), col("b.doc").as("doc_b"),
-        hamming(col("a.sh"), col("b.sh")).as("dist"))
-      .filter(col("dist") <= maxDist)
-  }
-
   /** embedding-cosine near-dup pairs: corpus hashed once into sign-random-
     * projection LSH buckets (one shuffle on the bucket id), candidate pairs
     * drawn only INSIDE a bucket (never all-pairs), then verified by exact

@@ -4,10 +4,10 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-/** IVF ANN with a LEARNED coarse quantizer (round-4 verdict "missing" #2:
-  * hash-derived constant centroids keep probed volume a fixed fraction of
-  * the corpus; a real 100 TB pipeline needs sampled k-means centroids with
-  * nCentroids ~ √N so per-query probed volume SHRINKS with corpus size).
+/** IVF ANN with a LEARNED coarse quantizer: constant (hash-derived)
+  * centroids would keep probed volume a fixed fraction of the corpus; a
+  * real 100 TB pipeline needs sampled k-means centroids with
+  * nCentroids ~ √N so per-query probed volume SHRINKS with corpus size.
   *
   * Design constraints that shape everything here:
   *  - DETERMINISM ACROSS ENGINES: the DuckDB oracle must reproduce the
@@ -122,98 +122,6 @@ object IvfLearned {
             i += 1
           }
           normalize(mean)
-        }
-      }
-      it += 1
-    }
-    IvfModel(cents)
-  }
-
-  /** Distributed fit (round-5 verdict #4): bit-identical to [[fit]] but
-    * the per-iteration work runs ON THE CLUSTER, lifting the driver cap —
-    * at 10⁹⁺ vectors √N wants 10⁴·⁵ centroids over a ~10⁵·⁵-row sample,
-    * and the driver loop's iters·m·k·dim flops become minutes while the
-    * cluster does it in one pass per iteration.
-    *
-    * Same sample (hash-ordered top-sCap), same init rows, same k-means;
-    * what distributes: (1) assignment = map-side argmax against BROADCAST
-    * centroids (first-max ties, the exact driver rule); (2) recompute =
-    * one shuffle per iteration on cid, each cid's members summed
-    * component-wise in ASCENDING-vid order inside its partition — the
-    * identical left-fold the driver runs, so every float lands the same
-    * (IvfLearnedSpec pins fitDistributed == fit bit-for-bit). Only the
-    * k per-cid sums collect (k·dim doubles); the sample itself never
-    * does. The sample frame is persisted across iterations and
-    * registered with [[CacheBin]] (caller drains after fitting).
-    */
-  def fitDistributed(corpus: DataFrame, dim: Int, iters: Int = 5,
-                     maxCentroids: Int = 1024): IvfModel = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val n = graft.sources.PlanStats.exact(corpus).map(_.rows).getOrElse(corpus.count())
-    val kC = nCentroidsFor(n, maxCentroids)
-    val sCap = sampleCapFor(n, kC)
-    // distributed top-sCap by the hash order (TakeOrdered — no full sort);
-    // the rank window then runs over just the sCap sample rows
-    val samp = CacheBin.track(corpus
-      .select(col("vid"), col("vec"))
-      .withColumn("skey", sampleKey(col("vid")))
-      .orderBy(col("skey").asc, col("vid").asc)
-      .limit(sCap)
-      .withColumn("rn", row_number().over(
-        Window.orderBy(col("skey").asc, col("vid").asc)).cast("long"))
-      .select(col("vid"), col("vec"), col("rn"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val m = samp.count()
-    require(m > 0, "IVF fit on an empty corpus")
-    val initRanks = (0 until kC).map(j => j.toLong * m / kC + 1L)
-    var cents: Array[Array[Double]] = samp
-      .filter(col("rn").isin(initRanks: _*))
-      .orderBy(col("rn").asc)
-      .as[(Long, Seq[Double], Long)].collect()
-      .map { case (_, v, _) => normalize(v.toArray) }
-    var it = 0
-    while (it < iters) {
-      val bc = spark.sparkContext.broadcast(cents)
-      val sums: Array[(Int, Array[Double], Long)] = samp
-        .as[(Long, Seq[Double], Long)]
-        .map { case (vid, v, _) =>
-          val va = v.toArray
-          val cs = bc.value
-          var best = 0; var bs = dotLF(va, cs(0)); var j = 1
-          while (j < cs.length) {
-            val s = dotLF(va, cs(j))
-            if (s > bs) { bs = s; best = j } // strict: first max wins ties
-            j += 1
-          }
-          (vid, v, best)
-        }
-        .toDF("vid", "v", "cid")
-        .repartition(col("cid"))             // every cid lands whole in ONE partition
-        .sortWithinPartitions(col("cid").asc, col("vid").asc)
-        .as[(Long, Seq[Double], Int)]
-        .mapPartitions { rows =>
-          // contiguous cid runs in ascending-vid order: the same
-          // per-component left fold as the driver loop, so bit-equal
-          val out = List.newBuilder[(Int, Array[Double], Long)]
-          var cur = -1; var acc: Array[Double] = null; var cnt = 0L
-          def flush(): Unit = if (cur >= 0) out += ((cur, acc, cnt))
-          rows.foreach { case (_, v, cid) =>
-            if (cid != cur) { flush(); cur = cid; acc = new Array[Double](dim); cnt = 0L }
-            var i = 0
-            while (i < dim) { acc(i) += v(i); i += 1 }
-            cnt += 1
-          }
-          flush()
-          out.result().iterator
-        }.collect()
-      bc.destroy()
-      val byCid = sums.map(s => s._1 -> s).toMap
-      cents = Array.tabulate(kC) { j =>
-        byCid.get(j) match {
-          case None => cents(j) // empty cluster keeps its previous centroid
-          case Some((_, acc, cnt)) =>
-            normalize(Array.tabulate(dim)(i => acc(i) / cnt))
         }
       }
       it += 1

@@ -154,30 +154,6 @@ object SpatialJoin {
     }
   }
 
-  /** The unbounded flat-cover control for the replication A/B (the round-4
-    * design): every polygon row — INCLUDING its geometry payload —
-    * replicates to its full bbox cover at the single point-density zoom.
-    * Kept only as the measurement baseline SpatialJoinSpec probes shuffle
-    * volume against; production callers use [[pipJoin]].
-    */
-  def pipJoinFlat(points: DataFrame, lonCol: String, latCol: String,
-                  polys: DataFrame, polyCol: String,
-                  minxCol: String = "minx", minyCol: String = "miny",
-                  maxxCol: String = "maxx", maxyCol: String = "maxy",
-                  z: Int = -1): DataFrame = {
-    val zz = if (z >= 0) z else Knn.zoomForPlan(points)
-    val ptCols = points.columns.map(col).toSeq
-    val polyOut = polys.columns.filterNot(
-      Set(minxCol, minyCol, maxxCol, maxyCol).contains).map(col).toSeq
-    val pts = points.withColumn("__cell",
-      st_cell_at(col(lonCol), col(latCol), lit(zz)))
-    val pol = polys.withColumn("__cell", explode(
-      st_tiles_for_bounds(col(minxCol), col(minyCol), col(maxxCol), col(maxyCol), lit(zz))))
-    pts.join(pol, Seq("__cell"), "inner")
-      .filter(st_contains(col(polyCol), col(lonCol), col(latCol)))
-      .select(ptCols ++ polyOut: _*)
-  }
-
   /** Within-distance join (range join): all (left, right) pairs with
     * Euclidean degree distance ≤ `radius` (planar.PointDistance metric,
     * the same one `Knn` certifies against). Neither side broadcast:

@@ -28,34 +28,13 @@ object TilePipeline {
     * Adds: mvt_commands (array<long>), mvt_type (int).
     *
     * Uses the FUSED st_mvt_pipeline kernel: one WKB decode, zero
-    * intermediate encodes. `mvtCommandsChained` keeps the five-stage
-    * expression chain; a spec asserts the two are bit-identical.
+    * intermediate encodes. OperatorsSpec keeps the five-stage expression
+    * chain as its parity reference and asserts the two are bit-identical.
     */
   def mvtCommands(df: DataFrame, geomCol: String,
                   zCol: String, xCol: String, yCol: String): DataFrame = {
     df.withColumn("mvt",
         st_mvt_pipeline(col(geomCol), col(zCol), col(xCol), col(yCol)))
-      .withColumn("mvt_commands", col("mvt.commands"))
-      .withColumn("mvt_type", col("mvt.geom_type"))
-      .drop("mvt")
-  }
-
-  /** the same pipeline as five composable expressions (each stage is
-    * independently available/gated); kept as the fused kernel's parity
-    * reference.
-    */
-  def mvtCommandsChained(df: DataFrame, geomCol: String,
-                         zCol: String, xCol: String, yCol: String): DataFrame = {
-    val ext = st_tile_extent_3857(col(zCol), col(xCol), col(yCol))
-    df.withColumn("t_ext", ext)
-      .withColumn("webs", (col("t_ext.maxx") - col("t_ext.minx")) / lit(4096.0))
-      .withColumn("g_simp", st_simplify(col(geomCol), col("webs")))
-      .withColumn("g_fixed", st_makevalid(col("g_simp"),
-        col("t_ext.minx") - col("webs"), col("t_ext.miny") - col("webs"),
-        col("t_ext.maxx") + col("webs"), col("t_ext.maxy") + col("webs")))
-      .withColumn("g_prep", st_prepare_extent(col("g_fixed"),
-        col("t_ext.minx"), col("t_ext.miny"), col("t_ext.maxx"), col("t_ext.maxy")))
-      .withColumn("mvt", st_mvt_geometry(col("g_prep")))
       .withColumn("mvt_commands", col("mvt.commands"))
       .withColumn("mvt_type", col("mvt.geom_type"))
       .drop("mvt")

@@ -14,7 +14,7 @@ import graft.operators.{Ann, IvfLearned}
   * clustered corpus at two sizes, plus a recall floor against the exact
   * brute-force ranking to show the learned lists land where the data is.
   */
-class IvfLearnedSpec extends AnyFunSuite {
+class IvfLearnedSpec extends AnyFunSuite with KnnFixtures {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -113,22 +113,17 @@ class IvfLearnedSpec extends AnyFunSuite {
     assert(recall >= 0.9, s"recall@5 = $recall below floor (got=${got.size}, want=${want.size})")
   }
 
-  test("distributed fit is bit-identical to the driver fit (defined reduction order)") {
-    // round-5 verdict #4: the driver loop caps at 1024 centroids because
-    // the whole sample collects; the distributed fit runs assignment +
-    // ordered per-cid sums on the cluster and must land every float on
-    // the SAME bits (same sample, same init rows, same left folds)
-    for ((n, cap) <- Seq((400, 16), (1500, 64))) {
-      val corpus = clustered(n)
-      val a = IvfLearned.fit(corpus, Dim, iters = 3, maxCentroids = cap)
-      val b = IvfLearned.fitDistributed(corpus, Dim, iters = 3, maxCentroids = cap)
-      assert(a.k == b.k)
-      for (j <- 0 until a.k; i <- 0 until Dim) {
-        assert(java.lang.Double.doubleToRawLongBits(a.centroids(j)(i)) ==
-               java.lang.Double.doubleToRawLongBits(b.centroids(j)(i)),
-          s"centroid ($j,$i): driver ${a.centroids(j)(i)} vs distributed ${b.centroids(j)(i)}")
-      }
-      graft.operators.CacheBin.drain()
-    }
+  test("fit takes N from the parquet footers and launches one Spark job (the sample)") {
+    // the corpus is written BEFORE the job listener attaches
+    val n = 1500
+    val tmp = java.nio.file.Files.createTempDirectory("ivffit").toString
+    clustered(n).repartition(3).write.parquet(s"$tmp/corpus")
+    val corpus = spark.read.parquet(s"$tmp/corpus")
+    val (model, jobs) = jobsDuring(IvfLearned.fit(corpus, Dim, iters = 5, maxCentroids = 1024))
+    // ⌈√1500⌉ = 39 lists, under the cap: k follows N exactly
+    assert(model.k == IvfLearned.nCentroidsFor(n.toLong, 1024) && model.k == 39)
+    // the hash-ordered sample is the only job: N came from the footers,
+    // not a count(), and k-means ran on the driver over the sample
+    assert(jobs == 1, s"fit launched $jobs Spark job(s)")
   }
 }

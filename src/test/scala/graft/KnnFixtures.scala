@@ -8,7 +8,7 @@ import graft.core.Slippy
 
 /** Shared kNN test inputs and oracles: unconditional brute force, and an
   * independent (driver-side) recomputation of which path the operator's
-  * rule sends each query down.
+  * rule sends each query down. Also the specs' Spark-job counter.
   */
 trait KnnFixtures {
 

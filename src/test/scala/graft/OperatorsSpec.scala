@@ -346,41 +346,6 @@ class OperatorsSpec extends AnyFunSuite with KnnFixtures {
     assert(approx.nonEmpty)
   }
 
-  test("IVF ANN: exact recall on clustered vectors; partial on random ones") {
-    import spark.implicits._
-    // clustered corpus: members of cluster c = centroid c + small
-    // deterministic per-member offsets → every true neighbor shares the
-    // member's own inverted list, so probing top-1..3 lists recovers the
-    // exact top-k
-    val dim = 64
-    val rows = for (c <- 0 until 8; m <- 0 until 12) yield {
-      val cen = Ann.ivfCentroid(c, dim)
-      val v = cen.zipWithIndex.map { case (x, i) =>
-        x + ((c * 31 + m * 7 + i) % 11 - 5) * 1e-3
-      }
-      (c * 100L + m, v)
-    }
-    val corpus = rows.toDF("vid", "vec")
-    val qs = corpus.filter(col("vid") % 100 === 0)
-      .select(col("vid").as("qid"), col("vec").as("qvec"))
-    val exact = Ann.cosineTopK(qs, corpus, k = 5)
-      .select(col("qid"), col("vid")).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val ivf = Ann.ivfTopK(qs, corpus, k = 5, dim = dim, nCentroids = 16, nProbe = 3)
-      .select(col("qid"), col("vid")).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(ivf == exact, s"IVF missed in-cluster neighbors: ${(exact -- ivf).take(5)}")
-    // and the random-vector corpus: approximate by design, sanity floor
-    val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-      .select(col("vec_id").as("vid"), col("embedding").cast("array<double>").as("vec"))
-    val rq = emb.filter(col("vid") % 25 === 0)
-      .select(col("vid").as("qid"), col("vec").as("qvec"))
-    val rexact = Ann.cosineTopK(rq, emb, k = 10)
-      .select(col("qid"), col("vid")).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val rivf = Ann.ivfTopK(rq, emb, k = 10, dim = dim, nCentroids = 16, nProbe = 3)
-      .select(col("qid"), col("vid")).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val recall = (rexact & rivf).size.toDouble / rexact.size
-    assert(recall > 0.1, s"recall=$recall")
-  }
-
   test("embedding-cosine near-dup finds planted perturbed copies only") {
     import spark.implicits._
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
@@ -402,6 +367,27 @@ class OperatorsSpec extends AnyFunSuite with KnnFixtures {
     assert(pairs.length >= nPlanted - 1, s"found ${pairs.length} of $nPlanted planted pairs")
   }
 
+  /** the tile pipeline as five composable expressions (each stage is
+    * independently available/gated): the fused kernel's parity reference.
+    */
+  private def mvtCommandsChained(df: DataFrame, geomCol: String,
+                                 zCol: String, xCol: String, yCol: String): DataFrame = {
+    import graft.functions.GeomFunctions._
+    val ext = st_tile_extent_3857(col(zCol), col(xCol), col(yCol))
+    df.withColumn("t_ext", ext)
+      .withColumn("webs", (col("t_ext.maxx") - col("t_ext.minx")) / lit(4096.0))
+      .withColumn("g_simp", st_simplify(col(geomCol), col("webs")))
+      .withColumn("g_fixed", st_makevalid(col("g_simp"),
+        col("t_ext.minx") - col("webs"), col("t_ext.miny") - col("webs"),
+        col("t_ext.maxx") + col("webs"), col("t_ext.maxy") + col("webs")))
+      .withColumn("g_prep", st_prepare_extent(col("g_fixed"),
+        col("t_ext.minx"), col("t_ext.miny"), col("t_ext.maxx"), col("t_ext.maxy")))
+      .withColumn("mvt", st_mvt_geometry(col("g_prep")))
+      .withColumn("mvt_commands", col("mvt.commands"))
+      .withColumn("mvt_type", col("mvt.geom_type"))
+      .drop("mvt")
+  }
+
   test("fused st_mvt_pipeline is bit-identical to the five-stage expression chain") {
     val withGeom = graft.SparkEntry.q33Input(spark, dir)
     def rows(df: org.apache.spark.sql.DataFrame) = df
@@ -411,7 +397,7 @@ class OperatorsSpec extends AnyFunSuite with KnnFixtures {
         if (r.isNullAt(2)) null else r.getSeq[Long](2).toList))
       .toSet
     val fused = rows(TilePipeline.mvtCommands(withGeom, "geom", "z9", "tx", "ty"))
-    val chained = rows(TilePipeline.mvtCommandsChained(withGeom, "geom", "z9", "tx", "ty"))
+    val chained = rows(mvtCommandsChained(withGeom, "geom", "z9", "tx", "ty"))
     assert(fused.nonEmpty)
     assert(fused == chained)
   }

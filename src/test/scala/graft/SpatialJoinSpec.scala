@@ -93,6 +93,24 @@ class SpatialJoinSpec extends AnyFunSuite {
     (n, acc.bytes.get())
   }
 
+  /** The unbounded flat-cover control for the replication A/B: every
+    * polygon row — INCLUDING its geometry payload — replicates to its full
+    * bbox cover at the single zoom `z`, the plan [[SpatialJoin.pipJoin]]'s
+    * adaptive cover replaced.
+    */
+  private def pipJoinFlat(points: DataFrame, lonCol: String, latCol: String,
+                          polys: DataFrame, polyCol: String, z: Int): DataFrame = {
+    val bbox = Set("minx", "miny", "maxx", "maxy")
+    val ptCols = points.columns.map(col).toSeq
+    val polyOut = polys.columns.filterNot(bbox.contains).map(col).toSeq
+    val pts = points.withColumn("__cell", st_cell_at(col(lonCol), col(latCol), lit(z)))
+    val pol = polys.withColumn("__cell", explode(
+      st_tiles_for_bounds(col("minx"), col("miny"), col("maxx"), col("maxy"), lit(z))))
+    pts.join(pol, Seq("__cell"), "inner")
+      .filter(st_contains(col(polyCol), col(lonCol), col(latCol)))
+      .select(ptCols ++ polyOut: _*)
+  }
+
   /** a continent-scale polygon with a heavyweight WKB payload: a 1024-gon
     * inscribed in the bbox — the row class whose flat-cover replication
     * was the round-5 scale defect.
@@ -141,7 +159,7 @@ class SpatialJoinSpec extends AnyFunSuite {
         SpatialJoin.pipJoin(pts, "lon", "lat", full, "gid", "poly", z = 10)
           .select(col("pid"), col("gid")))
       val (nFlat, bFlat) = shuffleBytes(
-        SpatialJoin.pipJoinFlat(pts, "lon", "lat", full, "poly", z = 10)
+        pipJoinFlat(pts, "lon", "lat", full, "poly", z = 10)
           .select(col("pid"), col("gid")))
       assert(nAdaptive == nFlat, s"adaptive/flat disagree: $nAdaptive vs $nFlat")
 
