@@ -8,55 +8,25 @@ import graft.functions.TextKernels
 
 /** Deduplication operators for training-data pipelines.
   *
-  * Exact: hash-groupBy on content (one shuffle on the md5 key).
   * Near-dup: MinHash + LSH banding — signature per doc (map-only),
   * explode to (band, band_hash) keys, groupBy band bucket, emit candidate
   * pairs inside buckets, verify with word-shingle Jaccard. At scale the
   * only shuffles are the band groupBy and the pair dedup; signature width
-  * and band count tune recall/precision.
+  * and band count tune recall/precision. (Exact dedup is one md5 groupBy,
+  * run inline by q13.)
+  *
+  * No operator persists. A frame read twice (both sides of a self-join,
+  * or two join-backs) sits behind ONE exchange whose two copies are
+  * identical, so AQE runs it once and the second reader gets a
+  * ReusedExchange: the kernel and the text scan run once per action and
+  * nothing outlives it. Key that exchange on the join key, or reuse one
+  * the plan already has: on q39 an extra repartition on the bucket key
+  * was coalesced by AQE and starved the cosine verify of tasks.
   */
 object Dedup {
 
-  /** Spill-safe materialization for frames read by BOTH sides of a
-    * self-join or by two join-backs. Catalyst inlines a twice-referenced
-    * subplan into both consumers (no exchange reuse across aliased
-    * sides — verified on the executed plans), so without this the
-    * signature/shingle/bucket kernels and the raw-text scan run TWICE
-    * per operator — the dominant cost at corpus scale. MEMORY_AND_DISK:
-    * an explicit spill policy, no recompute.
-    * Every persist is registered with [[CacheBin]]; the CALLER releases
-    * the blocks with `CacheBin.drain()` after its consuming action
-    * (round-5 advice: MEMORY_AND_DISK blocks are not LRU-evicted and
-    * leaked across a long-lived session otherwise).
-    */
-  private def materialize(df: DataFrame): DataFrame =
-    CacheBin.track(df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-
-  /** exact dedup: (text_md5, keeper_id, n_copies, dup_ids). */
-  def exact(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    docs.groupBy(md5(col(textCol).cast("binary")).as("text_md5"))
-      .agg(min(col(idCol)).as("keeper_id"), count(lit(1)).as("n_copies"),
-        sort_array(collect_list(col(idCol))).as("ids"))
-
-  /** MinHash signatures + banded bucket keys.
-    * numPerms must be bands * rowsPerBand.
-    */
-  def minhashBands(docs: DataFrame, idCol: String, textCol: String,
-                   bands: Int, rowsPerBand: Int): DataFrame = {
-    val numPerms = bands * rowsPerBand
-    val sig = docs.select(col(idCol).as("doc"), minhash(col(textCol), lit(numPerms)).as("sig"))
-    // band hash: fold the band's rows with the same rolling scheme
-    sig.select(col("doc"), col("sig"),
-      explode(array((0 until bands).map { b =>
-        struct(lit(b).as("band"),
-          (0 until rowsPerBand).map(r => element_at(col("sig"), b * rowsPerBand + r + 1))
-            .reduce((acc, x) => (acc * 31 + x) % TextKernels.Prime).as("bhash"))
-      }: _*)).as("bb"))
-      .select(col("doc"), col("bb.band").as("band"), col("bb.bhash").as("bhash"))
-  }
-
-  /** rolling band hash of signature positions [b·rpb, (b+1)·rpb) — the
-    * same fold `minhashBands` uses, recomputable from a carried signature.
+  /** rolling band hash of signature positions [b·rpb, (b+1)·rpb),
+    * recomputable from a carried signature.
     */
   private def bandHash(sig: org.apache.spark.sql.Column, b: Int, rowsPerBand: Int) =
     (0 until rowsPerBand).map(r => element_at(sig, b * rowsPerBand + r + 1))
@@ -78,13 +48,14 @@ object Dedup {
                    bands: Int = 4, rowsPerBand: Int = 4,
                    threshold: Double = 0.5): DataFrame = {
     val numPerms = bands * rowsPerBand
-    // materialized: the self-join below reads `banded` on both sides —
-    // unpersisted, the MinHash kernel and the text scan run twice
-    val sig = materialize(
-      docs.select(col(idCol).as("doc"), minhash(col(textCol), lit(numPerms)).as("sig")))
-    val banded = sig.select(col("doc"), col("sig"),
-      posexplode(array((0 until bands).map(b => bandHash(col("sig"), b, rowsPerBand)): _*))
-        .as(Seq("band", "bhash")))
+    // the self-join below reads `banded` on both sides: keyed on the join
+    // key, both sides' exchanges are one, which AQE runs once and reuses
+    val banded = docs
+      .select(col(idCol).as("doc"), minhash(col(textCol), lit(numPerms)).as("sig"))
+      .select(col("doc"), col("sig"),
+        posexplode(array((0 until bands).map(b => bandHash(col("sig"), b, rowsPerBand)): _*))
+          .as(Seq("band", "bhash")))
+      .repartition(col("band"), col("bhash"))
     val firstSharedBand = (0 until bands).map { bp =>
       when(col("a.band") > bp,
         bandHash(col("a.sig"), bp, rowsPerBand) =!= bandHash(col("b.sig"), bp, rowsPerBand))
@@ -235,10 +206,10 @@ object Dedup {
                         threshold: Double = 0.5): DataFrame = {
     val cands = nearDupPairs(docs, idCol, textCol, bands, rowsPerBand, threshold = 0.0)
       .select(col("doc_a"), col("doc_b"))
-    // materialized: joined back once per pair side — unpersisted, the
-    // shingle kernel and the text scan run twice
-    val sh = materialize(
-      docs.select(col(idCol).as("doc"), shingle_hashes(col(textCol)).as("sh")))
+    // joined back once per pair side: behind one exchange on the doc key,
+    // the second join-back reuses the first one's
+    val sh = docs.select(col(idCol).as("doc"), shingle_hashes(col(textCol)).as("sh"))
+      .repartition(col("doc"))
     cands
       .join(sh.select(col("doc").as("doc_a"), col("sh").as("sha")), Seq("doc_a"))
       .join(sh.select(col("doc").as("doc_b"), col("sh").as("shb")), Seq("doc_b"))
@@ -258,35 +229,14 @@ object Dedup {
     */
   def embedNearDupPairs(corpus: DataFrame, dim: Int, bits: Int = 8,
                         tau: Double = 0.99): DataFrame = {
-    val b = materialize( // self-joined: both sides read the cache
-      Spread.forKernels(corpus).withColumn("bucket", Ann.lshBucket(col("vec"), dim, bits)))
+    // self-joined: the bucket rides through the spread's exchange, so it
+    // is computed once and both sides reuse that exchange
+    val b = Spread.forKernels(corpus.withColumn("bucket", Ann.lshBucket(col("vec"), dim, bits)))
     b.as("a").join(b.as("b"),
         col("a.bucket") === col("b.bucket") && col("a.vid") < col("b.vid"))
       .select(col("a.vid").as("vid_a"), col("b.vid").as("vid_b"),
         Ann.cosine(col("a.vec"), col("b.vec")).as("cos"))
       .filter(col("cos") >= tau)
-  }
-
-  /** word n-gram Jaccard similarity between explicit pairs — the exact
-    * verifier behind the MinHash estimate.
-    */
-  def ngramJaccard(pairs: DataFrame, docs: DataFrame, idCol: String,
-                   textCol: String, n: Int = 3): DataFrame = {
-    val grams = docs.select(col(idCol).as("doc"),
-      array_distinct(transform(
-        slice(split(lower(col(textCol)), "\\s+"), lit(1),
-          greatest(size(split(lower(col(textCol)), "\\s+")) - (n - 1), lit(0))),
-        (_, i) => concat_ws(" ",
-          (0 until n).map(j => element_at(split(lower(col(textCol)), "\\s+"), i + j + 1)): _*)))
-        .as("grams"))
-    val g = materialize(grams) // joined back once per pair side
-    pairs
-      .join(g.select(col("doc").as("doc_a"), col("grams").as("ga")), Seq("doc_a"))
-      .join(g.select(col("doc").as("doc_b"), col("grams").as("gb")), Seq("doc_b"))
-      .withColumn("inter", size(array_intersect(col("ga"), col("gb"))))
-      .withColumn("uni", size(array_union(col("ga"), col("gb"))))
-      .select(col("doc_a"), col("doc_b"),
-        (col("inter").cast("double") / col("uni")).as("jaccard"))
   }
 
   /** Connected components over an undirected pair frame — the alternating

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.Slippy
-import graft.operators.{CacheBin, Knn}
+import graft.operators.Knn
 
 /** The kNN fallback must never pay for the full points corpus beyond one
   * map-only scan: an uncertified query whose bound disc fits its 3×3
@@ -87,12 +87,12 @@ class KnnPruneSpec extends AnyFunSuite with KnnFixtures {
     val pts = sparsePts
     import spark.implicits._
     val qs = Seq((1L, 10.0, 20.0), (2L, -60.0, -30.0)).toDF("qid", "qlon", "qlat")
-    CacheBin.drain()
+    spark.catalog.clearCache() // other suites in this session may cache
     // building the whole operator (grid level + disc + brute fallback)
     // must be lazy and persist nothing
     val (df, jobs) = jobsDuring(Knn.knnJoin(qs, pts, k = 3, z = 10))
     assert(jobs == 0, s"plan construction ran $jobs Spark job(s) — a collect barrier is back")
-    assert(CacheBin.pending == 0, "kNN registered a persisted frame")
+    assert(spark.sharedState.cacheManager.isEmpty, "kNN persisted a frame")
     // and the plan still computes the exact result once acted on
     val want = bruteKnn(qs, pts, 3)
     assert(df.exceptAll(want).count() == 0 && want.exceptAll(df).count() == 0)

@@ -7,7 +7,7 @@ import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{CacheBin, Knn}
+import graft.operators.Knn
 
 /** walks executed plans through AQE query stages */
 private object PlanNodes extends AdaptiveSparkPlanHelper
@@ -88,11 +88,11 @@ class KnnSpec extends AnyFunSuite with KnnFixtures {
     // kNN operator may add none on top of it
     val (_, readJobs) = jobsDuring(graft.sources.Synth.points(spark, dir))
     for (q <- Seq("q12_knn", "q21_knn_cell")) {
-      CacheBin.drain()
+      spark.catalog.clearCache() // other suites in this session may cache
       val (df, buildJobs) = jobsDuring(SparkEntry.queries(q)(spark, dir))
       assert(buildJobs == readJobs,
         s"$q: building the plan ran $buildJobs job(s), the source read alone $readJobs")
-      assert(CacheBin.pending == 0, s"$q: the plan registered ${CacheBin.pending} persist(s)")
+      assert(spark.sharedState.cacheManager.isEmpty, s"$q: the plan persisted a frame")
       // the grid level feeds both the certified rows and the fallback
       // bounds: its two copies' qid exchanges (over the candidates ∪
       // sentinels union) must be identical, so AQE runs one and reuses it

@@ -539,29 +539,6 @@ class OperatorsSpec extends AnyFunSuite with KnnFixtures {
     assert(!pairs.exists(p => p._1 == 4L || p._2 == 4L), s"false positive with 4: $pairs")
   }
 
-  test("exact dedup groups identical texts") {
-    import spark.implicits._
-    val docs = Seq((1L, "aaa"), (2L, "bbb"), (3L, "aaa")).toDF("doc_id", "text")
-    val res = Dedup.exact(docs, "doc_id", "text")
-      .filter(col("n_copies") > 1).collect()
-    assert(res.length == 1)
-    assert(res(0).getAs[Long]("keeper_id") == 1L)
-    assert(res(0).getAs[Long]("n_copies") == 2L)
-  }
-
-  test("ngram jaccard verifier") {
-    import spark.implicits._
-    val docs = Seq(
-      (1L, "a b c d e f"),
-      (2L, "a b c d e f"),
-      (3L, "x y z w v u")).toDF("doc_id", "text")
-    val pairs = Seq((1L, 2L), (1L, 3L)).toDF("doc_a", "doc_b")
-    val j = Dedup.ngramJaccard(pairs, docs, "doc_id", "text")
-      .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
-    assert(j((1L, 2L)) == 1.0)
-    assert(j((1L, 3L)) == 0.0)
-  }
-
   test("streaming sessionization matches batch on bounded input") {
     val events = spark.read.parquet(s"$dir/events.parquet")
     val batch = Sessionize.batch(events)
@@ -935,44 +912,34 @@ class OperatorsSpec extends AnyFunSuite with KnnFixtures {
     assert(explodes == 1, s"expected 1 token explode, plan has $explodes:\n$finalPlan")
   }
 
-  test("operator persists are caller-released via CacheBin (no leak across invocations)") {
+  test("near-dup operators persist nothing: each twice-read frame is one reused exchange") {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
-      .select(col("doc_id"), col("text"))
-    CacheBin.drain() // clean slate (other tests may have pending persists)
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    Dedup.nearDupPairs(docs, "doc_id", "text").count()
-    assert(CacheBin.pending > 0, "materialize must register with CacheBin")
-    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(leaked.nonEmpty, "vacuous: the operator cached nothing")
-    assert(CacheBin.drain() > 0)
-    assert(CacheBin.pending == 0)
-    // unpersist(blocking=false): poll until the block manager catches up
-    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-    while ((spark.sparkContext.getPersistentRDDs.keySet intersect leaked).nonEmpty
-           && System.nanoTime() < deadline) Thread.sleep(100)
-    assert((spark.sparkContext.getPersistentRDDs.keySet intersect leaked).isEmpty,
-      "drained persists must leave the block manager")
-  }
-
-  test("CacheBin is session(thread)-scoped: one session's drain leaves another's frames cached") {
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
-      .select(col("doc_id"), col("text"))
-    CacheBin.drain()
-    // "session B" registers a persist on its own thread (plan build +
-    // action happen there, like a concurrent operator invocation)
-    @volatile var bPending = -1
-    val b = new Thread(() => {
-      Dedup.nearDupPairs(docs, "doc_id", "text").count()
-      bPending = CacheBin.pending
-    })
-    b.start(); b.join()
-    assert(bPending > 0, "vacuous: thread B registered nothing")
-    // session A's drain must NOT touch B's frames (the round-6 advice
-    // trap: a global registry let A force-recompute B's mid-action reads)
-    assert(CacheBin.drain() == 0, "thread A drained thread B's frames")
-    // the shutdown escape hatch releases everything
-    assert(CacheBin.drainAll() == bPending)
-    assert(CacheBin.pending == 0)
+    val emb = spark.read.parquet(s"$dir/embeddings.parquet")
+      .select(col("vec_id").as("vid"), col("embedding").cast("array<double>").as("vec"))
+    // (operator, its kernels' plan markers, frames it reads twice)
+    val cases = Seq[(String, () => DataFrame, Seq[String], Int)](
+      ("nearDupPairs", () => Dedup.nearDupPairs(docs, "doc_id", "text"), Seq("stminhash("), 1),
+      ("nearDupPairsExact", () => Dedup.nearDupPairsExact(docs, "doc_id", "text"),
+        Seq("stminhash(", "stshinglehashes("), 2),
+      ("embedNearDupPairs", () => Dedup.embedNearDupPairs(emb, dim = 64, bits = 8, tau = 0.3),
+        Seq(" AS bucket#"), 1))
+    def occurrences(plan: String, s: String) =
+      plan.split(java.util.regex.Pattern.quote(s), -1).length - 1
+    for ((name, build, kernels, twiceRead) <- cases) {
+      spark.catalog.clearCache()
+      val df = build()
+      assert(spark.sharedState.cacheManager.isEmpty, s"$name: building the plan persisted a frame")
+      assert(df.collect().nonEmpty, s"$name: vacuous, no pairs")
+      assert(spark.sharedState.cacheManager.isEmpty, s"$name: the action persisted a frame")
+      // the final AQE plan prints a reused exchange as one line, without
+      // the subtree it reuses: each kernel shows once iff it runs once
+      val finalPlan = df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
+      assert(finalPlan.contains("isFinalPlan=true"), s"$name: the plan did not run:\n$finalPlan")
+      assert(occurrences(finalPlan, "ReusedExchange") == twiceRead,
+        s"$name: expected $twiceRead reused exchange(s):\n$finalPlan")
+      for (k <- kernels)
+        assert(occurrences(finalPlan, k) == 1, s"$name: $k is not evaluated once:\n$finalPlan")
+    }
   }
 
   test("footer row counts: exact, job-free for bare parquet scans; safe fallbacks") {

@@ -12,6 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *   kNN/ANN brute-force paths broadcast a provably-small query side
   *   against a non-equi condition (qid =!= pid / top-k verify). Anywhere
   *   else it means an equi-join key was lost.
+  * - No plan reads a persisted frame (InMemoryRelation): a frame read
+  *   twice sits behind one exchange that AQE reuses.
   */
 class PlanAuditSpec extends AnyFunSuite {
 
@@ -32,12 +34,17 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("no cartesian products; nested-loop joins only where designed") {
     val offenders = scala.collection.mutable.ArrayBuffer[String]()
+    // suites sharing this session cache their own frames (SparkEntrySpec
+    // caches the docs table), which Spark would substitute into these plans
+    spark.catalog.clearCache()
     for ((name, q) <- SparkEntry.queries) {
       val plan = q(spark, dir).queryExecution.executedPlan.toString
       if (plan.contains("CartesianProduct"))
         offenders += s"$name: CartesianProduct"
       if (plan.contains("BroadcastNestedLoopJoin") && !bnljByDesign.contains(name))
         offenders += s"$name: unexpected BroadcastNestedLoopJoin"
+      if (plan.contains("InMemoryRelation"))
+        offenders += s"$name: reads a persisted frame"
     }
     assert(offenders.isEmpty, offenders.mkString("; "))
   }
