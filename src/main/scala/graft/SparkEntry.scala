@@ -29,9 +29,19 @@ object SparkEntry {
     * unrounded level (geom.go RoundToPrec); applied to every gate that
     * dumps a rounded double (q32/q38/q63/q66 — the q17-style raw-double
     * dumps and the cast-to-long vertex hashes have no signed-zero hazard).
+    * Rounds the named columns of `df` in place. Each rounded value is
+    * projected once and the sign fix reads it: a CASE over `round(c, d)`
+    * twice ran the BigDecimal round twice per value (subexpression
+    * elimination does not reach the else branch), and CollapseProject does
+    * not inline a non-cheap column its consumer reads twice.
     */
-  private def roundZ(c: org.apache.spark.sql.Column, d: Int): org.apache.spark.sql.Column =
-    when(round(c, d) === 0.0, c * lit(0.0)).otherwise(round(c, d))
+  private def roundZ(df: DataFrame, d: Int, names: String*): DataFrame = {
+    val rounded = df.withColumns(names.map(n => s"${n}_r" -> round(col(n), d)).toMap)
+    rounded.select(df.columns.toSeq.map { n =>
+      if (!names.contains(n)) col(n)
+      else when(col(s"${n}_r") === 0.0, col(n) * lit(0.0)).otherwise(col(s"${n}_r")).as(n)
+    }: _*)
+  }
 
   /** Flagship: interleaved docs table → span extraction → WKT parse →
     * z15 cell encode → broadcast PIP join against regions → per-region
@@ -358,12 +368,13 @@ object SparkEntry {
       Synth.points(s, dir)
         .filter(col("lat") >= -80 && col("lat") <= 84)
         .withColumn("u", st_utm_from_lnglat(col("lon"), col("lat")))
+        .select(col("pid"), col("u.northing").as("northing"),
+          col("u.easting").as("easting"), col("u.zone_number").as("zn"),
+          col("u.zone_letter").as("zl"))
         // meters rounded to mm: a single transcendental differing by
         // 1 ulp between JVM and DuckDB libm (observed once in 57k rows)
         // is ~6e-11 m here; the mm grid absorbs it with ~1e-8 flip risk
-        .select(col("pid"), roundZ(col("u.northing"), 3).as("northing"),
-          roundZ(col("u.easting"), 3).as("easting"), col("u.zone_number").as("zn"),
-          col("u.zone_letter").as("zl"))
+        .transform(roundZ(_, 3, "northing", "easting"))
     }),
 
     "q33_pipeline" -> ((s, dir) => {
@@ -481,7 +492,8 @@ object SparkEntry {
           lit(100000.0) + (col("pid") % 797).cast("double") * 1000.0 +
             (col("pid") % 13).cast("double") * 7.3)
         .withColumn("ll", st_lnglat_from_utm(col("northing"), col("easting"), col("zn"), col("zl")))
-        .select(col("pid"), roundZ(col("ll.lng"), 9).as("lng"), roundZ(col("ll.lat"), 9).as("lat"))
+        .select(col("pid"), col("ll.lng").as("lng"), col("ll.lat").as("lat"))
+        .transform(roundZ(_, 9, "lng", "lat"))
     }),
 
     "q39_embed_neardup" -> ((s, dir) => {
@@ -872,8 +884,8 @@ object SparkEntry {
       // rounded to 1e-3 (q32's mm-grid ULP-absorption pattern).
       Synth.points(s, dir)
         .withColumn("pp", st_project(col("lon"), col("lat"), 2263))
-        .select(col("pid"), roundZ(col("pp.x"), 3).as("easting_ft"),
-          roundZ(col("pp.y"), 3).as("northing_ft"))
+        .select(col("pid"), col("pp.x").as("easting_ft"), col("pp.y").as("northing_ft"))
+        .transform(roundZ(_, 3, "easting_ft", "northing_ft"))
     }),
 
     "q64_seq_pack" -> ((s, dir) => {
@@ -918,7 +930,8 @@ object SparkEntry {
         .withColumn("m", st_transform(col("g"), 4326, 3857))
         .select(col("pid"), posexplode(st_dump_points(col("m"))))
         .select(col("pid"), col("pos").cast("long").as("idx"),
-          roundZ(col("col.x"), 3).as("mx"), roundZ(col("col.y"), 3).as("my"))
+          col("col.x").as("mx"), col("col.y").as("my"))
+        .transform(roundZ(_, 3, "mx", "my"))
     }),
 
     "q67_repetition" -> ((s, dir) => {

@@ -74,7 +74,7 @@ object QuadEdge {
 
   // ---- per-thread quad-group pool ----
   //
-  // Round-2 finding (scaling_r2.json runs 4-6): the makevalid/tile kernels
+  // Round-2 finding (results/scaling_r2.json runs 4-6): the makevalid/tile kernels
   // anti-scale above ~8 workers because every row allocates a fresh graph
   // (Array[4] + 4 Edge objects per edge, thousands per polygon) — the
   // allocation traffic saturates the DRAM bus before the cores do. The

@@ -3,20 +3,20 @@ package graft.core
 import org.apache.spark.unsafe.types.UTF8String
 import graft.core.Geom._
 
-/** Static scalar kernels over WKB for whole-stage-codegen'd expressions
-  * (called from generated Java via GeomExprStaticRef). A null return
-  * signals SQL NULL (parse failure / unsupported geometry type).
+/** Scalar kernels over WKB behind the `st_*` expressions (called through
+  * Spark's StaticInvoke, see org.apache.spark.sql.graft.KernelExpr). A null
+  * return signals SQL NULL (parse failure / unsupported geometry type).
   *
-  * Per-thread LRU caches replace the old per-expression `stateful` caches:
-  * generated code calls a static, so the decoded-geometry reuse lives here,
-  * keyed by the WKB bytes. ThreadLocal = one cache per task thread, no
-  * synchronization on the hot path.
+  * The predicates keep their decoded geometry in per-thread LRU caches keyed
+  * by the WKB bytes: a join against a broadcast polygon side hits the cache
+  * nearly always instead of re-parsing WKB per row. ThreadLocal = one cache
+  * per task thread, no synchronization on the hot path.
   */
 object WkbKernels {
 
   private final val CacheSize = 256
 
-  private val hitmaps =
+  private def perThreadCache() =
     new ThreadLocal[java.util.LinkedHashMap[java.nio.ByteBuffer, AnyRef]] {
       override def initialValue() =
         new java.util.LinkedHashMap[java.nio.ByteBuffer, AnyRef](64, 0.75f, true) {
@@ -26,9 +26,13 @@ object WkbKernels {
         }
     }
 
+  private val hitmaps = perThreadCache()
+  private val rings = perThreadCache()
+
   private val NotPolygonal = new Object // cached negative result
 
-  private def geomOrNull(bytes: Array[Byte]): Geometry =
+  /** parse WKB, or null on garbage. */
+  def geomOrNull(bytes: Array[Byte]): Geometry =
     try Wkb.decode(bytes) catch { case _: Exception => null }
 
   /** st_contains: point-in-polygon via the reference hitmap; null for
@@ -49,6 +53,34 @@ object WkbKernels {
     hm match {
       case p: PolygonHitmap => java.lang.Boolean.valueOf(p.labelInsideXY(x, y))
       case _                => null
+    }
+  }
+
+  /** st_ring_contains: ray-cast containment in the primary ring (polygon
+    * exterior, linestring, first polygon of a multipolygon) with the border
+    * inclusive or not; null when there is no ring of ≥ 3 points.
+    */
+  def ringContains(geo: Array[Byte], x: Double, y: Double,
+                   includeBorder: Boolean): java.lang.Boolean = {
+    val cache = rings.get()
+    val key = java.nio.ByteBuffer.wrap(geo)
+    var rs = cache.get(key)
+    if (rs == null) {
+      val ring = geomOrNull(geo) match {
+        case GPolygon(r) if r.nonEmpty && r.head.length >= 3      => r.head
+        case GLineString(ps) if ps.length >= 3                    => ps
+        case GMultiPolygon(mp) if mp.nonEmpty && mp.head.nonEmpty => mp.head.head
+        case _                                                    => null
+      }
+      rs = if (ring == null) NotPolygonal
+           else (Ring.fromPoints(ring, includeBorder = true),
+                 Ring.fromPoints(ring, includeBorder = false))
+      cache.put(key, rs)
+    }
+    rs match {
+      case (in: Ring, ex: Ring) =>
+        java.lang.Boolean.valueOf((if (includeBorder) in else ex).containsPoint((x, y)))
+      case _ => null
     }
   }
 

@@ -119,7 +119,7 @@ object GeomFunctions {
   def hamming(a: Column, b: Column): Column = col(StHamming(ex(a), ex(b)))
 
   /** Every function, by SQL name — one registry entry each. */
-  private val registry: Seq[(String, Seq[Expression] => Expression)] = Seq(
+  private[graft] val registry: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "st_geomfromwkt" -> (a => StGeomFromWkt(a(0))),
     "st_aswkt" -> (a => StAsWkt(a(0))),
     "st_point" -> (a => StPoint(a(0), a(1))),
@@ -161,6 +161,8 @@ object GeomFunctions {
     "st_orient" -> (a => StOrient(a(0), a(1), a(2), a(3), a(4), a(5))),
     "st_makevalid" -> (a => StMakeValid(a(0), a(1), a(2), a(3), a(4))),
     "st_prepare_tile" -> (a => StPrepareTile(a(0), a(1))),
+    "st_tile_extent_3857" -> (a => StTileExtent3857(a(0), a(1), a(2))),
+    "st_prepare_extent" -> (a => StPrepareExtent(a(0), a(1), a(2), a(3), a(4))),
     "st_mvt_geometry" -> (a => StMvtGeometry(a(0))),
     "st_mvt_pipeline" -> (a => StMvtPipeline(a(0), a(1), a(2), a(3))),
     "st_asgeojson" -> (a => StAsGeoJson(a(0))),

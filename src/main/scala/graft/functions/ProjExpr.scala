@@ -1,38 +1,24 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.graft.KernelExpr
 import org.apache.spark.sql.types._
 
-import graft.core.{Geom, Projection, Wkb}
+import graft.core.{Geom, Projection, Wkb, WkbKernels}
+import GeomKernels.{pointStruct, row}
 
-/** Forward map projection for any registered SRID (core/Proj.scala +
-  * Projection.forSrid — the reference's Grid{Srid} CRS hook as a column):
-  * (srid, lng, lat) → struct(x, y) in the CRS's native units. The SRID is
-  * a plan-time constant (one projection lookup per expression instance,
-  * not per row); an unknown SRID fails at ANALYSIS time — like the
-  * reference's proj.Convert error, and never mid-job on an executor.
+/** Projection kernels by SRID. `Projection.forSrid` builds a new projection
+  * per call (a UTM zone constructs its series), so each SRID resolves once
+  * per JVM here; projections are immutable and shared across task threads.
   */
-case class StProject(lng: Expression, lat: Expression, srid: Int) extends GeomExpr {
-  @transient private lazy val proj: Projection = Projection.forSrid(srid).get
+object ProjKernels {
+  private val bySrid = new java.util.concurrent.ConcurrentHashMap[Int, Projection]()
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    ProjExpr.checkSrid(srid, super.checkInputDataTypes())
-  override def inputTypesImpl: Seq[DataType] = Seq(DoubleType, DoubleType)
-  override def children: Seq[Expression] = Seq(lng, lat)
-  override def dataType: DataType = GeomExpr.pointStruct
+  private def proj(srid: Int): Projection =
+    bySrid.computeIfAbsent(srid, s => Projection.forSrid(s).get)
 
-  protected def evalN(v: Array[Any]): Any = {
-    val (x, y) = proj.forward(v(0).asInstanceOf[Double], v(1).asInstanceOf[Double])
-    if (java.lang.Double.isFinite(x) && java.lang.Double.isFinite(y))
-      GeomExpr.row(x, y)
-    else null // poles under Mercator-family CRSs: no finite map position
-  }
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) =
-    copy(c(0), c(1), srid)
-}
-
-private[functions] object ProjExpr {
   /** analysis-time SRID validity: the lookup executors will replay must
     * succeed on the driver before the job launches.
     */
@@ -40,50 +26,28 @@ private[functions] object ProjExpr {
     if (base.isFailure || Projection.forSrid(srid).isDefined) base
     else TypeCheckResult.TypeCheckFailure(
       s"unsupported SRID $srid (see graft.core.Projection.forSrid)")
-}
 
-/** Inverse projection: (srid, x, y) → struct(x = lng, y = lat). */
-case class StProjectInv(x: Expression, y: Expression, srid: Int) extends GeomExpr {
-  @transient private lazy val proj: Projection = Projection.forSrid(srid).get
+  /** a finite point, or null (poles under Mercator-family CRSs have no
+    * finite map position).
+    */
+  private def finiteRow(x: Double, y: Double): InternalRow =
+    if (java.lang.Double.isFinite(x) && java.lang.Double.isFinite(y)) row(x, y) else null
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    ProjExpr.checkSrid(srid, super.checkInputDataTypes())
-  override def inputTypesImpl: Seq[DataType] = Seq(DoubleType, DoubleType)
-  override def children: Seq[Expression] = Seq(x, y)
-  override def dataType: DataType = GeomExpr.pointStruct
-
-  protected def evalN(v: Array[Any]): Any = {
-    val (lon, lat) = proj.inverse(v(0).asInstanceOf[Double], v(1).asInstanceOf[Double])
-    if (java.lang.Double.isFinite(lon) && java.lang.Double.isFinite(lat))
-      GeomExpr.row(lon, lat)
-    else null
+  def project(lng: Double, lat: Double, srid: Int): InternalRow = {
+    val (x, y) = proj(srid).forward(lng, lat)
+    finiteRow(x, y)
   }
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) =
-    copy(c(0), c(1), srid)
-}
 
-/** Whole-geometry reprojection (WKB → WKB): the reference's
-  * `ApplyToPoints` (utils.go:6-110) composed with the `Grid{Srid}`
-  * projection pair — every coordinate runs inverse(fromSrid) → 4326 →
-  * forward(toSrid), recursing through collections, ring and vertex order
-  * preserved. Both SRIDs resolve at plan time (analysis failure on an
-  * unknown code); a geometry with any coordinate that has no finite image
-  * (e.g. a pole under a Mercator-family target) maps to NULL rather than
-  * a partially-poisoned geometry, matching st_project's scalar rule.
-  */
-case class StTransform(geo: Expression, fromSrid: Int, toSrid: Int) extends GeomExpr {
-  @transient private lazy val from: Projection = Projection.forSrid(fromSrid).get
-  @transient private lazy val to: Projection = Projection.forSrid(toSrid).get
+  def projectInv(x: Double, y: Double, srid: Int): InternalRow = {
+    val (lon, lat) = proj(srid).inverse(x, y)
+    finiteRow(lon, lat)
+  }
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    ProjExpr.checkSrid(toSrid, ProjExpr.checkSrid(fromSrid, super.checkInputDataTypes()))
-  override def inputTypesImpl: Seq[DataType] = Seq(BinaryType)
-  override def children: Seq[Expression] = Seq(geo)
-  override def dataType: DataType = BinaryType
-
-  protected def evalN(v: Array[Any]): Any = {
-    val g = GeomExpr.geomOrNull(v(0).asInstanceOf[Array[Byte]])
+  def transform(geo: Array[Byte], fromSrid: Int, toSrid: Int): Array[Byte] = {
+    val g = WkbKernels.geomOrNull(geo)
     if (g == null) return null
+    val from = proj(fromSrid)
+    val to = proj(toSrid)
     var finite = true
     val out = Geom.applyToPoints(g) { p =>
       val (lon, lat) = from.inverse(p._1, p._2)
@@ -94,6 +58,51 @@ case class StTransform(geo: Expression, fromSrid: Int, toSrid: Int) extends Geom
     }
     if (finite) Wkb.encode(out) else null
   }
+}
+
+/** Forward map projection for any registered SRID (core/Proj.scala +
+  * Projection.forSrid — the reference's Grid{Srid} CRS hook as a column):
+  * (srid, lng, lat) → struct(x, y) in the CRS's native units. The SRID is
+  * a plan-time constant; an unknown SRID fails at ANALYSIS time — like the
+  * reference's proj.Convert error, and never mid-job on an executor.
+  */
+case class StProject(lng: Expression, lat: Expression, srid: Int)
+    extends KernelExpr(ProjKernels, "project", pointStruct, DoubleType, DoubleType) {
+  override def checkInputDataTypes(): TypeCheckResult =
+    ProjKernels.checkSrid(srid, super.checkInputDataTypes())
+  override def children: Seq[Expression] = Seq(lng, lat)
+  override protected def kernelArgs: Seq[Expression] = Seq(lng, lat, Literal(srid))
+  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) =
+    copy(c(0), c(1), srid)
+}
+
+/** Inverse projection: (srid, x, y) → struct(x = lng, y = lat). */
+case class StProjectInv(x: Expression, y: Expression, srid: Int)
+    extends KernelExpr(ProjKernels, "projectInv", pointStruct, DoubleType, DoubleType) {
+  override def checkInputDataTypes(): TypeCheckResult =
+    ProjKernels.checkSrid(srid, super.checkInputDataTypes())
+  override def children: Seq[Expression] = Seq(x, y)
+  override protected def kernelArgs: Seq[Expression] = Seq(x, y, Literal(srid))
+  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) =
+    copy(c(0), c(1), srid)
+}
+
+/** Whole-geometry reprojection (WKB → WKB): the reference's
+  * `ApplyToPoints` (utils.go:6-110) composed with the `Grid{Srid}`
+  * projection pair — every coordinate runs inverse(fromSrid) → 4326 →
+  * forward(toSrid), recursing through collections, ring and vertex order
+  * preserved. Both SRIDs are checked at analysis (failure on an unknown
+  * code); a geometry with any coordinate that has no finite image
+  * (e.g. a pole under a Mercator-family target) maps to NULL rather than
+  * a partially-poisoned geometry, matching st_project's scalar rule.
+  */
+case class StTransform(geo: Expression, fromSrid: Int, toSrid: Int)
+    extends KernelExpr(ProjKernels, "transform", BinaryType, BinaryType) {
+  override def checkInputDataTypes(): TypeCheckResult =
+    ProjKernels.checkSrid(toSrid, ProjKernels.checkSrid(fromSrid, super.checkInputDataTypes()))
+  override def children: Seq[Expression] = Seq(geo)
+  override protected def kernelArgs: Seq[Expression] =
+    Seq(geo, Literal(fromSrid), Literal(toSrid))
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) =
     copy(c(0), fromSrid, toSrid)
 }

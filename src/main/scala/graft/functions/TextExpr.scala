@@ -1,7 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graft.KernelExpr
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -36,13 +37,20 @@ object TextKernels {
     if (words.length < 3) Array(words.mkString(" "))
     else Array.tabulate(words.length - 2)(i => s"${words(i)} ${words(i + 1)} ${words(i + 2)}")
 
+  /** document fingerprint: the rolling hash of the whole text. */
+  def docFingerprint(text: UTF8String): Long = fingerprint(text.toString)
+
+  private def shingleFingerprints(s: String): Array[Long] = shingles(tokens(s)).map(fingerprint)
+
+  def shingleHashes(text: UTF8String): ArrayData =
+    new GenericArrayData(shingleFingerprints(text.toString))
+
   /** MinHash signature: perm i maps shingle hash h to ((2i+1)·h + i²+1) mod p;
     * signature entry = min over shingles.
     */
-  def minhash(s: String, numPerms: Int): Array[Long] = {
-    val sh = shingles(tokens(s))
-    val hashes = sh.map(fingerprint)
-    Array.tabulate(numPerms) { i =>
+  def minhash(text: UTF8String, numPerms: Int): ArrayData = {
+    val hashes = shingleFingerprints(text.toString)
+    new GenericArrayData(Array.tabulate(numPerms) { i =>
       val a = 2L * i + 1
       val b = i.toLong * i + 1
       var m = Long.MaxValue
@@ -53,12 +61,12 @@ object TextKernels {
         j += 1
       }
       if (hashes.isEmpty) 0L else m
-    }
+    })
   }
 
   /** 31-bit SimHash: bit b set when Σ_words (2·bit_b(fingerprint(w)) − 1) > 0. */
-  def simhash(s: String): Long = {
-    val ws = tokens(s)
+  def simhash(text: UTF8String): Long = {
+    val ws = tokens(text.toString)
     var out = 0L
     var b = 0
     while (b < 31) {
@@ -80,22 +88,16 @@ object TextKernels {
   def hamming(a: Long, b: Long): Int = java.lang.Long.bitCount(a ^ b)
 }
 
-case class StFingerprint(child: Expression) extends GeomExpr {
-  override def inputTypesImpl: Seq[DataType] = Seq(StringType)
+case class StFingerprint(child: Expression)
+    extends KernelExpr(TextKernels, "docFingerprint", LongType, StringType) {
   override def children: Seq[Expression] = Seq(child)
-  override def dataType: DataType = LongType
-  protected def evalN(v: Array[Any]): Any =
-    TextKernels.fingerprint(v(0).asInstanceOf[UTF8String].toString)
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0))
 }
 
-case class StMinHash(text: Expression, numPerms: Expression) extends GeomExpr {
-  override def inputTypesImpl: Seq[DataType] = Seq(StringType, IntegerType)
+case class StMinHash(text: Expression, numPerms: Expression)
+    extends KernelExpr(TextKernels, "minhash", ArrayType(LongType, containsNull = false),
+      StringType, IntegerType) {
   override def children: Seq[Expression] = Seq(text, numPerms)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  protected def evalN(v: Array[Any]): Any =
-    new GenericArrayData(
-      TextKernels.minhash(v(0).asInstanceOf[UTF8String].toString, v(1).asInstanceOf[Int]))
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0), c(1))
 }
 
@@ -103,31 +105,21 @@ case class StMinHash(text: Expression, numPerms: Expression) extends GeomExpr {
   * 3-gram shingles → rolling hash each. Duplicates retained — consumers
   * use set operations (array_intersect/union) which dedupe.
   */
-case class StShingleHashes(text: Expression) extends GeomExpr {
-  override def inputTypesImpl: Seq[DataType] = Seq(StringType)
+case class StShingleHashes(text: Expression)
+    extends KernelExpr(TextKernels, "shingleHashes", ArrayType(LongType, containsNull = false),
+      StringType) {
   override def children: Seq[Expression] = Seq(text)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  protected def evalN(v: Array[Any]): Any =
-    new GenericArrayData(
-      TextKernels.shingles(TextKernels.tokens(v(0).asInstanceOf[UTF8String].toString))
-        .map(TextKernels.fingerprint))
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0))
 }
 
-case class StSimHash(child: Expression) extends GeomExpr {
-  override def inputTypesImpl: Seq[DataType] = Seq(StringType)
+case class StSimHash(child: Expression)
+    extends KernelExpr(TextKernels, "simhash", LongType, StringType) {
   override def children: Seq[Expression] = Seq(child)
-  override def dataType: DataType = LongType
-  protected def evalN(v: Array[Any]): Any =
-    TextKernels.simhash(v(0).asInstanceOf[UTF8String].toString)
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0))
 }
 
-case class StHamming(a: Expression, b: Expression) extends GeomExpr {
-  override def inputTypesImpl: Seq[DataType] = Seq(LongType, LongType)
+case class StHamming(a: Expression, b: Expression)
+    extends KernelExpr(TextKernels, "hamming", IntegerType, LongType, LongType) {
   override def children: Seq[Expression] = Seq(a, b)
-  override def dataType: DataType = IntegerType
-  protected def evalN(v: Array[Any]): Any =
-    TextKernels.hamming(v(0).asInstanceOf[Long], v(1).asInstanceOf[Long])
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0), c(1))
 }

@@ -1,9 +1,8 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types.{AbstractDataType, DataType}
 
@@ -16,147 +15,33 @@ object Shim {
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 }
 
-/** Base class for graft's Catalyst expressions: evaluates all children,
-  * short-circuits nulls (null-intolerant semantics), hands boxed values to
-  * `evalN`, and declares input types via the public `DataType` (so implicit
-  * casts — e.g. SQL decimal literals → Double — are inserted at analysis).
-  * Lives in this package because ImplicitCastInputTypes' `inputTypes`
-  * signature uses the `private[sql]` AbstractDataType.
+/** The one base of graft's Catalyst expressions. Each expression names its
+  * kernel: a method `kernel` of the top-level object `kernels`, typed in
+  * Catalyst's physical types (`Array[Byte]`, `UTF8String`, primitives,
+  * `ArrayData` in; `InternalRow`, `ArrayData`, a reference, or a boxed
+  * primitive when the result can be null, out). The optimizer replaces the
+  * node with Spark's `StaticInvoke` of that method, so generated code calls
+  * the kernel inside whole-stage codegen and the interpreted path calls it
+  * by reflection. A null argument yields NULL without a call (null-
+  * intolerant); a kernel returns null for SQL NULL (garbage input,
+  * unsupported geometry).
+  *
+  * `argTypes` are the children's types: the analyzer inserts implicit casts
+  * to them (SQL decimal literals → double). This lives in Spark's package
+  * because `inputTypes` is typed with the `private[sql]` AbstractDataType.
   */
-abstract class GeomExprBase extends Expression
-    with ImplicitCastInputTypes with CodegenFallback {
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
+abstract class KernelExpr(kernels: AnyRef, kernel: String, resultType: DataType,
+                          argTypes: DataType*)
+    extends RuntimeReplaceable with ImplicitCastInputTypes {
+  private val kernelClass: Class[_] = kernels.getClass
 
-  /** subclasses declare concrete input types here. */
-  def inputTypesImpl: Seq[DataType]
-  final override def inputTypes: Seq[AbstractDataType] = inputTypesImpl
+  override def inputTypes: Seq[AbstractDataType] = argTypes
 
-  final override def eval(input: InternalRow): Any = {
-    val cs = children
-    val n = cs.length
-    val vals = new Array[Any](n)
-    var i = 0
-    while (i < n) {
-      val v = cs(i).eval(input)
-      if (v == null) return null
-      vals(i) = v
-      i += 1
-    }
-    evalN(vals)
-  }
+  /** the kernel's arguments: the children, reordered or extended with
+    * plan-time constants where the kernel's signature asks for it.
+    */
+  protected def kernelArgs: Seq[Expression] = children
 
-  protected def evalN(vals: Array[Any]): Any
-}
-
-/** Static-call base for kernels returning a NULLABLE reference (byte[],
-  * UTF8String, boxed Boolean): the kernel returns null to signal SQL NULL
-  * (parse failure, unsupported geometry). Generates a real doGenCode so the
-  * expression stays inside whole-stage codegen; the interpreted path shares
-  * the same kernel via evalN.
-  */
-abstract class GeomExprStaticRef extends Expression with ImplicitCastInputTypes {
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
-
-  /** fully-qualified static method, e.g. "graft.core.WkbKernels.fromWkt". */
-  protected def staticKernel: String
-
-  def inputTypesImpl: Seq[DataType]
-  final override def inputTypes: Seq[AbstractDataType] = inputTypesImpl
-
-  final override def eval(input: InternalRow): Any = {
-    val cs = children
-    val n = cs.length
-    val vals = new Array[Any](n)
-    var i = 0
-    while (i < n) {
-      val v = cs(i).eval(input)
-      if (v == null) return null
-      vals(i) = v
-      i += 1
-    }
-    evalN(vals)
-  }
-
-  protected def evalN(vals: Array[Any]): Any
-
-  override def doGenCode(ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-                         ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
-    import org.apache.spark.sql.types.BooleanType
-    val evals = children.map(_.genCode(ctx))
-    val javaType = CodeGenerator.javaType(dataType)
-    val nullChecks = evals.map(_.isNull.code.toString).filterNot(_ == "false")
-    val anyNull = if (nullChecks.isEmpty) "false" else nullChecks.mkString(" || ")
-    val args = evals.map(_.value.code.toString).mkString(", ")
-    val childCode = evals.map(_.code.toString).mkString("\n")
-    val tmp = ctx.freshName("kres")
-    val unbox = dataType match {
-      case BooleanType => s"((java.lang.Boolean) $tmp).booleanValue()"
-      case _           => s"(($javaType) $tmp)"
-    }
-    ev.copy(code = code"""
-      $childCode
-      Object $tmp = ($anyNull) ? null : (Object) $staticKernel($args);
-      boolean ${ev.isNull} = $tmp == null;
-      $javaType ${ev.value} = ${ev.isNull}
-        ? ${CodeGenerator.defaultValue(dataType)}
-        : $unbox;
-    """)
-  }
-}
-
-/** Sibling base for expressions whose kernel is a pure static primitive
-  * call: implements doGenCode directly (NOT CodegenFallback — that trait's
-  * presence disqualifies the surrounding stage from whole-stage codegen
-  * regardless of any doGenCode override).
-  */
-abstract class GeomExprStatic extends Expression with ImplicitCastInputTypes {
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
-
-  /** fully-qualified static method, e.g. "graft.core.CellKernels.cellAt". */
-  protected def staticKernel: String
-
-  def inputTypesImpl: Seq[DataType]
-  final override def inputTypes: Seq[AbstractDataType] = inputTypesImpl
-
-  final override def eval(input: InternalRow): Any = {
-    val cs = children
-    val n = cs.length
-    val vals = new Array[Any](n)
-    var i = 0
-    while (i < n) {
-      val v = cs(i).eval(input)
-      if (v == null) return null
-      vals(i) = v
-      i += 1
-    }
-    evalN(vals)
-  }
-
-  protected def evalN(vals: Array[Any]): Any
-
-  override def doGenCode(ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-                         ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
-    val evals = children.map(_.genCode(ctx))
-    val javaType = CodeGenerator.javaType(dataType)
-    val nullChecks = evals.map(_.isNull.code.toString).filterNot(_ == "false")
-    val anyNull = if (nullChecks.isEmpty) "false" else nullChecks.mkString(" || ")
-    val args = evals.map(_.value.code.toString).mkString(", ")
-    val childCode = evals.map(_.code.toString).mkString("\n")
-    ev.copy(code = code"""
-      $childCode
-      boolean ${ev.isNull} = $anyNull;
-      $javaType ${ev.value} = ${ev.isNull}
-        ? ${CodeGenerator.defaultValue(dataType)}
-        : $staticKernel($args);
-    """)
-  }
+  override lazy val replacement: Expression =
+    StaticInvoke(kernelClass, resultType, kernel, kernelArgs)
 }

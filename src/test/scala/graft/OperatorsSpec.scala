@@ -859,7 +859,7 @@ class OperatorsSpec extends AnyFunSuite with KnnFixtures {
     // ONE corpus pass (round-5 review): the shingle expression appears
     // exactly twice in the plan — once over the corpus, once over the
     // broadcast benchmark side — never a second corpus scan joined back
-    val shingleCount = "stshinglehashes".r.findAllIn(plan.toLowerCase).size
+    val shingleCount = "TextKernels\\.shingleHashes\\(".r.findAllIn(plan).size
     assert(shingleCount == 2, s"expected 2 shingle computations, plan has $shingleCount")
   }
 
@@ -918,9 +918,10 @@ class OperatorsSpec extends AnyFunSuite with KnnFixtures {
       .select(col("vec_id").as("vid"), col("embedding").cast("array<double>").as("vec"))
     // (operator, its kernels' plan markers, frames it reads twice)
     val cases = Seq[(String, () => DataFrame, Seq[String], Int)](
-      ("nearDupPairs", () => Dedup.nearDupPairs(docs, "doc_id", "text"), Seq("stminhash("), 1),
+      ("nearDupPairs", () => Dedup.nearDupPairs(docs, "doc_id", "text"),
+        Seq("TextKernels.minhash("), 1),
       ("nearDupPairsExact", () => Dedup.nearDupPairsExact(docs, "doc_id", "text"),
-        Seq("stminhash(", "stshinglehashes("), 2),
+        Seq("TextKernels.minhash(", "TextKernels.shingleHashes("), 2),
       ("embedNearDupPairs", () => Dedup.embedNearDupPairs(emb, dim = 64, bits = 8, tau = 0.3),
         Seq(" AS bucket#"), 1))
     def occurrences(plan: String, s: String) =

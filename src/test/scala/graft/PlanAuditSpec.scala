@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Automated plan audit across every gate query: the plan properties the
@@ -14,6 +15,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *   else it means an equi-join key was lost.
   * - No plan reads a persisted frame (InMemoryRelation): a frame read
   *   twice sits behind one exchange that AQE reuses.
+  * - No graft expression is a CodegenFallback: each one runs inside
+  *   whole-stage codegen.
   */
 class PlanAuditSpec extends AnyFunSuite {
 
@@ -38,13 +41,20 @@ class PlanAuditSpec extends AnyFunSuite {
     // caches the docs table), which Spark would substitute into these plans
     spark.catalog.clearCache()
     for ((name, q) <- SparkEntry.queries) {
-      val plan = q(spark, dir).queryExecution.executedPlan.toString
+      val qe = q(spark, dir).queryExecution
+      val plan = qe.executedPlan.toString
       if (plan.contains("CartesianProduct"))
         offenders += s"$name: CartesianProduct"
       if (plan.contains("BroadcastNestedLoopJoin") && !bnljByDesign.contains(name))
         offenders += s"$name: unexpected BroadcastNestedLoopJoin"
       if (plan.contains("InMemoryRelation"))
         offenders += s"$name: reads a persisted frame"
+      // the pre-AQE physical plan: executedPlan is a leaf AdaptiveSparkPlanExec
+      val fallbacks = qe.sparkPlan.flatMap(_.expressions.flatMap(_.collect {
+        case e: CodegenFallback if e.getClass.getName.startsWith("graft.") => e.prettyName
+      }))
+      if (fallbacks.nonEmpty)
+        offenders += s"$name: ${fallbacks.distinct.mkString(", ")} fall back from codegen"
     }
     assert(offenders.isEmpty, offenders.mkString("; "))
   }
