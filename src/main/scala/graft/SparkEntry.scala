@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{SparkSession, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -41,6 +41,55 @@ object SparkEntry {
       if (!names.contains(n)) col(n)
       else when(col(s"${n}_r") === 0.0, col(n) * lit(0.0)).otherwise(col(s"${n}_r")).as(n)
     }: _*)
+  }
+
+  /** "x y": one WKT coordinate pair (the synthetic-geometry builders). */
+  private def wktXY(x: Column, y: Column): Column =
+    concat(x.cast("string"), lit(" "), y.cast("string"))
+
+  /** rolling hash of a geometry's vertices rounded to 1e-6: ORDER-
+    * DEPENDENT, so a gate on it checks vertex order, not only the set
+    * (q35-q37, mirrored op-for-op in their oracles).
+    */
+  private def vertexHash(g: Column): Column =
+    aggregate(st_dump_points(g), lit(0L), (acc, q) =>
+      ((acc * 31L) + (round(q.getField("x") * 1000000.0).cast("long") * 1000003L +
+        round(q.getField("y") * 1000000.0).cast("long"))) % 1000000000000007L)
+
+  /** q43/q45's sink input: q33Input's geometries deduplicated on pid,
+    * then repaired. The synthetic lineitem carries duplicate (orderkey,
+    * linenumber) rows, so duplicate pids; identical duplicates collapse
+    * BEFORE the repair (smaller shuffle, no wasted kernels). The explicit-
+    * N repartition before the dedup pins the downstream makevalid + tile
+    * prep stage at full parallelism — AQE coalesced the small dedup
+    * exchange to 16 tasks although its downstream is CPU-bound (2.1 s ->
+    * 0.7 s wall on that stage), and dedup reuses the partitioning so no
+    * second exchange appears.
+    */
+  private def mvtInput(s: SparkSession, dir: String): DataFrame =
+    q33Input(s, dir)
+      .select(col("pid"), col("geom"))
+      .repartition(s.sparkContext.defaultParallelism, col("pid"))
+      .dropDuplicates("pid")
+      .withColumn("geom", st_makevalid(col("geom"),
+        lit(Double.NaN), lit(Double.NaN), lit(Double.NaN), lit(Double.NaN)))
+
+  /** per tile (x, y, n_bytes, bhash): the protobuf's length and a rolling
+    * hash of its bytes — the q43/q45 byte-level gates.
+    */
+  private def tileByteHash(s: SparkSession, tiles: DataFrame): DataFrame = {
+    import s.implicits._
+    tiles.select(col("x"), col("y"), col("mvt"))
+      .as[(Long, Long, Array[Byte])]
+      .map { case (x, y, b) =>
+        var acc = 0L
+        var i = 0
+        while (i < b.length) {
+          acc = (acc * 31 + (b(i) & 0xFF)) % 1000000000000007L
+          i += 1
+        }
+        (x, y, b.length.toLong, acc)
+      }.toDF("x", "y", "n_bytes", "bhash")
   }
 
   /** Flagship: interleaved docs table → span extraction → WKT parse →
@@ -94,16 +143,14 @@ object SparkEntry {
       .withColumn("gt", col("t.miny") + ((col("pid") % 9).cast("double") * 0.05 + 0.1) * col("ys"))
       .withColumn("ga", col("gl") + ((col("pid") % 4).cast("double") * 0.05 + 0.25) * col("xs"))
       .withColumn("gb", col("gt") + ((col("pid") % 6).cast("double") * 0.04 + 0.25) * col("ys"))
-    def pt(x: org.apache.spark.sql.Column, y: org.apache.spark.sql.Column) =
-      concat(x.cast("string"), lit(" "), y.cast("string"))
     val boxWkt = concat(lit("POLYGON (("),
-      pt(col("gl"), col("gt")), lit(","), pt(col("ga"), col("gt")), lit(","),
-      pt(col("ga"), col("gb")), lit(","), pt(col("gl"), col("gb")), lit(","),
-      pt(col("gl"), col("gt")), lit("))"))
+      wktXY(col("gl"), col("gt")), lit(","), wktXY(col("ga"), col("gt")), lit(","),
+      wktXY(col("ga"), col("gb")), lit(","), wktXY(col("gl"), col("gb")), lit(","),
+      wktXY(col("gl"), col("gt")), lit("))"))
     val bowWkt = concat(lit("POLYGON (("),
-      pt(col("gl"), col("gt")), lit(","), pt(col("ga"), col("gb")), lit(","),
-      pt(col("ga"), col("gt")), lit(","), pt(col("gl"), col("gb")), lit(","),
-      pt(col("gl"), col("gt")), lit("))"))
+      wktXY(col("gl"), col("gt")), lit(","), wktXY(col("ga"), col("gb")), lit(","),
+      wktXY(col("ga"), col("gt")), lit(","), wktXY(col("gl"), col("gb")), lit(","),
+      wktXY(col("gl"), col("gt")), lit("))"))
     base
       .withColumn("geom", st_geomfromwkt(when(col("pid") % 2 === 0, boxWkt).otherwise(bowWkt)))
       .select(col("pid"), col("z9"), col("tx"), col("ty"), col("geom"))
@@ -401,44 +448,36 @@ object SparkEntry {
       // split at the forced max (p2, 2° off the baseline), then each 3-point
       // half either keeps all (dmax > tol, len ≤ 3 rule) or collapses to its
       // endpoints; midpoint dedupe joins the halves. tol = 0.5.
-      def c(x: org.apache.spark.sql.Column, y: org.apache.spark.sql.Column) =
-        concat(x.cast("string"), lit(" "), y.cast("string"))
       val p = Spread.forKernels(Synth.points(s, dir))
         .withColumn("y1v", col("lat") + (col("pid") % 3).cast("double") * 0.3)
         .withColumn("y3v", col("lat") + (col("pid") % 5).cast("double") * 0.2)
         .withColumn("ls", st_geomfromwkt(concat(lit("LINESTRING ("),
-          c(col("lon"), col("lat")), lit(","),
-          c(col("lon") + 1, col("y1v")), lit(","),
-          c(col("lon") + 2, col("lat") + 2), lit(","),
-          c(col("lon") + 3, col("y3v")), lit(","),
-          c(col("lon") + 4, col("lat")), lit(")"))))
+          wktXY(col("lon"), col("lat")), lit(","),
+          wktXY(col("lon") + 1, col("y1v")), lit(","),
+          wktXY(col("lon") + 2, col("lat") + 2), lit(","),
+          wktXY(col("lon") + 3, col("y3v")), lit(","),
+          wktXY(col("lon") + 4, col("lat")), lit(")"))))
         .withColumn("g", st_simplify(col("ls"), lit(0.5)))
       p.select(col("pid"), st_num_points(col("g")).as("npts"),
-        aggregate(st_dump_points(col("g")), lit(0L), (acc, q) =>
-          ((acc * 31L) + (round(q.getField("x") * 1000000.0).cast("long") * 1000003L +
-            round(q.getField("y") * 1000000.0).cast("long"))) % 1000000000000007L).as("vhash"))
+        vertexHash(col("g")).as("vhash"))
     }),
 
     "q36_rectify" -> ((s, dir) => {
       // winding rectification: ring 0 forced clockwise; even pids supply a
       // CCW triangle (must reverse), odd pids a CW one (kept). The hash is
       // ORDER-DEPENDENT (rolling), so it gates the reversal itself.
-      def c(x: org.apache.spark.sql.Column, y: org.apache.spark.sql.Column) =
-        concat(x.cast("string"), lit(" "), y.cast("string"))
       val p0 = (col("lon"), col("lat"))
       val p1 = (col("lon") + 3, col("lat") + 1)
       val p2 = (col("lon") + 1, col("lat") + 2)
-      val ccw = concat(lit("POLYGON (("), c(p0._1, p0._2), lit(","), c(p1._1, p1._2),
-        lit(","), c(p2._1, p2._2), lit(","), c(p0._1, p0._2), lit("))"))
-      val cw = concat(lit("POLYGON (("), c(p0._1, p0._2), lit(","), c(p2._1, p2._2),
-        lit(","), c(p1._1, p1._2), lit(","), c(p0._1, p0._2), lit("))"))
+      val ccw = concat(lit("POLYGON (("), wktXY(p0._1, p0._2), lit(","), wktXY(p1._1, p1._2),
+        lit(","), wktXY(p2._1, p2._2), lit(","), wktXY(p0._1, p0._2), lit("))"))
+      val cw = concat(lit("POLYGON (("), wktXY(p0._1, p0._2), lit(","), wktXY(p2._1, p2._2),
+        lit(","), wktXY(p1._1, p1._2), lit(","), wktXY(p0._1, p0._2), lit("))"))
       Spread.forKernels(Synth.points(s, dir))
         .withColumn("g", st_rectify_polygon(st_geomfromwkt(
           when(col("pid") % 2 === 0, ccw).otherwise(cw))))
         .select(col("pid"), st_num_points(col("g")).as("npts"),
-          aggregate(st_dump_points(col("g")), lit(0L), (acc, q) =>
-            ((acc * 31L) + (round(q.getField("x") * 1000000.0).cast("long") * 1000003L +
-              round(q.getField("y") * 1000000.0).cast("long"))) % 1000000000000007L).as("vhash"))
+          vertexHash(col("g")).as("vhash"))
     }),
 
     "q37_clip_line" -> ((s, dir) => {
@@ -447,20 +486,16 @@ object SparkEntry {
       // the right edge of a per-row box; output = [entry, p1, exit], with
       // the entry/exit points produced by segmentIntersect against the CW
       // box edges — mirrored op-for-op in the oracle.
-      def c(x: org.apache.spark.sql.Column, y: org.apache.spark.sql.Column) =
-        concat(x.cast("string"), lit(" "), y.cast("string"))
       val ls = concat(lit("LINESTRING ("),
-        c(col("lon") - 1, col("lat") + 0.5), lit(","),
-        c(col("lon") + 1, col("lat") + 1), lit(","),
-        c(col("lon") + 3, col("lat") + 1.5), lit(")"))
+        wktXY(col("lon") - 1, col("lat") + 0.5), lit(","),
+        wktXY(col("lon") + 1, col("lat") + 1), lit(","),
+        wktXY(col("lon") + 3, col("lat") + 1.5), lit(")"))
       Spread.forKernels(Synth.points(s, dir))
         .withColumn("g", st_clip(st_geomfromwkt(ls),
           col("lon"), col("lat"), col("lon") + 2, col("lat") + 2))
         .select(col("pid"), st_geomtype(col("g")).as("gtype"),
           st_num_points(col("g")).as("npts"),
-          aggregate(st_dump_points(col("g")), lit(0L), (acc, q) =>
-            ((acc * 31L) + (round(q.getField("x") * 1000000.0).cast("long") * 1000003L +
-              round(q.getField("y") * 1000000.0).cast("long"))) % 1000000000000007L).as("vhash"))
+          vertexHash(col("g")).as("vhash"))
     }),
 
     "q28_lang_score" -> ((s, dir) => {
@@ -567,33 +602,8 @@ object SparkEntry {
       // protobuf BYTES per tile (rolling hash + length); the oracle
       // predicts every byte incl. varint framing and key/value tables
       // (encoding/mvt/layer.go:15-131, tile.go:45-63).
-      import s.implicits._
-      // the synthetic lineitem carries duplicate (orderkey, linenumber)
-      // rows -> duplicate pids; identical duplicates collapse (the sink
-      // joins on pid, which would cross-multiply them). The explicit-N
-      // repartition before the dedup pins the downstream makevalid + tile
-      // prep stage at full parallelism — AQE coalesced the small dedup
-      // exchange to 16 tasks although its downstream is CPU-bound (2.1 s
-      // -> 0.7 s wall on that stage), and dedup reuses the partitioning
-      // so no second exchange appears.
-      val fixed = q33Input(s, dir)
-        .select(col("pid"), col("geom"))
-        .repartition(s.sparkContext.defaultParallelism, col("pid"))
-        .dropDuplicates("pid") // BEFORE the repair: smaller shuffle, no wasted kernels
-        .withColumn("geom", st_makevalid(col("geom"),
-          lit(Double.NaN), lit(Double.NaN), lit(Double.NaN), lit(Double.NaN)))
-      graft.operators.Tiler.mvtTiles(s, fixed, "pid", 9, "features", srid = 3857)
-        .select(col("x"), col("y"), col("mvt"))
-        .as[(Long, Long, Array[Byte])]
-        .map { case (x, y, b) =>
-          var acc = 0L
-          var i = 0
-          while (i < b.length) {
-            acc = (acc * 31 + (b(i) & 0xFF)) % 1000000000000007L
-            i += 1
-          }
-          (x, y, b.length.toLong, acc)
-        }.toDF("x", "y", "n_bytes", "bhash")
+      tileByteHash(s, graft.operators.Tiler.mvtTiles(s, mvtInput(s, dir), "pid", 9,
+        lit("features"), srid = 3857))
     }),
 
     "q44_neardup_pairs" -> ((s, dir) => {
@@ -613,28 +623,11 @@ object SparkEntry {
       // layer.go:133-190) with cross-feature value dedup — the two bool
       // values dedupe across the whole layer, so the oracle must reproduce
       // the first-appearance index bookkeeping to predict the bytes.
-      import s.implicits._
-      val fixed = q33Input(s, dir)
-        .select(col("pid"), col("geom"))
-        .repartition(s.sparkContext.defaultParallelism, col("pid"))
-        .dropDuplicates("pid") // q43 note: explicit-N pins the repair stage width
-        .withColumn("geom", st_makevalid(col("geom"),
-          lit(Double.NaN), lit(Double.NaN), lit(Double.NaN), lit(Double.NaN)))
+      val fixed = mvtInput(s, dir)
         .withColumn("score", col("pid").cast("double") / lit(4.0) + lit(0.5))
         .withColumn("even", (col("pid") % 2) === 0)
-      graft.operators.Tiler.mvtTiles(s, fixed, "pid", 9, "features", srid = 3857,
-          propCols = Seq("pid", "score", "even"))
-        .select(col("x"), col("y"), col("mvt"))
-        .as[(Long, Long, Array[Byte])]
-        .map { case (x, y, b) =>
-          var acc = 0L
-          var i = 0
-          while (i < b.length) {
-            acc = (acc * 31 + (b(i) & 0xFF)) % 1000000000000007L
-            i += 1
-          }
-          (x, y, b.length.toLong, acc)
-        }.toDF("x", "y", "n_bytes", "bhash")
+      tileByteHash(s, graft.operators.Tiler.mvtTiles(s, fixed, "pid", 9, lit("features"),
+        srid = 3857, propCols = Seq("pid", "score", "even")))
     }),
 
     "q46_geojson_feature" -> ((s, dir) => {

@@ -1,8 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.graft.Shim
+import org.apache.spark.sql.types.IntegerType
 
 /** Column API + SQL registration for the engine's Catalyst expressions.
   *
@@ -118,76 +119,95 @@ object GeomFunctions {
   def shingle_hashes(text: Column): Column = col(StShingleHashes(ex(text)))
   def hamming(a: Column, b: Column): Column = col(StHamming(ex(a), ex(b)))
 
-  /** Every function, by SQL name — one registry entry each. */
-  private[graft] val registry: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "st_geomfromwkt" -> (a => StGeomFromWkt(a(0))),
-    "st_aswkt" -> (a => StAsWkt(a(0))),
-    "st_point" -> (a => StPoint(a(0), a(1))),
-    "st_box_polygon" -> (a => StBoxPolygon(a(0), a(1), a(2), a(3))),
-    "st_x" -> (a => StX(a(0))),
-    "st_y" -> (a => StY(a(0))),
-    "st_geomtype" -> (a => StGeomType(a(0))),
-    "st_envelope" -> (a => StEnvelope(a(0))),
-    "st_dump_points" -> (a => StDumpPoints(a(0))),
-    "st_segments" -> (a => StSegmentsOf(a(0))),
-    "st_num_points" -> (a => StNumPoints(a(0))),
-    "st_contains" -> (a => StContains(a(0), a(1), a(2))),
-    "st_ring_contains" -> (a => StRingContains(a(0), a(1), a(2), a(3))),
-    "st_cell_at" -> (a => StCellAt(a(0), a(1), a(2))),
-    "st_lon2tile" -> (a => StLon2Tile(a(0), a(1))),
-    "st_lat2tile" -> (a => StLat2Tile(a(0), a(1))),
-    "st_tile2lon" -> (a => StTile2Lon(a(0), a(1))),
-    "st_tile2lat" -> (a => StTile2Lat(a(0), a(1))),
-    "st_cell_z" -> (a => StCellZ(a(0))),
-    "st_cell_x" -> (a => StCellX(a(0))),
-    "st_cell_y" -> (a => StCellY(a(0))),
-    "st_family_at" -> (a => StFamilyAt(a(0), a(1))),
-    "st_tiles_for_bounds" -> (a => StTilesForBounds(a(0), a(1), a(2), a(3), a(4))),
-    "st_tiles_for_bounds_3857" -> (a => StTilesForBounds3857(a(0), a(1), a(2), a(3), a(4))),
-    "st_tile_envelope" -> (a => StTileEnvelope(a(0))),
-    "st_cover_zoom" -> (a => StCoverZoom(a(0), a(1), a(2), a(3), a(4), a(5))),
-    "st_cover_at_levels" -> (a => StCoverAtLevels(a(0), a(1), a(2), a(3), a(4))),
-    "st_simplify" -> (a => StSimplify(a(0), a(1))),
-    "st_clip" -> (a => StClip(a(0), a(1), a(2), a(3), a(4))),
-    "st_winding" -> (a => StWinding(a(0))),
-    "st_rectify_polygon" -> (a => StRectifyPolygon(a(0))),
-    "st_centroid_ref" -> (a => StCentroidRef(a(0))),
-    "st_perpendicular_distance" ->
-      (a => StPerpendicularDistance(a(0), a(1), a(2), a(3), a(4), a(5))),
-    "st_distance_to_segment" ->
-      (a => StDistanceToSegment(a(0), a(1), a(2), a(3), a(4), a(5))),
-    "st_seg_intersect" ->
-      (a => StSegIntersect(a(0), a(1), a(2), a(3), a(4), a(5), a(6), a(7))),
-    "st_orient" -> (a => StOrient(a(0), a(1), a(2), a(3), a(4), a(5))),
-    "st_makevalid" -> (a => StMakeValid(a(0), a(1), a(2), a(3), a(4))),
-    "st_prepare_tile" -> (a => StPrepareTile(a(0), a(1))),
-    "st_tile_extent_3857" -> (a => StTileExtent3857(a(0), a(1), a(2))),
-    "st_prepare_extent" -> (a => StPrepareExtent(a(0), a(1), a(2), a(3), a(4))),
-    "st_mvt_geometry" -> (a => StMvtGeometry(a(0))),
-    "st_mvt_pipeline" -> (a => StMvtPipeline(a(0), a(1), a(2), a(3))),
-    "st_asgeojson" -> (a => StAsGeoJson(a(0))),
-    "st_geomfromgeojson" -> (a => StGeomFromGeoJson(a(0))),
-    "st_utm_from_lnglat" -> (a => StUtmFromLngLat(a(0), a(1))),
-    "st_lnglat_from_utm" -> (a => StLngLatFromUtm(a(0), a(1), a(2), a(3))),
-    // SQL form: srid is a foldable integer literal (plan-time constant)
-    "st_project" -> (a => StProject(a(0), a(1),
-      a(2).eval().asInstanceOf[Number].intValue())),
-    "st_project_inv" -> (a => StProjectInv(a(0), a(1),
-      a(2).eval().asInstanceOf[Number].intValue())),
-    "st_transform" -> (a => StTransform(a(0),
-      a(1).eval().asInstanceOf[Number].intValue(),
-      a(2).eval().asInstanceOf[Number].intValue())),
-    "doc_fingerprint" -> (a => StFingerprint(a(0))),
-    "minhash" -> (a => StMinHash(a(0), a(1))),
-    "simhash" -> (a => StSimHash(a(0))),
-    "shingle_hashes" -> (a => StShingleHashes(a(0))),
-    "hamming" -> (a => StHamming(a(0), a(1)))
+  private type Builder = PartialFunction[Seq[Expression], Expression]
+  private def fn(name: String)(build: Builder): (String, Builder) = name -> build
+
+  /** a plan-time SRID argument of `name`: a foldable, non-null INT. */
+  private def sridArg(name: String, param: String, e: Expression): Int =
+    if (e.foldable && e.dataType == IntegerType && e.eval() != null) e.eval().asInstanceOf[Int]
+    else throw Shim.nonFoldableArgumentError(name, param, IntegerType)
+
+  /** Every function, by SQL name — one registry entry each, whose pattern
+    * is the function's argument list.
+    */
+  private[graft] val registry: Seq[(String, Builder)] = Seq(
+    fn("st_geomfromwkt") { case Seq(a) => StGeomFromWkt(a) },
+    fn("st_aswkt") { case Seq(a) => StAsWkt(a) },
+    fn("st_point") { case Seq(a, b) => StPoint(a, b) },
+    fn("st_box_polygon") { case Seq(a, b, c, d) => StBoxPolygon(a, b, c, d) },
+    fn("st_x") { case Seq(a) => StX(a) },
+    fn("st_y") { case Seq(a) => StY(a) },
+    fn("st_geomtype") { case Seq(a) => StGeomType(a) },
+    fn("st_envelope") { case Seq(a) => StEnvelope(a) },
+    fn("st_dump_points") { case Seq(a) => StDumpPoints(a) },
+    fn("st_segments") { case Seq(a) => StSegmentsOf(a) },
+    fn("st_num_points") { case Seq(a) => StNumPoints(a) },
+    fn("st_contains") { case Seq(a, b, c) => StContains(a, b, c) },
+    fn("st_ring_contains") { case Seq(a, b, c, d) => StRingContains(a, b, c, d) },
+    fn("st_cell_at") { case Seq(a, b, c) => StCellAt(a, b, c) },
+    fn("st_lon2tile") { case Seq(a, b) => StLon2Tile(a, b) },
+    fn("st_lat2tile") { case Seq(a, b) => StLat2Tile(a, b) },
+    fn("st_tile2lon") { case Seq(a, b) => StTile2Lon(a, b) },
+    fn("st_tile2lat") { case Seq(a, b) => StTile2Lat(a, b) },
+    fn("st_cell_z") { case Seq(a) => StCellZ(a) },
+    fn("st_cell_x") { case Seq(a) => StCellX(a) },
+    fn("st_cell_y") { case Seq(a) => StCellY(a) },
+    fn("st_family_at") { case Seq(a, b) => StFamilyAt(a, b) },
+    fn("st_tiles_for_bounds") { case Seq(a, b, c, d, e) => StTilesForBounds(a, b, c, d, e) },
+    fn("st_tiles_for_bounds_3857") { case Seq(a, b, c, d, e) =>
+      StTilesForBounds3857(a, b, c, d, e) },
+    fn("st_tile_envelope") { case Seq(a) => StTileEnvelope(a) },
+    fn("st_cover_zoom") { case Seq(a, b, c, d, e, f) => StCoverZoom(a, b, c, d, e, f) },
+    fn("st_cover_at_levels") { case Seq(a, b, c, d, e) => StCoverAtLevels(a, b, c, d, e) },
+    fn("st_simplify") { case Seq(a, b) => StSimplify(a, b) },
+    fn("st_clip") { case Seq(a, b, c, d, e) => StClip(a, b, c, d, e) },
+    fn("st_winding") { case Seq(a) => StWinding(a) },
+    fn("st_rectify_polygon") { case Seq(a) => StRectifyPolygon(a) },
+    fn("st_centroid_ref") { case Seq(a) => StCentroidRef(a) },
+    fn("st_perpendicular_distance") { case Seq(a, b, c, d, e, f) =>
+      StPerpendicularDistance(a, b, c, d, e, f) },
+    fn("st_distance_to_segment") { case Seq(a, b, c, d, e, f) =>
+      StDistanceToSegment(a, b, c, d, e, f) },
+    fn("st_seg_intersect") { case Seq(a, b, c, d, e, f, g, h) =>
+      StSegIntersect(a, b, c, d, e, f, g, h) },
+    fn("st_orient") { case Seq(a, b, c, d, e, f) => StOrient(a, b, c, d, e, f) },
+    fn("st_makevalid") { case Seq(a, b, c, d, e) => StMakeValid(a, b, c, d, e) },
+    fn("st_prepare_tile") { case Seq(a, b) => StPrepareTile(a, b) },
+    fn("st_tile_extent_3857") { case Seq(a, b, c) => StTileExtent3857(a, b, c) },
+    fn("st_prepare_extent") { case Seq(a, b, c, d, e) => StPrepareExtent(a, b, c, d, e) },
+    fn("st_mvt_geometry") { case Seq(a) => StMvtGeometry(a) },
+    fn("st_mvt_pipeline") { case Seq(a, b, c, d) => StMvtPipeline(a, b, c, d) },
+    fn("st_asgeojson") { case Seq(a) => StAsGeoJson(a) },
+    fn("st_geomfromgeojson") { case Seq(a) => StGeomFromGeoJson(a) },
+    fn("st_utm_from_lnglat") { case Seq(a, b) => StUtmFromLngLat(a, b) },
+    fn("st_lnglat_from_utm") { case Seq(a, b, c, d) => StLngLatFromUtm(a, b, c, d) },
+    // the SRID is a plan-time constant: a foldable INT argument
+    fn("st_project") { case Seq(a, b, srid) =>
+      StProject(a, b, sridArg("st_project", "srid", srid)) },
+    fn("st_project_inv") { case Seq(a, b, srid) =>
+      StProjectInv(a, b, sridArg("st_project_inv", "srid", srid)) },
+    fn("st_transform") { case Seq(a, from, to) =>
+      StTransform(a, sridArg("st_transform", "fromSrid", from),
+        sridArg("st_transform", "toSrid", to)) },
+    fn("doc_fingerprint") { case Seq(a) => StFingerprint(a) },
+    fn("minhash") { case Seq(a, b) => StMinHash(a, b) },
+    fn("simhash") { case Seq(a) => StSimHash(a) },
+    fn("shingle_hashes") { case Seq(a) => StShingleHashes(a) },
+    fn("hamming") { case Seq(a, b) => StHamming(a, b) }
   )
 
+  /** Registers every function. A call whose argument count the entry's
+    * pattern does not accept fails at analysis, naming the function.
+    */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    registry.foreach { case (name, builder) =>
-      reg.createOrReplaceTempFunction(name, builder, "built-in")
+    registry.foreach { case (name, build) =>
+      def wrongArgs(args: Seq[Expression]): Expression = {
+        // the counts the pattern accepts; st_seg_intersect's 8 is the longest
+        val arities = (0 to 8).filter(n => build.isDefinedAt(Seq.fill(n)(Literal(null))))
+        throw Shim.wrongNumArgsError(name, arities, args.length)
+      }
+      reg.createOrReplaceTempFunction(name, args => build.applyOrElse(args, wrongArgs), "built-in")
     }
   }
 }

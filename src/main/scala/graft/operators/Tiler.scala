@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.GeomFunctions._
@@ -17,27 +17,39 @@ import graft.functions.GeomFunctions._
   */
 object Tiler {
 
-  /** geometries(id, geom WKB) → one row per (id, cell) covering the
-    * geometry envelope at zoom z. `srid` picks the grid: 4326 (lon/lat
-    * degrees, the docs pipeline) or 3857 (web-mercator meters).
+  /** A tiling grid: the packed cells covering an envelope (minx, miny,
+    * maxx, maxy, z) and the extent of a packed cell, both in the grid's
+    * own units.
     */
-  def assignTiles(geoms: DataFrame, idCol: String, z: Int, srid: Int = 4326): DataFrame = {
-    // no env-isNotNull filter (round 7, measured): st_tiles_for_bounds is
-    // null-intolerant, so a null envelope yields a null cover and explode()
-    // drops the row — same output, and the filter's presence made Catalyst
-    // evaluate the whole upstream geometry expression TWICE per row (once
-    // in the collapsed filter, once in the explode input projection)
-    val env = geoms
-      .withColumn("env", st_envelope(col("geom")))
-    val tiles =
-      if (srid == 3857)
-        st_tiles_for_bounds_3857(col("env.minx"), col("env.miny"),
-          col("env.maxx"), col("env.maxy"), lit(z))
-      else
-        st_tiles_for_bounds(col("env.minx"), col("env.miny"),
-          col("env.maxx"), col("env.maxy"), lit(z))
-    env.select(col(idCol), explode(tiles).as("cell"))
+  private final case class Grid(cover: (Column, Column, Column, Column, Column) => Column,
+                                extent: Column => Column)
+
+  /** the grid of `srid`: 4326 (lon/lat degrees, the docs pipeline) or 3857
+    * (web-mercator meters). Any other SRID is rejected, not tiled on a
+    * grid whose units it does not share.
+    */
+  private def grid(srid: Int): Grid = {
+    require(srid == 4326 || srid == 3857, s"tiler grids are SRID 4326 and 3857, not $srid")
+    if (srid == 4326) Grid(st_tiles_for_bounds, st_tile_envelope)
+    else Grid(st_tiles_for_bounds_3857,
+      c => st_tile_extent_3857(st_cell_z(c), st_cell_x(c), st_cell_y(c)))
   }
+
+  /** the explode of the `env` envelope's cover at zoom z: one row per
+    * cell. No env-isNotNull filter: the cover is null-intolerant, so
+    * explode() already drops a null envelope, and such a filter made
+    * Catalyst evaluate the whole upstream geometry expression TWICE per
+    * row (round 7, measured).
+    */
+  private def cover(g: Grid, z: Int): Column =
+    explode(g.cover(col("env.minx"), col("env.miny"), col("env.maxx"), col("env.maxy"), lit(z)))
+
+  /** geometries(id, geom WKB) → one row per (id, cell) covering the
+    * geometry envelope at zoom z on the grid of `srid` (4326 or 3857).
+    */
+  def assignTiles(geoms: DataFrame, idCol: String, z: Int, srid: Int = 4326): DataFrame =
+    geoms.withColumn("env", st_envelope(col("geom")))
+      .select(col(idCol), cover(grid(srid), z).as("cell"))
 
   /** per-tile feature counts rolled up across several zooms in one pass:
     * base assignment at the deepest zoom, ancestors via st_family_at.
@@ -57,133 +69,52 @@ object Tiler {
         st_cell_y(col("cell")).as("y"), col("n_features"))
   }
 
-  /** Full MVT tile sink: geometries → per-tile protobuf bytes.
-    * Pipeline: envelope tile assignment (explode) → per-row tile-space
-    * projection + command-stream encode (scalar expressions, codegen
-    * pipeline, no shuffle) → ONE shuffle grouping by the packed cell id →
-    * layer/tile assembly per group. Emits (z, x, y, mvt binary).
+  /** the sink's map side, all per-row expressions and no shuffle: the
+    * cover explode carries the geometry column (joining assignTiles back
+    * to the geometries evaluates the input twice and shuffles it), then
+    * tile-space projection against the cell's extent and the command-
+    * stream encode. Emits (…, cell, mvt struct).
     */
-  /** shared map-side sink front: inline cell assignment (explode carries
-    * the geometry column — the round-2 assignTiles ⋈ geoms form evaluated
-    * the input twice and paid a join shuffle for nothing), tile-space
-    * projection, command-stream encode. Emits (cell, …, mvt struct); all
-    * per-row expressions, no shuffle.
-    */
-  private def mvtPrep(geoms: DataFrame, z: Int, srid: Int): DataFrame = {
-    // same as assignTiles: explode(null cover) drops null-envelope rows;
-    // the former filter doubled the upstream makevalid+parse evaluation
-    val env = geoms
+  private def mvtPrep(geoms: DataFrame, z: Int, g: Grid): DataFrame =
+    geoms
       .withColumn("env", st_envelope(col("geom")))
-    val tiles =
-      if (srid == 3857)
-        st_tiles_for_bounds_3857(col("env.minx"), col("env.miny"),
-          col("env.maxx"), col("env.maxy"), lit(z))
-      else
-        st_tiles_for_bounds(col("env.minx"), col("env.miny"),
-          col("env.maxx"), col("env.maxy"), lit(z))
-    val withCell = env.withColumn("cell", explode(tiles))
-    val prepped =
-      if (srid == 3857)
-        withCell
-          .withColumn("te", st_tile_extent_3857(st_cell_z(col("cell")),
-            st_cell_x(col("cell")), st_cell_y(col("cell"))))
-          .withColumn("prep", st_prepare_extent(col("geom"),
-            col("te.minx"), col("te.miny"), col("te.maxx"), col("te.maxy")))
-      else
-        withCell.withColumn("prep", st_prepare_tile(col("geom"), col("cell")))
-    prepped.withColumn("mvt", st_mvt_geometry(col("prep")))
-  }
+      .withColumn("cell", cover(g, z))
+      .withColumn("te", g.extent(col("cell")))
+      .withColumn("prep", st_prepare_extent(col("geom"),
+        col("te.minx"), col("te.miny"), col("te.maxx"), col("te.maxy")))
+      .withColumn("mvt", st_mvt_geometry(col("prep")))
 
-  def mvtTiles(spark: org.apache.spark.sql.SparkSession, geoms: DataFrame,
-               idCol: String, z: Int, layerName: String, srid: Int = 4326,
-               propCols: Seq[String] = Nil): DataFrame = {
+  /** The MVT tile sink: geometries → (z, x, y, mvt protobuf bytes), one
+    * tile per covered cell holding one layer per distinct `layer` value
+    * (reference tile.go:45-63: a Tile holds repeated Layer messages). A
+    * single-layer caller passes `lit(name)`.
+    *
+    * After the map-side [[mvtPrep]], ONE shuffle on the packed cell and
+    * an in-partition sort by (cell, layer, fid): a forward walk per
+    * partition emits one tile per cell run, streams each layer run
+    * through the layer encoder and frames the finished layers in
+    * layer-name order. The bytes are a pure function of the input
+    * (re-runs and micro-batch replays are byte-identical), per-tile memory
+    * stays bounded at the output bytes plus one layer's key/value maps
+    * (never the feature list), and the sort spills where a hash group
+    * could not.
+    *
+    * Tags: "fid" (the id as a string) first, then each of `propCols` as a
+    * typed value (MvtTile.TagValue.of per the Spark column type, reference
+    * layer.go:133-190); a NULL property is dropped per feature like the
+    * reference drops nil tags. Feature ids count from 1 within each layer.
+    */
+  def mvtTiles(spark: SparkSession, geoms: DataFrame, idCol: String, z: Int,
+               layer: Column, srid: Int = 4326, propCols: Seq[String] = Nil): DataFrame = {
     import spark.implicits._
     import graft.core.{MvtTile, Slippy}
-    val assigned = mvtPrep(geoms, z, srid)
-      .select(Seq(col("cell"), col(idCol).cast("string").as("fid"),
+    val propNames = propCols.toIndexedSeq
+    val nFixed = 5 // cell, layer, fid, commands, gtype
+    mvtPrep(geoms, z, grid(srid))
+      .select(Seq(col("cell"), layer.cast("string").as("layer"),
+        col(idCol).cast("string").as("fid"),
         col("mvt.commands").as("commands"), col("mvt.geom_type").as("gtype")) ++
         propCols.map(col): _*)
-    // DETERMINISTIC + STREAMING tile assembly (round-3): the round-2
-    // groupByKey/mapGroups form assembled features in shuffle arrival
-    // order, so re-running the sink could produce byte-different (though
-    // semantically equal) tiles — unacceptable for a byte-level gate and
-    // for exact checkpoint resume. Features are now shuffled by cell and
-    // SORTED WITHIN PARTITIONS by (cell, fid): a single forward walk per
-    // partition groups consecutive rows of one tile and feeds them to the
-    // streaming layer encoder — per-tile memory stays bounded at the
-    // output bytes + key/value maps (never the feature list), and the
-    // per-feature heavy work (projection + command encode) happened
-    // map-side before the shuffle. Sort-based grouping replaces the hash
-    // group's in-memory map with spillable sort machinery — the standard
-    // 100 TB shape.
-    // Extra property columns ride the same shuffle as typed tag values
-    // (MvtTile.TagValue.of per the Spark column type — string/int/double/
-    // bool/…, reference layer.go:133-190); "fid" stays the first tag, so
-    // with propCols = Nil the tile bytes are unchanged. NULL props are
-    // dropped per-feature like the reference drops nil tags.
-    val propNames = propCols.toIndexedSeq
-    val nFixed = 4 // cell, fid, commands, gtype
-    assigned
-      .repartition(col("cell"))
-      .sortWithinPartitions(col("cell"), col("fid"))
-      .mapPartitions { it =>
-        val buf = it.buffered
-        new Iterator[(Int, Long, Long, Array[Byte])] {
-          def hasNext: Boolean = buf.hasNext
-          def next(): (Int, Long, Long, Array[Byte]) = {
-            val cell = buf.head.getLong(0)
-            var i = 0L
-            val featIt = new Iterator[MvtTile.Feature] {
-              def hasNext: Boolean = buf.hasNext && buf.head.getLong(0) == cell
-              def next(): MvtTile.Feature = {
-                val r = buf.next()
-                i += 1
-                // zero-copy: the row holds the command longs in a primitive
-                // array (ArraySeq.ofLong) — rewrap instead of boxing a copy
-                // (the round-3 micro-pass invariant, kept on the Row path)
-                val cmds: IndexedSeq[Long] = r.getSeq[Long](2) match {
-                  case as: scala.collection.immutable.ArraySeq[Long] => as
-                  case other => other.toIndexedSeq
-                }
-                val props = Vector.newBuilder[(String, MvtTile.TagValue)]
-                props += (("fid", MvtTile.TagValue.VString(r.getString(1))))
-                var p = 0
-                while (p < propNames.length) {
-                  val v = r.get(nFixed + p)
-                  if (v != null) props += ((propNames(p), MvtTile.TagValue.of(v)))
-                  p += 1
-                }
-                MvtTile.Feature(i, r.getInt(3), cmds, props.result())
-              }
-            }
-            val layerBytes = MvtTile.encodeLayerStream(layerName, featIt)
-            val bytes = MvtTile.encodeTileFromLayerBytes(Vector(layerBytes))
-            (Slippy.unpackZ(cell), Slippy.unpackX(cell), Slippy.unpackY(cell), bytes)
-          }
-        }
-      }
-      .toDF("z", "x", "y", "mvt")
-  }
-
-  /** Multi-LAYER MVT tile sink (reference tile.go: a Tile holds repeated
-    * Layer messages): same deterministic streaming shape as `mvtTiles`,
-    * with `layerCol` naming each feature's layer. One shuffle on the
-    * packed cell, in-partition sort by (cell, layer, fid): a forward walk
-    * emits one tile per cell, streaming each consecutive layer run
-    * through the layer encoder and framing the finished layers into the
-    * tile — layers appear in layer-name order (deterministic bytes),
-    * per-tile memory stays bounded at the output bytes + one layer's
-    * key/value maps.
-    */
-  def mvtTilesLayered(spark: org.apache.spark.sql.SparkSession, geoms: DataFrame,
-                      idCol: String, z: Int, layerCol: String,
-                      srid: Int = 4326): DataFrame = {
-    import spark.implicits._
-    import graft.core.{MvtTile, Slippy}
-    mvtPrep(geoms, z, srid)
-      .select(col("cell"), col(layerCol).cast("string").as("layer"),
-        col(idCol).cast("string").as("fid"),
-        col("mvt.commands").as("commands"), col("mvt.geom_type").as("gtype"))
       .repartition(col("cell"))
       .sortWithinPartitions(col("cell"), col("layer"), col("fid"))
       .mapPartitions { it =>
@@ -194,23 +125,32 @@ object Tiler {
             val cell = buf.head.getLong(0)
             val layers = Vector.newBuilder[Array[Byte]]
             while (buf.hasNext && buf.head.getLong(0) == cell) {
-              val layerName = buf.head.getString(1)
+              val name = buf.head.getString(1)
               var i = 0L
-              val featIt = new Iterator[MvtTile.Feature] {
+              val features = new Iterator[MvtTile.Feature] {
                 def hasNext: Boolean = buf.hasNext &&
-                  buf.head.getLong(0) == cell && buf.head.getString(1) == layerName
+                  buf.head.getLong(0) == cell && buf.head.getString(1) == name
                 def next(): MvtTile.Feature = {
                   val r = buf.next()
                   i += 1
+                  // zero-copy: the row holds the command longs in a primitive
+                  // array (ArraySeq.ofLong) — rewrap instead of boxing a copy
                   val cmds: IndexedSeq[Long] = r.getSeq[Long](3) match {
                     case as: scala.collection.immutable.ArraySeq[Long] => as
                     case other => other.toIndexedSeq
                   }
-                  MvtTile.Feature(i, r.getInt(4), cmds,
-                    Vector(("fid", MvtTile.TagValue.VString(r.getString(2)))))
+                  val props = Vector.newBuilder[(String, MvtTile.TagValue)]
+                  props += (("fid", MvtTile.TagValue.VString(r.getString(2))))
+                  var p = 0
+                  while (p < propNames.length) {
+                    val v = r.get(nFixed + p)
+                    if (v != null) props += ((propNames(p), MvtTile.TagValue.of(v)))
+                    p += 1
+                  }
+                  MvtTile.Feature(i, r.getInt(4), cmds, props.result())
                 }
               }
-              layers += MvtTile.encodeLayerStream(layerName, featIt)
+              layers += MvtTile.encodeLayerStream(name, features)
             }
             val bytes = MvtTile.encodeTileFromLayerBytes(layers.result())
             (Slippy.unpackZ(cell), Slippy.unpackX(cell), Slippy.unpackY(cell), bytes)
@@ -260,8 +200,7 @@ object Tiler {
     * sequential kernel over sorted runs (embarrassingly parallel across
     * tiles, like the makevalid kernel).
     */
-  def vectorizeRaster(spark: org.apache.spark.sql.SparkSession,
-                      runs: DataFrame): DataFrame = {
+  def vectorizeRaster(spark: SparkSession, runs: DataFrame): DataFrame = {
     import spark.implicits._
     runs.select(col("cell"), col("py"),
         col("px0").cast("long"), col("px1").cast("long"))

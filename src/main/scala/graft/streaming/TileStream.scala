@@ -21,25 +21,15 @@ object TileStream {
   /** Watermarked per-tile feature counts (the q02 rollup as a stream):
     * input must carry event-time `ts` plus `lon`/`lat`. Append mode —
     * a (window, tile) row finalizes when the watermark passes the
-    * window close, giving exactly-once per-window tile counts.
+    * window close, giving exactly-once per-window tile counts. On a
+    * bounded frame the analyzer drops the watermark (Spark's
+    * EliminateEventTimeWatermark), so the same call is the batch count.
     */
   def tileCounts(pts: DataFrame, z: Int,
                  windowDur: String = "1 hour",
                  watermarkDelay: String = "0 seconds"): DataFrame =
     pts
       .withWatermark("ts", watermarkDelay)
-      .withColumn("cell", st_cell_at(col("lon"), col("lat"), lit(z)))
-      .groupBy(window(col("ts"), windowDur).as("w"), col("cell"))
-      .agg(count(lit(1)).as("n_features"))
-      .select(unix_micros(col("w.start")).as("w_start_us"),
-        st_cell_x(col("cell")).as("x"), st_cell_y(col("cell")).as("y"),
-        col("n_features"))
-
-  /** The same aggregation on a bounded frame — tests prove stream/batch
-    * parity against this (the Sessionize pattern).
-    */
-  def tileCountsBatch(pts: DataFrame, z: Int, windowDur: String = "1 hour"): DataFrame =
-    pts
       .withColumn("cell", st_cell_at(col("lon"), col("lat"), lit(z)))
       .groupBy(window(col("ts"), windowDur).as("w"), col("cell"))
       .agg(count(lit(1)).as("n_features"))
@@ -64,7 +54,7 @@ object TileStream {
       .outputMode("append")
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         collect(batchId,
-          graft.operators.Tiler.mvtTiles(spark, batch.toDF(), idCol, z, layerName, srid))
+          graft.operators.Tiler.mvtTiles(spark, batch.toDF(), idCol, z, lit(layerName), srid))
       }
       .start()
 
@@ -89,7 +79,7 @@ object TileStream {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         writeEpoch(
-          graft.operators.Tiler.mvtTiles(spark, batch.toDF(), idCol, z, layerName, srid),
+          graft.operators.Tiler.mvtTiles(spark, batch.toDF(), idCol, z, lit(layerName), srid),
           outDir, batchId)
       }
       .start()

@@ -4,15 +4,21 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, RuntimeReplaceable}
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.errors.QueryCompilationErrors
 import org.apache.spark.sql.types.{AbstractDataType, DataType}
 
 /** Bridge to `private[sql]` Spark internals: the classic Column ⇄ Expression
-  * converters (hidden since the Spark Connect column refactor) and
-  * `AbstractDataType` (needed to declare `inputTypes` for implicit casts).
+  * converters (hidden since the Spark Connect column refactor), the
+  * analyzer's errors for a function's arguments, and `AbstractDataType`
+  * (needed to declare `inputTypes` for implicit casts).
   */
 object Shim {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+  def wrongNumArgsError(name: String, valid: Seq[Int], actual: Int): Throwable =
+    QueryCompilationErrors.wrongNumArgsError(name, valid, actual)
+  def nonFoldableArgumentError(name: String, param: String, tpe: DataType): Throwable =
+    QueryCompilationErrors.nonFoldableArgumentError(name, param, tpe)
 }
 
 /** The one base of graft's Catalyst expressions. Each expression names its

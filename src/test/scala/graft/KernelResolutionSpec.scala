@@ -103,4 +103,24 @@ class KernelResolutionSpec extends AnyFunSuite {
         s"$fn: generated ${generated(fn)} vs interpreted ${interpreted(fn)}")
     }
   }
+
+  test("a wrong argument count or a column SRID fails at analysis, naming the function") {
+    GeomFunctions.register(spark)
+    spark.range(2).selectExpr("id", "CAST(3857 AS INT) AS srid").createOrReplaceTempView("srids")
+    def analysisError(sql: String): String =
+      intercept[org.apache.spark.sql.AnalysisException](spark.sql(sql).collect()).getMessage
+    for (sql <- Seq("SELECT st_point(1.0)", "SELECT st_point(1.0, 2.0, 3.0)")) {
+      val msg = analysisError(sql)
+      assert(msg.contains("WRONG_NUM_ARGS") && msg.contains("`st_point` requires 2 parameters"),
+        s"$sql: $msg")
+    }
+    for ((fn, sql) <- Seq(
+        "st_project" -> "SELECT st_project(1.0D, 2.0D, srid) FROM srids",
+        "st_project_inv" -> "SELECT st_project_inv(1.0D, 2.0D, srid) FROM srids",
+        "st_transform" -> "SELECT st_transform(st_point(1.0D, 2.0D), 4326, srid) FROM srids",
+        "st_project" -> "SELECT st_project(1.0D, 2.0D, 3857.5)")) {
+      val msg = analysisError(sql)
+      assert(msg.contains("NON_FOLDABLE_ARGUMENT") && msg.contains(s"`$fn`"), s"$sql: $msg")
+    }
+  }
 }

@@ -668,7 +668,7 @@ class OperatorsSpec extends AnyFunSuite with KnnFixtures {
     val docs = graft.sources.DocsTable.docs(spark, dir)
     val polys = graft.sources.DocsTable.extractGeometries(docs)
       .filter(graft.functions.GeomFunctions.st_geomtype(col("geom")) === "Polygon")
-    val tiles = Tiler.mvtTiles(spark, polys, "doc_id", z = 7, layerName = "geoms")
+    val tiles = Tiler.mvtTiles(spark, polys, "doc_id", z = 7, layer = lit("geoms"))
     val rows = tiles.collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -677,6 +677,33 @@ class OperatorsSpec extends AnyFunSuite with KnnFixtures {
       assert(MvtTile.decodeTileLayerNames(bytes) == Vector("geoms"), "layer name round-trips")
       assert(r.getAs[Int]("z") == 7)
     }
+  }
+
+  test("4326 sink route: st_prepare_extent over st_tile_envelope is st_prepare_tile") {
+    import graft.functions.GeomFunctions._
+    val docs = graft.sources.DocsTable.docs(spark, dir)
+    val polys = graft.sources.DocsTable.extractGeometries(docs)
+      .filter(st_geomtype(col("geom")) === "Polygon")
+    val te = st_tile_envelope(col("cell"))
+    // the geometry itself is the id column: one row per (geometry, cover cell)
+    val rows = Tiler.assignTiles(polys, "geom", z = 7)
+      .select(col("cell"),
+        st_prepare_extent(col("geom"), te("minx"), te("miny"), te("maxx"), te("maxy")).as("ext"),
+        st_prepare_tile(col("geom"), col("cell")).as("tile"))
+      .collect()
+    assert(rows.length > 100 && rows.map(_.getLong(0)).distinct.length > 10)
+    rows.foreach { r =>
+      val (ext, tile) = (r.getAs[Array[Byte]]("ext"), r.getAs[Array[Byte]]("tile"))
+      assert(ext != null && java.util.Arrays.equals(ext, tile), s"cell ${r.getLong(0)} differs")
+    }
+  }
+
+  test("tiler calls reject an SRID without a tile grid") {
+    val geoms = spark.range(1).select(col("id"),
+      graft.functions.GeomFunctions.st_geomfromwkt(lit("POINT (1 2)")).as("geom"))
+    intercept[IllegalArgumentException](Tiler.assignTiles(geoms, "id", 9, srid = 2263))
+    intercept[IllegalArgumentException](
+      Tiler.mvtTiles(spark, geoms, "id", 9, lit("t"), srid = 2263))
   }
 
   test("mvt tile sink: hot tile at 10x median, deterministic bytes, sorted features") {
@@ -706,7 +733,7 @@ class OperatorsSpec extends AnyFunSuite with KnnFixtures {
       .select(col("fid0").as("gid"), st_geomfromwkt(col("wkt")).as("geom"))
     def runOnce(parts: Int): Map[(Long, Long), Array[Byte]] = {
       val in = base.repartition(parts)
-      Tiler.mvtTiles(spark, in, "gid", z = 9, layerName = "t", srid = 3857)
+      Tiler.mvtTiles(spark, in, "gid", z = 9, layer = lit("t"), srid = 3857)
         .collect().map(r => ((r.getLong(1), r.getLong(2)), r.getAs[Array[Byte]]("mvt"))).toMap
     }
     val a = runOnce(3)
@@ -746,7 +773,7 @@ class OperatorsSpec extends AnyFunSuite with KnnFixtures {
       .withColumn("lyr", when(col("pid") % 2 === 0, "roads").otherwise("pois"))
       .select(col("pid"), col("geom"), col("lyr"))
     def runOnce(parts: Int): Map[(Long, Long), Array[Byte]] =
-      Tiler.mvtTilesLayered(spark, base.repartition(parts), "pid", 9, "lyr", srid = 3857)
+      Tiler.mvtTiles(spark, base.repartition(parts), "pid", 9, layer = col("lyr"), srid = 3857)
         .collect().map(r => ((r.getLong(1), r.getLong(2)), r.getAs[Array[Byte]]("mvt"))).toMap
     val a = runOnce(3)
     val b = runOnce(11)

@@ -52,7 +52,7 @@ class TileStreamSpec extends AnyFunSuite {
     } finally q.stop()
     val streamed = spark.sql("SELECT * FROM tile_stream_out").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    val batch = TileStream.tileCountsBatch(shape(hour0.toDF()), z = 9, windowDur = "1 hour")
+    val batch = TileStream.tileCounts(shape(hour0.toDF()), z = 9, windowDur = "1 hour")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     assert(streamed.nonEmpty, "no finalized windows emitted")
     assert(streamed == batch,
@@ -103,7 +103,7 @@ class TileStreamSpec extends AnyFunSuite {
     }
     try q.processAllAvailable() finally q.stop()
     val want = graft.operators.Tiler.mvtTiles(spark,
-        geomRows.toSeq.toDF("pid", "geom"), "pid", 9, "features", srid = 3857)
+        geomRows.toSeq.toDF("pid", "geom"), "pid", 9, lit("features"), srid = 3857)
       .collect().map(r => ((r.getLong(1), r.getLong(2)), r.getAs[Array[Byte]]("mvt"))).toMap
     assert(got.nonEmpty && got.keySet == want.keySet, s"${got.size} vs ${want.size} tiles")
     want.foreach { case (k, b) =>
@@ -152,7 +152,7 @@ class TileStreamSpec extends AnyFunSuite {
     // no duplicate or phantom tiles
     TileStream.writeEpoch(
       graft.operators.Tiler.mvtTiles(spark, geomRows.toSeq.toDF("pid", "geom"),
-        "pid", 9, "features", srid = 3857), outDir, epoch = 0L)
+        "pid", 9, lit("features"), srid = 3857), outDir, epoch = 0L)
     val second = snapshot()
     assert(second.keySet == first.keySet,
       s"replay changed the key set: ${(second.keySet diff first.keySet).take(3)}")
@@ -162,7 +162,7 @@ class TileStreamSpec extends AnyFunSuite {
     // the bytes are the batch sink's bytes (the determinism gate carries
     // through the file surface)
     val want = graft.operators.Tiler.mvtTiles(spark,
-        geomRows.toSeq.toDF("pid", "geom"), "pid", 9, "features", srid = 3857)
+        geomRows.toSeq.toDF("pid", "geom"), "pid", 9, lit("features"), srid = 3857)
       .collect().map(r => (s"epoch=0/${r.getInt(0)}/${r.getLong(1)}/${r.getLong(2)}.mvt",
         r.getAs[Array[Byte]]("mvt").toSeq)).toMap
     assert(first == want)
