@@ -28,14 +28,6 @@ object MakeValid {
 
   private val cmp = Cmp.HiCmp
 
-  /** The reference's experimental constrained-insertion mode
-    * (constrained.go:24-31: TEGOLA_MAKEVALID=CONSTRAINED, default OFF).
-    * Mirrored as GRAFT_MAKEVALID=CONSTRAINED; `enableConstraints` is a var
-    * so tests can toggle without the environment.
-    */
-  var enableConstraints: Boolean =
-    sys.env.get("GRAFT_MAKEVALID").exists(_.toUpperCase.contains("CONSTRAINED"))
-
   /** reference makevalid.go:87-150 Destructure. */
   def destructure(clipbox: Option[Extent],
                   polys: IndexedSeq[IndexedSeq[IndexedSeq[Pt]]]): IndexedSeq[Seg] = {
@@ -218,76 +210,38 @@ object MakeValid {
     }
   }
 
-  /** reference constrained.go:33-113 Triangles: dedupe points exactly,
-    * drop zero-length constraints, plain Delaunay; when the constrained
-    * mode is on (constrained.go:84-96), force each constraint edge into
-    * the subdivision, logging-and-skipping individual failures exactly as
-    * the reference does.
+  /** reference constrained.go:33-113 Triangles with the reference's
+    * default (constrained insertion off, constrained.go:24-31): dedupe
+    * points exactly, drop zero-length segments, plain Delaunay.
     */
   private val delaunaySeen = new ThreadLocal[Scratch.PtSet] {
     override def initialValue(): Scratch.PtSet = new Scratch.PtSet(256)
   }
 
   def delaunayTriangles(segs: IndexedSeq[Seg]): IndexedSeq[(Pt, Pt, Pt)] = {
-    val seen = delaunaySeen.get()
-    seen.clear()
-    val pts = mutable.ArrayBuffer[Pt]()
-    val constraints = mutable.ArrayBuffer[Seg]()
-    segs.foreach { s =>
-      val lnt = math.sqrt(s.lengthSquared)
-      if (!Cmp.Default.float(lnt, 0.0)) {
-        // tuples only materialized for newly-seen points
-        if (seen.addXY(s.x1, s.y1)) pts += ((s.x1, s.y1))
-        if (seen.addXY(s.x2, s.y2)) pts += ((s.x2, s.y2))
-        if (enableConstraints) constraints += s
-      }
-    }
-    if (pts.isEmpty) return Vector.empty
-    Subdivision.forPoints(pts.toIndexedSeq) match {
-      case Some(sd) =>
-        if (enableConstraints) {
-          val vx = SubdivisionConstrained.vertexIndex(sd)
-          constraints.foreach { ct =>
-            // failures are skipped, not fatal (constrained.go:91-94)
-            SubdivisionConstrained.insertConstraint(sd, vx, ct.p1, ct.p2)
-          }
-        }
-        sd.triangles(includeFrame = false)
-      case None => Vector.empty
-    }
+    val buf = new Scratch.SegBuf
+    segs.foreach(s => buf.add(s.x1, s.y1, s.x2, s.y2))
+    delaunayFromBuf(buf)
   }
 
-  /** packed-buffer delaunayTriangles — same decisions, array reads. */
   private def delaunayFromBuf(segs: Scratch.SegBuf): IndexedSeq[(Pt, Pt, Pt)] = {
     val seen = delaunaySeen.get()
     seen.clear()
     val pts = mutable.ArrayBuffer[Pt]()
-    val constraints = if (enableConstraints) mutable.ArrayBuffer[Seg]() else null
     var i = 0
     while (i < segs.n) {
       val dx = segs.x2(i) - segs.x1(i); val dy = segs.y2(i) - segs.y1(i)
       val lnt = math.sqrt(dx * dx + dy * dy)
       if (!Cmp.Default.float(lnt, 0.0)) {
+        // tuples only materialized for newly-seen points
         if (seen.addXY(segs.x1(i), segs.y1(i))) pts += ((segs.x1(i), segs.y1(i)))
         if (seen.addXY(segs.x2(i), segs.y2(i))) pts += ((segs.x2(i), segs.y2(i)))
-        if (enableConstraints)
-          constraints += Seg(segs.x1(i), segs.y1(i), segs.x2(i), segs.y2(i))
       }
       i += 1
     }
-    if (pts.isEmpty) return Vector.empty
-    Subdivision.forPoints(pts.toIndexedSeq) match {
-      case Some(sd) =>
-        if (enableConstraints) {
-          val vx = SubdivisionConstrained.vertexIndex(sd)
-          constraints.foreach { ct =>
-            // failures are skipped, not fatal (constrained.go:91-94)
-            SubdivisionConstrained.insertConstraint(sd, vx, ct.p1, ct.p2)
-          }
-        }
-        sd.triangles(includeFrame = false)
-      case None => Vector.empty
-    }
+    if (pts.isEmpty) Vector.empty
+    else Subdivision.forPoints(pts.toIndexedSeq).map(_.triangles(includeFrame = false))
+      .getOrElse(Vector.empty)
   }
 
   /** reference makevalid.go:167-235 — full repair of a multipolygon.

@@ -2,212 +2,333 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
-import org.apache.spark.sql.graft.Shim
-import org.apache.spark.sql.types.IntegerType
+import org.apache.spark.sql.graft.{KernelCall, KernelSig, Shim}
+import org.apache.spark.sql.types._
 
-/** Column API + SQL registration for the engine's Catalyst expressions.
+import graft.core.{Slippy, WkbKernels}
+import GeomKernels.{envStruct, intersectStruct, mvtStruct, pointStruct, segStruct}
+import UtmKernels.{lngLatStruct, utmStruct}
+
+/** Every SQL function of the engine, declared once in `table`, with its
+  * Column API and its SQL registration.
   *
   * `GeomFunctions.register(spark)` makes every function callable from SQL
   * (`SELECT st_cell_at(lon, lat, 15) ...`); the `st_*` Scala methods build
-  * Columns directly for the DataFrame API.
+  * the same Columns for the DataFrame API.
   */
 object GeomFunctions {
 
-  private def col(e: Expression): Column = Shim.column(e)
-  private def ex(c: Column): Expression = Shim.expression(c)
+  private def fn(name: String, kernels: AnyRef, kernel: String, result: DataType,
+                 args: DataType*): KernelSig =
+    KernelSig(name, kernels.getClass, kernel, result, args)
 
-  // codecs / constructors
-  def st_geomfromwkt(text: Column): Column = col(StGeomFromWkt(ex(text)))
-  def st_aswkt(geo: Column): Column = col(StAsWkt(ex(geo)))
-  def st_point(x: Column, y: Column): Column = col(StPoint(ex(x), ex(y)))
-  def st_box_polygon(minx: Column, miny: Column, maxx: Column, maxy: Column): Column =
-    col(StBoxPolygon(ex(minx), ex(miny), ex(maxx), ex(maxy)))
-  def st_x(geo: Column): Column = col(StX(ex(geo)))
-  def st_y(geo: Column): Column = col(StY(ex(geo)))
-  def st_geomtype(geo: Column): Column = col(StGeomType(ex(geo)))
-  def st_envelope(geo: Column): Column = col(StEnvelope(ex(geo)))
-  def st_dump_points(geo: Column): Column = col(StDumpPoints(ex(geo)))
-  def st_segments(geo: Column): Column = col(StSegmentsOf(ex(geo)))
-  def st_num_points(geo: Column): Column = col(StNumPoints(ex(geo)))
+  private val longs = ArrayType(LongType, containsNull = false)
 
-  // predicates
-  def st_contains(geo: Column, x: Column, y: Column): Column =
-    col(StContains(ex(geo), ex(x), ex(y)))
-  def st_ring_contains(geo: Column, x: Column, y: Column, includeBorder: Column): Column =
-    col(StRingContains(ex(geo), ex(x), ex(y), ex(includeBorder)))
+  /** One row per function: SQL name, kernel object and method, result
+    * type, argument types.
+    */
+  private[graft] val table: Seq[KernelSig] = Seq(
+    // ---- codecs / constructors / accessors ----
+    // WKT text → WKB binary (null on parse failure). reference wkt_decode.go.
+    fn("st_geomfromwkt", WkbKernels, "fromWkt", BinaryType, StringType),
+    // WKB → WKT text. reference wkt_encode.go.
+    fn("st_aswkt", GeomKernels, "asWkt", StringType, BinaryType),
+    // WKB → GeoJSON text (reference encoding/geojson).
+    fn("st_asgeojson", GeomKernels, "asGeoJson", StringType, BinaryType),
+    // GeoJSON text → WKB (null on parse failure).
+    fn("st_geomfromgeojson", GeomKernels, "fromGeoJson", BinaryType, StringType),
+    // (x, y) → point WKB.
+    fn("st_point", GeomKernels, "point", BinaryType, DoubleType, DoubleType),
+    // (minx,miny,maxx,maxy) → rectangle polygon WKB with the reference's CW
+    // vertex order (bbox.go:35-42 Vertices / AsPolygon).
+    fn("st_box_polygon", GeomKernels, "boxPolygon", BinaryType,
+      DoubleType, DoubleType, DoubleType, DoubleType),
+    fn("st_x", GeomKernels, "pointX", DoubleType, BinaryType),
+    fn("st_y", GeomKernels, "pointY", DoubleType, BinaryType),
+    fn("st_geomtype", GeomKernels, "geomType", StringType, BinaryType),
+    // bbox of a geometry (reference bbox.go AddGeometry / NewExtentFromGeometry).
+    fn("st_envelope", GeomKernels, "envelope", envStruct, BinaryType),
+    // all coordinates (reference geom.go:331-406 GetCoordinates).
+    fn("st_dump_points", GeomKernels, "dumpPoints",
+      ArrayType(pointStruct, containsNull = false), BinaryType),
+    // all segments incl. ring-closing edges (reference geom.go:470-546).
+    fn("st_segments", GeomKernels, "segmentsOf",
+      ArrayType(segStruct, containsNull = false), BinaryType),
+    fn("st_num_points", GeomKernels, "numPoints", IntegerType, BinaryType),
 
-  // slippy tiles
-  def st_cell_at(lon: Column, lat: Column, z: Column): Column =
-    col(StCellAt(ex(lon), ex(lat), ex(z)))
-  def st_lon2tile(lon: Column, z: Column): Column = col(StLon2Tile(ex(lon), ex(z)))
-  def st_lat2tile(lat: Column, z: Column): Column = col(StLat2Tile(ex(lat), ex(z)))
-  def st_tile2lon(z: Column, x: Column): Column = col(StTile2Lon(ex(z), ex(x)))
-  def st_tile2lat(z: Column, y: Column): Column = col(StTile2Lat(ex(z), ex(y)))
-  def st_cell_z(cell: Column): Column = col(StCellZ(ex(cell)))
-  def st_cell_x(cell: Column): Column = col(StCellX(ex(cell)))
-  def st_cell_y(cell: Column): Column = col(StCellY(ex(cell)))
-  def st_family_at(cell: Column, zoom: Column): Column = col(StFamilyAt(ex(cell), ex(zoom)))
-  def st_tiles_for_bounds(minLon: Column, minLat: Column, maxLon: Column,
-                          maxLat: Column, z: Column): Column =
-    col(StTilesForBounds(ex(minLon), ex(minLat), ex(maxLon), ex(maxLat), ex(z)))
-  def st_tile_envelope(cell: Column): Column = col(StTileEnvelope(ex(cell)))
-  def st_cover_zoom(minLon: Column, minLat: Column, maxLon: Column,
-                    maxLat: Column, zmax: Column, cap: Column): Column =
-    col(StCoverZoom(ex(minLon), ex(minLat), ex(maxLon), ex(maxLat), ex(zmax), ex(cap)))
-  def st_cover_at_levels(minLon: Column, minLat: Column, maxLon: Column,
-                         maxLat: Column, levels: Column): Column =
-    col(StCoverAtLevels(ex(minLon), ex(minLat), ex(maxLon), ex(maxLat), ex(levels)))
-  def st_tiles_for_bounds_3857(minX: Column, minY: Column, maxX: Column,
-                               maxY: Column, z: Column): Column =
-    col(StTilesForBounds3857(ex(minX), ex(minY), ex(maxX), ex(maxY), ex(z)))
+    // ---- point-in-polygon (hitmap semantics) and ring containment ----
+    // Point-in-polygon with the reference's hitmap semantics (exterior rings
+    // border-inclusive, holes border-exclusive, 20-bit point pre-rounding —
+    // hitmap/polygon_hitmap.go:90-127); WkbKernels caches the decoded
+    // polygon + hitmap per thread and WKB value.
+    fn("st_contains", WkbKernels, "contains", BooleanType, BinaryType, DoubleType, DoubleType),
+    // Raw ray-cast ring containment (reference planar/intersect/ring.go:73-154)
+    // against a polygon's exterior ring with explicit border flag.
+    fn("st_ring_contains", WkbKernels, "ringContains", BooleanType,
+      BinaryType, DoubleType, DoubleType, BooleanType),
 
-  // transforms
-  def st_simplify(geo: Column, tol: Column): Column = col(StSimplify(ex(geo), ex(tol)))
-  def st_clip(geo: Column, minx: Column, miny: Column, maxx: Column, maxy: Column): Column =
-    col(StClip(ex(geo), ex(minx), ex(miny), ex(maxx), ex(maxy)))
-  def st_winding(geo: Column): Column = col(StWinding(ex(geo)))
-  def st_rectify_polygon(geo: Column): Column = col(StRectifyPolygon(ex(geo)))
-  def st_centroid_ref(geo: Column): Column = col(StCentroidRef(ex(geo)))
+    // ---- slippy tiles ----
+    // (lon, lat, z) → packed cell id (z<<58 | x<<29 | y).
+    fn("st_cell_at", GeomKernels, "cellAt", LongType, DoubleType, DoubleType, IntegerType),
+    fn("st_lon2tile", GeomKernels, "lon2Tile", LongType, DoubleType, IntegerType),
+    fn("st_lat2tile", GeomKernels, "lat2Tile", LongType, DoubleType, IntegerType),
+    fn("st_tile2lon", GeomKernels, "tile2Lon", DoubleType, IntegerType, LongType),
+    fn("st_tile2lat", GeomKernels, "tile2Lat", DoubleType, IntegerType, LongType),
+    fn("st_cell_z", Slippy, "unpackZ", IntegerType, LongType),
+    fn("st_cell_x", Slippy, "unpackX", LongType, LongType),
+    fn("st_cell_y", Slippy, "unpackY", LongType, LongType),
+    // FamilyAt: ancestor (single) or descendants (2^mag × 2^mag block) —
+    // reference tile.go:76-99.
+    fn("st_family_at", GeomKernels, "familyAt", longs, LongType, IntegerType),
+    // tiles covering a lon/lat bbox at z — reference tile.go:111-145 FromBounds.
+    fn("st_tiles_for_bounds", GeomKernels, "tilesForBounds", longs,
+      DoubleType, DoubleType, DoubleType, DoubleType, IntegerType),
+    // FromBounds over the EPSG:3857 grid (reference slippy/tile_grid.go
+    // FromBounds with the web-mercator native extent) — bounds in meters.
+    fn("st_tiles_for_bounds_3857", GeomKernels, "tilesForBounds3857", longs,
+      DoubleType, DoubleType, DoubleType, DoubleType, IntegerType),
+    // per-row adaptive cover zoom: the deepest level of `Slippy.coverLevels(zmax)`
+    // at which the bbox covers ≤ `cap` cells — bounds a spatial join's per-row
+    // replication. Composes the reference's FromBounds grid walk
+    // (tile.go:111-145) with the TileMinMaxer idea (tile_grid.go:60-95) of
+    // climbing zooms until the geometry fits.
+    fn("st_cover_zoom", GeomKernels, "coverZoom", IntegerType,
+      DoubleType, DoubleType, DoubleType, DoubleType, IntegerType, IntegerType),
+    // bbox cover cells at EACH of the given zoom levels, concatenated (cells
+    // pack their zoom, so levels never collide as join keys). A degenerate
+    // point bbox yields the point's ancestor ladder — one cell per level.
+    fn("st_cover_at_levels", GeomKernels, "coverAtLevels", longs,
+      DoubleType, DoubleType, DoubleType, DoubleType, ArrayType(IntegerType)),
+    // tile extent in 4326 (reference tile_grid.go:48-58).
+    fn("st_tile_envelope", GeomKernels, "tileEnvelope", envStruct, LongType),
+    // tile extent in web-mercator meters (reference slippy/tile_grid.go:96-108
+    // FromNative/Extent for the 3857 grid): struct(minx,miny,maxx,maxy).
+    fn("st_tile_extent_3857", GeomKernels, "tileExtent3857", envStruct,
+      IntegerType, LongType, LongType),
 
-  // planar scalar math
-  def st_perpendicular_distance(x1: Column, y1: Column, x2: Column, y2: Column,
-                                px: Column, py: Column): Column =
-    col(StPerpendicularDistance(ex(x1), ex(y1), ex(x2), ex(y2), ex(px), ex(py)))
-  def st_distance_to_segment(x1: Column, y1: Column, x2: Column, y2: Column,
-                             px: Column, py: Column): Column =
-    col(StDistanceToSegment(ex(x1), ex(y1), ex(x2), ex(y2), ex(px), ex(py)))
-  def st_seg_intersect(x1: Column, y1: Column, x2: Column, y2: Column,
-                       x3: Column, y3: Column, x4: Column, y4: Column): Column =
-    col(StSegIntersect(ex(x1), ex(y1), ex(x2), ex(y2), ex(x3), ex(y3), ex(x4), ex(y4)))
-  def st_orient(x1: Column, y1: Column, x2: Column, y2: Column,
-                x3: Column, y3: Column): Column =
-    col(StOrient(ex(x1), ex(y1), ex(x2), ex(y2), ex(x3), ex(y3)))
+    // ---- geometry transforms ----
+    // Douglas-Peucker (reference douglaspeucker.go + simplify.go dispatch).
+    fn("st_simplify", GeomKernels, "simplify", BinaryType, BinaryType, DoubleType),
+    // clip to box (reference clip/clip.go dispatch; polygons ⇒ null, matching
+    // ErrUnsupportedGeometry — they go through makevalid).
+    fn("st_clip", GeomKernels, "clip", BinaryType,
+      BinaryType, DoubleType, DoubleType, DoubleType, DoubleType),
+    // makevalid — constrained-Delaunay polygon repair as a scalar operator:
+    // sequential per row, parallelism comes from rows (reference
+    // planar/makevalid/makevalid.go:190-235; SURVEY.md §2.7). NaN clip
+    // coordinates mean "no clipbox" (the reference's nil-extent-as-universe
+    // convention, bbox.go:27-29).
+    fn("st_makevalid", GeomKernels, "makeValid", BinaryType,
+      BinaryType, DoubleType, DoubleType, DoubleType, DoubleType),
+    // winding of the primary point sequence (reference winding.go Orientation,
+    // y-up): polygon exterior ring / linestring vertices; -1 CW, 0 colinear, 1 CCW.
+    fn("st_winding", GeomKernels, "winding", IntegerType, BinaryType),
+    // RectifyPolygon (reference winding.go:203-236): exterior CW, holes CCW,
+    // colinear rings dropped; colinear exterior ⇒ null.
+    fn("st_rectify_polygon", GeomKernels, "rectifyPolygon", BinaryType, BinaryType),
+    // reference planar/centriod.go PointsCentriod — quirk preserved. Applied
+    // to a polygon's exterior ring (open) or a linestring's points.
+    fn("st_centroid_ref", GeomKernels, "centroidRef", pointStruct, BinaryType),
 
-  def st_makevalid(geo: Column, minx: Column, miny: Column, maxx: Column, maxy: Column): Column =
-    col(StMakeValid(ex(geo), ex(minx), ex(miny), ex(maxx), ex(maxy)))
-  def st_prepare_tile(geo: Column, cell: Column): Column = col(StPrepareTile(ex(geo), ex(cell)))
-  def st_tile_extent_3857(z: Column, x: Column, y: Column): Column =
-    col(StTileExtent3857(ex(z), ex(x), ex(y)))
-  def st_prepare_extent(geo: Column, minx: Column, miny: Column,
-                        maxx: Column, maxy: Column): Column =
-    col(StPrepareExtent(ex(geo), ex(minx), ex(miny), ex(maxx), ex(maxy)))
-  def st_mvt_geometry(geo: Column): Column = col(StMvtGeometry(ex(geo)))
-  def st_mvt_pipeline(geo: Column, z: Column, x: Column, y: Column): Column =
-    col(StMvtPipeline(ex(geo), ex(z), ex(x), ex(y)))
-  def st_asgeojson(geo: Column): Column = col(StAsGeoJson(ex(geo)))
-  def st_geomfromgeojson(text: Column): Column = col(StGeomFromGeoJson(ex(text)))
+    // ---- MVT tiles ----
+    // project geometry into tile pixel space (reference mvt/prepare.go).
+    fn("st_prepare_tile", WkbKernels, "prepareTile", BinaryType, BinaryType, LongType),
+    // PrepareGeo against an explicit native-unit tile extent (reference
+    // mvt/prepare.go:13-78, the cmd/main.go:229 call shape) — unlike
+    // st_prepare_tile this takes the extent in meters/degrees directly, as
+    // the 3857 pipeline needs.
+    fn("st_prepare_extent", GeomKernels, "prepareExtent", BinaryType,
+      BinaryType, DoubleType, DoubleType, DoubleType, DoubleType),
+    // MVT command stream of a tile-space geometry (reference mvt/feature.go):
+    // struct(commands array<long> of uint32 values, geom_type int).
+    fn("st_mvt_geometry", GeomKernels, "mvtGeometry", mvtStruct, BinaryType),
+    // The FUSED cmd/main.go tile pipeline (cmd/main.go:110-280) as one scalar
+    // kernel: tile extent → 1-px clipRegion → DP simplify at the pixel span →
+    // makevalid → PrepareGeo(4096px) → MVT command stream, with ONE WKB decode
+    // and ZERO intermediate encodes. Bit-identical to the five-stage chain
+    // (WKB round-trips are exact) with ~10× less allocation per row; null on
+    // null/unparseable input or irreparable geometry, exactly like the chain.
+    fn("st_mvt_pipeline", GeomKernels, "mvtPipeline", mvtStruct,
+      BinaryType, IntegerType, LongType, LongType),
 
-  def st_utm_from_lnglat(lng: Column, lat: Column): Column =
-    col(StUtmFromLngLat(ex(lng), ex(lat)))
-  def st_lnglat_from_utm(northing: Column, easting: Column,
-                         zoneNumber: Column, zoneLetter: Column): Column =
-    col(StLngLatFromUtm(ex(northing), ex(easting), ex(zoneNumber), ex(zoneLetter)))
-  /** forward projection to any registered SRID (core/Proj.scala). */
-  def st_project(lng: Column, lat: Column, srid: Int): Column =
-    col(StProject(ex(lng), ex(lat), srid))
-  /** inverse projection from any registered SRID. */
-  def st_project_inv(x: Column, y: Column, srid: Int): Column =
-    col(StProjectInv(ex(x), ex(y), srid))
-  /** whole-geometry reprojection (WKB→WKB) between two registered SRIDs. */
-  def st_transform(geo: Column, fromSrid: Int, toSrid: Int): Column =
-    col(StTransform(ex(geo), fromSrid, toSrid))
+    // ---- scalar planar math (pure doubles — exact across engines) ----
+    // perpendicular distance of (px,py) to the infinite line (x1,y1)-(x2,y2).
+    fn("st_perpendicular_distance", GeomKernels, "perpendicularDistance", DoubleType,
+      DoubleType, DoubleType, DoubleType, DoubleType, DoubleType, DoubleType),
+    // clamped distance of (px,py) to the segment (x1,y1)-(x2,y2).
+    fn("st_distance_to_segment", GeomKernels, "distanceToSegment", DoubleType,
+      DoubleType, DoubleType, DoubleType, DoubleType, DoubleType, DoubleType),
+    // segment × segment intersection (reference line_intersect.go:141-178).
+    fn("st_seg_intersect", GeomKernels, "segIntersect", intersectStruct,
+      DoubleType, DoubleType, DoubleType, DoubleType, DoubleType, DoubleType, DoubleType,
+      DoubleType),
+    // orientation of 3 points (reference winding.go Orientation, y-up).
+    fn("st_orient", GeomKernels, "orient", IntegerType,
+      DoubleType, DoubleType, DoubleType, DoubleType, DoubleType, DoubleType),
 
-  // text analysis
-  def doc_fingerprint(text: Column): Column = col(StFingerprint(ex(text)))
-  def minhash(text: Column, numPerms: Column): Column = col(StMinHash(ex(text), ex(numPerms)))
-  def simhash(text: Column): Column = col(StSimHash(ex(text)))
-  def shingle_hashes(text: Column): Column = col(StShingleHashes(ex(text)))
-  def hamming(a: Column, b: Column): Column = col(StHamming(ex(a), ex(b)))
+    // ---- projections ----
+    // UTM forward projection (WGS84): (lng, lat) → struct(northing, easting,
+    // zone_number, zone_letter); null outside the C..X latitude bands.
+    fn("st_utm_from_lnglat", UtmKernels, "fromLngLat", utmStruct, DoubleType, DoubleType),
+    // UTM inverse projection (WGS84): → struct(lng, lat); null for invalid
+    // zones — mirrors Utm.toLngLat (reference utm.go ToLngLat, d6·720 quirk).
+    fn("st_lnglat_from_utm", UtmKernels, "toLngLat", lngLatStruct,
+      DoubleType, DoubleType, IntegerType, StringType),
+    // Forward map projection for any registered SRID (core/Proj.scala +
+    // Projection.forSrid — the reference's Grid{Srid} CRS hook as a column):
+    // (lng, lat, srid) → struct(x, y) in the CRS's native units.
+    fn("st_project", ProjKernels, "project", pointStruct, DoubleType, DoubleType)
+      .copy(srids = Seq("srid")),
+    // Inverse projection: (x, y, srid) → struct(x = lng, y = lat).
+    fn("st_project_inv", ProjKernels, "projectInv", pointStruct, DoubleType, DoubleType)
+      .copy(srids = Seq("srid")),
+    // Whole-geometry reprojection (WKB → WKB): the reference's `ApplyToPoints`
+    // (utils.go:6-110) composed with the `Grid{Srid}` projection pair — every
+    // coordinate runs inverse(fromSrid) → 4326 → forward(toSrid), ring and
+    // vertex order preserved; a geometry with any coordinate that has no
+    // finite image (a pole under a Mercator-family target) maps to NULL.
+    fn("st_transform", ProjKernels, "transform", BinaryType, BinaryType)
+      .copy(srids = Seq("fromSrid", "toSrid")),
 
-  private type Builder = PartialFunction[Seq[Expression], Expression]
-  private def fn(name: String)(build: Builder): (String, Builder) = name -> build
+    // ---- text analysis ----
+    fn("doc_fingerprint", TextKernels, "docFingerprint", LongType, StringType),
+    fn("minhash", TextKernels, "minhash", longs, StringType, IntegerType),
+    fn("simhash", TextKernels, "simhash", LongType, StringType),
+    // shingle fingerprint array (the minhash input set, exposed): word 3-gram
+    // shingles → rolling hash each. Duplicates retained — consumers use set
+    // operations (array_intersect/union) which dedupe.
+    fn("shingle_hashes", TextKernels, "shingleHashes", longs, StringType),
+    fn("hamming", TextKernels, "hamming", IntegerType, LongType, LongType)
+  )
 
   /** a plan-time SRID argument of `name`: a foldable, non-null INT. */
   private def sridArg(name: String, param: String, e: Expression): Int =
     if (e.foldable && e.dataType == IntegerType && e.eval() != null) e.eval().asInstanceOf[Int]
     else throw Shim.nonFoldableArgumentError(name, param, IntegerType)
 
-  /** Every function, by SQL name — one registry entry each, whose pattern
-    * is the function's argument list.
+  /** `sig`'s expression over `args`: a wrong argument count or a
+    * non-constant SRID fails here, at analysis, naming the function.
     */
-  private[graft] val registry: Seq[(String, Builder)] = Seq(
-    fn("st_geomfromwkt") { case Seq(a) => StGeomFromWkt(a) },
-    fn("st_aswkt") { case Seq(a) => StAsWkt(a) },
-    fn("st_point") { case Seq(a, b) => StPoint(a, b) },
-    fn("st_box_polygon") { case Seq(a, b, c, d) => StBoxPolygon(a, b, c, d) },
-    fn("st_x") { case Seq(a) => StX(a) },
-    fn("st_y") { case Seq(a) => StY(a) },
-    fn("st_geomtype") { case Seq(a) => StGeomType(a) },
-    fn("st_envelope") { case Seq(a) => StEnvelope(a) },
-    fn("st_dump_points") { case Seq(a) => StDumpPoints(a) },
-    fn("st_segments") { case Seq(a) => StSegmentsOf(a) },
-    fn("st_num_points") { case Seq(a) => StNumPoints(a) },
-    fn("st_contains") { case Seq(a, b, c) => StContains(a, b, c) },
-    fn("st_ring_contains") { case Seq(a, b, c, d) => StRingContains(a, b, c, d) },
-    fn("st_cell_at") { case Seq(a, b, c) => StCellAt(a, b, c) },
-    fn("st_lon2tile") { case Seq(a, b) => StLon2Tile(a, b) },
-    fn("st_lat2tile") { case Seq(a, b) => StLat2Tile(a, b) },
-    fn("st_tile2lon") { case Seq(a, b) => StTile2Lon(a, b) },
-    fn("st_tile2lat") { case Seq(a, b) => StTile2Lat(a, b) },
-    fn("st_cell_z") { case Seq(a) => StCellZ(a) },
-    fn("st_cell_x") { case Seq(a) => StCellX(a) },
-    fn("st_cell_y") { case Seq(a) => StCellY(a) },
-    fn("st_family_at") { case Seq(a, b) => StFamilyAt(a, b) },
-    fn("st_tiles_for_bounds") { case Seq(a, b, c, d, e) => StTilesForBounds(a, b, c, d, e) },
-    fn("st_tiles_for_bounds_3857") { case Seq(a, b, c, d, e) =>
-      StTilesForBounds3857(a, b, c, d, e) },
-    fn("st_tile_envelope") { case Seq(a) => StTileEnvelope(a) },
-    fn("st_cover_zoom") { case Seq(a, b, c, d, e, f) => StCoverZoom(a, b, c, d, e, f) },
-    fn("st_cover_at_levels") { case Seq(a, b, c, d, e) => StCoverAtLevels(a, b, c, d, e) },
-    fn("st_simplify") { case Seq(a, b) => StSimplify(a, b) },
-    fn("st_clip") { case Seq(a, b, c, d, e) => StClip(a, b, c, d, e) },
-    fn("st_winding") { case Seq(a) => StWinding(a) },
-    fn("st_rectify_polygon") { case Seq(a) => StRectifyPolygon(a) },
-    fn("st_centroid_ref") { case Seq(a) => StCentroidRef(a) },
-    fn("st_perpendicular_distance") { case Seq(a, b, c, d, e, f) =>
-      StPerpendicularDistance(a, b, c, d, e, f) },
-    fn("st_distance_to_segment") { case Seq(a, b, c, d, e, f) =>
-      StDistanceToSegment(a, b, c, d, e, f) },
-    fn("st_seg_intersect") { case Seq(a, b, c, d, e, f, g, h) =>
-      StSegIntersect(a, b, c, d, e, f, g, h) },
-    fn("st_orient") { case Seq(a, b, c, d, e, f) => StOrient(a, b, c, d, e, f) },
-    fn("st_makevalid") { case Seq(a, b, c, d, e) => StMakeValid(a, b, c, d, e) },
-    fn("st_prepare_tile") { case Seq(a, b) => StPrepareTile(a, b) },
-    fn("st_tile_extent_3857") { case Seq(a, b, c) => StTileExtent3857(a, b, c) },
-    fn("st_prepare_extent") { case Seq(a, b, c, d, e) => StPrepareExtent(a, b, c, d, e) },
-    fn("st_mvt_geometry") { case Seq(a) => StMvtGeometry(a) },
-    fn("st_mvt_pipeline") { case Seq(a, b, c, d) => StMvtPipeline(a, b, c, d) },
-    fn("st_asgeojson") { case Seq(a) => StAsGeoJson(a) },
-    fn("st_geomfromgeojson") { case Seq(a) => StGeomFromGeoJson(a) },
-    fn("st_utm_from_lnglat") { case Seq(a, b) => StUtmFromLngLat(a, b) },
-    fn("st_lnglat_from_utm") { case Seq(a, b, c, d) => StLngLatFromUtm(a, b, c, d) },
-    // the SRID is a plan-time constant: a foldable INT argument
-    fn("st_project") { case Seq(a, b, srid) =>
-      StProject(a, b, sridArg("st_project", "srid", srid)) },
-    fn("st_project_inv") { case Seq(a, b, srid) =>
-      StProjectInv(a, b, sridArg("st_project_inv", "srid", srid)) },
-    fn("st_transform") { case Seq(a, from, to) =>
-      StTransform(a, sridArg("st_transform", "fromSrid", from),
-        sridArg("st_transform", "toSrid", to)) },
-    fn("doc_fingerprint") { case Seq(a) => StFingerprint(a) },
-    fn("minhash") { case Seq(a, b) => StMinHash(a, b) },
-    fn("simhash") { case Seq(a) => StSimHash(a) },
-    fn("shingle_hashes") { case Seq(a) => StShingleHashes(a) },
-    fn("hamming") { case Seq(a, b) => StHamming(a, b) }
-  )
-
-  /** Registers every function. A call whose argument count the entry's
-    * pattern does not accept fails at analysis, naming the function.
-    */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    registry.foreach { case (name, build) =>
-      def wrongArgs(args: Seq[Expression]): Expression = {
-        // the counts the pattern accepts; st_seg_intersect's 8 is the longest
-        val arities = (0 to 8).filter(n => build.isDefinedAt(Seq.fill(n)(Literal(null))))
-        throw Shim.wrongNumArgsError(name, arities, args.length)
-      }
-      reg.createOrReplaceTempFunction(name, args => build.applyOrElse(args, wrongArgs), "built-in")
+  private def build(sig: KernelSig, args: Seq[Expression]): Expression = {
+    val arity = sig.argTypes.length + sig.srids.length
+    if (args.length != arity) throw Shim.wrongNumArgsError(sig.name, Seq(arity), args.length)
+    if (sig.srids.isEmpty) KernelCall(sig, args)
+    else {
+      val (cols, srids) = args.splitAt(sig.argTypes.length)
+      SridCall(sig, cols, srids.zip(sig.srids).map { case (e, p) => sridArg(sig.name, p, e) })
     }
   }
+
+  private val byName: Map[String, KernelSig] = table.map(s => s.name -> s).toMap
+
+  private def call(name: String, args: Column*): Column =
+    Shim.column(build(byName(name), args.map(Shim.expression)))
+
+  /** an INT literal that is foldable before analysis (a plan-time SRID) */
+  private def sridLit(v: Int): Column = Shim.column(Literal(v))
+
+  /** Every function, by SQL name, with its builder. */
+  private[graft] val registry: Seq[(String, Seq[Expression] => Expression)] =
+    table.map(sig => sig.name -> (build(sig, _: Seq[Expression])))
+
+  /** Registers every function with the session's function registry. */
+  def register(spark: SparkSession): Unit = {
+    val reg = spark.sessionState.functionRegistry
+    registry.foreach { case (name, builder) =>
+      reg.createOrReplaceTempFunction(name, builder, "built-in")
+    }
+  }
+
+  // ---- the Column API: one call into the table each ----
+
+  def st_geomfromwkt(text: Column): Column = call("st_geomfromwkt", text)
+  def st_aswkt(geo: Column): Column = call("st_aswkt", geo)
+  def st_asgeojson(geo: Column): Column = call("st_asgeojson", geo)
+  def st_geomfromgeojson(text: Column): Column = call("st_geomfromgeojson", text)
+  def st_point(x: Column, y: Column): Column = call("st_point", x, y)
+  def st_box_polygon(minx: Column, miny: Column, maxx: Column, maxy: Column): Column =
+    call("st_box_polygon", minx, miny, maxx, maxy)
+  def st_x(geo: Column): Column = call("st_x", geo)
+  def st_y(geo: Column): Column = call("st_y", geo)
+  def st_geomtype(geo: Column): Column = call("st_geomtype", geo)
+  def st_envelope(geo: Column): Column = call("st_envelope", geo)
+  def st_dump_points(geo: Column): Column = call("st_dump_points", geo)
+  def st_segments(geo: Column): Column = call("st_segments", geo)
+  def st_num_points(geo: Column): Column = call("st_num_points", geo)
+
+  def st_contains(geo: Column, x: Column, y: Column): Column = call("st_contains", geo, x, y)
+  def st_ring_contains(geo: Column, x: Column, y: Column, includeBorder: Column): Column =
+    call("st_ring_contains", geo, x, y, includeBorder)
+
+  def st_cell_at(lon: Column, lat: Column, z: Column): Column = call("st_cell_at", lon, lat, z)
+  def st_lon2tile(lon: Column, z: Column): Column = call("st_lon2tile", lon, z)
+  def st_lat2tile(lat: Column, z: Column): Column = call("st_lat2tile", lat, z)
+  def st_tile2lon(z: Column, x: Column): Column = call("st_tile2lon", z, x)
+  def st_tile2lat(z: Column, y: Column): Column = call("st_tile2lat", z, y)
+  def st_cell_z(cell: Column): Column = call("st_cell_z", cell)
+  def st_cell_x(cell: Column): Column = call("st_cell_x", cell)
+  def st_cell_y(cell: Column): Column = call("st_cell_y", cell)
+  def st_family_at(cell: Column, zoom: Column): Column = call("st_family_at", cell, zoom)
+  def st_tiles_for_bounds(minLon: Column, minLat: Column, maxLon: Column,
+                          maxLat: Column, z: Column): Column =
+    call("st_tiles_for_bounds", minLon, minLat, maxLon, maxLat, z)
+  def st_tiles_for_bounds_3857(minX: Column, minY: Column, maxX: Column,
+                               maxY: Column, z: Column): Column =
+    call("st_tiles_for_bounds_3857", minX, minY, maxX, maxY, z)
+  def st_cover_zoom(minLon: Column, minLat: Column, maxLon: Column,
+                    maxLat: Column, zmax: Column, cap: Column): Column =
+    call("st_cover_zoom", minLon, minLat, maxLon, maxLat, zmax, cap)
+  def st_cover_at_levels(minLon: Column, minLat: Column, maxLon: Column,
+                         maxLat: Column, levels: Column): Column =
+    call("st_cover_at_levels", minLon, minLat, maxLon, maxLat, levels)
+  def st_tile_envelope(cell: Column): Column = call("st_tile_envelope", cell)
+  def st_tile_extent_3857(z: Column, x: Column, y: Column): Column =
+    call("st_tile_extent_3857", z, x, y)
+
+  def st_simplify(geo: Column, tol: Column): Column = call("st_simplify", geo, tol)
+  def st_clip(geo: Column, minx: Column, miny: Column, maxx: Column, maxy: Column): Column =
+    call("st_clip", geo, minx, miny, maxx, maxy)
+  def st_makevalid(geo: Column, minx: Column, miny: Column, maxx: Column, maxy: Column): Column =
+    call("st_makevalid", geo, minx, miny, maxx, maxy)
+  def st_winding(geo: Column): Column = call("st_winding", geo)
+  def st_rectify_polygon(geo: Column): Column = call("st_rectify_polygon", geo)
+  def st_centroid_ref(geo: Column): Column = call("st_centroid_ref", geo)
+
+  def st_prepare_tile(geo: Column, cell: Column): Column = call("st_prepare_tile", geo, cell)
+  def st_prepare_extent(geo: Column, minx: Column, miny: Column,
+                        maxx: Column, maxy: Column): Column =
+    call("st_prepare_extent", geo, minx, miny, maxx, maxy)
+  def st_mvt_geometry(geo: Column): Column = call("st_mvt_geometry", geo)
+  def st_mvt_pipeline(geo: Column, z: Column, x: Column, y: Column): Column =
+    call("st_mvt_pipeline", geo, z, x, y)
+
+  def st_perpendicular_distance(x1: Column, y1: Column, x2: Column, y2: Column,
+                                px: Column, py: Column): Column =
+    call("st_perpendicular_distance", x1, y1, x2, y2, px, py)
+  def st_distance_to_segment(x1: Column, y1: Column, x2: Column, y2: Column,
+                             px: Column, py: Column): Column =
+    call("st_distance_to_segment", x1, y1, x2, y2, px, py)
+  def st_seg_intersect(x1: Column, y1: Column, x2: Column, y2: Column,
+                       x3: Column, y3: Column, x4: Column, y4: Column): Column =
+    call("st_seg_intersect", x1, y1, x2, y2, x3, y3, x4, y4)
+  def st_orient(x1: Column, y1: Column, x2: Column, y2: Column,
+                x3: Column, y3: Column): Column =
+    call("st_orient", x1, y1, x2, y2, x3, y3)
+
+  def st_utm_from_lnglat(lng: Column, lat: Column): Column = call("st_utm_from_lnglat", lng, lat)
+  def st_lnglat_from_utm(northing: Column, easting: Column,
+                         zoneNumber: Column, zoneLetter: Column): Column =
+    call("st_lnglat_from_utm", northing, easting, zoneNumber, zoneLetter)
+  def st_project(lng: Column, lat: Column, srid: Int): Column =
+    call("st_project", lng, lat, sridLit(srid))
+  def st_project_inv(x: Column, y: Column, srid: Int): Column =
+    call("st_project_inv", x, y, sridLit(srid))
+  def st_transform(geo: Column, fromSrid: Int, toSrid: Int): Column =
+    call("st_transform", geo, sridLit(fromSrid), sridLit(toSrid))
+
+  def doc_fingerprint(text: Column): Column = call("doc_fingerprint", text)
+  def minhash(text: Column, numPerms: Column): Column = call("minhash", text, numPerms)
+  def simhash(text: Column): Column = call("simhash", text)
+  def shingle_hashes(text: Column): Column = call("shingle_hashes", text)
+  def hamming(a: Column, b: Column): Column = call("hamming", a, b)
 }

@@ -3,11 +3,10 @@ package graft.functions
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
-import org.apache.spark.sql.graft.KernelExpr
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.graft.{KernelExpr, KernelSig}
 
 import graft.core.{Geom, Projection, Wkb, WkbKernels}
-import GeomKernels.{pointStruct, row}
+import GeomKernels.row
 
 /** Projection kernels by SRID. `Projection.forSrid` builds a new projection
   * per call (a UTM zone constructs its series), so each SRID resolves once
@@ -60,49 +59,22 @@ object ProjKernels {
   }
 }
 
-/** Forward map projection for any registered SRID (core/Proj.scala +
-  * Projection.forSrid — the reference's Grid{Srid} CRS hook as a column):
-  * (srid, lng, lat) → struct(x, y) in the CRS's native units. The SRID is
-  * a plan-time constant; an unknown SRID fails at ANALYSIS time — like the
-  * reference's proj.Convert error, and never mid-job on an executor.
+/** The functions whose trailing arguments are plan-time SRIDs
+  * (`KernelSig.srids`): st_project, st_project_inv and st_transform. The
+  * SRIDs are constants of the node, not children; an unknown SRID fails
+  * at ANALYSIS time — like the reference's proj.Convert error, and never
+  * mid-job on an executor. The kernel takes them as INT literals after
+  * the children.
   */
-case class StProject(lng: Expression, lat: Expression, srid: Int)
-    extends KernelExpr(ProjKernels, "project", pointStruct, DoubleType, DoubleType) {
+case class SridCall(sig: KernelSig, children: Seq[Expression], srids: Seq[Int])
+    extends KernelExpr {
   override def checkInputDataTypes(): TypeCheckResult =
-    ProjKernels.checkSrid(srid, super.checkInputDataTypes())
-  override def children: Seq[Expression] = Seq(lng, lat)
-  override protected def kernelArgs: Seq[Expression] = Seq(lng, lat, Literal(srid))
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) =
-    copy(c(0), c(1), srid)
-}
-
-/** Inverse projection: (srid, x, y) → struct(x = lng, y = lat). */
-case class StProjectInv(x: Expression, y: Expression, srid: Int)
-    extends KernelExpr(ProjKernels, "projectInv", pointStruct, DoubleType, DoubleType) {
-  override def checkInputDataTypes(): TypeCheckResult =
-    ProjKernels.checkSrid(srid, super.checkInputDataTypes())
-  override def children: Seq[Expression] = Seq(x, y)
-  override protected def kernelArgs: Seq[Expression] = Seq(x, y, Literal(srid))
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) =
-    copy(c(0), c(1), srid)
-}
-
-/** Whole-geometry reprojection (WKB → WKB): the reference's
-  * `ApplyToPoints` (utils.go:6-110) composed with the `Grid{Srid}`
-  * projection pair — every coordinate runs inverse(fromSrid) → 4326 →
-  * forward(toSrid), recursing through collections, ring and vertex order
-  * preserved. Both SRIDs are checked at analysis (failure on an unknown
-  * code); a geometry with any coordinate that has no finite image
-  * (e.g. a pole under a Mercator-family target) maps to NULL rather than
-  * a partially-poisoned geometry, matching st_project's scalar rule.
-  */
-case class StTransform(geo: Expression, fromSrid: Int, toSrid: Int)
-    extends KernelExpr(ProjKernels, "transform", BinaryType, BinaryType) {
-  override def checkInputDataTypes(): TypeCheckResult =
-    ProjKernels.checkSrid(toSrid, ProjKernels.checkSrid(fromSrid, super.checkInputDataTypes()))
-  override def children: Seq[Expression] = Seq(geo)
-  override protected def kernelArgs: Seq[Expression] =
-    Seq(geo, Literal(fromSrid), Literal(toSrid))
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) =
-    copy(c(0), fromSrid, toSrid)
+    srids.foldLeft(super.checkInputDataTypes())((r, srid) => ProjKernels.checkSrid(srid, r))
+  override protected def kernelArgs: Seq[Expression] = children ++ srids.map(Literal(_))
+  override protected def flatArguments: Iterator[Any] = (children ++ srids).iterator
+  // the column name keeps the SRIDs: two projections of one point differ
+  override def sql: String =
+    (children.map(_.sql) ++ srids.map(_.toString)).mkString(s"$prettyName(", ", ", ")")
+  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): SridCall =
+    copy(children = c)
 }

@@ -1,9 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graft.KernelExpr
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Text-analysis kernels for training-data pipelines: document
@@ -86,40 +83,4 @@ object TextKernels {
 
   /** Hamming distance between two simhash values. */
   def hamming(a: Long, b: Long): Int = java.lang.Long.bitCount(a ^ b)
-}
-
-case class StFingerprint(child: Expression)
-    extends KernelExpr(TextKernels, "docFingerprint", LongType, StringType) {
-  override def children: Seq[Expression] = Seq(child)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0))
-}
-
-case class StMinHash(text: Expression, numPerms: Expression)
-    extends KernelExpr(TextKernels, "minhash", ArrayType(LongType, containsNull = false),
-      StringType, IntegerType) {
-  override def children: Seq[Expression] = Seq(text, numPerms)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0), c(1))
-}
-
-/** shingle fingerprint array (the minhash input set, exposed): word
-  * 3-gram shingles → rolling hash each. Duplicates retained — consumers
-  * use set operations (array_intersect/union) which dedupe.
-  */
-case class StShingleHashes(text: Expression)
-    extends KernelExpr(TextKernels, "shingleHashes", ArrayType(LongType, containsNull = false),
-      StringType) {
-  override def children: Seq[Expression] = Seq(text)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0))
-}
-
-case class StSimHash(child: Expression)
-    extends KernelExpr(TextKernels, "simhash", LongType, StringType) {
-  override def children: Seq[Expression] = Seq(child)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0))
-}
-
-case class StHamming(a: Expression, b: Expression)
-    extends KernelExpr(TextKernels, "hamming", IntegerType, LongType, LongType) {
-  override def children: Seq[Expression] = Seq(a, b)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c(0), c(1))
 }

@@ -105,17 +105,6 @@ object Knn {
     */
   def knnJoin(queries: DataFrame, points: DataFrame, k: Int, z: Int = -1): DataFrame = {
     if (z < 0) return knnJoin(queries, points, k, zoomForPlan(points))
-    // the candidate probe is the hot stage: the conditional spread keeps
-    // it off SCAN parallelism (measured 12.9 s of serial CPU on q21 at
-    // sf0.1 from one file)
-    gridKnn(queries, Spread.forKernels(points), points, k, z)
-  }
-
-  /** the grid level at z over `levelPoints`, which must hold every point
-    * of the queries' 3×3 blocks at z, then the fallback over `points`.
-    */
-  private def gridKnn(queries: DataFrame, levelPoints: DataFrame, points: DataFrame,
-                      k: Int, z: Int): DataFrame = {
     // a null qid pairs with nothing (brute force's qid <> pid is null).
     // Filtering it here also keeps the fallback's join from pushing an
     // inferred `qid IS NOT NULL` into only one copy of the level below,
@@ -123,7 +112,10 @@ object Knn {
     val q = queries.select(col("qid"), col("qlon"), col("qlat")).filter(col("qid").isNotNull)
     val qCells = q.select(col("qid"), col("qlon"), col("qlat"),
       explode(block(z, col("qlon"), col("qlat"))).as("cell"))
-    val p = levelPoints.select(col("pid"), col("lon"), col("lat"),
+    // the candidate probe is the hot stage: the conditional spread keeps
+    // it off SCAN parallelism (measured 12.9 s of serial CPU on q21 at
+    // sf0.1 from one file)
+    val p = Spread.forKernels(points).select(col("pid"), col("lon"), col("lat"),
       cellOf(z, col("lon"), col("lat")).as("cell"))
     // The cell-key shuffle CONCENTRATES each query's block candidates, so
     // the map-side partial top-k below (WindowGroupLimit, from row_number
@@ -181,71 +173,5 @@ object Knn {
       .join(broadcast(keyed), "key")
       .select(col("qid"), col("qlon"), col("qlat"), col("bound_d2"),
         col("pid"), col("lon"), col("lat"))
-  }
-
-  // ---- dense-cell sub-index (kdtree.go:22-77) ----
-  //
-  // A cell with 100× the target density makes the candidate join's work
-  // quadratic within that cell: every query replicated to its 3×3 block
-  // pairs with every point in the hot cell. The reference escapes this by
-  // kd-tree descent — the tree is simply DEEPER where the data is dense.
-  // The distributed analogue is adaptive grid deepening: detect cells
-  // whose population exceeds `denseFactor`× the ~15-pt target with one
-  // map-side-combined count-by-cell, then serve queries near those cells
-  // at a deeper zoom chosen to restore ~15 pts/cell (cell area shrinks 4×
-  // per zoom step). Queries nowhere near a dense cell pay nothing new.
-
-  /** dense cells at zoom z: packed (tx<<z)|ty keys of cells holding more
-    * than `threshold` points, capped (the everything-dense regime is
-    * handled by a global deepen, not a per-cell set).
-    */
-  private[graft] def denseCellsOf(points: DataFrame, z: Int, threshold: Long,
-                                  cap: Int): (Array[Long], Long) = {
-    val rows = points.select(cellOf(z, col("lon"), col("lat")).as("cell"))
-      .groupBy("cell").agg(count(lit(1)).as("cnt"))
-      .filter(col("cnt") > threshold)
-      .orderBy(col("cnt").desc, col("cell").asc)
-      .limit(cap + 1)
-      .collect()
-    (rows.map(_.getLong(0)), if (rows.isEmpty) 0L else rows.map(_.getLong(1)).max)
-  }
-
-  /** extra zoom depth restoring ~15 pts/cell for a cell of `cellCount`
-    * points (4× fewer per step), clamped so the packed key stays sound.
-    */
-  private[graft] def deepZoomFor(z: Int, cellCount: Long): Int = {
-    val steps = math.ceil(math.log(math.max(1.0, cellCount / 15.0)) / math.log(4.0)).toInt
-    math.min(16, z + math.max(1, steps))
-  }
-
-  private val MaxDenseCells = 4096
-
-  /** `knnJoin` with the dense-cell sub-index: a router. Queries next to a
-    * dense cell run at the deep zoom, the rest at `z`. Costs one extra
-    * count-by-cell pass over the points (map-side combined — the shuffle
-    * carries one row per OCCUPIED CELL). Exact: the split partitions the
-    * query set, and each part is an exact grid level plus fallback.
-    */
-  def knnJoinAdaptive(queries: DataFrame, points: DataFrame, k: Int, z: Int,
-                      denseFactor: Int = 64): DataFrame = {
-    val (dense, maxCnt) = denseCellsOf(points, z, denseFactor.toLong * 15L, MaxDenseCells)
-    val zDeep = deepZoomFor(z, maxCnt)
-    // at the packed-key clamp a "deeper" grid is the same grid: plain path
-    if (dense.isEmpty || zDeep <= z) return knnJoin(queries, points, k, z)
-    // everything is dense: z itself was wrong for this corpus
-    if (dense.length > MaxDenseCells) return knnJoin(queries, points, k, zDeep)
-    // a query is dense-adjacent when ANY of its 3×3 cells at z is dense —
-    // exactly the cells its candidate join would enumerate
-    val nearDense = arrays_overlap(block(z, col("qlon"), col("qlat")), typedLit(dense.toSeq))
-    val qDense = queries.filter(nearDense)
-    // the deep level only matches points in the dense queries' 3×3 blocks
-    // at zDeep: a broadcast semi-join on those cells (≤ 9 keys per dense
-    // query, map-only) keeps every other point out of its cell shuffle,
-    // and the few it keeps need no spread. The fallback reads all points.
-    val deepCells = qDense.select(explode(block(zDeep, col("qlon"), col("qlat"))).as("cell"))
-    val deepPoints = points.join(broadcast(deepCells),
-      cellOf(zDeep, col("lon"), col("lat")) === col("cell"), "left_semi")
-    gridKnn(qDense, deepPoints, points, k, zDeep)
-      .unionByName(knnJoin(queries.filter(!nearDense), points, k, z))
   }
 }

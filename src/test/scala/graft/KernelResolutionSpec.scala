@@ -104,6 +104,19 @@ class KernelResolutionSpec extends AnyFunSuite {
     }
   }
 
+  test("a call is printed and named by its SQL name, not by its table row") {
+    GeomFunctions.register(spark)
+    spark.range(1).selectExpr("1.0D AS x", "2.0D AS y", "15 AS z", "st_point(1.0D, 2.0D) AS geo")
+      .createOrReplaceTempView("named_args")
+    val df = spark.sql(
+      "SELECT st_cell_at(x, y, z), st_x(geo), st_project(x, y, 3857) FROM named_args")
+    assert(df.columns.toSeq == Seq("st_cell_at(x, y, z)", "st_x(geo)", "st_project(x, y, 3857)"))
+    val analyzed = df.queryExecution.analyzed.toString
+    assert(analyzed.contains("st_cell_at(x#") && analyzed.contains("st_x(geo#"), analyzed)
+    for (rowText <- Seq("KernelSig", "GeomKernels", "cellAt", "pointX", "DoubleType"))
+      assert(!analyzed.contains(rowText), s"analyzed plan prints a table row: $analyzed")
+  }
+
   test("a wrong argument count or a column SRID fails at analysis, naming the function") {
     GeomFunctions.register(spark)
     spark.range(2).selectExpr("id", "CAST(3857 AS INT) AS srid").createOrReplaceTempView("srids")

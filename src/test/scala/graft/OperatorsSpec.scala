@@ -84,93 +84,6 @@ class OperatorsSpec extends AnyFunSuite with KnnFixtures {
       s"one task took ${ds.last} ms of ${total.toLong} ms total across ${ds.size} tasks")
   }
 
-  test("dense-cell sub-index: adaptive deepening stays exact and bounds the hot cell") {
-    import spark.implicits._
-    // 100×-density cell (round-4 verdict #5): z8 target is ~15 pts/cell;
-    // the hot box jams 6000 points into one cell — 400× the target, well
-    // past the 64×15 dense threshold
-    val background = (0L until 2000L).map { i =>
-      (i, (i * 0.618033988749895 % 1.0) * 80.0 - 40.0, (i * 0.414213562373095 % 1.0) * 60.0 - 30.0)
-    }
-    val hot = (10000L until 16000L).map { i =>
-      (i, 10.1 + (i % 47) * 0.003, 10.1 + (i % 53) * 0.0028)
-    }
-    val pts = (background ++ hot).toDF("pid", "lon", "lat").repartition(8)
-    // the detector sees exactly the hot region's cell(s), and the deep
-    // zoom restores ~15 pts/cell (6000/15 = 400 cells ⇒ ceil(log4) = 5)
-    val (dense, maxCnt) = Knn.denseCellsOf(pts, z = 8, threshold = 64L * 15L, cap = 4096)
-    assert(dense.nonEmpty && dense.length <= 2, s"dense cells: ${dense.length}")
-    assert(maxCnt >= 5000L, s"max cell count $maxCnt")
-    assert(Knn.deepZoomFor(8, maxCnt) == 13)
-    val qs = pts.filter(col("pid") % 29 === 0)
-      .select(col("pid").as("qid"), col("lon").as("qlon"), col("lat").as("qlat"))
-    // per-task bound, scoped to the adaptive join's own jobs
-    val durations = scala.collection.mutable.ArrayBuffer[Long]()
-    val probeStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (j.properties != null &&
-            "knn-dense-probe" == j.properties.getProperty("spark.jobGroup.id"))
-          j.stageInfos.foreach(si => probeStages.add(si.stageId))
-      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (t.taskInfo != null && probeStages.contains(t.stageId))
-          durations.synchronized { durations += t.taskInfo.duration }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    spark.sparkContext.setJobGroup("knn-dense-probe", "kNN dense probe")
-    val got = Knn.knnJoinAdaptive(qs, pts, k = 3, z = 8)
-    got.count()
-    spark.sparkContext.clearJobGroup()
-    // results unchanged: identical to unconditional brute force
-    val want = bruteKnn(qs, pts, 3)
-    assert(got.count() == want.count())
-    assert(got.exceptAll(want).count() == 0 && want.exceptAll(got).count() == 0,
-      "adaptive kNN diverges from brute force")
-    // the points reach the deep level's cell shuffle through a broadcast
-    // semi-join on the dense queries' 3×3 cells at the deep zoom (one per
-    // copy of the level, all identical)
-    val semi = PlanNodes.collect(got.queryExecution.executedPlan) {
-      case j: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
-          if j.joinType == org.apache.spark.sql.catalyst.plans.LeftSemi => j.canonicalized
-    }
-    assert(semi.nonEmpty && semi.distinct.size == 1,
-      s"expected the deep level's broadcast semi-join, found ${semi.distinct.size} distinct")
-    org.apache.spark.graftshim.ListenerDrain.waitUntilEmpty(spark.sparkContext)
-    spark.sparkContext.removeSparkListener(listener)
-    val ds = durations.synchronized(durations.toVector).sorted
-    assert(ds.nonEmpty)
-    val total = ds.sum.toDouble
-    assert(ds.last < total * 0.5,
-      s"one task took ${ds.last} ms of ${total.toLong} ms total across ${ds.size} tasks")
-    // uniform corpus: the detector finds nothing and the plain chain runs
-    val uni = background.toDF("pid", "lon", "lat")
-    val (d2, _) = Knn.denseCellsOf(uni, z = 8, threshold = 64L * 15L, cap = 4096)
-    assert(d2.isEmpty)
-    val uq = uni.filter(col("pid") % 97 === 0)
-      .select(col("pid").as("qid"), col("lon").as("qlon"), col("lat").as("qlat"))
-    val ug = Knn.knnJoinAdaptive(uq, uni, k = 3, z = 8)
-    val uw = bruteKnn(uq, uni, 3)
-    assert(ug.exceptAll(uw).count() == 0 && uw.exceptAll(ug).count() == 0)
-  }
-
-  test("adaptive deepening at the zoom clamp falls back to the plain exact path") {
-    import spark.implicits._
-    // z = 16 is the packed-key clamp: deepZoomFor cannot go deeper, so
-    // "deepening" would rebuild the SAME grid — the adaptive path must
-    // take the plain chain instead (round-5 review) and stay exact
-    assert(Knn.deepZoomFor(16, 1000000L) == 16)
-    val hot = (0L until 3000L).map { i =>
-      (i, 10.0001 + (i % 31) * 1e-6, 10.0001 + (i % 37) * 1e-6)
-    }
-    val pts = hot.toDF("pid", "lon", "lat").repartition(4)
-    val qs = pts.filter(col("pid") % 101 === 0)
-      .select(col("pid").as("qid"), col("lon").as("qlon"), col("lat").as("qlat"))
-    val got = Knn.knnJoinAdaptive(qs, pts, k = 3, z = 16)
-    val want = bruteKnn(qs, pts, 3)
-    assert(got.exceptAll(want).count() == 0 && want.exceptAll(got).count() == 0,
-      "clamped adaptive kNN diverges from brute force")
-  }
-
   test("big-big PIP join: no broadcast in the plan, results identical to the broadcast form") {
     import graft.functions.GeomFunctions._
     val pts = graft.sources.Synth.points(spark, dir)

@@ -51,7 +51,10 @@ class PlanAuditSpec extends AnyFunSuite {
         offenders += s"$name: reads a persisted frame"
       // the pre-AQE physical plan: executedPlan is a leaf AdaptiveSparkPlanExec
       val fallbacks = qe.sparkPlan.flatMap(_.expressions.flatMap(_.collect {
-        case e: CodegenFallback if e.getClass.getName.startsWith("graft.") => e.prettyName
+        // graft's expressions: graft.* and the generic ones in Spark's package
+        case e: CodegenFallback
+            if e.getClass.getName.matches("(org\\.apache\\.spark\\.sql\\.)?graft\\..*") =>
+          e.prettyName
       }))
       if (fallbacks.nonEmpty)
         offenders += s"$name: ${fallbacks.distinct.mkString(", ")} fall back from codegen"

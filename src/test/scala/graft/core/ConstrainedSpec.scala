@@ -15,7 +15,8 @@ import graft.core.QuadEdge.Edge
   *    production GeomConstrained flow (constrained.go:84-96) where
   *    individual insert failures are skipped, exactly as the reference
   *    does; the subdivision must stay traversable throughout.
-  *  - flag-off parity: enabling the flag must not change a bow-tie repair.
+  *  - constrained parity: forcing the bow-tie's segments in as constraints
+  *    must not change the triangulation its repair is built from.
   */
 class ConstrainedSpec extends AnyFunSuite {
 
@@ -207,6 +208,23 @@ class ConstrainedSpec extends AnyFunSuite {
     Wkt.decode(text)
   }
 
+  /** constrained.go:33-113 Triangles with constrained insertion on
+    * (constrained.go:84-96): the points of the non-zero-length segments,
+    * deduped in first-seen order, triangulated, then every segment forced
+    * in as a constraint, individual failures skipped as the reference does.
+    */
+  private def constrainedTriangles(segs: IndexedSeq[Seg]): IndexedSeq[(Pt, Pt, Pt)] = {
+    val kept = segs.filterNot(s => Cmp.Default.float(math.sqrt(s.lengthSquared), 0.0))
+    val pts = kept.flatMap(s => Seq(s.p1, s.p2)).distinct
+    Subdivision.forPoints(pts) match {
+      case Some(sd) =>
+        val vx = SubdivisionConstrained.vertexIndex(sd)
+        kept.foreach(ct => SubdivisionConstrained.insertConstraint(sd, vx, ct.p1, ct.p2))
+        sd.triangles(includeFrame = false)
+      case None => Vector.empty
+    }
+  }
+
   /** constrained_test.go:176-198 "issue#70": the 4-ring web-mercator polygon
     * run through the GeomConstrained flow (constraints = every ring segment,
     * must.ParseLines semantics) with constraints ENABLED must triangulate to
@@ -215,14 +233,9 @@ class ConstrainedSpec extends AnyFunSuite {
     * expectation is only exercised in the experimental mode — same here.
     */
   test("GeomConstrained issue#70 (constrained_test.go) — 73 triangles") {
-    val segs = Geom.segments(loadWkt("/constrained/issue70_polygon.wkt"))
-    assert(!MakeValid.enableConstraints)
-    MakeValid.enableConstraints = true
-    try {
-      val tris = MakeValid.delaunayTriangles(segs)
-      info(s"issue#70 constrained triangles: ${tris.length}")
-      assert(tris.length == 73, s"expected 73 triangles, got ${tris.length}")
-    } finally MakeValid.enableConstraints = false
+    val tris = constrainedTriangles(Geom.segments(loadWkt("/constrained/issue70_polygon.wkt")))
+    info(s"issue#70 constrained triangles: ${tris.length}")
+    assert(tris.length == 73, s"expected 73 triangles, got ${tris.length}")
   }
 
   /** constrained_test.go:199-210 "issue#70_full": the full multilinestring
@@ -232,24 +245,18 @@ class ConstrainedSpec extends AnyFunSuite {
     * and yields a traversable triangulation.)
     */
   test("GeomConstrained issue#70_full — flow completes") {
-    val segs = Geom.segments(loadWkt("/constrained/issue70_full.lines"))
-    MakeValid.enableConstraints = true
-    try {
-      val tris = MakeValid.delaunayTriangles(segs)
-      info(s"issue#70_full constrained triangles: ${tris.length}")
-      assert(tris.nonEmpty)
-    } finally MakeValid.enableConstraints = false
+    val tris = constrainedTriangles(Geom.segments(loadWkt("/constrained/issue70_full.lines")))
+    info(s"issue#70_full constrained triangles: ${tris.length}")
+    assert(tris.nonEmpty)
   }
 
-  test("makevalid flag-off output is unchanged; flag-on repairs the bow-tie identically") {
-    val bow = GPolygon(Vector(Vector[Pt]((0, 0), (2, 2), (2, 0), (0, 2))))
-    val off = MakeValid.geometry(bow, None).map(Wkt.encode)
-    assert(!MakeValid.enableConstraints)
-    MakeValid.enableConstraints = true
-    try {
-      val on = MakeValid.geometry(bow, None).map(Wkt.encode)
-      assert(off.isDefined && on.isDefined)
-      assert(off == on, s"flag-on changed the bow-tie repair: $off vs $on")
-    } finally MakeValid.enableConstraints = false
+  test("constrained insertion keeps the bow-tie repair's triangulation") {
+    val bow = Vector(Vector(Vector[Pt]((0, 0), (2, 2), (2, 0), (0, 2))))
+    assert(MakeValid.makeValid(bow, None).isDefined)
+    val segs = MakeValid.destructure(None, bow)
+    val plain = MakeValid.delaunayTriangles(segs)
+    assert(plain.nonEmpty)
+    assert(constrainedTriangles(segs).toSet == plain.toSet,
+      "constraints changed the bow-tie triangulation")
   }
 }

@@ -94,7 +94,7 @@ class NeTilesSpec extends AnyFunSuite {
     } finally src.close()
   }
 
-  /** the fused tile pipeline (StMvtPipeline body) on a raw geometry. */
+  /** the fused tile pipeline (the st_mvt_pipeline kernel body) on a raw geometry. */
   private def pipeline(g: Geometry, z: Int, x: Int, y: Int): Option[(IndexedSeq[Long], Int)] = {
     val ext = Slippy.tileExtent3857(z, x, y)
     val webs = (ext.maxx - ext.minx) / 4096.0
@@ -175,7 +175,7 @@ class NeTilesSpec extends AnyFunSuite {
 
   test("fused kernel parity: WKB round-trip through the corpus pipeline") {
     // the same flow driven through the WKB kernel entry (one decode, the
-    // production path of StMvtPipeline) must agree with the direct calls
+    // production path of st_mvt_pipeline) must agree with the direct calls
     val (name, g) = corpus(11) // a parks polygon: mid-sized
     val ext = Extent.ofGeometry(g).get
     val cell = Slippy.fromBounds3857(6, ext.minx, ext.miny, ext.maxx, ext.maxy).head
