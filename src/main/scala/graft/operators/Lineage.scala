@@ -28,6 +28,16 @@ object Lineage {
   def isDone(root: String, stage: String): Boolean =
     Files.exists(donePath(root, stage))
 
+  /** one row per partition of the committed `written` output: (partition_id,
+    * row_count, min_key, max_key, stage), the keys cast to string */
+  private def partitionMetrics(written: DataFrame, stage: String, keyCol: String): DataFrame =
+    written
+      .groupBy(spark_partition_id().as("partition_id"))
+      .agg(count(lit(1)).as("row_count"),
+        min(col(keyCol)).cast("string").as("min_key"),
+        max(col(keyCol)).cast("string").as("max_key"))
+      .withColumn("stage", lit(stage))
+
   /** compute-or-resume a stage. keyCol drives min/max lineage bounds. */
   def runStage(spark: SparkSession, root: String, stage: String,
                keyCol: String)(compute: => DataFrame): DataFrame = {
@@ -38,14 +48,8 @@ object Lineage {
     df.write.mode("overwrite").parquet(dataDir)
 
     // lineage metrics from the COMMITTED files (not the in-flight plan)
-    val written = spark.read.parquet(dataDir)
-    val metrics = written
-      .groupBy(spark_partition_id().as("partition_id"))
-      .agg(count(lit(1)).as("row_count"),
-        min(col(keyCol)).cast("string").as("min_key"),
-        max(col(keyCol)).cast("string").as("max_key"))
-      .withColumn("stage", lit(stage))
-    metrics.write.mode("overwrite").parquet(s"$root/$stage/metrics")
+    partitionMetrics(spark.read.parquet(dataDir), stage, keyCol)
+      .write.mode("overwrite").parquet(s"$root/$stage/metrics")
 
     Files.createDirectories(donePath(root, stage).getParent)
     Files.write(donePath(root, stage), Array.emptyByteArray)
@@ -72,14 +76,7 @@ object Lineage {
       return spark.read.table(dataT)
 
     CatalogIO.replaceTable(compute, dataT)
-    val written = spark.read.table(dataT)
-    val metrics = written
-      .groupBy(spark_partition_id().as("partition_id"))
-      .agg(count(lit(1)).as("row_count"),
-        min(col(keyCol)).cast("string").as("min_key"),
-        max(col(keyCol)).cast("string").as("max_key"))
-      .withColumn("stage", lit(stage))
-    CatalogIO.replaceTable(metrics, metaT)
+    CatalogIO.replaceTable(partitionMetrics(spark.read.table(dataT), stage, keyCol), metaT)
     spark.read.table(dataT)
   }
 

@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Slippy
 import graft.functions.GeomFunctions._
 
 /** Distributed spatial joins for the case the broadcast form (q03's plan)
@@ -22,10 +23,14 @@ import graft.functions.GeomFunctions._
   *      the world in 64 cells, so the bound is universal). Cells pack
   *      their zoom, so mixed-level cells never collide as join keys. The
   *      other side meets a row at its level via the ancestor ladder
-  *      (points) or its own multi-level cover (boxes) — the LEVEL SET
-  *      actually used is collected from the bbox side first (a tiny
-  *      bbox-columns-only aggregate; when every geometry is small the set
-  *      is one level and the ladder collapses to the old single-cell key).
+  *      (points) or its own multi-level cover (boxes), at the LEVEL SET
+  *      the bbox side actually uses: a one-row `collect_set` of the zooms,
+  *      aggregated inside the query's plan and broadcast onto the other
+  *      side, so building the frame runs no Spark job and a null bbox
+  *      drops out (when every geometry is small the set is one level and
+  *      the ladder collapses to the old single-cell key). A side that
+  *      footer stats prove small is broadcast instead, and the other side
+  *      probes the whole ladder, which needs no aggregate.
   *
   *   2. **Payload-free index side** (pipJoin): only (id, bbox, cell) rides
   *      the cover exchange — never the WKB. Matched candidate pairs join
@@ -63,14 +68,14 @@ object SpatialJoin {
       graft.sources.PlanStats.exact(df).exists(f => f.rows <= BroadcastRowLimit &&
         f.bytes <= BroadcastByteBudget / (DefaultCoverCap + 1))
 
-  /** distinct adaptive cover zooms present in `df` — a bbox-columns-only
-    * aggregate (column-pruned scan, map-side combine), collected at
-    * plan-build time so the probe side replicates only to levels some
-    * geometry actually uses. Sorted descending for deterministic plans.
+  /** `df` with one more column, `__lv`: the distinct cover zooms `zoom`
+    * takes over `from`'s rows, descending — a one-row aggregate of `from`,
+    * broadcast onto every row of `df`. It runs inside the query's own plan,
+    * so building the frame launches no Spark job; a null zoom (null bbox)
+    * is not collected.
     */
-  private def usedLevels(df: DataFrame, zoomCol: org.apache.spark.sql.Column): Array[Int] =
-    df.select(zoomCol.as("__z")).distinct().collect()
-      .map(_.getInt(0)).sortBy(-_)
+  private def withUsedLevels(df: DataFrame, from: DataFrame, zoom: Column): DataFrame =
+    df.crossJoin(broadcast(from.agg(sort_array(collect_set(zoom), asc = false).as("__lv"))))
 
   /** `points(lonCol, latCol)` × `polys(idCol, polyCol, minxCol..maxyCol)` →
     * all (point, polygon) rows where the polygon contains the point
@@ -88,6 +93,13 @@ object SpatialJoin {
     *   - surviving (point, id) pairs join the geometry back by `idCol`
     *     (unique per polygon row — caller contract) for the exact
     *     `st_contains`; Catalyst broadcasts that side when it is small.
+    *
+    * When footer stats prove the polygon side small (round-6 verdict #4),
+    * the same plan broadcasts the cover index and the geometry lookup, so
+    * the points side is never exchanged, and the points probe the full
+    * ancestor LADDER (`coverLevels(zz)`, ~zz/2 cells per point) — a
+    * superset of the used level set that needs no aggregate; unmatched
+    * levels find no build rows.
     *
     * Pair-unique by construction: a polygon's cover is at ONE level and
     * lists each cell once; a point has exactly one ancestor per level —
@@ -116,42 +128,23 @@ object SpatialJoin {
       .withColumn("__cell", explode(st_tiles_for_bounds(
         col(minxCol), col(minyCol), col(maxxCol), col(maxyCol), zoomCol)))
 
-    if (provablySmall(polys)) {
-      // BROADCAST fast path (round-6 verdict #4): when footer stats bound
-      // the polygon side small, broadcast the bounded cover index and the
-      // geometry lookup — the points side is NEVER exchanged and there are
-      // ZERO plan-build jobs (no usedLevels collect): the points probe
-      // with their full ancestor LADDER (coverLevels(zz), ~zz/2 cells per
-      // point, map-only — a shuffle-free superset of whatever level set
-      // the polygons actually use; unmatched levels simply find no build
-      // rows). Pair-unique as before: a polygon covers at ONE level, a
-      // point has ONE ancestor per level.
-      val lvls = graft.core.Slippy.coverLevels(zz).toArray
-      val pts = Spread.forKernels(points).withColumn("__cell",
-        explode(st_cover_at_levels(
-          col(lonCol), col(latCol), col(lonCol), col(latCol), typedLit(lvls))))
-      val candidates = pts.join(broadcast(idx), Seq("__cell"), "inner")
-        .filter(col(lonCol) >= col(minxCol) && col(lonCol) <= col(maxxCol) &&
-                col(latCol) >= col(minyCol) && col(latCol) <= col(maxyCol))
-        .select(ptCols :+ col(idCol): _*)
-      candidates
-        .join(broadcast(polys.drop(minxCol, minyCol, maxxCol, maxyCol)), Seq(idCol), "inner")
-        .filter(st_contains(col(polyCol), col(lonCol), col(latCol)))
-        .select(ptCols ++ polyOut: _*)
-    } else {
-      val levels = usedLevels(polys, zoomCol)
-      val pts = points.withColumn("__cell", explode(st_cover_at_levels(
-        col(lonCol), col(latCol), col(lonCol), col(latCol), typedLit(levels))))
+    val small = provablySmall(polys)
+    def build(df: DataFrame) = if (small) broadcast(df) else df
+    val (probe, levels) =
+      if (small) (Spread.forKernels(points), typedLit(Slippy.coverLevels(zz).toArray))
+      else (withUsedLevels(points, polys, zoomCol), col("__lv"))
+    val pts = probe.withColumn("__cell", explode(st_cover_at_levels(
+        col(lonCol), col(latCol), col(lonCol), col(latCol), levels)))
+      .drop("__lv")
 
-      val candidates = pts.join(idx, Seq("__cell"), "inner")
-        .filter(col(lonCol) >= col(minxCol) && col(lonCol) <= col(maxxCol) &&
-                col(latCol) >= col(minyCol) && col(latCol) <= col(maxyCol))
-        .select(ptCols :+ col(idCol): _*)
-
-      candidates.join(polys.drop(minxCol, minyCol, maxxCol, maxyCol), Seq(idCol), "inner")
-        .filter(st_contains(col(polyCol), col(lonCol), col(latCol)))
-        .select(ptCols ++ polyOut: _*)
-    }
+    val candidates = pts.join(build(idx), Seq("__cell"), "inner")
+      .filter(col(lonCol) >= col(minxCol) && col(lonCol) <= col(maxxCol) &&
+              col(latCol) >= col(minyCol) && col(latCol) <= col(maxyCol))
+      .select(ptCols :+ col(idCol): _*)
+    candidates
+      .join(build(polys.drop(minxCol, minyCol, maxxCol, maxyCol)), Seq(idCol), "inner")
+      .filter(st_contains(col(polyCol), col(lonCol), col(latCol)))
+      .select(ptCols ++ polyOut: _*)
   }
 
   /** Within-distance join (range join): all (left, right) pairs with
@@ -209,16 +202,21 @@ object SpatialJoin {
     * Each row picks its adaptive cover zoom (≤ `cap` cells). A pair whose
     * sides sit at different levels meets at the SHALLOWER of the two: side
     * a emits its cover at every level `min(za, zb')` for `zb'` in b's
-    * collected level set (and vice versa) — geometrically shrinking
-    * covers, so the per-row total stays ≤ cap + a small coarse tail. Cells
-    * pack their zoom, so a pair (a, b) can only meet at a level both sides
-    * emitted, and the REPORTING-CELL rule picks exactly one meeting: the
-    * pair is kept only in the cell of the intersection rectangle's
-    * north-west corner `(max of minxes, min of maxys)` at level
-    * `min(za, zb)`. That corner lies inside both boxes, so its cell is in
-    * both covers at that level; every other meeting is dropped map-side by
-    * a cheap predicate. ONE shuffle, no distinct exchange, no unbounded
-    * replication.
+    * level set (and vice versa) — geometrically shrinking covers, so the
+    * per-row total stays ≤ cap + a small coarse tail. Cells pack their
+    * zoom, so a pair (a, b) can only meet at a level both sides emitted,
+    * and the REPORTING-CELL rule picks exactly one meeting: the pair is
+    * kept only in the cell of the intersection rectangle's north-west
+    * corner `(max of minxes, min of maxys)` at level `min(za, zb)`. That
+    * corner lies inside both boxes, so its cell is in both covers at that
+    * level; every other meeting is dropped map-side by a cheap predicate.
+    * ONE shuffle, no distinct exchange, no unbounded replication.
+    *
+    * The other side's level set is the one it uses, read from the plan
+    * (`withUsedLevels`). When footer stats prove one side small, that side
+    * is broadcast, the other is spread and never exchanged, and the level
+    * set is the whole ladder: each row then emits at every ladder level
+    * ≤ its own zoom (≤ cap·16/15 + #levels cells, map-only).
     *
     * `z < 0` (default) derives the max zoom from both sides' plan
     * statistics via `Knn.zoomForPlan` (the finer of the two density
@@ -248,53 +246,32 @@ object SpatialJoin {
 
     val smallA = provablySmall(a)
     val smallB = !smallA && provablySmall(b)
-    if (smallA || smallB) {
-      // BROADCAST fast path (round-6 verdict #4): one side's footer stats
-      // bound it small — broadcast that side and drop BOTH plan-build
-      // usedLevels jobs and the shuffle. Each side emits its cover at
-      // EVERY ladder level ≤ its own zoom (geometrically shrinking, so
-      // ≤ cap·16/15 + #levels cells per row, map-only); a pair then meets
-      // at every common level ≤ min(za, zb) and the reporting-cell rule
-      // (which pins level min(za, zb)) keeps exactly one meeting — the
-      // same dedupe invariant as the shuffle plan below.
-      val lvls = graft.core.Slippy.coverLevels(zz).toArray
-      def ladderUpTo(own: org.apache.spark.sql.Column) =
-        filter(typedLit(lvls), lv => lv <= own)
-      val ea0 = (if (smallA) a else Spread.forKernels(a)).withColumn("__za", zaCol)
-        .withColumn("__cell", explode(st_cover_at_levels(
-          col(aMinx), col(aMiny), col(aMaxx), col(aMaxy), ladderUpTo(col("__za")))))
-      val eb0 = (if (smallB) b else Spread.forKernels(b)).withColumn("__zb", zbCol)
-        .withColumn("__cell", explode(st_cover_at_levels(
-          col(bMinx), col(bMiny), col(bMaxx), col(bMaxy), ladderUpTo(col("__zb")))))
-      val joined =
-        if (smallB) ea0.join(broadcast(eb0), Seq("__cell"), "inner")
-        else broadcast(ea0).join(eb0, Seq("__cell"), "inner")
-      joined
-        .filter(overlap && col("__cell") === reportingCell)
-        .select(outCols: _*)
-    } else {
-      val usedA = usedLevels(a, zaCol)
-      val usedB = usedLevels(b, zbCol)
+    val ladder = typedLit(Slippy.coverLevels(zz).toArray)
 
-      // a row's emission levels: min(own zoom, each level the OTHER side
-      // uses) — covers shrink 4× per coarser step, so the row total is
-      // ≤ cap + cap/16 + … even when the other side spans every level
-      def levelsFor(own: org.apache.spark.sql.Column, other: Array[Int]) =
-        array_distinct(transform(typedLit(other), o => least(own, o)))
-
-      val ea = a.withColumn("__za", zaCol)
+    // a row's emission levels: min(own zoom, each level in `other`) —
+    // covers shrink 4× per coarser step, so the row total is
+    // ≤ cap + cap/16 + … even when the other side spans every level
+    def levelsFor(own: Column, other: Column) =
+      array_distinct(transform(other, o => least(own, o)))
+    // one side's cover rows, tagged with its zoom column `own`; `from` and
+    // `fromZoom` are the other side, whose levels it emits at
+    def side(df: DataFrame, small: Boolean, own: String, zoom: Column,
+             bbox: Seq[String], from: DataFrame, fromZoom: Column) = {
+      val (rows, other) =
+        if (smallA || smallB) (if (small) df else Spread.forKernels(df), ladder)
+        else (withUsedLevels(df, from, fromZoom), col("__lv"))
+      val out = rows.withColumn(own, zoom)
         .withColumn("__cell", explode(st_cover_at_levels(
-          col(aMinx), col(aMiny), col(aMaxx), col(aMaxy),
-          levelsFor(col("__za"), usedB))))
-      val eb = b.withColumn("__zb", zbCol)
-        .withColumn("__cell", explode(st_cover_at_levels(
-          col(bMinx), col(bMiny), col(bMaxx), col(bMaxy),
-          levelsFor(col("__zb"), usedA))))
-
-      ea.join(eb, Seq("__cell"), "inner")
-        .filter(overlap && col("__cell") === reportingCell)
-        .select(outCols: _*)
+          col(bbox(0)), col(bbox(1)), col(bbox(2)), col(bbox(3)),
+          levelsFor(col(own), other))))
+        .drop("__lv")
+      if (small) broadcast(out) else out
     }
+    side(a, smallA, "__za", zaCol, Seq(aMinx, aMiny, aMaxx, aMaxy), b, zbCol)
+      .join(side(b, smallB, "__zb", zbCol, Seq(bMinx, bMiny, bMaxx, bMaxy), a, zaCol),
+        Seq("__cell"), "inner")
+      .filter(overlap && col("__cell") === reportingCell)
+      .select(outCols: _*)
   }
 
   /** PIP join over PRE-BUCKETED catalog tables — the zero-exchange form

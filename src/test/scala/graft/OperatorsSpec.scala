@@ -884,7 +884,6 @@ class OperatorsSpec extends AnyFunSuite with KnnFixtures {
   }
 
   test("footer row counts: exact, job-free for bare parquet scans; safe fallbacks") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     // exact vs count(), including under a projection with expressions
     def exactRows(df: DataFrame) = graft.sources.PlanStats.exact(df).map(_.rows)
@@ -899,17 +898,9 @@ class OperatorsSpec extends AnyFunSuite with KnnFixtures {
     assert(exactRows(Seq((1L, "x")).toDF("a", "b")).isEmpty)
     // tf-idf plan CONSTRUCTION launches zero Spark jobs on parquet input
     // (round-5 verdict #2: N used to cost a count() job before the query)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val built = Curation.tfidfTopTerms(docs, "doc_id", "text", k = 3)
-      org.apache.spark.graftshim.ListenerDrain.waitUntilEmpty(spark.sparkContext)
-      assert(jobs.get() == 0, s"tfidf construction ran ${jobs.get()} jobs; N must be footer-derived")
-      assert(built.limit(1).count() >= 0) // still executable
-    } finally spark.sparkContext.removeSparkListener(l)
+    val (built, jobs) = jobsDuring(Curation.tfidfTopTerms(docs, "doc_id", "text", k = 3))
+    assert(jobs == 0, s"tfidf construction ran $jobs jobs; N must be footer-derived")
+    assert(built.limit(1).count() >= 0) // still executable
     // DISTRIBUTED branch (round-6 verdict #6): past the file-count
     // threshold the count moves into a Spark job over the file list —
     // same exact number as the driver-pool branch

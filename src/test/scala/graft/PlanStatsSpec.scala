@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -13,7 +12,7 @@ import graft.sources.{PlanStats, Synth}
   * shape, that reading them launches no Spark job, and the two hostile
   * shapes the estimates must survive (stats overflow, wide payloads).
   */
-class PlanStatsSpec extends AnyFunSuite {
+class PlanStatsSpec extends AnyFunSuite with KnnFixtures {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -48,27 +47,16 @@ class PlanStatsSpec extends AnyFunSuite {
     val split = spark.read.parquet(s"$tmp/split")
     val local = (0L until 1000L).map(i => (i, i * 0.1, i * 0.05)).toDF("pid", "lon", "lat")
 
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    org.apache.spark.graftshim.ListenerDrain.waitUntilEmpty(spark.sparkContext)
-    spark.sparkContext.addSparkListener(l)
     case class Decision(splits: Long, spread: Boolean, zoom: Int, small: Boolean)
     def decide(df: DataFrame) = Decision(PlanStats.scanSplits(df),
       Spread.forKernels(df) ne df, Knn.zoomForPlan(df), SpatialJoin.provablySmall(df))
-    val got = try {
-      Seq(
-        "1-file scan" -> decide(pts),
-        "cores-file scan" -> decide(split),
-        "filtered scan" -> decide(pts.filter(col("pid") % 2 === 0)),
-        "LocalRelation" -> decide(local),
-        "repartitioned" -> decide(pts.repartition(8)))
-    } finally {
-      org.apache.spark.graftshim.ListenerDrain.waitUntilEmpty(spark.sparkContext)
-      spark.sparkContext.removeSparkListener(l)
-    }
-    assert(jobs.get() == 0, s"plan-time decisions ran ${jobs.get()} Spark job(s)")
+    val (got, jobs) = jobsDuring(Seq(
+      "1-file scan" -> decide(pts),
+      "cores-file scan" -> decide(split),
+      "filtered scan" -> decide(pts.filter(col("pid") % 2 === 0)),
+      "LocalRelation" -> decide(local),
+      "repartitioned" -> decide(pts.repartition(8))))
+    assert(jobs == 0, s"plan-time decisions ran $jobs Spark job(s)")
     // 6000 lineitem rows: zoomFor(6000) = ceil(log4(6000 / 15)) = 5
     assert(got.toMap == Map(
       "1-file scan" -> Decision(1, spread = true, 5, small = true),

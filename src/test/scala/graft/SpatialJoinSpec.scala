@@ -8,13 +8,15 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.core.Slippy
 import graft.functions.GeomFunctions._
 import graft.operators.SpatialJoin
+import graft.sources.Synth
 
 /** Round-6 bounded-replication guarantees of the big-big spatial joins:
   * the per-row adaptive cover cap, the hierarchical (mixed-level) extent
   * join, and the measured shuffle-volume bound against the flat-cover
-  * control with a continent-scale polygon in the corpus.
+  * control with a continent-scale polygon in the corpus. Also: building a
+  * join frame runs no Spark job on either plan, and a null bbox is dropped.
   */
-class SpatialJoinSpec extends AnyFunSuite {
+class SpatialJoinSpec extends AnyFunSuite with KnnFixtures {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -24,6 +26,19 @@ class SpatialJoinSpec extends AnyFunSuite {
     .getOrCreate()
 
   import spark.implicits._
+
+  private val dir = "/root/testdata/sf0.001"
+
+  /** runs `body` with the session confs `kv` set, restoring them after */
+  private def withConf[T](kv: (String, String)*)(body: => T): T = {
+    val conf = spark.conf
+    val saved = kv.map { case (k, _) => k -> conf.getOption(k) }
+    kv.foreach { case (k, v) => conf.set(k, v) }
+    try body finally saved.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None) => conf.unset(k)
+    }
+  }
 
   // ---- Slippy.coverZoomFor / coverLevels unit properties ----
 
@@ -127,11 +142,8 @@ class SpatialJoinSpec extends AnyFunSuite {
   }
 
   test("pipJoin bounds polygon replication: ≤cap cover cells/row, shuffle bytes ≪ flat control") {
-    val conf = spark.conf
-    val saved = Seq("spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold").map(k => k -> conf.getOption(k))
-    saved.foreach { case (k, _) => conf.set(k, "-1") } // big-big regime
-    try {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1", // big-big regime
+        "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1") {
       val rnd = new scala.util.Random(607)
       val pts = (0 until 4000).map { i =>
         (i.toLong, rnd.nextDouble() * 160 - 80, rnd.nextDouble() * 120 - 60)
@@ -176,9 +188,6 @@ class SpatialJoinSpec extends AnyFunSuite {
       // the cover exchange — an order of magnitude, not a margin call
       assert(bAdaptive * 5 < bFlat,
         s"adaptive shuffle $bAdaptive B not ≪ flat control $bFlat B")
-    } finally saved.foreach {
-      case (k, Some(v)) => conf.set(k, v)
-      case (k, None) => conf.unset(k)
     }
   }
 
@@ -222,12 +231,78 @@ class SpatialJoinSpec extends AnyFunSuite {
     assert(maxEmit <= bound, s"per-row emission $maxEmit exceeds bound $bound")
   }
 
+  // ---- one plan per join: the level set is read in the plan ----
+
+  /** q53's pipJoin on `regions` (pid, region_id pairs) */
+  private def pip(pts: DataFrame, regions: DataFrame): DataFrame =
+    SpatialJoin.pipJoin(pts, "lon", "lat",
+        regions.withColumn("poly",
+          st_box_polygon(col("minx"), col("miny"), col("maxx"), col("maxy"))),
+        "region_id", "poly", z = 5)
+      .select(col("pid"), col("region_id"))
+
+  /** q55's extentJoin of 2°×2° point boxes with `regions` */
+  private def extent(pts: DataFrame, regions: DataFrame): DataFrame = {
+    val a = pts.filter(col("pid") % 16 === 0).select(col("pid"),
+      col("lon").as("aminx"), col("lat").as("aminy"),
+      (col("lon") + 2.0).as("amaxx"), (col("lat") + 2.0).as("amaxy"))
+    val b = regions.select(col("region_id"),
+      col("minx").as("bminx"), col("miny").as("bminy"),
+      col("maxx").as("bmaxx"), col("maxy").as("bmaxy"))
+    SpatialJoin.extentJoin(a, "aminx", "aminy", "amaxx", "amaxy",
+        b, "bminx", "bminy", "bmaxx", "bmaxy")
+      .select(col("pid"), col("region_id"))
+  }
+
+  /** the bare region scan takes the broadcast plan; a filter on it is no
+    * footer proof, so the filtered scan takes the shuffle plan */
+  private def shuffled(regions: DataFrame): DataFrame = {
+    val f = regions.filter(col("region_id") >= 0)
+    assert(SpatialJoin.provablySmall(regions) && !SpatialJoin.provablySmall(f))
+    f
+  }
+
+  test("building a join frame launches no Spark job on either plan") {
+    val pts = Synth.points(spark, dir)
+    val regions = Synth.regions(spark, dir)
+    // the most jobs one count() may run on the shuffle plan: the build
+    // and action jobs together when the level set was collected up front
+    // (2 + 4 for pipJoin, 4 + 3 for extentJoin)
+    for ((name, join, most) <- Seq(("pipJoin", pip _, 6L), ("extentJoin", extent _, 7L));
+         (plan, side) <- Seq("broadcast" -> regions, "shuffle" -> shuffled(regions))) {
+      val (df, built) = jobsDuring(join(pts, side))
+      assert(built == 0, s"$name $plan: building the frame ran $built Spark job(s)")
+      val (n, ran) = jobsDuring(df.count())
+      assert(n > 0, s"$name $plan: vacuous, no pairs")
+      if (plan == "shuffle") assert(ran <= most, s"$name $plan: count() ran $ran jobs")
+    }
+  }
+
+  test("a null-bbox polygon row is dropped on both plans, with AQE on and off") {
+    val pts = Synth.points(spark, dir)
+    val regions = Synth.regions(spark, dir)
+    val tmp = java.nio.file.Files.createTempDirectory("nullbbox").toString
+    regions.union(regions.filter(col("region_id") === 0).select(lit(999L).as("region_id"),
+        lit(null).cast("double").as("minx"), col("miny"), col("maxx"), col("maxy")))
+      .coalesce(1).write.parquet(s"$tmp/polys")
+    val withNull = spark.read.parquet(s"$tmp/polys")
+    def rows(df: DataFrame) = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+    for ((name, join) <- Seq("pipJoin" -> pip _, "extentJoin" -> extent _)) {
+      val want = rows(join(pts, regions))
+      assert(want.nonEmpty, s"$name: vacuous, no pairs")
+      assert(rows(join(pts, withNull)) == want, s"$name broadcast: rows differ")
+      assert(rows(join(pts, shuffled(withNull))) == want, s"$name shuffle: rows differ")
+      withConf("spark.sql.adaptive.enabled" -> "false") {
+        assert(rows(join(pts, shuffled(withNull))) == want, s"$name shuffle, AQE off: rows differ")
+      }
+    }
+  }
+
   test("bucketed layout: join plans with ZERO exchange, rows match the shuffled control") {
-    val dir = "/root/testdata/sf0.001"
-    val pts = graft.sources.Synth.points(spark, dir)
+    val pts = Synth.points(spark, dir)
       .withColumn("cell5", st_cell_at(col("lon"), col("lat"), lit(5)))
       .select(col("pid"), col("lon"), col("lat"), col("cell5"))
-    val regions = graft.sources.Synth.regions(spark, dir)
+    val regions = Synth.regions(spark, dir)
       .withColumn("poly", st_box_polygon(col("minx"), col("miny"), col("maxx"), col("maxy")))
       .withColumn("cell5", explode(
         st_tiles_for_bounds(col("minx"), col("miny"), col("maxx"), col("maxy"), lit(5))))
