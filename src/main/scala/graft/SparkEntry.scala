@@ -6,7 +6,7 @@ import org.apache.spark.sql.expressions.Window
 
 import graft.functions.GeomFunctions._
 import graft.operators.Spread
-import graft.sources.{Synth, DocsTable}
+import graft.sources.{DocsTable, Synth, TestTables}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + BASELINE.json.
   *
@@ -16,8 +16,8 @@ import graft.sources.{Synth, DocsTable}
   */
 object SparkEntry {
 
-  private def li(s: SparkSession, dir: String) = s.read.parquet(s"$dir/lineitem.parquet")
-  private def docsT(s: SparkSession, dir: String) = s.read.parquet(s"$dir/documents.parquet")
+  private def li(s: SparkSession, dir: String) = TestTables.read(s, dir, "lineitem")
+  private def docsT(s: SparkSession, dir: String) = TestTables.read(s, dir, "documents")
 
   /** round(c, d) with the driver oracle's (DuckDB) double-round zero
     * semantics: a result that rounds to zero keeps the SIGN of the input
@@ -56,20 +56,20 @@ object SparkEntry {
       ((acc * 31L) + (round(q.getField("x") * 1000000.0).cast("long") * 1000003L +
         round(q.getField("y") * 1000000.0).cast("long"))) % 1000000000000007L)
 
-  /** q43/q45's sink input: q33Input's geometries deduplicated on pid,
-    * then repaired. The synthetic lineitem carries duplicate (orderkey,
+  /** q43/q45's sink input: q33's geometries deduplicated on pid, then
+    * repaired. The synthetic lineitem carries duplicate (orderkey,
     * linenumber) rows, so duplicate pids; identical duplicates collapse
-    * BEFORE the repair (smaller shuffle, no wasted kernels). The explicit-
-    * N repartition before the dedup pins the downstream makevalid + tile
-    * prep stage at full parallelism — AQE coalesced the small dedup
-    * exchange to 16 tasks although its downstream is CPU-bound (2.1 s ->
-    * 0.7 s wall on that stage), and dedup reuses the partitioning so no
-    * second exchange appears.
+    * BEFORE the repair (no wasted kernels). ONE exchange: the narrow pid
+    * column is hash-partitioned first, the geometry is built and parsed on
+    * that partitioning, and the dedup above the build reuses it. The
+    * explicit N pins the build + makevalid + tile prep stage at one task
+    * per core — AQE coalesces a keyed exchange this small although its
+    * downstream is CPU-bound (2.1 s -> 0.7 s wall on that stage).
     */
   private def mvtInput(s: SparkSession, dir: String): DataFrame =
-    q33Input(s, dir)
+    q33Geoms(Synth.points(s, dir).select(col("pid"))
+        .repartition(s.sparkContext.defaultParallelism, col("pid")))
       .select(col("pid"), col("geom"))
-      .repartition(s.sparkContext.defaultParallelism, col("pid"))
       .dropDuplicates("pid")
       .withColumn("geom", st_makevalid(col("geom"),
         lit(Double.NaN), lit(Double.NaN), lit(Double.NaN), lit(Double.NaN)))
@@ -123,7 +123,13 @@ object SparkEntry {
     * prebuilt-geometry tier. Gated at coordinate level (rolling hash of
     * the command stream).
     */
-  def q33Input(s: SparkSession, dir: String): DataFrame = {
+  def q33Input(s: SparkSession, dir: String): DataFrame =
+    q33Geoms(Spread.forKernels(Synth.points(s, dir).select(col("pid"))))
+
+  /** q33's geometries built on the rows of `pids` (a pid column), at its
+    * partitioning.
+    */
+  private def q33Geoms(pids: DataFrame): DataFrame = {
     // NOTE (round 7, measured): do NOT move the pid dedup of q43/q45 below
     // this builder's geometry expressions. With the aggregate under the
     // WKT build, every generated column is a pure function of the GROUP
@@ -132,7 +138,9 @@ object SparkEntry {
     // exchange down to the SCAN: makevalid ran on all 600k pre-dedup rows
     // at scan parallelism (3 tasks), 3.7 s -> 45 s. Dedup-after-build is
     // load-bearing: the aggregate output column is a pushdown barrier.
-    val base = Spread.forKernels(Synth.points(s, dir).select(col("pid")))
+    // mvtInput's one pid exchange sits BELOW the build, and the dedup
+    // still sits above it and reuses that partitioning.
+    val base = pids
       .withColumn("z9", lit(9))
       .withColumn("tx", col("pid") * 7 % 512)
       .withColumn("ty", col("pid") % 312 + 100)
@@ -314,8 +322,8 @@ object SparkEntry {
     }),
 
     "q20_join_baseline" -> ((s, dir) => {
-      val o = s.read.parquet(s"$dir/orders.parquet")
-      val c = s.read.parquet(s"$dir/customer.parquet")
+      val o = TestTables.read(s, dir, "orders")
+      val c = TestTables.read(s, dir, "customer")
       o.join(broadcast(c), col("o_custkey") === col("c_custkey"))
         .groupBy(col("c_nationkey"))
         .agg(count(lit(1)).as("n_orders"))
@@ -349,7 +357,7 @@ object SparkEntry {
     }),
 
     "q23_ann_cosine" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = TestTables.read(s, dir, "embeddings")
         .select(col("vec_id").as("vid"), col("embedding").cast("array<double>").as("vec"))
       val qs = emb.filter(col("vid") % 40 === 0)
         .select(col("vid").as("qid"), col("vec").as("qvec"))
@@ -367,7 +375,7 @@ object SparkEntry {
     }),
 
     "q26_sessions" -> ((s, dir) => {
-      graft.streaming.Sessionize.batch(s.read.parquet(s"$dir/events.parquet"))
+      graft.streaming.Sessionize.batch(TestTables.read(s, dir, "events"))
     }),
 
     "q27_media_meta" -> ((s, dir) => {
@@ -436,7 +444,7 @@ object SparkEntry {
       // the SCALE ann path: corpus bucketed by sign-random-projection,
       // queries multi-probe their bucket + Hamming-1 neighbors; the oracle
       // reproduces the deterministic hyperplanes as exact-decimal literals
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = TestTables.read(s, dir, "embeddings")
         .select(col("vec_id").as("vid"), col("embedding").cast("array<double>").as("vec"))
       val qs = emb.filter(col("vid") % 40 === 0)
         .select(col("vid").as("qid"), col("vec").as("qvec"))
@@ -538,7 +546,7 @@ object SparkEntry {
       // by 1 + ((vid+i)%7−3)·1e-4, identically derivable in SQL), then runs
       // the LSH-bucketed near-dup operator at τ=0.99: candidates only
       // within a sign-projection bucket — never all-pairs.
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = TestTables.read(s, dir, "embeddings")
         .select(col("vec_id").as("vid"), col("embedding").cast("array<double>").as("vec"))
       val planted = emb.filter(col("vid") % 10 === 0)
         .select(col("vid").as("ovid"), col("vec"))  // unambiguous: lateral
@@ -563,7 +571,7 @@ object SparkEntry {
       // centroid cap here is the oracle-cost gate knob (interpreted list
       // lambdas); the engine default is 1024, and the √N scaling of the
       // probed fraction is gated by IvfLearnedSpec at two corpus sizes.
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = TestTables.read(s, dir, "embeddings")
         .select(col("vec_id").as("vid"), col("embedding").cast("array<double>").as("vec"))
       val model = graft.operators.IvfLearned.fit(emb, dim = 64, iters = 5, maxCentroids = 64)
       val qs = emb.filter(col("vid") % 40 === 0)
@@ -610,7 +618,7 @@ object SparkEntry {
       // the one-pass MinHash-LSH near-dup operator, driver-gated: signature
       // ride-along through the band explode, one shuffle on (band, bhash),
       // map-side est-Jaccard verify, first-shared-band dedupe (no distinct)
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = docsT(s, dir)
       graft.operators.Dedup.nearDupPairs(docs, "doc_id", "text",
         bands = 4, rowsPerBand = 4, threshold = 0.5)
         .select(col("doc_a"), col("doc_b"), col("est_jaccard"))
@@ -667,7 +675,7 @@ object SparkEntry {
       // sets joined back per candidate (never shipped through the band
       // explode). Completes the dedup family: exact-hash / MinHash-est /
       // SimHash / embedding-cosine / exact n-gram Jaccard.
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = docsT(s, dir)
       graft.operators.Dedup.nearDupPairsExact(docs, "doc_id", "text",
         bands = 4, rowsPerBand = 4, threshold = 0.5)
         .select(col("doc_a"), col("doc_b"), col("jaccard"))
@@ -681,7 +689,7 @@ object SparkEntry {
       // oracle replays the pixel function in SQL — PNG is lossless, so
       // encode→decode→stats must reproduce the oracle bits exactly; any
       // codec drift (color model, row order, truncation) breaks the hash.
-      val ids = s.read.parquet(s"$dir/documents.parquet")
+      val ids = docsT(s, dir)
         .filter(col("doc_id") % 5 === 0).select(col("doc_id"))
       val pngs = graft.operators.Media.synthPng(s, ids, "doc_id", w = 16, h = 16)
       graft.operators.Media.imageGridStats(s, pngs, "media_id", "png", grid = 4)
@@ -693,7 +701,7 @@ object SparkEntry {
       // round, no per-node collect), min doc id elected keeper, singletons
       // joined back as their own cluster. `filter(keeper)` IS the deduped
       // corpus; the oracle closes the same pairs with a recursive CTE.
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = docsT(s, dir)
       graft.operators.Dedup.nearDupClusters(docs, "doc_id", "text",
         bands = 4, rowsPerBand = 4, threshold = 0.5)
         .select(col("doc"), col("rep"), col("csize"), col("keeper"))
@@ -704,7 +712,7 @@ object SparkEntry {
       // "benchmark" slice (every 97th doc) broadcast against the exploded
       // corpus shingles; per-doc overlap counted in ONE shuffle. minHits=2
       // keeps the flag non-trivial (a single shared stock phrase passes).
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = docsT(s, dir)
       val bench = docs.filter(col("doc_id") % 97 === 0)
       graft.operators.Curation.contamination(docs, "doc_id", "text",
         bench, "text", minHits = 2)
@@ -715,7 +723,7 @@ object SparkEntry {
       // per-source quota: keep the 5 longest docs per source (doc_id
       // tiebreak) — rank+filter form so InferWindowGroupLimit keeps the
       // map-side partial top-k below the source exchange
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = docsT(s, dir)
       graft.operators.Curation.quotaSample(docs, "source", "doc_id", "n_chars", quota = 5)
         .select(col("doc_id"), col("source"), col("n_chars"), col("rk"))
     }),
@@ -803,14 +811,14 @@ object SparkEntry {
     "q56_tfidf_terms" -> ((s, dir) => {
       // top-5 characteristic terms per document; rational idf
       // (N+1)/(df+1) so the score column is bit-reproducible in DuckDB
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = docsT(s, dir)
       graft.operators.Curation.tfidfTopTerms(docs, "doc_id", "text", k = 5)
     }),
 
     "q57_quantiles" -> ((s, dir) => {
       // exact percentile_disc per source over doc length — one shuffle,
       // shared rank/count windows, map-side quantile fan-out
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = docsT(s, dir)
       graft.operators.Curation.exactQuantiles(docs, "source", "n_chars", "doc_id",
         Seq(0.25, 0.5, 0.75, 0.95))
     }),
@@ -818,14 +826,14 @@ object SparkEntry {
     "q58_hash_sample" -> ((s, dir) => {
       // deterministic MINSTD id-hash sample: same ids kept in every run,
       // engine, and partition layout
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = docsT(s, dir)
       graft.operators.Curation.hashSample(docs, "doc_id", fraction = 0.25)
         .select(col("doc_id"), col("source"), col("n_chars"))
     }),
 
     "q59_quantize_int8" -> ((s, dir) => {
       // symmetric per-vector int8 quantization of the embedding column
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = TestTables.read(s, dir, "embeddings")
       graft.operators.Ann.quantizeInt8(emb, "vec_id", "embedding")
     }),
 
@@ -833,7 +841,7 @@ object SparkEntry {
       // REAL decode + nearest-neighbor resize 16×16 → 8×8: source pixel
       // (2x, 2y) by integer floor division, so the oracle replays the
       // synthetic pixel function at the sampled coordinates exactly
-      val ids = s.read.parquet(s"$dir/documents.parquet")
+      val ids = docsT(s, dir)
         .filter(col("doc_id") % 5 === 0).select(col("doc_id"))
       val pngs = graft.operators.Media.synthPng(s, ids, "doc_id", w = 16, h = 16)
       graft.operators.Media.resizePixels(s, pngs, "media_id", "png", dw = 8, dh = 8)
@@ -843,7 +851,7 @@ object SparkEntry {
       // point-in-time enrichment: each click gets the latest view AT OR
       // BEFORE it for the same user — the union-window as-of form (one
       // key shuffle, no join). Inner form (unmatched clicks dropped).
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = TestTables.read(s, dir, "events")
       val l = ev.filter(col("event_type") === "click")
         .select(col("event_id"), col("user_id"), col("ts"))
       val r = ev.filter(col("event_type") === "view")
@@ -859,7 +867,7 @@ object SparkEntry {
       // click, else NULLs (feature-freshness semantics — a stale feature
       // must read as missing). Same single key shuffle as q61; horizon
       // compared in exact int64 microseconds (unix_micros / epoch_us).
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = TestTables.read(s, dir, "events")
       val l = ev.filter(col("event_type") === "click")
         .select(col("event_id"), col("user_id"), col("ts"))
       val r = ev.filter(col("event_type") === "view")
@@ -938,9 +946,11 @@ object SparkEntry {
       // PII scrub over deterministically-injected emails/IPs (the corpus
       // text is synthetic word soup, so the gate plants its own PII the
       // oracle rebuilds identically): emails first, IPs on the
-      // email-redacted text — map-only
-      val aug = docsT(s, dir).withColumn("aug", concat(
-        substring(col("text"), 1, 40),
+      // email-redacted text — map-only. The spread ships only the 40-char
+      // head, and the text is built after it, at kernel width.
+      val heads = docsT(s, dir).select(col("doc_id"), substring(col("text"), 1, 40).as("head"))
+      val aug = Spread.forKernels(heads).withColumn("aug", concat(
+        col("head"),
         lit(" mail user"), (col("doc_id") % 97).cast("string"),
         lit("@ex"), (col("doc_id") % 7).cast("string"),
         lit(".com ip 10."), (col("doc_id") % 251).cast("string"),

@@ -115,8 +115,12 @@ object Knn {
     // the candidate probe is the hot stage: the conditional spread keeps
     // it off SCAN parallelism (measured 12.9 s of serial CPU on q21 at
     // sf0.1 from one file)
+    // a non-nullable join key: from a nullable one Catalyst infers
+    // `isnotnull(cell)` and pushes it, the tile kernels inlined, through
+    // the spread to the scan. −1 is no block cell, so a point without
+    // coordinates still meets no query.
     val p = Spread.forKernels(points).select(col("pid"), col("lon"), col("lat"),
-      cellOf(z, col("lon"), col("lat")).as("cell"))
+      coalesce(cellOf(z, col("lon"), col("lat")), lit(-1L)).as("cell"))
     // The cell-key shuffle CONCENTRATES each query's block candidates, so
     // the map-side partial top-k below (WindowGroupLimit, from row_number
     // + rk <= k) caps the qid exchange at k rows per query and partition.

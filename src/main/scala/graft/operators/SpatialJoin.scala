@@ -181,9 +181,12 @@ object SpatialJoin {
         math.log(360.0 / radius) / math.log(2.0)).toInt))
     val zz = if (z >= 0) z else math.min(Knn.zoomForPlan(right), radiusZ)
     // conditional kernel spread (no-op when splits >= cores): the pair
-    // verify after the join runs at the probe side's parallelism
+    // verify after the join runs at the probe side's parallelism. The key
+    // is non-nullable: from a nullable one Catalyst infers
+    // `isnotnull(__cell)` and pushes the cell kernel through the spread to
+    // the scan. −1 is no cell, so a point without coordinates meets nothing.
     val r = Spread.forKernels(right).withColumn("__cell",
-      st_cell_at(col(lonR), col(latR), lit(zz)))
+      coalesce(st_cell_at(col(lonR), col(latR), lit(zz)), lit(-1L)))
     val l = Spread.forKernels(left).withColumn("__cell", explode(st_tiles_for_bounds(
       col(lonL) - radius, col(latL) - radius,
       col(lonL) + radius, col(latL) + radius, lit(zz))))

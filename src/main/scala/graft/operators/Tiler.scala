@@ -1,7 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Cast
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 
 import graft.functions.GeomFunctions._
 
@@ -87,17 +89,21 @@ object Tiler {
   /** The MVT tile sink: geometries → (z, x, y, mvt protobuf bytes), one
     * tile per covered cell holding one layer per distinct `layer` value
     * (reference tile.go:45-63: a Tile holds repeated Layer messages). A
-    * single-layer caller passes `lit(name)`.
+    * single-layer caller passes `lit(name)`: a constant layer is read from
+    * the argument, not carried through the shuffle as a column.
     *
-    * After the map-side [[mvtPrep]], ONE shuffle on the packed cell and
-    * an in-partition sort by (cell, layer, fid): a forward walk per
-    * partition emits one tile per cell run, streams each layer run
-    * through the layer encoder and frames the finished layers in
-    * layer-name order. The bytes are a pure function of the input
-    * (re-runs and micro-batch replays are byte-identical), per-tile memory
-    * stays bounded at the output bytes plus one layer's key/value maps
-    * (never the feature list), and the sort spills where a hash group
-    * could not.
+    * After the map-side [[mvtPrep]], ONE shuffle on the packed cell into
+    * one partition per core (the session's default parallelism) and an
+    * in-partition sort by (cell, layer, fid): a forward walk per partition
+    * emits one tile per cell run, streams each layer run through the layer
+    * encoder and frames the finished layers in layer-name order. The width
+    * is explicit because the walk and encode are CPU-bound while the
+    * exchange is small: AQE coalesced a `repartition(cell)` of the ×1
+    * `tile` input (~2 MB) into ONE partition, and the whole encode ran on
+    * one task. The bytes are a pure function of the input (re-runs and
+    * micro-batch replays are byte-identical), per-tile memory stays
+    * bounded at the output bytes plus one layer's key/value maps (never
+    * the feature list), and the sort spills where a hash group could not.
     *
     * Tags: "fid" (the id as a string) first, then each of `propCols` as a
     * typed value (MvtTile.TagValue.of per the Spark column type, reference
@@ -109,45 +115,54 @@ object Tiler {
     import spark.implicits._
     import graft.core.{MvtTile, Slippy}
     val propNames = propCols.toIndexedSeq
-    val nFixed = 5 // cell, layer, fid, commands, gtype
+    // a foldable layer is one name for every row: no layer column
+    val layerExpr = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].expression(layer)
+    val constLayer: Option[String] =
+      if (!layerExpr.foldable) None
+      else Option(Cast(layerExpr, StringType,
+        Some(spark.sessionState.conf.sessionLocalTimeZone)).eval()).map(_.toString)
+    val layerKey = if (constLayer.isDefined) Nil else Seq("layer")
+    val fidAt = 1 + layerKey.length // row: cell, [layer], fid, commands, gtype, props
+    val nFixed = fidAt + 3
     mvtPrep(geoms, z, grid(srid))
-      .select(Seq(col("cell"), layer.cast("string").as("layer"),
-        col(idCol).cast("string").as("fid"),
-        col("mvt.commands").as("commands"), col("mvt.geom_type").as("gtype")) ++
+      .select(Seq(col("cell")) ++ layerKey.map(layer.cast("string").as(_)) ++
+        Seq(col(idCol).cast("string").as("fid"),
+          col("mvt.commands").as("commands"), col("mvt.geom_type").as("gtype")) ++
         propCols.map(col): _*)
-      .repartition(col("cell"))
-      .sortWithinPartitions(col("cell"), col("layer"), col("fid"))
+      .repartition(spark.sparkContext.defaultParallelism, col("cell"))
+      .sortWithinPartitions((Seq("cell") ++ layerKey :+ "fid").map(col): _*)
       .mapPartitions { it =>
         val buf = it.buffered
+        def layerOf(r: org.apache.spark.sql.Row): String = constLayer.getOrElse(r.getString(1))
         new Iterator[(Int, Long, Long, Array[Byte])] {
           def hasNext: Boolean = buf.hasNext
           def next(): (Int, Long, Long, Array[Byte]) = {
             val cell = buf.head.getLong(0)
             val layers = Vector.newBuilder[Array[Byte]]
             while (buf.hasNext && buf.head.getLong(0) == cell) {
-              val name = buf.head.getString(1)
+              val name = layerOf(buf.head)
               var i = 0L
               val features = new Iterator[MvtTile.Feature] {
                 def hasNext: Boolean = buf.hasNext &&
-                  buf.head.getLong(0) == cell && buf.head.getString(1) == name
+                  buf.head.getLong(0) == cell && layerOf(buf.head) == name
                 def next(): MvtTile.Feature = {
                   val r = buf.next()
                   i += 1
                   // zero-copy: the row holds the command longs in a primitive
                   // array (ArraySeq.ofLong) — rewrap instead of boxing a copy
-                  val cmds: IndexedSeq[Long] = r.getSeq[Long](3) match {
+                  val cmds: IndexedSeq[Long] = r.getSeq[Long](fidAt + 1) match {
                     case as: scala.collection.immutable.ArraySeq[Long] => as
                     case other => other.toIndexedSeq
                   }
                   val props = Vector.newBuilder[(String, MvtTile.TagValue)]
-                  props += (("fid", MvtTile.TagValue.VString(r.getString(2))))
+                  props += (("fid", MvtTile.TagValue.VString(r.getString(fidAt))))
                   var p = 0
                   while (p < propNames.length) {
                     val v = r.get(nFixed + p)
                     if (v != null) props += ((propNames(p), MvtTile.TagValue.of(v)))
                     p += 1
                   }
-                  MvtTile.Feature(i, r.getInt(4), cmds, props.result())
+                  MvtTile.Feature(i, r.getInt(fidAt + 2), cmds, props.result())
                 }
               }
               layers += MvtTile.encodeLayerStream(name, features)

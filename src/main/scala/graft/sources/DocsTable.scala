@@ -22,7 +22,9 @@ object DocsTable {
     // 3-task stage; spreading the narrow point columns first runs the
     // string generation (and everything downstream — explode, parse,
     // makevalid) at kernel width and ships ~5x fewer bytes. No-op when the
-    // backing scan already has >= cores splits.
+    // backing scan already has >= cores splits. A filter on `spans` undoes
+    // this: Catalyst pushes it through the round-robin exchange, and the
+    // scan stage then builds the spans for it (see extractGeometries).
     val p = graft.operators.Spread.forKernels(
       Synth.points(spark, dir).select(col("pid"), col("lon"), col("lat")))
     val textSpan = struct(
@@ -70,9 +72,16 @@ object DocsTable {
   def extractGeometries(docs: DataFrame): DataFrame = {
     // the WKT parse (and everything downstream of it — tile covers, the
     // makevalid kernel) runs at this frame's partitioning; spread it when
-    // the backing scan has fewer splits than cores (no-op at scale)
+    // the backing scan has fewer splits than cores (no-op at scale).
+    // explode_outer, not explode: from explode(spans) Catalyst infers
+    // `size(spans) > 0 AND isnotnull(spans)` (InferFiltersFromGenerate) and
+    // pushes it through the alias and the spread's round-robin exchange to
+    // the scan, so every span string was built twice — once on the 1-task
+    // scan stage for the filter, once after the spread. Nothing is inferred
+    // from explode_outer; its null row for a null or empty `spans` fails
+    // the kind filter below, so the rows are the same.
     graft.operators.Spread.forKernels(docs)
-      .select(col("doc_id"), explode(col("spans")).as("span"))
+      .select(col("doc_id"), explode_outer(col("spans")).as("span"))
       .filter(col("span.kind") === "wkt")
       .select(
         col("doc_id"),

@@ -19,7 +19,7 @@ object Synth {
   // ---- points from lineitem ----
 
   def points(spark: SparkSession, dir: String): DataFrame = {
-    val li = spark.read.parquet(s"$dir/lineitem.parquet")
+    val li = TestTables.read(spark, dir, "lineitem")
     li.select(
       (col("l_orderkey") * 10 + col("l_linenumber")).cast("long").as("pid"),
       (lit(-180.0) + lit(360.0) *
@@ -49,7 +49,7 @@ object Synth {
   // ---- rectangular regions from nation ----
 
   def regions(spark: SparkSession, dir: String): DataFrame = {
-    val n = spark.read.parquet(s"$dir/nation.parquet")
+    val n = TestTables.read(spark, dir, "nation")
     n.select(
       col("n_nationkey").cast("long").as("region_id"),
       (lit(-180.0) + lit(14.0) * col("n_nationkey")).as("minx"),

@@ -84,8 +84,8 @@ class KnnSpec extends AnyFunSuite with KnnFixtures {
   }
 
   test("q12 and q21: zero jobs and zero persists to build, at most 8 jobs per action") {
-    // spark.read.parquet infers the schema with one job of its own; the
-    // kNN operator may add none on top of it
+    // whatever the source read runs (no job: the test tables are read
+    // with their declared schemas), the kNN operator may add none to it
     val (_, readJobs) = jobsDuring(graft.sources.Synth.points(spark, dir))
     for (q <- Seq("q12_knn", "q21_knn_cell")) {
       spark.catalog.clearCache() // other suites in this session may cache

@@ -706,6 +706,46 @@ class OperatorsSpec extends AnyFunSuite with KnnFixtures {
     }
   }
 
+  test("constant MVT layer: the bytes of the layer carried as a column, no layer in the shuffle") {
+    val in = SparkEntry.q33Input(spark, dir).select(col("pid"), col("geom"))
+    val byName = Tiler.mvtTiles(spark, in, "pid", 9, lit("features"), srid = 3857)
+    val byColumn = Tiler.mvtTiles(spark, in.withColumn("lyr", lit("features")), "pid", 9,
+      col("lyr"), srid = 3857)
+    def bytesOf(df: DataFrame): Map[(Long, Long), Seq[Byte]] =
+      df.collect().map(r => ((r.getLong(1), r.getLong(2)), r.getAs[Array[Byte]]("mvt").toSeq)).toMap
+    val want = bytesOf(byColumn)
+    assert(want.nonEmpty && bytesOf(byName) == want)
+    // the cell exchange carries no layer column on the constant path
+    val exchanged = byName.queryExecution.sparkPlan.collect {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e.child.output.map(_.name)
+    }
+    assert(exchanged.nonEmpty && exchanged.forall(!_.contains("layer")), exchanged)
+  }
+
+  test("q43's MVT encode runs one task per core: no coalesced read over the cell exchange") {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AQEShuffleReadExec}
+    val cores = spark.sparkContext.defaultParallelism
+    val df = SparkEntry.queries("q43_mvt_tile_bytes")(spark, dir)
+    val tasks = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Int)]
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onStageCompleted(e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        tasks.add((e.stageInfo.stageId, e.stageInfo.numTasks))
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.graftshim.ListenerDrain.waitUntilEmpty(sc)
+    sc.addSparkListener(l)
+    try {
+      assert(df.collect().nonEmpty)
+      org.apache.spark.graftshim.ListenerDrain.waitUntilEmpty(sc)
+    } finally sc.removeSparkListener(l)
+    // the last stage reads the cell exchange: the walk + encode stage
+    import scala.jdk.CollectionConverters._
+    assert(tasks.asScala.maxBy(_._1)._2 == cores, tasks.asScala.toSeq)
+    val finalPlan = df.queryExecution.executedPlan.asInstanceOf[AdaptiveSparkPlanExec].executedPlan
+    val coalesced = finalPlan.collect { case r: AQEShuffleReadExec if r.hasCoalescedPartition => r }
+    assert(coalesced.isEmpty, finalPlan.treeString)
+  }
+
   test("mvt layer key/value dedup across features") {
     import graft.core.MvtTile._
     val layer = Layer("t", Vector(

@@ -17,6 +17,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *   twice sits behind one exchange that AQE reuses.
   * - No graft expression is a CodegenFallback: each one runs inside
   *   whole-stage codegen.
+  * - No kernel work sits below a spread: a round-robin exchange exists to
+  *   run the kernels at one task per core, so a graft kernel call, a
+  *   string build or an array build under it runs on the few scan tasks
+  *   instead (a filter pushed through the spread drags them there).
   */
 class PlanAuditSpec extends AnyFunSuite {
 
@@ -76,5 +80,26 @@ class PlanAuditSpec extends AnyFunSuite {
       }
     }
     assert(wide.isEmpty, wide.mkString("; "))
+  }
+
+  test("no kernel call, string or array build below a round-robin spread") {
+    import org.apache.spark.sql.catalyst.expressions.{Concat, CreateArray}
+    import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+    import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    spark.catalog.clearCache()
+    val offenders = for {
+      (name, q) <- SparkEntry.queries.toSeq.sortBy(_._1)
+      spread <- q(spark, dir).queryExecution.sparkPlan.collect {
+        case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RoundRobinPartitioning] => e
+      }
+      work = spread.child.flatMap(_.expressions.flatMap(_.collect {
+        case k: StaticInvoke if k.staticObject.getName.startsWith("graft.") => k.functionName
+        case _: Concat => "concat"
+        case _: CreateArray => "array"
+      })).distinct
+      if work.nonEmpty
+    } yield s"$name: ${work.mkString(", ")}"
+    assert(offenders.isEmpty, offenders.mkString("; "))
   }
 }
