@@ -122,47 +122,11 @@ object MvtTile {
     w.result()
   }
 
-  /** layer encode with cross-feature key/value dedup
-    * (reference feature.go keyvalMapsFromFeatures + tags).
-    */
-  def encodeLayer(layer: Layer): Array[Byte] = {
-    val keyIdx = mutable.LinkedHashMap[String, Int]()
-    val valIdx = mutable.LinkedHashMap[TagValue, Int]()
-    val featureTags = layer.features.map { f =>
-      f.properties.flatMap { case (k, v) =>
-        val ki = keyIdx.getOrElseUpdate(k, keyIdx.size)
-        if (v == null) Nil // reference drops nil-valued tags (feature.go:379)
-        else {
-          val vi = valIdx.getOrElseUpdate(v, valIdx.size)
-          Seq(ki.toLong, vi.toLong)
-        }
-      }
-    }
-    val w = new Writer
-    w.varintField(15, layer.version.toLong)
-    w.stringField(1, layer.name)
-    layer.features.zip(featureTags).foreach { case (f, tags) =>
-      w.bytesField(2, encodeFeature(f, tags))
-    }
-    keyIdx.keys.foreach(k => w.stringField(3, k))
-    valIdx.keys.foreach(v => w.bytesField(4, encodeValue(v)))
-    w.varintField(5, layer.extent.toLong)
-    w.result()
-  }
-
-  /** Tile: repeated Layer layers = 3. */
-  def encodeTile(layers: IndexedSeq[Layer]): Array[Byte] = {
-    val w = new Writer
-    layers.foreach(l => w.bytesField(3, encodeLayer(l)))
-    w.result()
-  }
-
-  /** Single-pass layer encode: features are consumed from an ITERATOR and
-    * each is serialized immediately, so a pathological hot tile (dense
-    * urban cell at low zoom) holds only the growing OUTPUT bytes and the
-    * key/value dedup maps in memory — never the decoded feature list.
-    * Byte-identical to `encodeLayer` (same field order, same incremental
-    * key/value map construction).
+  /** Layer encode with cross-feature key/value dedup (reference
+    * feature.go keyvalMapsFromFeatures + tags). Features are consumed from
+    * an ITERATOR and each is serialized immediately, so a pathological hot
+    * tile (dense urban cell at low zoom) holds only the growing OUTPUT bytes
+    * and the key/value dedup maps in memory — never the decoded feature list.
     */
   def encodeLayerStream(name: String, features: Iterator[Feature],
                         extent: Int = 4096, version: Int = 2): Array[Byte] = {
@@ -174,7 +138,7 @@ object MvtTile {
     features.foreach { f =>
       val tags = f.properties.flatMap { case (k, v) =>
         val ki = keyIdx.getOrElseUpdate(k, keyIdx.size)
-        if (v == null) Nil
+        if (v == null) Nil // reference drops nil-valued tags (feature.go:379)
         else {
           val vi = valIdx.getOrElseUpdate(v, valIdx.size)
           Seq(ki.toLong, vi.toLong)
@@ -188,12 +152,19 @@ object MvtTile {
     w.result()
   }
 
-  /** Tile assembly from pre-encoded layer bytes (streaming path). */
+  /** Tile: repeated Layer layers = 3, from pre-encoded layer bytes. */
   def encodeTileFromLayerBytes(layerBytes: IndexedSeq[Array[Byte]]): Array[Byte] = {
     val w = new Writer
     layerBytes.foreach(b => w.bytesField(3, b))
     w.result()
   }
+
+  /** the [[Layer]] form (what `decodeTile` returns) of `encodeLayerStream`. */
+  def encodeLayer(layer: Layer): Array[Byte] =
+    encodeLayerStream(layer.name, layer.features.iterator, layer.extent, layer.version)
+
+  def encodeTile(layers: IndexedSeq[Layer]): Array[Byte] =
+    encodeTileFromLayerBytes(layers.map(encodeLayer))
 
   // ---- decode (reference encoding/mvt/decode.go:29-84) ----
 

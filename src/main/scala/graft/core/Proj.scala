@@ -2,7 +2,7 @@ package graft.core
 
 import graft.core.Geom.Pt
 
-/** Map projections beyond the built-in 4326 / 3857 / UTM / affine family —
+/** Map projections beyond the built-in 4326 / 3857 / UTM family —
   * the engine's completion of the reference's `Grid{Srid}` CRS hook
   * (slippy/tile_grid.go:98-151). The reference reaches CRSs through its
   * vendored go-spatial/proj, whose public surface is exactly FOUR codes

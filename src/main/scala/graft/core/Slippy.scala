@@ -19,10 +19,13 @@ import graft.core.Geom._
   * (z ≤ 22 ⇒ x,y < 2^22 < 2^29) so Spark can shuffle/join/sort on one
   * long column; the packing preserves the reference's (z, x, y) sort order
   * (tile.go:43-51 Less).
+  *
+  * This is the 4326 grid's math; every other SRID (3857 included) reaches
+  * it through [[TileGrid]], which inverse-projects into it.
   */
 object Slippy {
 
-  val DefaultTileSize = 256
+  final val TileSize = 256
   val Lat4326Max = 85.05112
   val Lon4326Max = 180.0
   val FloatVariance = 0.000001
@@ -33,9 +36,9 @@ object Slippy {
   @inline def deg2rad(d: Double): Double = d * math.Pi / 180
   @inline def rad2deg(r: Double): Double = r * 180 / math.Pi
 
-  /** reference maths.go:75-94 lat2Px (tileSize defaulted). */
-  def lat2Px(z: Int, lat: Double, tileSize: Int = DefaultTileSize): Double = {
-    val worldSize = tileSize.toDouble * n(z)
+  /** reference maths.go:75-94 lat2Px. */
+  def lat2Px(z: Int, lat: Double): Double = {
+    val worldSize = TileSize.toDouble * n(z)
     val radLat = deg2rad(45 + lat / 2)
     val latNormalized = math.log(math.tan(radLat))
     val yPxRaw = (180 - rad2deg(latNormalized)) / 360
@@ -43,24 +46,24 @@ object Slippy {
   }
 
   /** reference maths.go:55-72 lat2Num. */
-  def lat2Num(z: Int, lat: Double, tileSize: Int = DefaultTileSize): Int = {
+  def lat2Num(z: Int, lat: Double): Int = {
     if (lat < -Lat4326Max) return (n(z) - 1).toInt
     if (lat > Lat4326Max) return 0
-    (lat2Px(z, lat, tileSize) / tileSize.toDouble).toInt
+    (lat2Px(z, lat) / TileSize.toDouble).toInt
   }
 
   /** reference maths.go:121-135 lon2Px. */
-  def lon2Px(z: Int, lon: Double, tileSize: Int = DefaultTileSize): Double = {
-    val worldSize = tileSize.toDouble * n(z)
+  def lon2Px(z: Int, lon: Double): Double = {
+    val worldSize = TileSize.toDouble * n(z)
     val xPxRaw = (180 + lon) / 360
     xPxRaw * worldSize + FloatVariance
   }
 
   /** reference maths.go:100-118 lon2Num. */
-  def lon2Num(z: Int, lon: Double, tileSize: Int = DefaultTileSize): Int = {
+  def lon2Num(z: Int, lon: Double): Int = {
     if (lon <= -Lon4326Max) return 0
     if (lon >= Lon4326Max) return (n(z) - 1).toInt
-    (lon2Px(z, lon, tileSize) / tileSize.toDouble).toInt
+    (lon2Px(z, lon) / TileSize.toDouble).toInt
   }
 
   /** reference maths.go:141-146 */
@@ -74,8 +77,17 @@ object Slippy {
 
   // ---- packed cell ids ----
 
-  @inline def pack(z: Int, x: Long, y: Long): Long =
+  /** z outside 0..MaxZoom fails: past z = 29 x and y outgrow their 29 bits
+    * and overwrite the fields above them, and a negative z fills z's field.
+    */
+  @inline def pack(z: Int, x: Long, y: Long): Long = {
+    if (z < 0 || z > MaxZoom) badZoom(z)
     (z.toLong << 58) | (x << 29) | y
+  }
+  // kept out of `pack` so the per-cell path stays small enough to inline
+  private def badZoom(z: Int): Nothing =
+    throw new IllegalArgumentException(s"zoom $z is outside 0..$MaxZoom")
+
   @inline def unpackZ(cell: Long): Int = (cell >>> 58).toInt
   @inline def unpackX(cell: Long): Long = (cell >>> 29) & 0x1FFFFFFFL
   @inline def unpackY(cell: Long): Long = cell & 0x1FFFFFFFL
@@ -133,20 +145,9 @@ object Slippy {
     out.result()
   }
 
-  /** Tile extent in 4326 (reference tile_grid.go:48-58 Extent:
-    * ToNative(t) ∪ ToNative(z, x+1, y+1)).
-    */
-  def tileExtent4326(z: Int, x: Int, y: Int): Extent = {
-    val lon1 = x2deg(z, x); val lat1 = y2deg(z, y)
-    val lon2 = x2deg(z, x + 1); val lat2 = y2deg(z, y + 1)
-    Extent(math.min(lon1, lon2), math.min(lat1, lat2),
-           math.max(lon1, lon2), math.max(lat1, lat2))
-  }
-
-  // ---- EPSG:3857 (spherical web-mercator) grid ----
-  // The reference routes non-4326 grids through go-spatial/proj
-  // (tile_grid.go:109-121); we hand-port the spherical Mercator
-  // forward/inverse (the only projection its cmd + tests use).
+  // ---- EPSG:3857 (spherical web-mercator) ----
+  // The spherical Mercator forward/inverse behind Projection.Epsg3857; its
+  // grid is TileGrid.WebMercator.
 
   val EarthRadius = 6378137.0
 
@@ -164,41 +165,8 @@ object Slippy {
     (lon, lat)
   }
 
-  /** FromNative for the 3857 grid (reference tile_grid.go:96-108:
-    * inverse-project to 4326 then the shared lon2Num/lat2Num).
-    */
-  def cellAt3857(z: Int, mx: Double, my: Double): Long = {
-    val (lon, lat) = mercToLonLat(mx, my)
-    cellAt(z, lon, lat)
-  }
-
   /** tile extent in web-mercator meters. */
-  def tileExtent3857(z: Int, x: Int, y: Int): Extent = {
-    val e = tileExtent4326(z, x, y)
-    val (minx, miny) = lonLatToMerc(e.minx, e.miny)
-    val (maxx, maxy) = lonLatToMerc(e.maxx, e.maxy)
-    Extent(math.min(minx, maxx), math.min(miny, maxy),
-           math.max(minx, maxx), math.max(miny, maxy))
-  }
-
-  /** FromBounds over the 3857 grid (corner cells normalized, dense loop). */
-  def fromBounds3857(z: Int, minX: Double, minY: Double,
-                     maxX: Double, maxY: Double): IndexedSeq[Long] = {
-    val c1 = cellAt3857(z, minX, minY)
-    val c2 = cellAt3857(z, maxX, maxY)
-    val (x1, x2) = (unpackX(c1), unpackX(c2))
-    val (y1, y2) = (unpackY(c1), unpackY(c2))
-    val (lox, hix) = (math.min(x1, x2), math.max(x1, x2))
-    val (loy, hiy) = (math.min(y1, y2), math.max(y1, y2))
-    val out = Vector.newBuilder[Long]
-    var x = lox
-    while (x <= hix) {
-      var y = loy
-      while (y <= hiy) { out += pack(z, x, y); y += 1 }
-      x += 1
-    }
-    out.result()
-  }
+  def tileExtent3857(z: Int, x: Int, y: Int): Extent = TileGrid.WebMercator.extent(z, x, y)
 
   /** reference spherical/extent.go:11-39 — lat/lon bbox honoring the
     * antimeridian: the west-most point goes first when the pair spans more

@@ -4,14 +4,13 @@ import graft.core.Geom._
 
 /** Arbitrary-SRID tile gridder (reference slippy/tile_grid.go:98-151
   * `Grid{Srid}`): FromNative = project the native point back to 4326
-  * (proj.Inverse) then the shared lon2Num/lat2Num tile math; ToNative =
-  * x2deg/y2deg then project 4326 → native (proj.Convert); Extent =
-  * ToNative(t) ∪ ToNative(z, x+1, y+1). The reference delegates the
-  * projection pair to go-spatial/proj; here it is a first-class trait so
-  * any user SRID with a forward/inverse pair gets the full grid — the
-  * built-ins are 4326 (identity), 3857 (spherical mercator, hand-ported
-  * in Slippy), and a parameterized affine family standing in for
-  * proj4-style planar CRSs.
+  * (proj.Inverse) then the shared lon2Num/lat2Num tile math in Slippy;
+  * ToNative = x2deg/y2deg then project 4326 → native (proj.Convert);
+  * Extent = ToNative(t) ∪ ToNative(z, x+1, y+1). The reference delegates
+  * the projection pair to go-spatial/proj; here it is a first-class trait
+  * so any SRID with a forward/inverse pair gets the full grid: 4326
+  * (identity), 3857 (spherical mercator), 3395/4087, the UTM zones and the
+  * LCC/TM/Albers CRSs of core/Proj.scala.
   */
 trait Projection extends Serializable {
   def srid: Int
@@ -35,19 +34,6 @@ object Projection {
     def inverse(x: Double, y: Double): Pt = Slippy.mercToLonLat(x, y)
   }
 
-  /** planar affine CRS: native = (ox + sx·lon, oy + sy·lat). Stands in
-    * for any proj4-style linear grid (scaled/offset local systems).
-    */
-  def affine(srid0: Int, sx: Double, sy: Double, ox: Double, oy: Double): Projection = {
-    require(sx != 0 && sy != 0, "singular affine projection")
-    val s0 = srid0
-    new Projection {
-      val srid = s0
-      def forward(lon: Double, lat: Double): Pt = (ox + sx * lon, oy + sy * lat)
-      def inverse(x: Double, y: Double): Pt = ((x - ox) / sx, (y - oy) / sy)
-    }
-  }
-
   /** UTM zone CRS (EPSG:326xx north / 327xx south) — a real CURVED
     * (transverse-mercator) member of the Grid{Srid} family
     * (tile_grid.go:123-151: the reference reaches these through
@@ -55,12 +41,12 @@ object Projection {
     * inverse already in core/Utm.scala:100/141. The zone is pinned, so
     * the projection is a total function of (lon, lat) like any EPSG CRS.
     */
-  def utm(zone: Utm.Zone, ellips: Utm.Ellipsoid = Utm.WGS84): Projection = {
+  def utm(zone: Utm.Zone): Projection = {
     require(zone.isValid, s"invalid UTM zone $zone")
     val z0 = zone
     // the NATO digraph is per-point trig + allocations the projection
     // discards — disable it for the hot tile path (Coord math unchanged)
-    val projEllips = ellips.copy(natoCompatible = false)
+    val projEllips = Utm.WGS84.copy(natoCompatible = false)
     new Projection {
       val srid = (if (z0.isNorthern) 32600 else 32700) + z0.number
       def forward(lon: Double, lat: Double): Pt = {
@@ -68,7 +54,7 @@ object Projection {
         (c.easting, c.northing)
       }
       def inverse(x: Double, y: Double): Pt =
-        Utm.toLngLat(Utm.Coord(y, x, z0), ellips).get
+        Utm.toLngLat(Utm.Coord(y, x, z0)).get
     }
   }
 
@@ -143,14 +129,12 @@ object Projection {
 }
 
 /** the gridder proper — all methods in the projection's native units. */
-final case class TileGrid(projection: Projection,
-                          tileSize: Int = Slippy.DefaultTileSize) {
+final case class TileGrid(projection: Projection) {
 
   /** FromNative (tile_grid.go:109-121): inverse to 4326, shared tile math. */
   def cellAt(z: Int, nx: Double, ny: Double): Long = {
     val (lon, lat) = projection.inverse(nx, ny)
-    Slippy.pack(z, Slippy.lon2Num(z, lon, tileSize).toLong,
-      Slippy.lat2Num(z, lat, tileSize).toLong)
+    Slippy.cellAt(z, lon, lat)
   }
 
   /** ToNative (tile_grid.go:123-131): the tile's upper-left corner. */
@@ -164,28 +148,18 @@ final case class TileGrid(projection: Projection,
     Extent(math.min(x1, x2), math.min(y1, y2), math.max(x1, x2), math.max(y1, y2))
   }
 
-  /** FromBounds (tile.go:111-145 over this grid): corner cells normalized,
-    * dense x/y loop.
+  /** FromBounds (tile.go:111-145 over this grid): the corners in 4326, then
+    * Slippy's cover loop.
     */
   def fromBounds(z: Int, minX: Double, minY: Double,
                  maxX: Double, maxY: Double): IndexedSeq[Long] = {
-    val c1 = cellAt(z, minX, minY)
-    val c2 = cellAt(z, maxX, maxY)
-    val (lox, hix) = {
-      val a = Slippy.unpackX(c1); val b = Slippy.unpackX(c2)
-      (math.min(a, b), math.max(a, b))
-    }
-    val (loy, hiy) = {
-      val a = Slippy.unpackY(c1); val b = Slippy.unpackY(c2)
-      (math.min(a, b), math.max(a, b))
-    }
-    val out = Vector.newBuilder[Long]
-    var x = lox
-    while (x <= hix) {
-      var y = loy
-      while (y <= hiy) { out += Slippy.pack(z, x, y); y += 1 }
-      x += 1
-    }
-    out.result()
+    val (lon1, lat1) = projection.inverse(minX, minY)
+    val (lon2, lat2) = projection.inverse(maxX, maxY)
+    Slippy.fromBounds(z, lon1, lat1, lon2, lat2)
   }
+}
+
+object TileGrid {
+  val Wgs84 = TileGrid(Projection.Epsg4326)
+  val WebMercator = TileGrid(Projection.Epsg3857)
 }

@@ -93,7 +93,7 @@ object WkbKernels {
   def prepareTile(geo: Array[Byte], cell: Long): Array[Byte] = {
     val g = geomOrNull(geo)
     if (g == null) return null
-    val ext = Slippy.tileExtent4326(Slippy.unpackZ(cell),
+    val ext = TileGrid.Wgs84.extent(Slippy.unpackZ(cell),
       Slippy.unpackX(cell).toInt, Slippy.unpackY(cell).toInt)
     Wkb.encode(Mvt.prepareGeo(g, ext))
   }

@@ -119,7 +119,7 @@ object GeomKernels {
 
   def tilesForBounds3857(minX: Double, minY: Double, maxX: Double, maxY: Double,
                          z: Int): ArrayData =
-    longs(Slippy.fromBounds3857(z, minX, minY, maxX, maxY))
+    longs(TileGrid.WebMercator.fromBounds(z, minX, minY, maxX, maxY))
 
   def coverAtLevels(minLon: Double, minLat: Double, maxLon: Double, maxLat: Double,
                     levels: ArrayData): ArrayData =
@@ -127,11 +127,11 @@ object GeomKernels {
       minLon, minLat, maxLon, maxLat))
 
   def tileEnvelope(cell: Long): InternalRow =
-    envRow(Slippy.tileExtent4326(Slippy.unpackZ(cell), Slippy.unpackX(cell).toInt,
+    envRow(TileGrid.Wgs84.extent(Slippy.unpackZ(cell), Slippy.unpackX(cell).toInt,
       Slippy.unpackY(cell).toInt))
 
   def tileExtent3857(z: Int, x: Long, y: Long): InternalRow =
-    envRow(Slippy.tileExtent3857(z, x.toInt, y.toInt))
+    envRow(TileGrid.WebMercator.extent(z, x.toInt, y.toInt))
 
   // geometry transforms
 
@@ -204,7 +204,7 @@ object GeomKernels {
   def mvtPipeline(geo: Array[Byte], z: Int, x: Long, y: Long): InternalRow = {
     val g = geomOrNull(geo)
     if (g == null) return null
-    val ext = Slippy.tileExtent3857(z, x.toInt, y.toInt)
+    val ext = TileGrid.WebMercator.extent(z, x.toInt, y.toInt)
     val webs = (ext.maxx - ext.minx) / 4096.0
     val simp = Simplify.geometry(g, webs)
     val clip = Extent(ext.minx - webs, ext.miny - webs, ext.maxx + webs, ext.maxy + webs)

@@ -101,6 +101,22 @@ class SparkEntrySpec extends AnyFunSuite {
     assert(wkt == "POINT (1 2)")
   }
 
+  test("st_cell_at fails on a zoom the packed cell id cannot hold") {
+    graft.functions.GeomFunctions.register(spark)
+    // z = 30 would carry x and y past their 29-bit fields (st_cell_z read
+    // 31); z = -1 packed as z = 63
+    for (z <- Seq(30, -1)) {
+      val e = intercept[Exception](spark.sql(s"SELECT st_cell_at(179.9D, 0.0D, $z)").collect())
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+      assert(msgs.exists(m => m != null && m.contains(s"zoom $z is outside 0..22")), s"z=$z: $e")
+    }
+    // the deepest zoom with the largest x and y (the clamped corner tile)
+    val r = spark.sql(
+      "SELECT st_cell_z(c), st_cell_x(c), st_cell_y(c) FROM " +
+      "(SELECT st_cell_at(180.0D, -85.06D, 22) AS c)").head()
+    assert((r.getInt(0), r.getLong(1), r.getLong(2)) == ((22, (1L << 22) - 1, (1L << 22) - 1)))
+  }
+
   test("st_project SQL surface: value parity, round-trip, analysis-time SRID check") {
     graft.functions.GeomFunctions.register(spark)
     val r = spark.sql(

@@ -135,9 +135,9 @@ class NeTilesSpec extends AnyFunSuite {
       // don't explode the suite. The cap picks EVENLY-SPREAD cover tiles
       // (a bbox-corner prefix mostly misses the geometry) — deterministic,
       // and noted per the no-silent-caps rule.
-      val cover6 = Slippy.fromBounds3857(6, ext.minx, ext.miny, ext.maxx, ext.maxy)
+      val cover6 = TileGrid.WebMercator.fromBounds(6, ext.minx, ext.miny, ext.maxx, ext.maxy)
       // plus a z8 slice (16x smaller tiles: heavier clipping per feature)
-      val cover8 = Slippy.fromBounds3857(8, ext.minx, ext.miny, ext.maxx, ext.maxy)
+      val cover8 = TileGrid.WebMercator.fromBounds(8, ext.minx, ext.miny, ext.maxx, ext.maxy)
       def spread(cover: IndexedSeq[Long], k: Int): IndexedSeq[Long] =
         if (cover.length <= k) cover
         else (0 until k).map(j => cover(j * (cover.length - 1) / (k - 1))).distinct
@@ -178,7 +178,7 @@ class NeTilesSpec extends AnyFunSuite {
     // production path of st_mvt_pipeline) must agree with the direct calls
     val (name, g) = corpus(11) // a parks polygon: mid-sized
     val ext = Extent.ofGeometry(g).get
-    val cell = Slippy.fromBounds3857(6, ext.minx, ext.miny, ext.maxx, ext.maxy).head
+    val cell = TileGrid.WebMercator.fromBounds(6, ext.minx, ext.miny, ext.maxx, ext.maxy).head
     val z = Slippy.unpackZ(cell); val x = Slippy.unpackX(cell).toInt; val y = Slippy.unpackY(cell).toInt
     val direct = pipeline(g, z, x, y)
     val viaWkb = pipeline(Wkb.decode(Wkb.encode(g)), z, x, y)

@@ -105,7 +105,7 @@ class SlippySpec extends AnyFunSuite {
   }
 
   test("FromBounds in EPSG:3857 matches the 4326 golden fixture (tile_test.go SRID 3857 case)") {
-    val got = fromBounds3857(7, 293518.1886, 6555239.5457, 847533.7696, 7136160.9607)
+    val got = TileGrid.WebMercator.fromBounds(7, 293518.1886, 6555239.5457, 847533.7696, 7136160.9607)
       .map(c => (unpackZ(c), unpackX(c), unpackY(c))).toSet
     val want = loadCoords("tegola_issue_997.coords")
     assert(got == want, s"extra=${got -- want} missing=${want -- got}")
@@ -123,7 +123,7 @@ class SlippySpec extends AnyFunSuite {
     val z = 11
     val (lon, lat) = (-77.035915, 38.889814)
     val c = cellAt(z, lon, lat)
-    val e = tileExtent4326(z, unpackX(c).toInt, unpackY(c).toInt)
+    val e = TileGrid.Wgs84.extent(z, unpackX(c).toInt, unpackY(c).toInt)
     assert(e.containsPoint(lon, lat))
   }
 }
