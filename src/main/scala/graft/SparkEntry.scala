@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
 import graft.functions.GeomFunctions._
 import graft.operators.Spread
@@ -375,7 +374,7 @@ object SparkEntry {
     }),
 
     "q26_sessions" -> ((s, dir) => {
-      graft.streaming.Sessionize.batch(TestTables.read(s, dir, "events"))
+      graft.operators.Sessionize.batch(TestTables.read(s, dir, "events"))
     }),
 
     "q27_media_meta" -> ((s, dir) => {

@@ -2,7 +2,6 @@ package graft.core
 
 import graft.core.Geom._
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 
 /** RFC 7946 GeoJSON geometry encode/decode
   * (reference encoding/geojson/geojson.go:52-446).
@@ -296,19 +295,6 @@ object GeoJson {
   def encodeFeature(f: Feature): String = {
     val b = new StringBuilder(128)
     encodeFeatureInto(b, f)
-    b.toString
-  }
-
-  def encodeFeatureCollection(fs: Seq[Feature]): String = {
-    val b = new StringBuilder(256)
-    b.append("{\"type\":\"FeatureCollection\",\"features\":[")
-    var i = 0
-    fs.foreach { f =>
-      if (i > 0) b.append(',')
-      encodeFeatureInto(b, f)
-      i += 1
-    }
-    b.append("]}")
     b.toString
   }
 

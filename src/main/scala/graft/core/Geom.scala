@@ -125,14 +125,6 @@ object Geom {
     java.lang.Math.copySign(r, v)
   }
 
-  /** reference geom.go:555-566 — power-of-10 rounding, −0→0. */
-  def roundToPrec(v: Double, prec: Int): Double = {
-    if (v == 0.0) return 0.0 // normalizes -0.0 as in the reference
-    if (prec == 0) return roundHalfAway(v)
-    val f = math.pow(10, prec)
-    roundHalfAway(v * f) / f
-  }
-
   /** Bounding box; reference bbox.go. A `None` box is the universe. */
   final case class Extent(minx: Double, miny: Double, maxx: Double, maxy: Double) {
     def xSpan: Double = maxx - minx
@@ -159,14 +151,9 @@ object Geom {
       Some(Extent(nminx, nminy, nmaxx, nmaxy))
     }
 
-    def expandBy(s: Double): Extent = Extent(minx - s, miny - s, maxx + s, maxy + s)
-
     def add(o: Extent): Extent =
       Extent(math.min(minx, o.minx), math.min(miny, o.miny),
              math.max(maxx, o.maxx), math.max(maxy, o.maxy))
-    def addPoint(px: Double, py: Double): Extent =
-      Extent(math.min(minx, px), math.min(miny, py),
-             math.max(maxx, px), math.max(maxy, py))
 
     /** 4 CW vertices (reference bbox.go:35-42). */
     def vertices: IndexedSeq[Pt] =
@@ -182,18 +169,13 @@ object Geom {
   }
 
   object Extent {
-    /** reference bbox.go:62-91 — nil extent behaves as ±MaxFloat64. */
-    val Universe: Extent =
-      Extent(-Double.MaxValue, -Double.MaxValue, Double.MaxValue, Double.MaxValue)
-
     def ofPoints(pts: Iterable[Pt]): Option[Extent] = ofPoints(pts.iterator)
 
     def ofPoints(it: Iterator[Pt]): Option[Extent] = {
       if (!it.hasNext) return None
       val h = it.next()
       // scalar min/max fold — one Extent allocated, not one per point
-      // (math.min/max kept for NaN propagation and −0.0 ordering parity
-      // with the former addPoint chain)
+      // (math.min/max for their NaN propagation and −0.0 ordering)
       var mnx = h._1; var mny = h._2; var mxx = h._1; var mxy = h._2
       while (it.hasNext) {
         val p = it.next()

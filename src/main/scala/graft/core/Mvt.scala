@@ -107,8 +107,8 @@ object Mvt {
     override def initialValue(): LongBuf = new LongBuf
   }
 
-  /** Winding.ofLongPoints(yDown=true) over the int64-truncated points,
-    * computed inline (identical FP fold, no tuple vector).
+  /** reference winding/winding.go:176-190 OfInt64Points (yDown=true) over
+    * the int64-truncated points (identical FP fold, no tuple vector).
     */
   private def windingOfTruncatedYDown(pts: IndexedSeq[Pt]): Int = {
     val n = pts.length

@@ -42,12 +42,9 @@ object Planar {
     else cmp.float(pt._2, (m * pt._1) + b)
   }
 
-  /** reference planar/planar.go:66-79 */
-  def isPointOnLineSegment(cmp: Cmp, pt: Pt, seg: Seg): Boolean =
-    seg.bboxContains(pt) && isPointOnLine(cmp, pt, seg.p1, seg.p2)
-
-  /** allocation-free isPointOnLineSegment (no Seg/tuple construction) —
-    * same branch structure as slope + isPointOnLine + bboxContains.
+  /** reference planar/planar.go:66-79 IsPointOnLineSegment, allocation-free
+    * (no Seg/tuple construction) — same branch structure as slope +
+    * isPointOnLine + the segment bbox test.
     */
   def isPointOnLineSegmentXY(cmp: Cmp, px: Double, py: Double,
                              x1: Double, y1: Double, x2: Double, y2: Double): Boolean = {
@@ -65,13 +62,6 @@ object Planar {
         cmp.float(py, (m * px) + b)
       }
     }
-  }
-
-  /** reference planar/planar.go:83-92 */
-  def pointOnLineAt(l: Seg, distance: Double): Pt = {
-    val lineDist = math.sqrt(l.lengthSquared)
-    val ratio = distance / lineDist
-    (l.x1 + (ratio * (l.x2 - l.x1)), l.y1 + (ratio * (l.y2 - l.y1)))
   }
 
   /** reference planar/distance.go:19-24 */
@@ -114,72 +104,6 @@ object Planar {
     (cx / (3 * aa), cy / (3 * aa))
   }
 
-  /** reference planar/line_intersect.go:18-42 */
-  def areLinesColinear(l1: Seg, l2: Seg): Boolean = {
-    val denom = ((l1.x1 - l1.x2) * (l2.y1 - l2.y2)) - ((l1.y1 - l1.y2) * (l2.x1 - l2.x2))
-    if (denom != 0) return false
-    val (xmin, xmax) = if (l1.x1 > l1.x2) (l1.x2, l1.x1) else (l1.x1, l1.x2)
-    val (ymin, ymax) = if (l1.y1 > l1.y2) (l1.y2, l1.y1) else (l1.y1, l1.y2)
-    (xmin <= l2.x1 && l2.x1 <= xmax && ymin <= l2.y1 && l2.y1 <= ymax) ||
-      (xmin <= l2.x2 && l2.x2 <= xmax && ymin <= l2.y2 && l2.y2 <= ymax)
-  }
-
-  /** reference planar/line_intersect.go:47-71 — infinite-line intersection
-    * (two-point form); −0→0 normalization.
-    */
-  def lineIntersect(l1: Seg, l2: Seg): Option[Pt] = {
-    val denom = ((l1.x1 - l1.x2) * (l2.y1 - l2.y2)) - ((l1.y1 - l1.y2) * (l2.x1 - l2.x2))
-    if (denom == 0) return None
-    val cross1 = (l1.x1 * l1.y2) - (l1.y1 * l1.x2)
-    val cross2 = (l2.x1 * l2.y2) - (l2.y1 * l2.x2)
-    val xnom = (cross1 * (l2.x1 - l2.x2)) - ((l1.x1 - l1.x2) * cross2)
-    val ynom = (cross1 * (l2.y1 - l2.y2)) - ((l1.y1 - l1.y2) * cross2)
-    var xx = xnom / denom
-    var yy = ynom / denom
-    if (xx == 0.0) xx = 0.0 // normalize -0.0
-    if (yy == 0.0) yy = 0.0
-    Some((xx, yy))
-  }
-
-  /** reference planar/line_intersect.go:74-135 LineIntersectBigFloat —
-    * the same formula evaluated in 110-bit binary floating point, every
-    * intermediate rounded like Go's big.Float ops. The parallel test
-    * mirrors the reference exactly: the 110-bit denominator converted to
-    * float64 and compared to 0.
-    */
-  def lineIntersectBigFloat(l1: Seg, l2: Seg): Option[(BigFloat, BigFloat)] = {
-    val P = 110 // planar.PrecisionLevelBigFloat
-    def bf(d: Double) = BigFloat.ofDouble(d, P)
-    val x1 = bf(l1.x1); val y1 = bf(l1.y1); val x2 = bf(l1.x2); val y2 = bf(l1.y2)
-    val x3 = bf(l2.x1); val y3 = bf(l2.y1); val x4 = bf(l2.x2); val y4 = bf(l2.y2)
-    val deltaX12 = x1.sub(x2, P)
-    val deltaX34 = x3.sub(x4, P)
-    val deltaY12 = y1.sub(y2, P)
-    val deltaY34 = y3.sub(y4, P)
-    val denom = deltaX12.mul(deltaY34, P).sub(deltaY12.mul(deltaX34, P), P)
-    if (denom.toDouble == 0.0) return None
-    val cross1 = x1.mul(y2, P).sub(y1.mul(x2, P), P)
-    val cross2 = x3.mul(y4, P).sub(y3.mul(x4, P), P)
-    val xnom = cross1.mul(deltaX34, P).sub(deltaX12.mul(cross2, P), P)
-    val ynom = cross1.mul(deltaY34, P).sub(deltaY12.mul(cross2, P), P)
-    Some((xnom.quo(denom, P), ynom.quo(denom, P)))
-  }
-
-  /** reference line.go:52-81 ContainsPointBigFloat — segment bbox test at
-    * 20-bit precision (geom.PrecisionLevelBigFloat), endpoints included.
-    */
-  def containsPointBigFloat(l: Seg, pt: (BigFloat, BigFloat)): Boolean = {
-    val P = 20 // geom.PrecisionLevelBigFloat
-    var pminx = l.x1; var pmaxx = l.x2
-    if (pminx > pmaxx) { val t = pminx; pminx = pmaxx; pmaxx = t }
-    var pminy = l.y1; var pmaxy = l.y2
-    if (pminy > pmaxy) { val t = pminy; pminy = pmaxy; pmaxy = t }
-    val minx = BigFloat.ofDouble(pminx, P); val maxx = BigFloat.ofDouble(pmaxx, P)
-    val miny = BigFloat.ofDouble(pminy, P); val maxy = BigFloat.ofDouble(pmaxy, P)
-    val px = pt._1.setPrec(P); val py = pt._2.setPrec(P)
-    px.cmp(minx) >= 0 && px.cmp(maxx) <= 0 && py.cmp(miny) >= 0 && py.cmp(maxy) <= 0
-  }
-
   /** reference planar/line_intersect.go:141-178 SegmentIntersect:
     * returns the infinite-line intersection point plus whether it lies on
     * both segments (u, t ∈ [0, 1]).
@@ -208,79 +132,7 @@ object Planar {
     ((bx, by), u >= 0.0 && u <= 1.0 && t >= 0.0 && t <= 1.0)
   }
 
-  /** segmentIntersect allocating the point ONLY on a hit (null otherwise) —
-    * the sweep tests far more pairs than it confirms, and the per-test
-    * ((0,0), false) tuple was a measured allocation source. Identical FP
-    * ops to segmentIntersect.
-    */
-  def segmentIntersectOrNull(l1: Seg, l2: Seg): Pt = {
-    val deltaX12 = l1.x1 - l1.x2
-    val deltaX13 = l1.x1 - l2.x1
-    val deltaX34 = l2.x1 - l2.x2
-    val deltaY12 = l1.y1 - l1.y2
-    val deltaY13 = l1.y1 - l2.y1
-    val deltaY34 = l2.y1 - l2.y2
-    val denom = (deltaX12 * deltaY34) - (deltaY12 * deltaX34)
-    if (denom == 0) return null
-
-    val t = ((deltaX13 * deltaY34) - (deltaY13 * deltaX34)) / denom
-    val u = -((deltaX12 * deltaY13) - (deltaY12 * deltaX13)) / denom
-    if (!(u >= 0.0 && u <= 1.0 && t >= 0.0 && t <= 1.0)) return null
-
-    val cross1 = (l1.x1 * l1.y2) - (l1.y1 * l1.x2)
-    val cross2 = (l2.x1 * l2.y2) - (l2.y1 * l2.x2)
-    val xnom = (cross1 * deltaX34) - (deltaX12 * cross2)
-    val ynom = (cross1 * deltaY34) - (deltaY12 * cross2)
-    var bx = xnom / denom
-    var by = ynom / denom
-    if (bx == 0.0) bx = 0.0
-    if (by == 0.0) by = 0.0
-    (bx, by)
-  }
-
-  /** reference planar/line_helpers.go:10-16 — canonical segment direction
-    * (least point first by exact x-then-y order).
-    */
-  def normalizeLine(l: Seg): Seg =
-    if (!Cmp.pointLess(l.p1, l.p2)) Seg(l.p2, l.p1) else l
-
-  /** reference planar/line_helpers.go:29-40 NormalizeUniqueLines —
-    * canonicalize, sort by XY, dedupe (tolerance equality).
-    */
-  def normalizeUniqueLines(lines: IndexedSeq[Seg]): IndexedSeq[Seg] = {
-    val cmp = Cmp.Default
-    val normed = lines.map(normalizeLine).sortWith { (a, b) =>
-      if (!cmp.pointEqual(a.p1, b.p1)) Cmp.pointLess(a.p1, b.p1)
-      else Cmp.pointLess(a.p2, b.p2)
-    }
-    val out = Vector.newBuilder[Seg]
-    var i = 0
-    while (i < normed.length) {
-      if (i == 0 || !(cmp.pointEqual(normed(i).p1, normed(i - 1).p1) &&
-          cmp.pointEqual(normed(i).p2, normed(i - 1).p2)))
-        out += normed(i)
-      i += 1
-    }
-    out.result()
-  }
-
-  /** reference triangle.go:74-77 — 2× signed area, CCW-positive. */
-  def triangleArea2(a: Pt, b: Pt, c: Pt): Double =
-    (b._1 - a._1) * (c._2 - a._2) - (c._1 - a._1) * (b._2 - a._2)
-
   /** reference triangle.go:34-38 — centroid = mean of 3 vertices. */
   def triangleCenter(a: Pt, b: Pt, c: Pt): Pt =
     ((a._1 + b._1 + c._1) / 3, (a._2 + b._2 + c._2) / 3)
-
-  /** reference point.go:91-102 WithinCircle — the Guibas–Stolfi (1985,
-    * p.107) in-circumcircle determinant via oriented triangle areas;
-    * strictly inside (> 0). The reference's CDT uses the
-    * CircleFromPoints+ContainsPoint pair instead, leaving this API
-    * consumer-free there; ported for surface completeness.
-    */
-  def withinCircle(p: Pt, a: Pt, b: Pt, c: Pt): Boolean =
-    (a._1 * a._1 + a._2 * a._2) * triangleArea2(b, c, p) -
-      (b._1 * b._1 + b._2 * b._2) * triangleArea2(a, c, p) +
-      (c._1 * c._1 + c._2 * c._2) * triangleArea2(a, b, p) -
-      (p._1 * p._1 + p._2 * p._2) * triangleArea2(a, b, c) > 0
 }

@@ -17,8 +17,6 @@ import scala.collection.mutable
   */
 object PseudoPolygon {
 
-  private val cmp = Cmp.HiCmp
-
   /** edgemap.go: set of boundary edges keyed by the normalized line
     * (GREATER point first — edgemap.go:31-35 normalizeLine).
     */

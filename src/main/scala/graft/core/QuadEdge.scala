@@ -35,12 +35,9 @@ object QuadEdge {
     def sym: Edge = if (num < 2) qe(num + 2) else qe(num - 2)
     def oNext: Edge = next
     def oPrev: Edge = rot.oNext.rot
-    def dNext: Edge = sym.oNext.sym
     def dPrev: Edge = invRot.oNext.invRot
     def lNext: Edge = invRot.oNext.rot
     def lPrev: Edge = oNext.sym
-    def rNext: Edge = rot.oNext.invRot
-    def rPrev: Edge = sym.oNext
 
     def asSeg: Seg = Seg(orig, dest)
 
@@ -61,15 +58,6 @@ object QuadEdge {
       null
     }
 
-    def walkAllONext(fn: Edge => Boolean): Unit = {
-      val seen = new java.util.IdentityHashMap[Array[Edge], Boolean]()
-      var e = this
-      while (e != null && !seen.containsKey(e.qe)) {
-        if (!fn(e)) return
-        seen.put(e.qe, true)
-        e = e.oNext
-      }
-    }
   }
 
   // ---- per-thread quad-group pool ----

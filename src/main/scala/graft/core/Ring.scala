@@ -54,7 +54,7 @@ final class Ring private (n: Int,
     var i = 0
     while (i < n) {
       val sx1 = x1s(i); val sy1 = y1s(i); val sx2 = x2s(i); val sy2 = y2s(i)
-      // areLinesColinear(ray, seg) inline
+      // reference AreLinesColinear(ray, seg), line_intersect.go:18-42
       val cdenom = ((rx1 - rx2) * (sy1 - sy2)) - ((ry1 - ry2) * (sx1 - sx2))
       if (cdenom == 0) {
         val xmin = if (rx1 > rx2) rx2 else rx1; val xmax = if (rx1 > rx2) rx1 else rx2
@@ -220,14 +220,6 @@ object PolygonHitmap {
   }
 
   def ofPolygon(rings: IndexedSeq[IndexedSeq[Pt]]): PolygonHitmap = apply(Vector(rings))
-}
-
-/** reference hitmap/hitmap.go:22-29 Always — fixed label everywhere. */
-final case class AlwaysHitmap(inside: Boolean) extends Hitmap {
-  def labelInside(pt: Pt): Boolean = inside
-  def extent: Extent = Extent(Double.NegativeInfinity, Double.NegativeInfinity,
-    Double.PositiveInfinity, Double.PositiveInfinity)
-  def area: Double = Double.PositiveInfinity
 }
 
 /** reference hitmap/hitmap.go:42-77 OrderedHM — first Inside wins; extent

@@ -88,6 +88,18 @@ object Slippy {
   private def badZoom(z: Int): Nothing =
     throw new IllegalArgumentException(s"zoom $z is outside 0..$MaxZoom")
 
+  /** fails unless z is in 0..MaxZoom and x and y are in 0..2^z − 1: a
+    * caller's tile index, checked as a Long before any narrowing to Int.
+    */
+  @inline def checkTile(z: Int, x: Long, y: Long): Unit = {
+    if (z < 0 || z > MaxZoom) badZoom(z)
+    val n = 1L << z
+    if (x < 0 || x >= n || y < 0 || y >= n) badTile(z, x, y)
+  }
+  private def badTile(z: Int, x: Long, y: Long): Nothing =
+    throw new IllegalArgumentException(
+      s"tile ($x, $y) is outside 0..${(1L << z) - 1} at zoom $z")
+
   @inline def unpackZ(cell: Long): Int = (cell >>> 58).toInt
   @inline def unpackX(cell: Long): Long = (cell >>> 29) & 0x1FFFFFFFL
   @inline def unpackY(cell: Long): Long = cell & 0x1FFFFFFFL
@@ -167,21 +179,6 @@ object Slippy {
 
   /** tile extent in web-mercator meters. */
   def tileExtent3857(z: Int, x: Int, y: Int): Extent = TileGrid.WebMercator.extent(z, x, y)
-
-  /** reference spherical/extent.go:11-39 — lat/lon bbox honoring the
-    * antimeridian: the west-most point goes first when the pair spans more
-    * than 180° of longitude; stored as (west, south, east, north).
-    */
-  def sphericalHull(ax0: Double, ay: Double, bx0: Double, by: Double): Extent = {
-    var ax = ax0; var bx = bx0
-    if (math.abs(ax - bx) > 180.0) {
-      if (ax < bx) { val t = ax; ax = bx; bx = t }
-    } else {
-      if (ax > bx) { val t = ax; ax = bx; bx = t }
-    }
-    val (south, north) = if (ay < by) (ay, by) else (by, ay)
-    Extent(ax, south, bx, north)
-  }
 
   // ---- adaptive (bounded) bbox covers ----
   //

@@ -200,35 +200,6 @@ object Subdivision {
     Some((x, y, math.sqrt(vA * vA + vB * vB)))
   }
 
-  /** reference circle.go:128-138 Circle.AsPoints — k points on the circle
-    * at angles 2πi/k starting at angle 0 (east); k < 3 falls back to 30.
-    */
-  def circleAsPoints(c: (Double, Double, Double), k0: Int): IndexedSeq[Pt] = {
-    val k = if (k0 < 3) 30 else k0
-    (0 until k).map { i =>
-      val t = (2 * math.Pi) * (i.toDouble / k.toDouble)
-      (c._1 + c._3 * math.cos(t), c._2 + c._3 * math.sin(t))
-    }
-  }
-
-  /** reference circle.go:140-147 Circle.AsLineString. */
-  def circleAsLineString(c: (Double, Double, Double), k: Int): IndexedSeq[Pt] =
-    circleAsPoints(c, k)
-
-  /** reference circle.go:151-165 Circle.AsSegments — segment i runs from
-    * point i−1 (wrapping) to point i, so the first segment is the CLOSING
-    * edge, mirroring the ring-closing-edge-first convention. Quirk kept:
-    * the wrap index uses the CALLER's k, not the defaulted one, so k∈{1,2}
-    * wraps to pts(k−1) and k=0 throws (the reference indexes pts[-1]).
-    */
-  def circleAsSegments(c: (Double, Double, Double), k0: Int): IndexedSeq[Seg] = {
-    val pts = circleAsPoints(c, k0)
-    pts.indices.map { i =>
-      val j = if (i - 1 < 0) k0 - 1 else i - 1
-      Seg(pts(j), pts(i))
-    }
-  }
-
   /** reference circle.go:119-126 ContainsPoint (1e-9 tolerance). */
   def circleContainsPoint(c: (Double, Double, Double), pt: Pt): Boolean = {
     val v1 = c._1 - pt._1; val v2 = c._2 - pt._2
@@ -429,12 +400,9 @@ object Subdivision {
     }
   }
 
-  def isFramePoint(frame: (Pt, Pt, Pt), pts: Pt*): Boolean =
-    pts.exists(p => qcmp.pointEqual(p, frame._1) || qcmp.pointEqual(p, frame._2) ||
-      qcmp.pointEqual(p, frame._3))
-
-  /** varargs-free isFramePoint for the per-triangle hot path (the Pt*
-    * WrappedArray was a measured allocation source).
+  /** reference IsFramePoint over a triangle's three vertices, without
+    * varargs for the per-triangle hot path (the Pt* WrappedArray was a
+    * measured allocation source).
     */
   def isFramePoint3(frame: (Pt, Pt, Pt), a: Pt, b: Pt, c: Pt): Boolean = {
     @inline def isF(p: Pt): Boolean =

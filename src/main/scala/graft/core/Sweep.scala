@@ -136,7 +136,8 @@ object Sweep {
               matchStart || matchEnd
             }
             if (!skip) {
-              // segmentIntersectOrNull(seg(e), seg(other)) inline over arrays
+              // Planar.segmentIntersect(seg(e), seg(other)) inline over arrays,
+              // the point built only on a hit
               val deltaX12 = sx1(e) - sx2(e)
               val deltaX13 = sx1(e) - sx1(other)
               val deltaX34 = sx1(other) - sx2(other)

@@ -18,7 +18,6 @@ object Utm {
 
   val WGS84: Ellipsoid = Ellipsoid("WGS_84", 6378137, 0.00669438, natoCompatible = true)
   val Clarke1866: Ellipsoid = Ellipsoid("CLARKE_1866", 6378206, 0.006768658)
-  val Airy: Ellipsoid = Ellipsoid("AIRY", 6377563, 0.00667054)
 
   final case class Zone(number: Int, letter: Char) {
     def isNorthern: Boolean = letter >= 'N'
@@ -199,34 +198,5 @@ object Utm {
     val lngRad = (d - (1 + 2 * t1 + c1) * d3 / 6 +
       (5 - 2 * c1 + 28 * t1 - c12_3 + 8 * eccPrimeSqr + 24 * t12) * d5 / 120) / phi1Cos
     Some((lngOrigin + toDegree(lngRad), toDegree(latRad)))
-  }
-
-  // ---- DMS helpers (reference planar/coord/coord.go:88-108) ----
-
-  /** coord.go:88-95 toDMS — modf cascade, absolute values. */
-  def toDMS(v: Double): (Long, Long, Double) = {
-    val df = if (v < 0) math.ceil(v) else math.floor(v) // Go math.Modf int part
-    var frac = v - df
-    val mf = if (frac < 0) math.ceil(60.0 * frac) else math.floor(60.0 * frac)
-    frac = 60.0 * frac - mf
-    (math.abs(df).toLong, math.abs(mf).toLong, math.abs(60.0 * frac))
-  }
-
-  final case class DMS(degree: Long, minute: Long, second: Double, hemisphere: Char) {
-    /** coord.go:106-108 — Go %f prints 6 decimal places. */
-    override def toString: String =
-      f"""$degree%d°$minute%d'$second%f"$hemisphere%c"""
-  }
-
-  /** coord.go:39-52 LatAsDMS. */
-  def latAsDMS(lat: Double): DMS = {
-    val (d, m, s) = toDMS(lat)
-    DMS(d, m, s, if (lat < 0) 'S' else 'N')
-  }
-
-  /** coord.go:55-67 LngAsDMS. */
-  def lngAsDMS(lng: Double): DMS = {
-    val (d, m, s) = toDMS(lng)
-    DMS(d, m, s, if (lng < 0) 'W' else 'E')
   }
 }

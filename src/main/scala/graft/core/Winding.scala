@@ -95,30 +95,6 @@ object Winding {
     else mul
   }
 
-  /** reference winding/winding.go:176-190 OfInt64Points (MVT path:
-    * winding computed AFTER int64 truncation).
-    */
-  def ofLongPoints(yPositiveDown: Boolean, pts: IndexedSeq[(Long, Long)]): Int = {
-    if (pts.length < 3) return Colinear
-    val mul = if (yPositiveDown) -1 else 1
-    val p0 = pts(0)
-    val p0x = p0._1.toDouble; val p0y = p0._2.toDouble
-    var sum = 0.0
-    var li = pts.length - 1
-    var i = 0
-    while (i < pts.length) {
-      val lp = pts(li); val cp = pts(i)
-      val lx = lp._1.toDouble - p0x; val ly = lp._2.toDouble - p0y
-      val cx = cp._1.toDouble - p0x; val cy = cp._2.toDouble - p0y
-      sum += (lx * cy) - (cx * ly)
-      li = i
-      i += 1
-    }
-    if (sum == 0.0) Colinear
-    else if (java.lang.Double.doubleToRawLongBits(sum) < 0) -mul
-    else mul
-  }
-
   /** reference winding/winding.go:203-236 RectifyPolygon:
     * ring 0 forced clockwise, others counter-clockwise; colinear rings are
     * dropped; a colinear ring 0 nullifies the polygon.

@@ -50,17 +50,6 @@ object Wkb {
     buf.array()
   }
 
-  /** EWKB encode (reference wkb EncodeBytesSRID): a non-zero SRID sets the
-    * 0x20000000 flag on the TOP-LEVEL type word and writes the srid int32
-    * right after it; nested geometries stay plain.
-    */
-  def encodeSrid(srid: Int, g: Geometry): Array[Byte] = {
-    if (srid == 0) return encode(g)
-    val buf = ByteBuffer.allocate(sizeOf(g) + 4).order(ByteOrder.LITTLE_ENDIAN)
-    write(buf, g, srid)
-    buf.array()
-  }
-
   private def writePts(buf: ByteBuffer, pts: IndexedSeq[Pt]): Unit = {
     var i = 0
     while (i < pts.length) {

@@ -33,8 +33,6 @@ object Wkt {
     // Go 'g': exponent format is "1.5e+07"
     val Array(mant, ex) = s.split("E")
     val exp = ex.toInt
-    val digits = mant.replace("-", "").replace(".", "").reverse.dropWhile(_ == '0').reverse
-    val ndigits = digits.length
     // plain decimal when -4 <= exp < 21 (Go 'g' threshold for shortest)
     if (exp >= -4 && exp < 21) {
       java.math.BigDecimal.valueOf(v).stripTrailingZeros.toPlainString

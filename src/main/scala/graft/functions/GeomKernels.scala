@@ -130,8 +130,10 @@ object GeomKernels {
     envRow(TileGrid.Wgs84.extent(Slippy.unpackZ(cell), Slippy.unpackX(cell).toInt,
       Slippy.unpackY(cell).toInt))
 
-  def tileExtent3857(z: Int, x: Long, y: Long): InternalRow =
+  def tileExtent3857(z: Int, x: Long, y: Long): InternalRow = {
+    Slippy.checkTile(z, x, y)
     envRow(TileGrid.WebMercator.extent(z, x.toInt, y.toInt))
+  }
 
   // geometry transforms
 

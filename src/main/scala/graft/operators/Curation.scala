@@ -281,7 +281,6 @@ object Curation {
     * so no key is hotter than one document's distinct grams.
     */
   def repetitionSignals(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val kinds = Seq("w" -> 1, "g2" -> 2, "g3" -> 3)
     // the n-gram generator + per-unit hash agg is the hot map stage —
     // spread it off the scan-split count (no-op at scale)
     val base = Spread.forKernels(docs).select(col(idCol).as("doc"),

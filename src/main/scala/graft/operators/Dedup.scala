@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.GeomFunctions._
@@ -70,124 +70,6 @@ object Dedup {
             (x, y) => when(x === y, 1).otherwise(0)),
           lit(0), (acc, x) => acc + x).cast("double") / numPerms).as("est_jaccard"))
       .filter(col("est_jaccard") >= threshold)
-  }
-
-  /** Streaming exact dedup: first-seen-wins on the content hash over an
-    * unbounded stream — Spark's stateful dropDuplicates keyed by md5.
-    * With `withWatermark` + the event-time column in the key-scope,
-    * dedup state EVICTS once the watermark passes (bounded by the delay
-    * window, never by stream length — the 100 TB/day shape); without a
-    * watermark, state grows with distinct keys (exact global dedup,
-    * callers choose). Works identically on a bounded frame, which the
-    * spec uses for stream/batch parity.
-    */
-  def exactStreaming(docs: DataFrame, idCol: String, textCol: String,
-                     tsCol: Option[String] = None,
-                     watermarkDelay: String = "0 seconds"): DataFrame = {
-    val hashed = docs.withColumn("text_md5", md5(col(textCol).cast("binary")))
-    tsCol match {
-      case Some(ts) =>
-        // dedup state evicts when the watermark passes a key's first-seen
-        // time + delay (duplicates arriving inside the window collapse;
-        // state never outlives the window)
-        hashed.withWatermark(ts, watermarkDelay)
-          .dropDuplicatesWithinWatermark("text_md5")
-          .select(col("text_md5"), col(idCol).as("keeper_id"), col(ts))
-      case None =>
-        hashed.dropDuplicates("text_md5")
-          .select(col("text_md5"), col(idCol).as("keeper_id"))
-    }
-  }
-
-  /** per-bucket LSH state: docs that have hit this (band, bhash) bucket. */
-  case class BandArrival(doc: Long, band: Int, bhash: Long, sig: Array[Long])
-  case class BucketState(docs: List[(Long, Array[Long])], dropped: Long)
-  case class StreamPair(doc_a: Long, doc_b: Long, est_jaccard: Double)
-
-  /** Streaming near-dup pairs: the batch LSH design run incrementally.
-    * Arrivals are MinHash-signed and band-exploded MAP-SIDE (stateless),
-    * then matched against per-bucket state via flatMapGroupsWithState
-    * keyed by (band, bhash) — each new doc pairs only with docs already
-    * seen in ITS buckets, so candidate volume stays quadratic-per-bucket
-    * exactly like the batch shape, and the one shuffle is the bucket key.
-    * The first-shared-band dedupe carries over verbatim: both signatures
-    * are in hand, so a pair is emitted only from the lowest band where
-    * they collide — once across the whole stream.
-    *
-    * State: each bucket holds its (doc, sig) list. Without eviction that
-    * grows with the DISTINCT docs per bucket (the same contract as
-    * `exactStreaming` without a watermark); `maxBucket` hard-caps a
-    * pathological bucket (identical boilerplate repeated forever) by
-    * dropping new entries and COUNTING the drops in state.
-    *
-    * Cap-loss contract (read before lowering maxBucket): a doc dropped
-    * from a capped bucket loses its pairs AT that band, and — because the
-    * first-shared-band dedupe is computed from SIGNATURES, not residency —
-    * a pair whose first shared band is the capped one is also suppressed
-    * at later shared bands where both docs ARE resident. Every such loss
-    * traces to a counted drop in the capping bucket (nothing degrades
-    * without incrementing `dropped`), but the count is a lower bound on
-    * lost pairs, not an exact tally. At the default cap this needs a
-    * bucket with 4096+ distinct near-identical docs — i.e. the exact
-    * boilerplate flood the cap exists to survive. Set
-    * `maxBucket = Int.MaxValue` for loss-free (unbounded-state) matching.
-    *
-    * SEEING cap-loss (round-5 verdict #8): pass `dropCounter` (a
-    * registered LongAccumulator) and every drop increments it as it
-    * happens — the operational signal a production run watches/alerts
-    * on, visible without reading any bucket state. Accumulator counts
-    * are at-least-once under micro-batch retry (Spark replays the state
-    * function); the AUTHORITATIVE per-bucket tally remains
-    * `BucketState.dropped`, which is exactly-once because it rides the
-    * checkpointed state.
-    */
-  def nearDupPairsStreaming(docs: DataFrame, idCol: String, textCol: String,
-                            bands: Int = 4, rowsPerBand: Int = 4,
-                            threshold: Double = 0.5,
-                            maxBucket: Int = 4096,
-                            dropCounter: Option[org.apache.spark.util.LongAccumulator] = None)
-      : Dataset[StreamPair] = {
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val numPerms = bands * rowsPerBand
-    val prime = TextKernels.Prime
-    def bh(sig: Array[Long], b: Int): Long =
-      (0 until rowsPerBand).map(r => sig(b * rowsPerBand + r))
-        .reduce((acc, x) => (acc * 31 + x) % prime)
-    val banded = docs
-      .select(col(idCol).as("doc"), minhash(col(textCol), lit(numPerms)).as("sig"))
-      .select(col("doc"), col("sig"),
-        posexplode(array((0 until bands).map(b => bandHash(col("sig"), b, rowsPerBand)): _*))
-          .as(Seq("band", "bhash")))
-      .as[BandArrival]
-    banded.groupByKey(a => (a.band, a.bhash))
-      .flatMapGroupsWithState[BucketState, StreamPair](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        case ((band, _), arrivals, state) =>
-          val st = state.getOption.getOrElse(BucketState(Nil, 0L))
-          var known = st.docs
-          var dropped = st.dropped
-          val out = List.newBuilder[StreamPair]
-          // doc-id order makes same-batch emission deterministic
-          for (a <- arrivals.toSeq.sortBy(_.doc)) {
-            if (!known.exists(_._1 == a.doc)) {
-              for ((d, dsig) <- known) {
-                val lo = math.min(a.doc, d); val hi = math.max(a.doc, d)
-                val first = (0 until band).forall(bp => bh(a.sig, bp) != bh(dsig, bp))
-                if (first) {
-                  val eq = (0 until numPerms).count(i => a.sig(i) == dsig(i))
-                  val est = eq.toDouble / numPerms
-                  if (est >= threshold) out += StreamPair(lo, hi, est)
-                }
-              }
-              if (known.length < maxBucket) known = (a.doc, a.sig) :: known
-              else { dropped += 1; dropCounter.foreach(_.add(1L)) }
-            }
-          }
-          state.update(BucketState(known, dropped))
-          out.result().iterator
-      }
   }
 
   /** Exact n-gram (word 3-shingle) Jaccard near-dup: the classic
@@ -262,7 +144,6 @@ object Dedup {
     */
   def connectedComponents(pairs: DataFrame, aCol: String = "doc_a",
                           bCol: String = "doc_b", maxRounds: Int = 50): DataFrame = {
-    val spark = pairs.sparkSession
     // canonical (a > b) orientation; drop self loops
     var edges = pairs
       .select(greatest(col(aCol), col(bCol)).as("a"), least(col(aCol), col(bCol)).as("b"))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Spatial-locality data layout: Z-order (Morton) clustering of a point
@@ -39,30 +39,5 @@ object Layout {
     }
     spread(grid(lon, 180.0, 360.0))
       .bitwiseOR(shiftleft(spread(grid(lat, 90.0, 180.0)), 1))
-  }
-
-  /** Write `df` Z-ordered on (lonCol, latCol): range-partition by the
-    * Morton key (contiguous key ranges per output file — range, not hash,
-    * or the locality is destroyed across files), sort within partitions,
-    * and cap records per file so footer stats stay fine-grained. Pure
-    * layout: rows and values are unchanged — only scan selectivity is.
-    *
-    * At corpus scale `filesPerRange` rides the range exchange (one
-    * shuffle, the same cost as any repartition) and is paid ONCE at
-    * ingest; every later box/cell/join scan over the table prunes on the
-    * tightened lon/lat footer stats (measured >8× scan-row reduction in
-    * LayoutSpec on a 64-file layout with a 3% box).
-    */
-  def writeZOrdered(df: DataFrame, path: String, lonCol: String, latCol: String,
-                    numFiles: Int, maxRecordsPerFile: Long = 0L): Unit = {
-    val keyed = df.withColumn("__zkey", mortonKey(col(lonCol), col(latCol)))
-    val writer = keyed
-      .repartitionByRange(numFiles, col("__zkey"))
-      .sortWithinPartitions(col("__zkey"))
-      .drop("__zkey")
-      .write.mode("overwrite")
-    (if (maxRecordsPerFile > 0)
-       writer.option("maxRecordsPerFile", maxRecordsPerFile)
-     else writer).parquet(path)
   }
 }

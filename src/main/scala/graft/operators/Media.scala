@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Multimodal-column plumbing: media payloads are opaque `binary` columns
@@ -13,17 +13,8 @@ import org.apache.spark.sql.functions._
   * q48 (deterministic PNGs whose pixel function the DuckDB oracle
   * replays; PNG is lossless, so encode→ImageIO.read→stats must land on
   * the oracle's bits exactly).
-  *
-  * VIDEO/AUDIO codecs are NOT in this container, so the frame-sampled
-  * feature path keeps a clearly-marked deterministic STUB
-  * (hash-derived fake features); the Spark-side shape — schema,
-  * batching, partitioning, typed Dataset plumbing — is real and tested,
-  * and a real codec drops in by replacing `stubDecode` only.
   */
 object Media {
-
-  case class MediaMeta(media_id: Long, n_bytes: Long, width: Int, height: Int, n_frames: Int)
-  case class MediaFeature(media_id: Long, frame: Int, feature: Array[Float])
 
   /** metadata extraction over the binary column — pure column expressions
     * (codegen'd, no decode needed for metadata at scan time).
@@ -35,27 +26,6 @@ object Media {
       (lit(16) + octet_length(col(blobCol)) % 1017).as("width"),
       (lit(16) + (octet_length(col(blobCol)) * 31) % 1017).as("height"),
       (lit(1) + col(idCol).cast("long") % 24).cast("int").as("n_frames"))
-
-  /** STUB decode: deterministic fake per-frame feature vector derived from
-    * the blob bytes. Replace with a real codec (e.g. JNI image decode) —
-    * the mapPartitions batch shape (one decoder init per partition, row
-    * streaming) is the production pattern.
-    */
-  def stubDecode(blob: Array[Byte], frame: Int, dim: Int): Array[Float] = {
-    // ??? real decoder goes here; deterministic fake below
-    val out = new Array[Float](dim)
-    var h = 1125899906842597L
-    var i = 0
-    while (i < math.min(blob.length, 256)) { h = h * 31 + blob(i); i += 1 }
-    h += frame.toLong * 0x9E3779B97F4A7C15L
-    var d = 0
-    while (d < dim) {
-      h ^= (h >>> 33); h *= 0xFF51AFD7ED558CCDL; h ^= (h >>> 33)
-      out(d) = ((h >>> 40).toInt.toFloat / (1 << 23).toFloat) - 1.0f
-      d += 1
-    }
-    out
-  }
 
   // ---- real image decode (javax.imageio — public JDK, offline) ----
 
@@ -182,26 +152,5 @@ object Media {
           }
         }
       }.toDF("media_id", "x", "y", "r", "g", "b")
-  }
-
-  /** frame-sampled feature extraction: one decoder per partition, rows
-    * streamed; emits (media_id, frame, feature[dim]) for every sampled
-    * frame (stride `frameStep`).
-    */
-  def extractFeatures(spark: SparkSession, media: DataFrame, idCol: String,
-                      blobCol: String, dim: Int = 32,
-                      frameStep: Int = 8): Dataset[MediaFeature] = {
-    import spark.implicits._
-    media.select(col(idCol).cast("long"), col(blobCol),
-        (lit(1) + col(idCol).cast("long") % 24).cast("int"))
-      .as[(Long, Array[Byte], Int)]
-      .mapPartitions { rows =>
-        // per-partition decoder init would happen here (stub has none)
-        rows.flatMap { case (id, blob, nFrames) =>
-          (0 until nFrames by frameStep).iterator.map { f =>
-            MediaFeature(id, f, stubDecode(blob, f, dim))
-          }
-        }
-      }
   }
 }

@@ -7,15 +7,13 @@ import org.apache.spark.sql.types.StringType
 
 import graft.functions.GeomFunctions._
 
-/** Raster↔vector tiler: assigns geometries to the slippy tiles they
-  * overlap (reference slippy.FromBounds over the geometry envelope,
-  * tile.go:111-145) and joins vector features to raster media references
-  * addressed by tile.
+/** Tiler: assigns geometries to the slippy tiles they overlap
+  * (reference slippy.FromBounds over the geometry envelope,
+  * tile.go:111-145), encodes MVT tiles and rasterizes points.
   *
   * Scale shape: envelope + tile explosion are per-row expressions (no
-  * shuffle); the groupBy(tile) / join(tile) shuffles on the packed long
-  * cell id, which also sorts in (z, x, y) reference order. Multi-zoom
-  * output is one pass via st_family_at.
+  * shuffle); the groupBy(tile) / repartition(tile) shuffles on the packed
+  * long cell id, which also sorts in (z, x, y) reference order.
   */
 object Tiler {
 
@@ -52,24 +50,6 @@ object Tiler {
   def assignTiles(geoms: DataFrame, idCol: String, z: Int, srid: Int = 4326): DataFrame =
     geoms.withColumn("env", st_envelope(col("geom")))
       .select(col(idCol), cover(grid(srid), z).as("cell"))
-
-  /** per-tile feature counts rolled up across several zooms in one pass:
-    * base assignment at the deepest zoom, ancestors via st_family_at.
-    */
-  def multiZoomCounts(geoms: DataFrame, idCol: String, zooms: Seq[Int]): DataFrame = {
-    val deepest = zooms.max
-    val base = assignTiles(geoms, idCol, deepest)
-    val perZoom = zooms.map { zz =>
-      base.select(col(idCol),
-        element_at(st_family_at(col("cell"), lit(zz)), 1).as("cell"))
-        .distinct() // a geometry may span several children of one ancestor
-    }
-    perZoom.reduce(_ unionByName _)
-      .groupBy(col("cell"))
-      .agg(count(lit(1)).as("n_features"))
-      .select(st_cell_z(col("cell")).as("z"), st_cell_x(col("cell")).as("x"),
-        st_cell_y(col("cell")).as("y"), col("n_features"))
-  }
 
   /** the sink's map side, all per-row expressions and no shuffle: the
     * cover explode carries the geometry column (joining assignTiles back
@@ -193,7 +173,7 @@ object Tiler {
       .agg(count(lit(1)).as("n"))
   }
 
-  /** Vectorize step 1 — horizontal runs: merge adjacent occupied pixels of
+  /** Horizontal runs: merge adjacent occupied pixels of
     * one tile row into [px0, px1] spans (gaps-and-islands: px − row_number
     * is constant within a run). One window + one groupBy, both on the
     * (cell, py) key — integer arithmetic, exactly mirrorable in SQL.
@@ -207,60 +187,5 @@ object Tiler {
       .agg(min(col("px")).as("px0"), max(col("px")).as("px1"),
         sum(col("n")).as("n_pts"))
       .drop("isl")
-  }
-
-  /** Vectorize step 2 — greedy vertical merge of identical [px0, px1] runs
-    * on consecutive rows into rectangles, then rectangles → pixel-space
-    * polygons (x0, y0, x1, y1 in the tile's res-pixel grid). Per-tile
-    * sequential kernel over sorted runs (embarrassingly parallel across
-    * tiles, like the makevalid kernel).
-    */
-  def vectorizeRaster(spark: SparkSession, runs: DataFrame): DataFrame = {
-    import spark.implicits._
-    runs.select(col("cell"), col("py"),
-        col("px0").cast("long"), col("px1").cast("long"))
-      .as[(Long, Int, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroups { (cell, it) =>
-        val rs = it.map { case (_, py, p0, p1) => (py, p0, p1) }.toArray
-          .sortBy { case (py, p0, _) => (py, p0) }
-        // open rectangles keyed by (px0, px1): extend when the next row
-        // repeats the exact span, else close
-        val open = scala.collection.mutable.LinkedHashMap[(Long, Long), (Int, Int)]()
-        val out = scala.collection.mutable.ArrayBuffer[(Long, Long, Int, Long, Int)]()
-        var row = Int.MinValue
-        def closeStale(currentRow: Int): Unit = {
-          val stale = open.filter { case (_, (_, last)) => last < currentRow - 1 }
-          stale.foreach { case (k @ (p0, p1), (y0, y1)) =>
-            out += ((cell, p0, y0, p1, y1)); open.remove(k)
-          }
-        }
-        for ((py, p0, p1) <- rs) {
-          if (py != row) { closeStale(py); row = py }
-          open.get((p0, p1)) match {
-            case Some((y0, _)) => open((p0, p1)) = (y0, py)
-            case None          => open((p0, p1)) = (py, py)
-          }
-        }
-        open.foreach { case ((p0, p1), (y0, y1)) => out += ((cell, p0, y0, p1, y1)) }
-        out.iterator
-      }
-      .toDF("cell", "x0", "y0", "x1", "y1")
-  }
-
-  /** Raster↔vector join: vector points keyed by their z15 cell meet media
-    * spans keyed by the tile encoded in their media_ref
-    * ("media://tile/{z}/{x}/{y}#{n}").
-    */
-  def rasterVectorJoin(vectorPts: DataFrame, mediaRefs: DataFrame): DataFrame = {
-    val vec = vectorPts.withColumn("cell",
-      st_cell_at(col("lon"), col("lat"), lit(15)))
-    val ras = mediaRefs
-      .withColumn("parts", split(regexp_replace(col("media_ref"), "^media://tile/", ""), "[/#]"))
-      .select(col("ras_id"),
-        shiftleft(element_at(col("parts"), 1).cast("long"), 58)
-          .bitwiseOR(shiftleft(element_at(col("parts"), 2).cast("long"), 29))
-          .bitwiseOR(element_at(col("parts"), 3).cast("long")).as("cell"))
-    vec.join(ras, Seq("cell"))
   }
 }

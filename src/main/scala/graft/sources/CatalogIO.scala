@@ -2,46 +2,13 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Catalog-table I/O for the docs pipeline — the Iceberg contract.
-  *
-  * BASELINE's input_hint names an Iceberg table of interleaved documents.
-  * Iceberg plugs into Spark purely as a DataSource V2 catalog
-  * (`spark.sql.catalog.<name> = org.apache.iceberg.spark.SparkCatalog` +
-  * its warehouse conf) — the engine-side contract is therefore "read and
-  * write NAMED TABLES through the V2 API", which this object pins down and
-  * the test suite proves against the built-in V2 session catalog (the only
-  * catalog whose jars exist in this sandbox). On a real cluster the same
-  * calls hit Iceberg's snapshot-committing catalog with no code change.
-  *
-  * Source strings:
-  *   "table:<ident>"  → `spark.read.table` (any configured V2 catalog;
-  *                      `<ident>` may be fully qualified `cat.db.t`)
-  *   anything else    → a directory of parquet files
+/** Catalog-table writes — the Iceberg contract. Iceberg plugs into Spark
+  * purely as a DataSource V2 catalog, so the engine-side contract is
+  * "write NAMED TABLES through the V2 API", proven against the built-in V2
+  * session catalog; on a real cluster the same calls hit Iceberg's
+  * snapshot-committing catalog with no code change.
   */
 object CatalogIO {
-
-  val TablePrefix = "table:"
-
-  def read(spark: SparkSession, source: String): DataFrame =
-    if (source.startsWith(TablePrefix))
-      spark.read.table(source.stripPrefix(TablePrefix))
-    else spark.read.parquet(source)
-
-  /** Replace-or-create a named table from `df` via the V2 writer (Iceberg's
-    * atomic REPLACE TABLE AS SELECT snapshot path). Catalogs that don't
-    * stage replacements (the plain session catalog) fall back to the V1
-    * overwrite saveAsTable, whose commit point is the catalog registration.
-    */
-  def replaceTable(df: DataFrame, ident: String): Unit =
-    try df.writeTo(ident).using("parquet").createOrReplace()
-    catch {
-      // Narrow fallback (round-2 advice): only the catalog telling us it
-      // cannot stage a V2 replace routes to V1; genuine analysis errors
-      // (bad identifier, unresolved column) propagate unmasked.
-      case e: org.apache.spark.sql.AnalysisException
-          if isUnsupportedReplace(e) =>
-        df.write.mode("overwrite").format("parquet").saveAsTable(ident)
-    }
 
   private def isUnsupportedReplace(e: org.apache.spark.sql.AnalysisException): Boolean = {
     val cls = Option(e.getCondition).getOrElse("")
@@ -51,10 +18,6 @@ object CatalogIO {
       msg.contains("only supported with v2 tables") ||
       msg.contains("REPLACE TABLE is not supported")
   }
-
-  /** Append rows to a named table (Iceberg: an append snapshot). */
-  def append(df: DataFrame, ident: String): Unit =
-    df.writeTo(ident).append()
 
   /** Write `df` hash-bucketed on `bucketCol` into `numBuckets` buckets as
     * a named table — the ONE-TIME layout step that makes every later join
@@ -110,7 +73,4 @@ object CatalogIO {
       val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (fs.exists(path)) fs.delete(path, true)
     }
-
-  def tableExists(spark: SparkSession, ident: String): Boolean =
-    spark.catalog.tableExists(ident)
 }

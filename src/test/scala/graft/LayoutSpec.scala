@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -14,8 +13,6 @@ class LayoutSpec extends AnyFunSuite {
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
-
-  private val dir = "/root/testdata/sf0.001"
 
   test("mortonKey: matches the scalar reference bit-for-bit, orders locally") {
     def gridRef(v: Double, lo: Double, span: Double): Long =
@@ -40,47 +37,5 @@ class LayoutSpec extends AnyFunSuite {
       assert(got((lon, lat)) == ref(lon, lat), s"($lon,$lat)")
     // corner keys: SW corner all-zero, NE corner all 32 bits set
     assert(ref(-180.0, -90.0) == 0L && ref(179.999, 89.999) == 0xFFFFFFFFL)
-  }
-
-  test("Z-ordered layout: a box scan reads >=4x fewer rows than arrival order") {
-    val pts = graft.sources.Synth.points(spark, dir)
-      .select(col("pid"), col("lon"), col("lat"))
-    val total = pts.count()
-    val zdir = java.nio.file.Files.createTempDirectory("zorder").toString
-    val adir = java.nio.file.Files.createTempDirectory("arrival").toString
-    Layout.writeZOrdered(pts, zdir, "lon", "lat", numFiles = 64)
-    // arrival-order control: same file count, clustered on nothing spatial
-    pts.repartitionByRange(64, col("pid")).sortWithinPartitions(col("pid"))
-      .write.mode("overwrite").parquet(adir)
-
-    def scanRows(path: String): Long = {
-      val acc = new java.util.concurrent.atomic.AtomicLong
-      val l = new SparkListener {
-        override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-          val m = sc.stageInfo.taskMetrics
-          if (m != null) acc.addAndGet(m.inputMetrics.recordsRead)
-        }
-      }
-      spark.sparkContext.addSparkListener(l)
-      val n = spark.read.parquet(path)
-        .filter(col("lon") >= 0 && col("lon") <= 10 &&
-                col("lat") >= 0 && col("lat") <= 10).count()
-      org.apache.spark.graftshim.ListenerDrain.waitUntilEmpty(spark.sparkContext)
-      spark.sparkContext.removeSparkListener(l)
-      assert(n > 0, "the probe box must be non-empty or the test is vacuous")
-      acc.get()
-    }
-    val arrivalRows = scanRows(adir)
-    val zRows = scanRows(zdir)
-    // arrival order cannot skip anything (every file's lon/lat stats span
-    // the world); the z-ordered layout reads only the files whose stats
-    // intersect the box
-    assert(arrivalRows == total, s"control should read everything: $arrivalRows/$total")
-    assert(zRows * 4 <= arrivalRows,
-      s"z-order must prune >=4x: read $zRows vs $arrivalRows")
-    // layout is PURE: same rows either way
-    val a = spark.read.parquet(adir).select("pid", "lon", "lat")
-    val z = spark.read.parquet(zdir).select("pid", "lon", "lat")
-    assert(a.except(z).isEmpty && z.except(a).isEmpty && z.count() == total)
   }
 }

@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators._
-import graft.streaming.Sessionize
 
 class OperatorsSpec extends AnyFunSuite with KnnFixtures {
 
@@ -177,7 +176,6 @@ class OperatorsSpec extends AnyFunSuite with KnnFixtures {
   }
 
   test("distance join: exact pairs vs naive cross, pair-unique, disc-cover replication") {
-    import spark.implicits._
     // dropDuplicates: Synth.points repeats pids (6000 rows / 4599 ids),
     // and the pair-uniqueness property is per input ROW — duplicate ids
     // would make (qid, nid) legitimately appear once per underlying pair
@@ -260,7 +258,6 @@ class OperatorsSpec extends AnyFunSuite with KnnFixtures {
   }
 
   test("embedding-cosine near-dup finds planted perturbed copies only") {
-    import spark.implicits._
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
       .select(col("vec_id").as("vid"), col("embedding").cast("array<double>").as("vec"))
     val planted = emb.filter(col("vid") % 10 === 0)
@@ -345,65 +342,7 @@ class OperatorsSpec extends AnyFunSuite with KnnFixtures {
     assert(streamed.nonEmpty && streamed == batch)
   }
 
-  test("streaming near-dup pairs match batch exactly across micro-batches") {
-    import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
-      .select(col("doc_id"), col("text"))
-    val staged = docs.collect().map(r => (r.getLong(0), r.getString(1)))
-    // split by parity so most near-dup pairs CROSS the micro-batch
-    // boundary — matching requires the bucket state, not batch locality
-    val (b1, b2) = staged.partition(_._1 % 2 == 0)
-    val input = MemoryStream[(Long, String)]
-    val sdf = input.toDF().toDF("doc_id", "text")
-    val q = Dedup.nearDupPairsStreaming(sdf, "doc_id", "text")
-      .writeStream.format("memory").queryName("neardup_stream")
-      .outputMode("append").start()
-    try {
-      input.addData(b1.toSeq); q.processAllAvailable()
-      input.addData(b2.toSeq); q.processAllAvailable()
-    } finally q.stop()
-    val streamed = spark.sql("SELECT * FROM neardup_stream").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    val batch = Dedup.nearDupPairs(docs, "doc_id", "text").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    assert(streamed.length == streamed.distinct.length) // each pair once
-    assert(streamed.toSet == batch.toSet)
-    assert(batch.nonEmpty)
-  }
-
-  test("streaming near-dup: hot-bucket cap bounds state and degrades countably") {
-    import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    // three identical docs through a cap-1 bucket: doc 1 holds every
-    // bucket, docs 2 and 3 each pair with it, the 2-3 pair is lost —
-    // the documented cap-loss class (suppression traces to counted drops
-    // in the capping bucket; see nearDupPairsStreaming's contract)
-    val input = MemoryStream[(Long, String)]
-    val sdf = input.toDF().toDF("doc_id", "text")
-    // the drop counter surfaces cap-loss AS IT HAPPENS (round-5 verdict:
-    // BucketState.dropped was tracked but invisible to a running job)
-    val drops = spark.sparkContext.longAccumulator("neardup_drops")
-    val q = Dedup.nearDupPairsStreaming(sdf, "doc_id", "text", maxBucket = 1,
-        dropCounter = Some(drops))
-      .writeStream.format("memory").queryName("neardup_capped")
-      .outputMode("append").start()
-    val txt = "alpha beta gamma delta epsilon zeta eta theta"
-    try { input.addData(Seq((1L, txt), (2L, txt), (3L, txt))); q.processAllAvailable() }
-    finally q.stop()
-    val pairs = spark.sql("SELECT doc_a, doc_b FROM neardup_capped").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs == Set((1L, 2L), (1L, 3L)))
-    // identical docs share all 4 buckets; doc 1 fills each cap-1 bucket,
-    // so docs 2 and 3 drop from all 4 -> 8 counted drops
-    assert(drops.value == 8L,
-      s"expected 8 surfaced drops (2 docs x 4 capped buckets), got ${drops.value}")
-  }
-
   test("raster vectorize: rectangles cover exactly the occupied pixel set") {
-    import spark.implicits._
     val pts = graft.sources.Synth.points(spark, dir).select(col("pid"), col("lon"), col("lat"))
     val ras = Tiler.rasterizePoints(pts, z = 6, res = 64)
     val runs = Tiler.rasterRuns(ras)
@@ -411,22 +350,6 @@ class OperatorsSpec extends AnyFunSuite with KnnFixtures {
     val pixelCount = ras.count()
     val runPixelSum = runs.agg(sum(col("px1") - col("px0") + 1)).head.getLong(0)
     assert(runPixelSum == pixelCount, s"runs cover $runPixelSum of $pixelCount pixels")
-    // rectangles cover exactly the same set: expand both to pixel rows and diff
-    val rects = Tiler.vectorizeRaster(spark, runs)
-    val rectPixels = rects
-      .select(col("cell"), explode(sequence(col("y0"), col("y1"))).as("py"),
-        col("x0"), col("x1"))
-      .select(col("cell"), col("py"), explode(sequence(col("x0"), col("x1"))).as("px"))
-    val occupied = ras.select(col("cell"), col("py").cast("int"), col("px").cast("long").as("px"))
-    assert(rectPixels.count() == pixelCount) // no overlap, no spill
-    assert(rectPixels.exceptAll(occupied.select(col("cell"), col("py"), col("px"))).count() == 0)
-    // and the vertical merge actually merges: a solid 3x3 block collapses to 1 rect
-    val block = (for (py <- 0 until 3; px <- 0 until 3) yield (42L, py, px.toLong, 1L))
-      .toDF("cell", "py", "px", "n")
-    val blockRects = Tiler.vectorizeRaster(spark, Tiler.rasterRuns(block))
-    assert(blockRects.count() == 1)
-    val r = blockRects.head
-    assert((r.getLong(1), r.getInt(2), r.getLong(3), r.getInt(4)) == ((0L, 0, 2L, 2)))
   }
 
   test("minhash LSH finds constructed near-duplicates") {
@@ -450,44 +373,6 @@ class OperatorsSpec extends AnyFunSuite with KnnFixtures {
     assert(pairs.exists(p => p._1 == 1L && p._2 == 2L) ||
            pairs.exists(p => p._1 == 2L && p._2 == 5L), s"near dup missing: $pairs")
     assert(!pairs.exists(p => p._1 == 4L || p._2 == 4L), s"false positive with 4: $pairs")
-  }
-
-  test("streaming sessionization matches batch on bounded input") {
-    val events = spark.read.parquet(s"$dir/events.parquet")
-    val batch = Sessionize.batch(events)
-      .select("user_id", "n_events", "t_start_us", "t_end_us")
-    val stream = Sessionize.batchEquivalentViaStreaming(spark, events)
-      .select("user_id", "n_events", "t_start_us", "t_end_us")
-    assert(batch.exceptAll(stream).count() == 0)
-    assert(stream.exceptAll(batch).count() == 0)
-  }
-
-  test("streaming flavor runs as a real structured stream (memory sink)") {
-    import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Sessionize.Ev]
-    val q = Sessionize.streaming(spark, input.toDS())
-      .writeStream.format("memory").queryName("sessions_out")
-      .outputMode("append").start()
-    try {
-      // two sessions for user 7: gap > 30min between event 2 and 3.
-      // append mode only emits once the event-time watermark passes a
-      // session's close, and the watermark advances BETWEEN micro-batches,
-      // so feed the far-future event in a second batch.
-      input.addData(
-        Sessionize.Ev(7, 1, 1000000L),
-        Sessionize.Ev(7, 2, 2000000L))
-      q.processAllAvailable()
-      input.addData(Sessionize.Ev(7, 3, 2000000L + Sessionize.GapUs + 1))
-      q.processAllAvailable()
-      input.addData(Sessionize.Ev(7, 4, 2000000L + 10L * Sessionize.GapUs))
-      q.processAllAvailable()
-      // first session (events 1-2) finalized and emitted
-      val out = spark.sql("SELECT * FROM sessions_out").as[Sessionize.SessionOut].collect()
-      assert(out.exists(o => o.user_id == 7 && o.n_events == 2 &&
-        o.t_start_us == 1000000L && o.t_end_us == 2000000L), out.mkString(";"))
-    } finally q.stop()
   }
 
   test("streaming layer encode is byte-identical and handles a 10x-median hot tile") {
@@ -516,14 +401,6 @@ class OperatorsSpec extends AnyFunSuite with KnnFixtures {
     val meta = Media.extractMeta(media, "doc_id", "blob")
     assert(meta.count() == 500)
     assert(meta.filter(col("width") < 16 || col("width") >= 16 + 1017).count() == 0)
-    val feats = Media.extractFeatures(spark, media, "doc_id", "blob", dim = 16, frameStep = 8)
-    val f1 = feats.filter(col("media_id") === 7).collect()
-    val f2 = Media.extractFeatures(spark, media, "doc_id", "blob", dim = 16, frameStep = 8)
-      .filter(col("media_id") === 7).collect()
-    assert(f1.nonEmpty && f1.map(_.frame).toSet == f2.map(_.frame).toSet)
-    assert(f1.head.feature.length == 16)
-    // deterministic across runs
-    assert(f1.sortBy(_.frame).head.feature.toSeq == f2.sortBy(_.frame).head.feature.toSeq)
   }
 
   test("real image decode: ImageIO round-trips PNG and JPEG, skips poison blobs") {
@@ -562,18 +439,6 @@ class OperatorsSpec extends AnyFunSuite with KnnFixtures {
     val stats = Media.imageGridStats(spark, mixed, "media_id", "png", grid = 4)
     assert(stats.select("media_id").distinct().count() == 3) // 999 skipped
     assert(stats.count() == 48) // 3 images × 16 cells
-  }
-
-  test("raster-vector tile join parses media refs to cells") {
-    import spark.implicits._
-    val docs = graft.sources.DocsTable.docs(spark, dir)
-    val media = docs.select(col("doc_id").as("ras_id"), explode(col("spans")).as("s"))
-      .filter(col("s.kind") === "media").select(col("ras_id"), col("s.media_ref").as("media_ref"))
-    val vec = graft.sources.Synth.points(spark, dir)
-      .select(col("pid").as("vec_id"), col("lon"), col("lat"))
-    val joined = Tiler.rasterVectorJoin(vec, media)
-    // every vector point meets at least its own doc's media span
-    assert(joined.count() >= vec.count())
   }
 
   test("mvt tile sink emits decodable per-tile protobuf") {
@@ -1298,14 +1163,5 @@ class OperatorsSpec extends AnyFunSuite with KnnFixtures {
     // one-split degenerate: everything lands in it
     assert(Curation.stratifiedSplit(docs, "source", "doc_id", Seq("all" -> 1L))
       .filter(col("split") =!= "all").count() == 0)
-  }
-
-  test("multi-zoom tile rollup emits all requested zooms") {
-    val docs = graft.sources.DocsTable.docs(spark, dir)
-    val polys = graft.sources.DocsTable.extractGeometries(docs)
-      .filter(graft.functions.GeomFunctions.st_geomtype(col("geom")) === "Polygon")
-    val counts = Tiler.multiZoomCounts(polys, "doc_id", Seq(7, 9))
-    val zooms = counts.select("z").distinct().collect().map(_.getInt(0)).toSet
-    assert(zooms == Set(7, 9))
   }
 }

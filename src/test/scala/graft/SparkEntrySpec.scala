@@ -117,6 +117,29 @@ class SparkEntrySpec extends AnyFunSuite {
     assert((r.getInt(0), r.getLong(1), r.getLong(2)) == ((22, (1L << 22) - 1, (1L << 22) - 1)))
   }
 
+  test("st_tile_extent_3857 fails on a zoom or tile index outside the grid") {
+    graft.functions.GeomFunctions.register(spark)
+    def failure(z: Int, x: Long, y: Long): Seq[String] = {
+      val e = intercept[Exception](
+        spark.sql(s"SELECT st_tile_extent_3857($z, ${x}L, ${y}L)").collect())
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(_.getMessage).filter(_ != null).toSeq
+    }
+    // an index past 2^32 once narrowed to tile 350; 900 lay east of the world
+    for (x <- Seq((1L << 32) + 350, 900L, -1L))
+      assert(failure(9, x, 200L).exists(_.contains(s"tile ($x, 200) is outside 0..511 at zoom 9")))
+    assert(failure(9, 350L, 512L).exists(_.contains("tile (350, 512) is outside 0..511")))
+    assert(failure(40, 0L, 0L).exists(_.contains("zoom 40 is outside 0..22")))
+    // a valid index keeps the grid's extent bit for bit, up to the corner tile
+    for ((z, x, y) <- Seq((9, 350L, 200L), (0, 0L, 0L), (22, (1L << 22) - 1, (1L << 22) - 1))) {
+      val r = spark.sql(s"SELECT st_tile_extent_3857($z, ${x}L, ${y}L) AS e").head().getStruct(0)
+      val want = graft.core.TileGrid.WebMercator.extent(z, x.toInt, y.toInt)
+      val got = (0 until 4).map(i => java.lang.Double.doubleToRawLongBits(r.getDouble(i)))
+      assert(got == Seq(want.minx, want.miny, want.maxx, want.maxy)
+        .map(java.lang.Double.doubleToRawLongBits), s"z$z/$x/$y")
+    }
+  }
+
   test("st_project SQL surface: value parity, round-trip, analysis-time SRID check") {
     graft.functions.GeomFunctions.register(spark)
     val r = spark.sql(

@@ -45,8 +45,6 @@ class PlanarSpec extends AnyFunSuite {
     val c = Cmp.Default
     assert(Planar.isPointOnLine(c, (5, 5), (0, 0), (10, 10)))
     assert(Planar.isPointOnLine(c, (50, 50), (0, 0), (10, 10))) // infinite line
-    assert(!Planar.isPointOnLineSegment(c, (50, 50), Seg(0, 0, 10, 10)))
-    assert(Planar.isPointOnLineSegment(c, (5, 5), Seg(0, 0, 10, 10)))
     assert(Planar.isPointOnLine(c, (3, 7), (3, 0), (3, 10))) // vertical
   }
 
@@ -66,22 +64,6 @@ class PlanarSpec extends AnyFunSuite {
     // lines cross but off-segment
     val (_, ok2) = Planar.segmentIntersect(Seg(0, 0, 1, 1), Seg(5, 0, 6, -1))
     assert(!ok2)
-  }
-
-  test("line intersect infinite (line_intersect.go:47-71)") {
-    assert(Planar.lineIntersect(Seg(0, 0, 1, 1), Seg(5, 0, 6, -1)) == Some((2.5, 2.5)))
-    assert(Planar.lineIntersect(Seg(0, 0, 10, 0), Seg(0, 1, 10, 1)).isEmpty)
-  }
-
-  test("colinear lines (line_intersect.go:18-42)") {
-    assert(Planar.areLinesColinear(Seg(0, 0, 10, 10), Seg(5, 5, 20, 20)))
-    // reference quirk: parallel lines whose endpoint falls inside l1's bbox
-    // are reported "colinear" (denom==0 + bbox endpoint test only)
-    assert(Planar.areLinesColinear(Seg(0, 0, 10, 10), Seg(0, 1, 10, 11)))
-    // parallel-but-disjoint: denom 0 but endpoints outside bbox
-    assert(!Planar.areLinesColinear(Seg(0, 0, 1, 0), Seg(5, 5, 6, 5)))
-    // crossing lines are never colinear (denom != 0)
-    assert(!Planar.areLinesColinear(Seg(0, 0, 10, 10), Seg(0, 10, 10, 0)))
   }
 
   test("centroid quirk replicated verbatim (centriod.go:4-22)") {
@@ -136,42 +118,8 @@ class PlanarSpec extends AnyFunSuite {
     assert(e.intersect(Extent(10, 0, 20, 10)).isEmpty) // open interval: touch ⇒ disjoint
     assert(e.intersect(Extent(20, 20, 30, 30)).isEmpty)
     assert(Extent.ofPoints(P((3, 7), (1, 9), (5, 2))) == Some(Extent(1, 2, 5, 9)))
-    assert(e.area == 100.0 && e.expandBy(1) == Extent(-1, -1, 11, 11))
+    assert(e.area == 100.0)
     assert(e.edges.length == 4 && e.edges.head == Seg(0, 0, 10, 0))
-  }
-
-  test("normalizeUniqueLines canonicalizes, sorts and dedupes (line_helpers.go)") {
-    val lines = Vector(Seg(5, 5, 0, 0), Seg(0, 0, 5, 5), Seg(1, 1, 2, 2))
-    val out = Planar.normalizeUniqueLines(lines)
-    assert(out == Vector(Seg(0, 0, 5, 5), Seg(1, 1, 2, 2)))
-  }
-
-  test("pointOnLineAt walks distance along the segment (planar.go:83-92)") {
-    assert(Planar.pointOnLineAt(Seg(0, 0, 10, 0), 4) == ((4.0, 0.0)))
-    assert(Planar.pointOnLineAt(Seg(0, 0, 3, 4), 5) == ((3.0, 4.0)))
-  }
-
-  test("spherical hull honors the antimeridian (spherical/extent.go)") {
-    // normal case: west-most first
-    assert(Slippy.sphericalHull(-117.15, 32.69, -116.8, 32.63) ==
-      Extent(-117.15, 32.63, -116.8, 32.69))
-    // spanning the antimeridian: the hull keeps west-first encoding
-    // (minx=170 east of maxx=-170 — the reference's convention)
-    val e = Slippy.sphericalHull(170.0, 10.0, -170.0, 20.0)
-    assert(e.minx == 170.0 && e.maxx == -170.0 && e.miny == 10.0 && e.maxy == 20.0)
-    // and when the eastern point is given first it swaps to west-first
-    val e2 = Slippy.sphericalHull(-170.0, 20.0, 170.0, 10.0)
-    assert(e2.minx == 170.0 && e2.maxx == -170.0)
-  }
-
-  test("roundToPrec half-away-from-zero, -0 → 0 (geom.go:555-566)") {
-    assert(Geom.roundToPrec(1.23456, 2) == 1.23)
-    assert(Geom.roundToPrec(1.235, 2) == 1.24)
-    assert(Geom.roundToPrec(-1.235, 2) == -1.24) // away from zero
-    assert(Geom.roundToPrec(-0.0, 2) == 0.0)
-    assert(1.0 / Geom.roundToPrec(-0.0, 2) > 0) // positive zero
-    assert(Geom.roundToPrec(2.5, 0) == 3.0)
-    assert(Geom.roundToPrec(-2.5, 0) == -3.0)
   }
 
   test("Douglas-Peucker natural-earth golden (douglaspeucker_test.go:104-110)") {
@@ -223,83 +171,6 @@ class PlanarSpec extends AnyFunSuite {
     assert(repaired.get.head.length == 2, s"hole lost: ${repaired.get.head.length} rings")
   }
 
-  test("BigFloat rounding + arithmetic (big.Float semantics)") {
-    // round-to-nearest-even at the precision boundary
-    assert(BigFloat.round(BigInt(15), 0, 3).toDouble == 16.0) // 1111 → 10000
-    assert(BigFloat.round(BigInt(13), 0, 3).toDouble == 12.0) // 1101 → 110_ down (rem<half? 13=1101, prec3 → shift1, q=110=6, rem=1=half → q even? 6 even → stays) = 12
-    assert(BigFloat.round(BigInt(11), 0, 3).toDouble == 12.0) // 1011 half → q=101 odd → 110 = 12
-    // doubles are exact at prec >= 53
-    for (d <- Seq(0.1, -3.75, 1e300, 5e-324, 123456789.123))
-      assert(BigFloat.ofDouble(d, 110).toDouble == d, s"$d")
-    // 20-bit rounding collapses nearby values
-    val a = BigFloat.ofDouble(1.0, 20)
-    val b = BigFloat.ofDouble(1.0 + math.pow(2, -21), 20)
-    assert(a.cmp(b) == 0)
-    // quo correctly rounded: 1/3 at 110 bits vs exact to 1 ulp
-    val third = BigFloat.ofDouble(1.0, 110).quo(BigFloat.ofDouble(3.0, 110), 110)
-    assert(math.abs(third.toDouble - 1.0 / 3.0) < 1e-16)
-    assert(third.mul(BigFloat.ofDouble(3.0, 110), 110).sub(BigFloat.ofDouble(1.0, 110), 110).toDouble.abs < 1e-32)
-  }
-
-  test("lineIntersectBigFloat (line_intersect.go:74-135, 110-bit)") {
-    // well-conditioned: agrees with the float64 path exactly
-    val l1 = Geom.Seg((0, 0), (10, 10))
-    val l2 = Geom.Seg((0, 10), (10, 0))
-    val bf = Planar.lineIntersectBigFloat(l1, l2).get
-    assert(bf._1.toDouble == 5.0 && bf._2.toDouble == 5.0)
-    assert(Planar.lineIntersect(l1, l2).contains((5.0, 5.0)))
-
-    // parallel → None (denominator 0 at float64, like the reference)
-    assert(Planar.lineIntersectBigFloat(Geom.Seg((0, 0), (1, 1)), Geom.Seg((0, 1), (1, 2))).isEmpty)
-
-    // ill-conditioned near-parallel lines: the 110-bit result must match
-    // an exact rational evaluation to ~2^-100 relative, where the float64
-    // path loses digits
-    val g1 = Geom.Seg((1e8, 1e8), (2e8 + 1e-4, 2e8))
-    val g2 = Geom.Seg((1e8, 1e8 + 1e-3), (2e8, 2e8))
-    val got = Planar.lineIntersectBigFloat(g1, g2).get
-    // exact rational: doubles are p/2^k, so compute with BigDecimal-exact
-    def bd(d: Double) = BigDecimal(new java.math.BigDecimal(d))
-    val (x1, y1, x2, y2) = (bd(g1.x1), bd(g1.y1), bd(g1.x2), bd(g1.y2))
-    val (x3, y3, x4, y4) = (bd(g2.x1), bd(g2.y1), bd(g2.x2), bd(g2.y2))
-    val denom = (x1 - x2) * (y3 - y4) - (y1 - y2) * (x3 - x4)
-    val c1 = x1 * y2 - y1 * x2
-    val c2 = x3 * y4 - y3 * x4
-    val mc = new java.math.MathContext(60)
-    val ex = ((c1 * (x3 - x4) - (x1 - x2) * c2) (mc) / denom(mc)).toDouble
-    val ey = ((c1 * (y3 - y4) - (y1 - y2) * c2) (mc) / denom(mc)).toDouble
-    assert(math.abs(got._1.toDouble - ex) / math.abs(ex) < 1e-12, s"x ${got._1.toDouble} vs $ex")
-    assert(math.abs(got._2.toDouble - ey) / math.abs(ey) < 1e-12, s"y ${got._2.toDouble} vs $ey")
-  }
-
-  test("containsPointBigFloat (line.go:52-81, 20-bit)") {
-    val l = Geom.Seg((1.0, 1.0), (2.0, 3.0))
-    def pt(x: Double, y: Double) = (BigFloat.ofDouble(x, 110), BigFloat.ofDouble(y, 110))
-    assert(Planar.containsPointBigFloat(l, pt(1.5, 2.0)))
-    assert(Planar.containsPointBigFloat(l, pt(1.0, 1.0))) // endpoint inclusive
-    assert(Planar.containsPointBigFloat(l, pt(2.0, 3.0)))
-    assert(!Planar.containsPointBigFloat(l, pt(0.5, 2.0)))
-    assert(!Planar.containsPointBigFloat(l, pt(1.5, 3.5)))
-    // 20-bit rounding: a point 2^-21 outside the box collapses onto it
-    assert(Planar.containsPointBigFloat(l, pt(1.0 - math.pow(2, -22), 2.0)))
-  }
-
-  test("withinCircle determinant (point.go:91-102, Guibas-Stolfi p.107)") {
-    // unit circle through (1,0),(0,1),(-1,0)
-    val (a, b, c) = ((1.0, 0.0), (0.0, 1.0), (-1.0, 0.0))
-    assert(Planar.withinCircle((0.0, 0.0), a, b, c))
-    assert(Planar.withinCircle((0.5, -0.5), a, b, c))
-    assert(!Planar.withinCircle((2.0, 0.0), a, b, c))
-    assert(!Planar.withinCircle((0.0, -1.0), a, b, c)) // ON circle: strict > 0
-    // agrees with circleFromPoints + strict distance on a generic circle
-    val (p1, p2, p3) = ((3.0, 4.0), (7.0, 1.0), (5.0, 9.0))
-    val crl = Subdivision.circleFromPoints(p1, p2, p3).get
-    for (q <- Seq((4.0, 4.0), (9.0, 9.0), (5.0, 5.0), (0.0, 0.0), (6.0, 2.0))) {
-      val d = math.hypot(crl._1 - q._1, crl._2 - q._2)
-      assert(Planar.withinCircle(q, p1, p2, p3) == d < crl._3, s"$q")
-    }
-  }
-
   test("applyToPoints preserves structure (utils.go:6-110)") {
     val g = GCollection(Vector(
       GPoint((1.0, 2.0)),
@@ -312,33 +183,5 @@ class PlanarSpec extends AnyFunSuite {
     assert(rs.head == Vector[Pt]((10, 0), (10, 2), (11, 2), (11, 0)))
     val GMultiLineString(ls) = gs(2): @unchecked
     assert(ls(1) == Vector[Pt]((13, 6), (14, 8)))
-  }
-
-  test("circle discretizers (circle.go:128-165)") {
-    val c = (10.0, 20.0, 5.0)
-    // k=4: angles 0, π/2, π, 3π/2 — east, north, west, south
-    val pts = Subdivision.circleAsPoints(c, 4)
-    assert(pts.length == 4)
-    assert(math.abs(pts(0)._1 - 15.0) < 1e-12 && math.abs(pts(0)._2 - 20.0) < 1e-12)
-    assert(math.abs(pts(1)._1 - 10.0) < 1e-12 && math.abs(pts(1)._2 - 25.0) < 1e-12)
-    assert(math.abs(pts(2)._1 - 5.0) < 1e-12 && math.abs(pts(2)._2 - 20.0) < 1e-12)
-    assert(math.abs(pts(3)._1 - 10.0) < 1e-12 && math.abs(pts(3)._2 - 15.0) < 1e-12)
-    // every point sits on the circle
-    Subdivision.circleAsPoints(c, 17).foreach { p =>
-      val d = math.hypot(p._1 - c._1, p._2 - c._2)
-      assert(math.abs(d - c._3) < 1e-9)
-    }
-    // k < 3 defaults to 30 (circle.go:129-131)
-    assert(Subdivision.circleAsPoints(c, 2).length == 30)
-    assert(Subdivision.circleAsLineString(c, 0).length == 30)
-    // segments: first segment is the closing edge pts(k-1) -> pts(0)
-    val segs = Subdivision.circleAsSegments(c, 4)
-    assert(segs.length == 4)
-    assert(segs(0) == Geom.Seg(pts(3), pts(0)))
-    assert(segs(1) == Geom.Seg(pts(0), pts(1)))
-    // the k<3 wrap quirk uses the CALLER's k (reference circle.go:157-160)
-    val segs2 = Subdivision.circleAsSegments(c, 2)
-    val pts30 = Subdivision.circleAsPoints(c, 2)
-    assert(segs2(0) == Geom.Seg(pts30(1), pts30(0)))
   }
 }

@@ -105,13 +105,6 @@ class RingSpec extends AnyFunSuite {
     // extent accumulates member extents into the zero-origin quirk box
     assert(hm.extent == Geom.Extent(0, 0, 30, 30))
     assert(hm.area == 900.0)
-    // Always labels everything; infinite area orders it first
-    assert(AlwaysHitmap(true).labelInside((1e12, -1e12)))
-    assert(AlwaysHitmap(true).area.isPosInfinity)
-    val withAlways = Hitmap.forGeometry(
-      GCollection(Vector(small))).get.asInstanceOf[OrderedHitmap]
-    assert(OrderedHitmap(AlwaysHitmap(false) +: withAlways.hms)
-      .labelInside((1.0, 1.0))) // Always(Outside) doesn't block later Inside
     // single geometries dispatch directly
     assert(Hitmap.forGeometry(small).get.isInstanceOf[PolygonHitmap])
     assert(Hitmap.forGeometry(GPoint((0.0, 0.0))).isEmpty)

@@ -64,25 +64,4 @@ class UtmSpec extends AnyFunSuite {
     assert(Utm.normalizeLng(69.15) == 69.15)
     assert(Utm.normalizeLng(540.0) == -180.0)
   }
-
-  test("DMS conversion (coord_test.go TestLngLat_ToDMS vectors)") {
-    def cmpDMS(got: Utm.DMS, d: Long, m: Long, s: Double, h: Char): Unit = {
-      assert(got.degree == d && got.minute == m && got.hemisphere == h, got)
-      assert(math.abs(got.second - s) < 1e-3, s"second ${got.second} != $s")
-    }
-    // noman's land
-    cmpDMS(Utm.lngAsDMS(0.0), 0, 0, 0.0, 'E')
-    cmpDMS(Utm.latAsDMS(0.0), 0, 0, 0.0, 'N')
-    // india
-    cmpDMS(Utm.lngAsDMS(78.873755), 78, 52, 25.518, 'E')
-    cmpDMS(Utm.latAsDMS(21.991952), 21, 59, 31.0272, 'N')
-    // zambia
-    cmpDMS(Utm.latAsDMS(-14.723885), 14, 43, 25.986, 'S')
-    cmpDMS(Utm.lngAsDMS(26.162606), 26, 9, 45.3816, 'E')
-    // brasil
-    cmpDMS(Utm.latAsDMS(-11.126663), 11, 7, 35.9868, 'S')
-    cmpDMS(Utm.lngAsDMS(-49.038633), 49, 2, 19.0788, 'W')
-    // Go `%d°%d'%f"%c` formatting (6-decimal %f)
-    assert(Utm.latAsDMS(-11.126663).toString == """11°7'35.986800"S""")
-  }
 }

@@ -27,9 +27,6 @@ class WindingSpec extends AnyFunSuite {
     )
     for ((pts, want) <- cases) {
       assert(ofPoints(pts) == want, s"pts=$pts")
-      // int64 path (reference OfInt64Points)
-      val ipts = pts.map(p => (p._1.toLong, p._2.toLong))
-      assert(ofLongPoints(yPositiveDown = false, ipts) == want, s"int64 pts=$pts")
       // y-down flips non-colinear orientations
       assert(orientation(yPositiveDown = true, pts) == -want, s"y-down pts=$pts")
     }
